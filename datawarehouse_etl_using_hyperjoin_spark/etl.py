@@ -25,10 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.constraints import (
-    expect_clean,
+    fact_counts,
+    fk_violations,
     not_null_violations,
+    pk_counts,
     pk_violations,
-    star_schema_checks,
+    raise_violations,
 )
 from .operators.etl import assemble_fact, build_dim, first_match, hyperjoin
 from .sources.fixtures import load_table, master_data, transactions
@@ -109,17 +111,20 @@ def write_star(
     """Persist a star schema; with ``validate``, enforce the createDW.sql
     constraints on load the way the reference's MySQL did.
 
-    Validation order mirrors the reference: each dim's PK is checked
-    before its write (createDW.sql:8,26,38,49,67 — a dup/NULL key aborts
-    the load), then the fact is written to a STAGING path, its FK-per-dim
-    and NOT NULL contracts (createDW.sql:83-98) are checked against the
-    data as written (one parquet scan — no recompute of the assembly
-    plan), and only a clean fact is promoted to the published path; a
-    violating batch raises with the staging dir left for inspection and
-    the published fact unchanged (note: the dims HAVE been refreshed by
-    that point — a rejected fact batch leaves new dims paired with the
-    previous fact until the batch is fixed and re-run; SCD1 dims are
-    idempotent so the re-run converges).  Promotion is a near-atomic
+    Validation order mirrors the reference: every dim's PK is checked
+    before any dim is written (createDW.sql:8,26,38,49,67 — a dup/NULL
+    key aborts the load), all five in one aggregate action whose per-dim
+    row totals are also the returned dim counts.  Then the fact is
+    written to a STAGING path, and its FK-per-dim and NOT NULL contracts
+    (createDW.sql:83-98) are checked against the data as written, all in
+    one parquet scan that also returns the fact row count (no recompute
+    of the assembly plan).  Only a clean fact is promoted to the
+    published path; a violating batch raises with the staging dir left
+    for inspection and the published fact unchanged (note: the dims HAVE
+    been refreshed by that point — a rejected fact batch leaves new dims
+    paired with the previous fact until the batch is fixed and re-run;
+    SCD1 dims are idempotent so the re-run converges).  Violation samples
+    are only fetched for a failed check.  Promotion is a near-atomic
     two-rename swap (live → ``.old``, staging → live, delete ``.old``) so
     the published path is never absent; on HDFS the same gate promotes
     via FileSystem.rename, and on object stores it composes with a
@@ -127,41 +132,44 @@ def write_star(
     logic (validate the WRITTEN data, publish only clean) is identical.
     """
     counts: dict[str, int] = {}
+    if validate:
+        keys = {name: [STAR_DIM_KEYS[name][0]] for name in dims}
+        counts, bad = pk_counts({name: (df, keys[name]) for name, df in dims.items()})
+        raise_violations(bad, lambda: {
+            f"pk_{name}": pk_violations(df, keys[name]) for name, df in dims.items()
+        })
     for name, df in dims.items():
-        if validate:
-            pk, _ = STAR_DIM_KEYS[name]
-            expect_clean({f"pk_{name}": pk_violations(df, [pk])})
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-        counts[name] = spark.read.parquet(f"{out_dir}/{name}").count()
+        if not validate:
+            counts[name] = spark.read.parquet(f"{out_dir}/{name}").count()
 
     target = f"{out_dir}/fact_sales"
     staging = f"{out_dir}/fact_sales.staging" if validate else target
     fact.write.mode("overwrite").partitionBy("order_month").parquet(staging)
-    if validate:
-        written = spark.read.parquet(staging)
-        checks = star_schema_checks(
-            written,
-            {
-                name: (spark.read.parquet(f"{out_dir}/{name}"), pk, fk)
-                for name, (pk, fk) in STAR_DIM_KEYS.items()
-            },
-        )
-        # dims were just PK-checked pre-write; keep only the fact-side
-        # contracts here (FK resolution + NOT NULL)
-        checks = {n: c for n, c in checks.items() if n.startswith("fk_")}
-        checks["fact_not_null"] = not_null_violations(written, FACT_NOT_NULL)
-        expect_clean(checks)
-        # two-rename swap: published path is never absent mid-promote
-        if os.path.isdir(target):
-            old = target + ".old"
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            os.rename(target, old)
-            os.rename(staging, target)
+    if not validate:
+        counts["fact_sales"] = spark.read.parquet(target).count()
+        return counts
+    written = spark.read.parquet(staging)
+    star = {
+        name: (spark.read.parquet(f"{out_dir}/{name}"), pk, fk)
+        for name, (pk, fk) in STAR_DIM_KEYS.items()
+    }
+    counts["fact_sales"], bad = fact_counts(written, star, FACT_NOT_NULL)
+    raise_violations(bad, lambda: {
+        **{f"fk_{name}": fk_violations(written, dim, fk, pk)
+           for name, (dim, pk, fk) in star.items()},
+        "fact_not_null": not_null_violations(written, FACT_NOT_NULL),
+    })
+    # two-rename swap: published path is never absent mid-promote
+    if os.path.isdir(target):
+        old = target + ".old"
+        if os.path.isdir(old):
             shutil.rmtree(old)
-        else:
-            os.rename(staging, target)
-    counts["fact_sales"] = spark.read.parquet(target).count()
+        os.rename(target, old)
+        os.rename(staging, target)
+        shutil.rmtree(old)
+    else:
+        os.rename(staging, target)
     return counts
 
 

@@ -736,9 +736,12 @@ def ngram_jaccard_pairs(
         ).alias("p")
     )
     # n_a/n_b are functionally determined by id_a/id_b — grouping on all
-    # four keeps one aggregate and no first()/join
+    # four keeps one aggregate and no first()/join.  A duplicated id can
+    # sit in one bucket twice (once per distinct shingle count), which
+    # would enumerate an id_a == id_b self-pair; drop those.
     return (
         pair.select("p.id_a", "p.n_a", "p.id_b", "p.n_b")
+        .filter(F.col("id_a") != F.col("id_b"))
         .groupBy("id_a", "n_a", "id_b", "n_b")
         .agg(F.count("*").cast("long").alias("n_common"))
         .select(

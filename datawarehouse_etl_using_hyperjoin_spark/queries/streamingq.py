@@ -113,6 +113,11 @@ def stream_stream_join_state_bytes(spark: SparkSession, sf_dir: str) -> int:
     return total
 
 
+# The tumbling drain's window, shared with its state estimator so the two
+# cannot drift apart.
+TUMBLING_WINDOW_S = 3600
+
+
 def stream_tumbling_state_bytes(spark: SparkSession, sf_dir: str) -> int:
     """Projected state for the tumbling-window drain, for
     ``choose_state_partitions`` at query birth (r15 — the drain ran at
@@ -133,9 +138,9 @@ def stream_tumbling_state_bytes(spark: SparkSession, sf_dir: str) -> int:
     ).first()
     if row.lo is None:
         return 0
-    hours = int((row.hi - row.lo).total_seconds() // 3600) + 1
+    windows = int((row.hi - row.lo).total_seconds() // TUMBLING_WINDOW_S) + 1
     width = estimate_row_bytes(windowed_event_counts(ev).schema)
-    return hours * int(row.k) * width
+    return windows * int(row.k) * width
 
 
 def stream_tumbling_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,7 +148,7 @@ def stream_tumbling_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = with_event_time(load_table(spark, sf_dir, "events"))
     path = _as_stream_dir(ev, "stream_ev_", 3, cache_key=sf_dir)
     stream = read_parquet_stream(spark, path, max_files_per_trigger=3)
-    return windowed_event_counts(stream)
+    return windowed_event_counts(stream, window=f"{TUMBLING_WINDOW_S} seconds")
 
 
 @query(

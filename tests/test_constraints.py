@@ -11,6 +11,7 @@ from datawarehouse_etl_using_hyperjoin_spark.operators.constraints import (
     expect_clean,
     fk_violations,
     not_null_violations,
+    pk_counts,
     pk_violations,
     star_schema_checks,
 )
@@ -70,3 +71,29 @@ def test_expect_clean_raises_with_named_failures(spark):
     dim = spark.createDataFrame([(1,), (1,)], "pk int")
     with pytest.raises(ValueError, match="pk_dim: 1 violations"):
         expect_clean({"pk_dim": pk_violations(dim, ["pk"])})
+
+
+def test_pk_counts_match_pk_violations_in_one_action(spark):
+    """pk_counts returns each table's row total and the same violation
+    count as pk_violations(...).count(), composite keys included."""
+    dup_and_null = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (2, "c"), (None, "d"), (None, "e")], "k int, v string"
+    )
+    composite = spark.createDataFrame(
+        [(1, 1), (1, 1), (1, None), (None, 2), (None, 2), (2, 2)], "a int, b int"
+    )
+    clean = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    empty = spark.createDataFrame([], "k int")
+    tables = {
+        "dup_and_null": (dup_and_null, ["k"]),
+        "composite": (composite, ["a", "b"]),
+        "clean": (clean, ["k"]),
+        "empty": (empty, ["k"]),
+    }
+    rows, bad = pk_counts(tables)
+    assert rows == {"dup_and_null": 5, "composite": 6, "clean": 2, "empty": 0}
+    assert bad == {
+        f"pk_{name}": pk_violations(df, keys).count()
+        for name, (df, keys) in tables.items()
+    }
+    assert bad == {"pk_dup_and_null": 2, "pk_composite": 3, "pk_clean": 0, "pk_empty": 0}

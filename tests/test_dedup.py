@@ -124,6 +124,19 @@ def test_ngram_jaccard_scores_injected_dups_high(spark, sf_dir):
     assert pairs.filter((F.col("jaccard") < 0) | (F.col("jaccard") > 1)).count() == 0
 
 
+def test_ngram_jaccard_pairs_never_pairs_an_id_with_itself(spark):
+    """A duplicated id with two different texts lands in a shared bucket
+    twice (once per shingle count); no id_a == id_b pair may come out."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e", 0), (1, "a b c d e f g", 0), (2, "a b c d e", 0)],
+        "doc_id long, text string, block int",
+    )
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", "block", 3).collect()
+    assert pairs
+    assert [r for r in pairs if r.id_a == r.id_b] == []
+    assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
+
+
 def _synthetic_pairs(spark, n_pairs, shared, fresh, tag):
     """n_pairs doc pairs with controlled word-set Jaccard:
     shared/(shared + 2*fresh).  Word vocab is disjoint across pairs."""

@@ -157,6 +157,102 @@ def test_load_star_validate_gate(spark, sf_dir, tmp_path):
     assert not os.path.isdir(f"{out_dup}/fact_sales")
 
 
+def _star_inputs(spark, sf_dir):
+    """The engine's five dims and month-tagged fact, unwritten."""
+    from datawarehouse_etl_using_hyperjoin_spark.etl import build_dimensions, ingest
+    from datawarehouse_etl_using_hyperjoin_spark.operators.etl import assemble_fact
+
+    _, master = ingest(spark, sf_dir)
+    dims = build_dimensions(spark, sf_dir, master)
+    t = {n: load_table(spark, sf_dir, n) for n in
+         ("lineitem", "orders", "customer", "part", "supplier", "nation")}
+    fact = assemble_fact(
+        t["lineitem"], t["orders"], t["customer"], t["part"], t["supplier"], t["nation"]
+    ).withColumn("order_month", F.date_format("order_date", "yyyy-MM"))
+    return dims, fact
+
+
+def test_write_star_checks_all_dim_pks_before_any_write(spark, sf_dir, tmp_path):
+    """Every dim PK is checked before any dim is written: a duplicated PK
+    in one dim and a NULL PK in another fail together in one ValueError,
+    the already-published dims keep their files, and no fact is staged."""
+    import glob
+    import os
+
+    import pytest
+
+    from datawarehouse_etl_using_hyperjoin_spark.etl import load_star, write_star
+
+    out = str(tmp_path / "dw")
+    load_star(spark, sf_dir, out, validate=True)
+    published = {p: os.path.getmtime(p) for p in glob.glob(f"{out}/dim_*/*")}
+    assert published
+
+    dims, fact = _star_inputs(spark, sf_dir)
+    bad_dims = dict(dims)
+    bad_dims["dim_product"] = dims["dim_product"].unionByName(dims["dim_product"].limit(1))
+    cust = dims["dim_customer"]
+    bad_dims["dim_customer"] = cust.unionByName(cust.limit(1).withColumn(
+        "customer_id", F.lit(None).cast(dict(cust.dtypes)["customer_id"])
+    ))
+    with pytest.raises(ValueError) as err:
+        write_star(spark, bad_dims, fact, out, validate=True)
+    assert "pk_dim_product: 1 violations" in str(err.value)
+    assert "pk_dim_customer: 1 violations" in str(err.value)
+    assert {p: os.path.getmtime(p) for p in glob.glob(f"{out}/dim_*/*")} == published
+    assert not os.path.isdir(f"{out}/fact_sales.staging")
+
+
+def test_fact_gate_counts_equal_violation_relations(spark, sf_dir, tmp_path):
+    """The one-scan fact gate counts exactly what the violation relations
+    hold: a NULL FK is no FK violation, only a NOT NULL one."""
+    import pytest
+
+    from datawarehouse_etl_using_hyperjoin_spark.etl import (
+        FACT_NOT_NULL,
+        STAR_DIM_KEYS,
+        write_star,
+    )
+    from datawarehouse_etl_using_hyperjoin_spark.operators.constraints import (
+        fact_counts,
+        fk_violations,
+        not_null_violations,
+    )
+
+    dims, fact = _star_inputs(spark, sf_dir)
+    types = dict(fact.dtypes)
+
+    def with_key(col, value, n=1):
+        return fact.limit(n).withColumn(col, F.lit(value).cast(types[col]))
+
+    bad = (
+        fact.unionByName(with_key("product_id", -999, 2))
+        .unionByName(with_key("customer_id", -999))
+        .unionByName(with_key("product_id", None))
+    )
+    star = {name: (dims[name], pk, fk) for name, (pk, fk) in STAR_DIM_KEYS.items()}
+    rows, got = fact_counts(bad, star, FACT_NOT_NULL)
+    assert rows == bad.count()
+    want = {
+        f"fk_{name}": fk_violations(bad, dim, fk, pk).count()
+        for name, (dim, pk, fk) in star.items()
+    }
+    want["fact_not_null"] = not_null_violations(bad, FACT_NOT_NULL).count()
+    assert got == want
+    assert got == {
+        "fk_dim_product": 2, "fk_dim_supplier": 0, "fk_dim_store": 0,
+        "fk_dim_order": 0, "fk_dim_customer": 1, "fact_not_null": 1,
+    }
+
+    with pytest.raises(ValueError) as err:
+        write_star(spark, dims, bad, str(tmp_path / "dw"), validate=True)
+    msg = str(err.value)
+    assert "fk_dim_product: 2 violations" in msg
+    assert "fk_dim_customer: 1 violations" in msg
+    assert "fact_not_null: 1 violations" in msg
+    assert "fk_dim_supplier" not in msg
+
+
 def test_refresh_fact_month_compacts_refreshed_partition(spark, sf_dir, tmp_path):
     """Per-month refresh is where small files accumulate (one file per
     shuffle partition per rewrite), so refresh_fact_month compacts the
