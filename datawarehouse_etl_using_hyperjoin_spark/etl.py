@@ -105,11 +105,9 @@ def write_star(
     dims: dict[str, DataFrame],
     fact: DataFrame,
     out_dir: str,
-    *,
-    validate: bool = False,
 ) -> dict[str, int]:
-    """Persist a star schema; with ``validate``, enforce the createDW.sql
-    constraints on load the way the reference's MySQL did.
+    """Persist a star schema, enforcing the createDW.sql constraints on
+    load the way the reference's MySQL did.
 
     Validation order mirrors the reference: every dim's PK is checked
     before any dim is written (createDW.sql:8,26,38,49,67 — a dup/NULL
@@ -131,24 +129,17 @@ def write_star(
     table-format commit instead (sources/table_formats.py) — the gate
     logic (validate the WRITTEN data, publish only clean) is identical.
     """
-    counts: dict[str, int] = {}
-    if validate:
-        keys = {name: [STAR_DIM_KEYS[name][0]] for name in dims}
-        counts, bad = pk_counts({name: (df, keys[name]) for name, df in dims.items()})
-        raise_violations(bad, lambda: {
-            f"pk_{name}": pk_violations(df, keys[name]) for name, df in dims.items()
-        })
+    keys = {name: [STAR_DIM_KEYS[name][0]] for name in dims}
+    counts, bad = pk_counts({name: (df, keys[name]) for name, df in dims.items()})
+    raise_violations(bad, lambda: {
+        f"pk_{name}": pk_violations(df, keys[name]) for name, df in dims.items()
+    })
     for name, df in dims.items():
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-        if not validate:
-            counts[name] = spark.read.parquet(f"{out_dir}/{name}").count()
 
     target = f"{out_dir}/fact_sales"
-    staging = f"{out_dir}/fact_sales.staging" if validate else target
+    staging = f"{out_dir}/fact_sales.staging"
     fact.write.mode("overwrite").partitionBy("order_month").parquet(staging)
-    if not validate:
-        counts["fact_sales"] = spark.read.parquet(target).count()
-        return counts
     written = spark.read.parquet(staging)
     star = {
         name: (spark.read.parquet(f"{out_dir}/{name}"), pk, fk)
@@ -173,15 +164,12 @@ def write_star(
     return counts
 
 
-def load_star(
-    spark: SparkSession, sf_dir: str, out_dir: str, *, validate: bool = False
-) -> dict[str, int]:
+def load_star(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """Build and persist the full star schema; returns row counts.
 
     Fact is partitioned by order month (dynamic partition pruning +
     bounded incremental rebuilds at scale); dims are plain parquet.
-    ``validate`` runs the createDW.sql integrity gate on load (see
-    :func:`write_star`).
+    The createDW.sql integrity gate runs on load (see :func:`write_star`).
     """
     _, master = ingest(spark, sf_dir)
     dims = build_dimensions(spark, sf_dir, master)
@@ -190,7 +178,7 @@ def load_star(
     fact = assemble_fact(
         t["lineitem"], t["orders"], t["customer"], t["part"], t["supplier"], t["nation"]
     ).withColumn("order_month", F.date_format("order_date", "yyyy-MM"))
-    return write_star(spark, dims, fact, out_dir, validate=validate)
+    return write_star(spark, dims, fact, out_dir)
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
@@ -204,7 +192,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
     enriched = run_hyperjoin(txn, master)
     # the flagship pipeline publishes only an integrity-checked star — the
     # reference's MySQL constraints were enforced on load (createDW.sql)
-    counts = load_star(spark, sf_dir, out_dir, validate=True)
+    counts = load_star(spark, sf_dir, out_dir)
     counts["enriched_stream"] = enriched.count()
     return counts
 

@@ -2,7 +2,7 @@
 
 Several sinks need a *reliable* "does this table exist yet" answer before
 they overwrite (``upsert_parquet_sink``, the quarantine ``_hwm`` fast path,
-``write_ivf_index``'s append guard): a transient read failure silently
+the corpus sink's layout guard): a transient read failure silently
 treated as "no table" is a data-loss path (r9's ``upsert_parquet_sink``
 bug).  The classic-JVM route (``spark._jvm`` → ``FileSystem.exists``) gives
 that answer exactly, but those private accessors do not exist under Spark

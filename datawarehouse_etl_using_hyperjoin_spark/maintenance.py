@@ -14,8 +14,7 @@ artifact              layout                                  pass
 streamed corpus       parquet dir, ``ingest_batch=N``         ``operators.corpus.compact_corpus``
 star fact table       parquet dir, ``batch_id=N``             same pass, ``batch_col="batch_id"``
 LSH / embedding index bucketed catalog table, ``ingest_batch``  ``operators.dedup.compact_lsh_index``
-IVF vector index      parquet dir, ``centroid_id=C``          ``operators.similarity.compact_ivf_index``
-IVF index (manifest)  generation dirs + ``_manifest`` log     ``operators.ivf_store.compact_ivf_index_manifest`` + ``ivf_vacuum``
+IVF vector index      generation dirs + ``_manifest`` log     ``operators.ivf_store.compact_ivf_index_manifest`` + ``ivf_vacuum``
 batch table (manifest) generation dirs + ``_manifest`` log    ``sources.manifest_table.compact_manifest_table`` + ``vacuum_manifest_table``
 late-data quarantine  ``late/`` + ``_hwm/`` per-batch dirs    ``streaming.pipeline.compact_quarantine`` (auto-detects the manifest side layout)
 ====================  ======================================  ===========================
@@ -56,7 +55,6 @@ def run_maintenance(
     corpus_dirs: Sequence[str] = (),
     fact_dirs: Sequence[str] = (),
     lsh_tables: Sequence[str] = (),
-    ivf_indexes: Sequence[str] = (),
     ivf_manifest_indexes: Sequence[str] = (),
     manifest_tables: Sequence[str] = (),
     quarantine_dirs: Sequence[str] = (),
@@ -95,12 +93,12 @@ def run_maintenance(
     separate passes for tables clustered on different keys.
 
     Order: directory-shaped artifacts first (corpus, fact, quarantine),
-    then catalog tables, then the IVF index — arbitrary but fixed, so a
-    failure leaves a deterministic prefix done.
+    then catalog tables, then the manifest stores (IVF index, batch
+    tables) — arbitrary but fixed, so a failure leaves a deterministic
+    prefix done.
     """
     from .operators.corpus import compact_corpus
     from .operators.dedup import compact_lsh_index
-    from .operators.similarity import compact_ivf_index
     from .streaming.pipeline import compact_quarantine
 
     out: dict[str, dict] = {}
@@ -122,10 +120,6 @@ def run_maintenance(
         )
     for t in lsh_tables:
         out[f"lsh:{t}"] = compact_lsh_index(spark, t, keep_last=keep_last)
-    for p in ivf_indexes:
-        out[f"ivf:{p}"] = compact_ivf_index(
-            spark, p, target_file_mb=target_file_mb, id_col=ivf_id_col
-        )
     for p in ivf_manifest_indexes:
         from .operators.ivf_store import compact_ivf_index_manifest, ivf_vacuum
 
@@ -196,7 +190,7 @@ def make_maintenance_sink(
 
     ``layout`` takes the same artifact keywords as
     :func:`run_maintenance` (``corpus_dirs=…``, ``fact_dirs=…``,
-    ``lsh_tables=…``, ``ivf_indexes=…``, ``quarantine_dirs=…``).
+    ``lsh_tables=…``, ``ivf_manifest_indexes=…``, ``quarantine_dirs=…``).
     ``on_stats`` (optional callable) receives ``(batch_id, stats)`` after
     each pass — a metrics hook; by default stats are discarded.
 
@@ -214,8 +208,8 @@ def make_maintenance_sink(
     if every < 1:
         raise ValueError(f"maintenance cadence must be >= 1, got {every}")
     unknown = set(layout) - {
-        "corpus_dirs", "fact_dirs", "lsh_tables", "ivf_indexes",
-        "ivf_manifest_indexes", "manifest_tables", "quarantine_dirs",
+        "corpus_dirs", "fact_dirs", "lsh_tables", "ivf_manifest_indexes",
+        "manifest_tables", "quarantine_dirs",
     }
     if unknown:
         raise TypeError(f"unknown maintenance layout keys: {sorted(unknown)}")

@@ -768,7 +768,7 @@ def compact_corpus(
     """Maintenance pass for the streamed corpus directory — the parquet-dir
     member of the engine's at-rest triad (corpus dir here, LSH band table
     via ``dedup.compact_lsh_index``, IVF index via
-    ``similarity.compact_ivf_index``), all with the same contract: every
+    ``ivf_store.compact_ivf_index_manifest``), all with the same contract: every
     :func:`make_corpus_ingest_sink` batch lands its own ``ingest_batch=N``
     partition dir, so a long-lived stream leaves O(stream age) partition
     dirs and every corpus read pays the listing.

@@ -1,11 +1,15 @@
-"""Manifest-backed IVF index store: the object-store-safe lifecycle.
+"""The at-rest IVF index: a manifest-backed, rename-free store.
 
-The directory-layout IVF index (``similarity.write_ivf_index`` et al.)
-commits maintenance by MOVING partition directories — correct locally,
-impossible on object stores, which is why ``ivf_split_oversized`` raises
-up front on non-local schemes.  This module is the same index with the
-same serving plans, but every lifecycle operation commits by publishing
-a **generation manifest** (:mod:`..manifest`) instead of renaming:
+An IVF index persists a cell assignment (:func:`.similarity.ivf_assign`)
+so that each cell is its own partition directory: a probe touching
+``nprobe`` cells prunes every other cell at SCAN time (partition filters
+on the file listing — no data read, no shuffle), and the full-corpus
+assignment scan is paid once, at write time.  The serving plans
+(``similarity.ann_ivf_index_topk[_quantized]``) read the relation
+:func:`read_ivf_index_manifest` returns.  Every lifecycle operation
+(build, append, split, compact, delete, vacuum) commits by publishing a
+**generation manifest** (:mod:`..manifest`), never by renaming, so the
+same code runs on local disk and on object stores:
 
 Layout::
 
@@ -26,28 +30,27 @@ exactly those paths, so:
 * a crash BEFORE publish leaves orphan dirs no reader sees (reclaimed
   by :func:`ivf_vacuum`; the retry lands at a fresh generation);
 * a crash AFTER publish is a completed operation;
-* there is NO mid-flight window — the dir-layout sentinel/refuse/
-  recover machinery (``_raise_if_pending_splits`` /
-  ``ivf_recover_splits``) has no counterpart here because no reader can
-  ever observe a partial swap.
+* there is NO mid-flight window: no reader can ever observe a partial
+  swap, so no sentinel or recovery step exists.
 
-**The index owns its quantizer** (unlike the dir layout, where the
-caller carries the centroid relation between calls): a split commits
-the updated centroids IN THE SAME manifest that re-cells the data, so
-an interrupted multi-cell split pass can simply be re-run — the live
-manifest is always a consistent (quantizer, cells) pair, and there is
-no caller-held copy to drift out of sync (the reconciliation hazard
-``ivf_recover_splits`` callers face).
+**The index owns its quantizer**: a split commits the updated centroids
+IN THE SAME manifest that re-cells the data, so an interrupted
+multi-cell split pass can simply be re-run — the live manifest is
+always a consistent (quantizer, cells) pair, and there is no
+caller-held copy to drift out of sync.
 
-Scale shape is unchanged from the dir layout (cells = scan units,
-probed cells pruned from the file listing; splits linear in the
-oversized cells only; appends linear in the batch).  The extra cost is
+Scale shape: cells are scan units, probed cells are pruned from the
+file listing, splits are linear in the oversized cells only, appends
+linear in the batch.  Read cost on top of a plain parquet dir is
 manifest resolution — one LIST + one GET of a KB-scale JSON per read,
-amortized over the query — and a prefix LIST per maintenance op.
+amortized over the query — plus one listed dir per live (cell,
+generation): an index aged by many small appends reads slower until
+:func:`compact_ivf_index_manifest` merges its generations (SCALE.md
+r11/r12).
 
-Same public-design lineage as the dir layout (Jégou, Douze & Schmid
-2011 for IVF serving); the manifest/generation commit protocol is the
-public Iceberg/Delta snapshot idea re-expressed minimally.  Reference
+IVF serving follows Jégou, Douze & Schmid 2011; the
+manifest/generation commit protocol is the public Iceberg/Delta
+snapshot idea re-expressed minimally.  Reference
 parity: the reference engine has no vector index at all (its whole
 pipeline is HyperJoin + MySQL DDL) — this family is part of the
 LLM-pipeline surface built beyond it.
@@ -93,8 +96,7 @@ def _live(spark: SparkSession, root: str, at: int | None = None) -> dict:
     if m is None:
         raise ValueError(
             f"no IVF manifest at {root!r} — build the index with "
-            "write_ivf_index_manifest first (or use the directory-layout "
-            "API in operators.similarity for a plain index)"
+            "write_ivf_index_manifest first"
         )
     if m.get("table") != "ivf-index":
         # the commit protocol is shared; the TABLE KIND is not — reading
@@ -134,10 +136,27 @@ def _existing_dir_cell_ids(spark: SparkSession, root: str) -> set[int]:
     return out
 
 
+def _assign(
+    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """``ivf_assign``, carrying every other input column (e.g. the int8
+    codes of ``quantize_embeddings``) into the index beside the vector —
+    the payload quantized serving reads instead of the floats.  A stale
+    ``centroid_id``/``cell_id`` on the input is replaced, never kept."""
+    assigned = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
+    extra = [
+        c for c in vectors.columns
+        if c not in (id_col, vec_col, "centroid_id", "cell_id")
+    ]
+    if not extra:
+        return assigned
+    return assigned.join(vectors.select(id_col, *extra), on=id_col)
+
+
 def _prepare(assigned: DataFrame, gen: int, sort_by: str | None) -> DataFrame:
-    """Pin cell_id LONG (same contract as write_ivf_index), tag the
-    target generation, and restore the in-file (cell, id) sort order
-    that cell_local row-group skipping relies on."""
+    """Pin cell_id LONG, tag the target generation, and restore the
+    in-file (cell, id) sort order that cell_local row-group skipping
+    relies on."""
     if "g" in assigned.columns:
         raise ValueError(
             "the manifest store reserves column name 'g' for its "
@@ -185,16 +204,18 @@ def _write_centroids(centroids: DataFrame, root: str, gen: int) -> None:
 
 
 def _guard_layout(spark: SparkSession, root: str) -> None:
-    """Refuse to build a manifest index over a directory-layout one: the
-    two layouts resolve reads differently, and silently mixing them is
-    exactly the misread class the corpus/LSH layout guards fail loudly
-    on."""
+    """Refuse to build an index over a root holding ``centroid_id=``
+    partition dirs (a plain partitioned IVF dump): the manifest read
+    resolves only published generations, so those rows would be
+    silently invisible — the misread class the corpus/LSH layout guards
+    fail loudly on."""
     for name in _ls_names(spark, root.rstrip("/")):
         if name.startswith("centroid_id="):
             raise ValueError(
                 f"{root!r} holds a directory-layout IVF index "
                 f"({name!r} at the root) — a manifest index cannot share "
-                "its root; compact/migrate to a fresh path first"
+                "its root; rebuild it at a fresh path with "
+                "write_ivf_index_manifest"
             )
 
 
@@ -534,7 +555,35 @@ def write_ivf_index_manifest(
     state (if any) is superseded atomically at publish, never deleted
     here (:func:`ivf_vacuum` reclaims it).  The quantizer is committed
     WITH the data, so the index is self-contained from the first
-    manifest on.  Returns the published sequence number."""
+    manifest on.  Columns of ``vectors`` beyond the id and the vector
+    ride along (e.g. the int8 codes quantized serving reads).  Returns
+    the published sequence number.
+
+    ``sort_by`` (default ``id_col``) sorts rows WITHIN each written file
+    by (cell, id), shuffle-free, so every parquet row group carries a
+    narrow id min/max and the rerank stage's candidate-id fetch
+    (``ann_ivf_index_topk_quantized``) can SKIP row groups holding no
+    candidate — once cells span several row groups (size them with
+    ``parquet.block.size`` on the Hadoop conf).  Two conditions are
+    REQUIRED for that skipping to fire (measured r9, SCALE.md
+    ``ivf_rowgroup``; id sorting alone skips nothing for uniform ids):
+
+    1. The candidate list must reach parquet as a real ``In`` predicate:
+       past ``spark.sql.parquet.pushdown.inFilterThreshold`` Spark
+       degrades it to a ``[min,max]`` range that skips nothing.  The
+       engine raises the threshold to 512 (:mod:`..session`), NOT
+       higher: the pushed In becomes a nested parquet ``Or`` and ~1000+
+       literals overflow a worker thread's stack (measured r13), so keep
+       ``Q × rerank`` fetches under it or accept the range fallback.
+    2. The predicate must be PER-CELL (``fetch="cell_local"``:
+       ``cell_id = c AND id IN ids_in_c``): a cell's ids are a uniform
+       sample of the global id space, so a sorted row group almost
+       surely contains some id of a GLOBAL candidate list; per cell the
+       density drops by ~C and row groups do get skipped (−40% fetch
+       bytes at probe geometry).  That is why every generation copies
+       the partition value into the data column ``cell_id`` (partition
+       columns are not inside the files; the constant copy encodes to
+       ~nothing)."""
     spark = vectors.sparkSession
     _guard_layout(spark, root)
     live = manifest_read(spark, root)
@@ -554,9 +603,9 @@ def write_ivf_index_manifest(
     # assigned feeds BOTH the data write and the touched-cells collect:
     # checkpoint it once (the SCALE.md r10 foreachBatch lesson — never
     # recompute a relation referenced more than once in a sink body)
-    assigned = ivf_assign(
-        vectors, centroids, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=True)
+    assigned = _assign(vectors, centroids, id_col, vec_col).localCheckpoint(
+        eager=True
+    )
     _write_gen(_prepare(assigned, gen, sort_by or id_col), root)
     _write_centroids(centroids, root, gen)
     cell_ids = sorted(
@@ -589,11 +638,9 @@ def read_ivf_index_manifest(
 ) -> DataFrame:
     """Read the LIVE index state: exactly the generation dirs the newest
     valid manifest names.  Orphans and superseded generations are
-    invisible by construction — the manifest-side answer to the dir
-    layout's refuse-on-sentinel read guard.  Schema matches the
-    directory-layout read (data columns + inferred ``centroid_id``
-    partition column), so every serving plan
-    (``ann_ivf_index_topk[_quantized]``) works unchanged.
+    invisible by construction.  Schema: the data columns plus the
+    inferred ``centroid_id`` partition column — the shape every serving
+    plan (``ann_ivf_index_topk[_quantized]``) takes.
 
     ``as_of`` (r11) reads the SNAPSHOT as of commit seq ``as_of``
     (newest manifest ≤ it) — the index BEFORE a split/compaction/batch,
@@ -654,11 +701,10 @@ def ivf_append_manifest(
       they are invisible; the retry lands at a fresh attempt-unique
       generation while the orphans await vacuum;
     * re-delivery AFTER publish (checkpoint commit lost — the window
-      plain appends duplicate into, in BOTH layouts): the manifest's
-      batch LEDGER already records ``batch_id``, so the replay is
-      detected and skipped.  Without ``batch_id`` the ledger is
-      bypassed and this append is at-least-once under re-delivery,
-      exactly like the dir layout's ``ivf_append``.
+      plain appends duplicate into): the manifest's batch LEDGER
+      already records ``batch_id``, so the replay is detected and
+      skipped.  Without ``batch_id`` the ledger is bypassed and this
+      append is at-least-once under re-delivery.
 
     Multi-writer (r12): a lost conditional PUT (another writer — an
     ingest stream on a second driver, or a maintenance pass — committed
@@ -680,8 +726,8 @@ def ivf_append_manifest(
         centroids = read_ivf_centroids(spark, root)
         # batch-bounded and referenced twice (write + touched-cells
         # collect): checkpoint, per the SCALE.md r10 foreachBatch lesson
-        assigned = ivf_assign(
-            new_vectors, centroids, id_col=id_col, vec_col=vec_col
+        assigned = _assign(
+            new_vectors, centroids, id_col, vec_col
         ).localCheckpoint(eager=True)
         _write_gen(_prepare(assigned, gen, id_col), root)
         touched = sorted(
@@ -857,16 +903,24 @@ def ivf_split_oversized_manifest(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[int]:
-    """Hot-cell split, manifest flavor: same semantics as
-    ``similarity.ivf_split_oversized`` (Lloyd-train ``k`` subcells inside
-    each cell over ``max_rows``, reassign only that cell's rows, fresh
-    non-colliding subcell ids; bump nprobe per split generation for
-    recall-critical traffic — see the dir-layout docstring) — but each
-    cell's swap commits by PUBLISHING a manifest that drops the parent,
-    adds the subcells, AND names the matching quantizer generation, so
-    there is no sentinel, no recovery op, no scheme restriction, and no
-    caller-held centroid relation to drift (the index owns its
-    quantizer; read it back with :func:`read_ivf_centroids`).
+    """Hot-cell mitigation, the vector-index analogue of salted-join
+    skew handling: appends assign against the FROZEN quantizer, so
+    ingest drift grows whichever cells sit nearest the new data, and a
+    runaway cell dominates every probe touching it (a cell is the scan
+    unit).  Splits every cell over ``max_rows`` rows into ``k`` subcells
+    (Lloyd-trained inside the cell, deterministic), reassigning only that
+    cell's rows under fresh non-colliding ids.  Each cell's swap commits
+    by PUBLISHING a manifest that drops the parent, adds the subcells AND
+    names the matching quantizer generation: no sentinel, no recovery
+    op, no scheme restriction, no caller-held centroids to drift (read
+    the quantizer back with :func:`read_ivf_centroids`).
+
+    Serving note (SCALE.md r9): moved cell boundaries can split a
+    query's true neighbors across subcells — at EQUAL nprobe recall
+    dipped 1.000 → 0.975 on the 50%-skewed fixture while scored rows
+    fell −49%; bump ``nprobe`` by ~1 per split generation for
+    recall-critical traffic (recall recovers at nprobe+1; test-pinned in
+    tests/test_similarity.py).
 
     One publish per split cell: a crash mid-pass leaves every completed
     cell committed and the interrupted cell fully live in its pre-split
@@ -874,7 +928,7 @@ def ivf_split_oversized_manifest(
     Re-run to continue — the pass re-derives oversized cells from the
     LIVE manifest, so it is idempotent.  Returns the split parent ids
     (empty = nothing oversized).  A cell more than ``k``×max_rows
-    oversized needs repeated passes, as in the dir layout."""
+    oversized needs repeated passes."""
     live = _live(spark, root)
     cells = _cells_of(live)
     index = read_ivf_index_manifest(spark, root)
@@ -1109,61 +1163,6 @@ def compact_ivf_index_manifest(
             sorted({g for gs in new_cells.values() for g in gs})
         ),
     }
-
-
-def migrate_ivf_index_to_manifest(
-    spark: SparkSession,
-    dir_path: str,
-    root: str,
-    *,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-) -> int:
-    """One-call migration from the directory layout to the manifest
-    store: read the rename-based index (refusing a mid-flight split, as
-    any read does), re-cell NOTHING — rows keep their assignments — and
-    publish them with the given quantizer as generation 1 at a FRESH
-    root.  ``centroids`` is the caller-held relation the dir layout
-    requires them to carry; after this call the index owns it and the
-    caller can drop theirs.  The source index is left untouched (delete
-    it once the manifest copy is verified — e.g. compare
-    ``read_ivf_index`` row sets).  Linear in the index, the same cost as
-    one compaction."""
-    from .similarity import read_ivf_index
-
-    _guard_layout(spark, root)
-    if manifest_read(spark, root) is not None:
-        raise ValueError(
-            f"{root!r} already holds a manifest index — migrate to a "
-            "fresh root"
-        )
-    src = read_ivf_index(spark, dir_path)
-    assigned = src.withColumn(
-        "centroid_id", F.col("centroid_id").cast("long")
-    )
-    centroids = centroids.localCheckpoint(eager=True)
-    cell_ids = sorted(
-        int(r[0])
-        for r in assigned.select("centroid_id").distinct().collect()
-    )
-    cent_ids = {
-        int(r[0]) for r in centroids.select("centroid_id").collect()
-    }
-    missing = [c for c in cell_ids if c not in cent_ids]
-    if missing:
-        # validated BEFORE any write: nothing to orphan on refusal
-        raise ValueError(
-            f"cells {missing} exist in the index at {dir_path!r} but not "
-            "in the given centroid relation — the caller-held quantizer "
-            "drifted from the index (the hazard this store eliminates); "
-            "pass the relation the index was last assigned under"
-        )
-    gen = fresh_gen(1)  # attempt-unique data path: fresh_gen docstring
-    _write_gen(_prepare(assigned, gen, id_col), root)
-    _write_centroids(centroids, root, gen)
-    return _publish(
-        spark, root, {c: [gen] for c in cell_ids}, centroids_gen=gen, seq=1
-    )
 
 
 def ivf_vacuum(

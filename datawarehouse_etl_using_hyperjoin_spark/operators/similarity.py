@@ -501,7 +501,7 @@ def quantize_embeddings(
 
     At 100 TB the embedding column IS the table — 64 float32 dims are
     256 B/row before a single metadata byte — so quantizing the indexed
-    corpus (e.g. the :func:`write_ivf_index` cells) cuts every probe's
+    corpus (e.g. the ``ivf_store.write_ivf_index_manifest`` cells) cuts every probe's
     scan bytes 4× at a reconstruction error bounded by scale/2 per
     element (max|x|/254).  All JVM-side array expressions — no Python, no
     shuffle; the original vector column is kept (drop it at write time
@@ -643,462 +643,6 @@ def cosine_topk_quantized(
     )
 
 
-def write_ivf_index(
-    assigned: DataFrame,
-    path: str,
-    *,
-    mode: str = "overwrite",
-    sort_by: str | None = None,
-    writer_options: dict[str, str] | None = None,
-) -> None:
-    """Persist a cell assignment (from :func:`ivf_assign`) as the at-rest
-    IVF index: parquet PARTITIONED BY ``centroid_id``.
-
-    This makes :func:`ivf_assign`'s "cell id = partition key at rest"
-    posture real: each IVF cell is its own partition directory, so a probe
-    that touches ``nprobe`` cells prunes every other cell at SCAN time
-    (``PartitionFilters`` on the file listing — no data read, no shuffle).
-    At 100 TB with C=65k cells and nprobe=8, a query batch reads
-    ~nprobe/C of the corpus bytes instead of all of them; the full-corpus
-    assignment scan is paid ONCE at write time.  Append new batches with
-    ``mode='append'`` after assigning them against the SAME published
-    centroids (:func:`ivf_append`) — rows land inside their cell's
-    directory, so the index never needs re-clustering.
-
-    ``sort_by`` (typically the vector id) additionally sorts rows WITHIN
-    each written file — a shuffle-free ``sortWithinPartitions(cell, id)``
-    — so every parquet row group carries a narrow id min/max and the
-    rerank stage's pushed-down candidate-id fetch
-    (:func:`ann_ivf_index_topk_quantized`) can SKIP row groups holding
-    no candidate instead of decoding the probed cells' float column
-    end-to-end.  Free at write time; only pays off once cells span
-    multiple row groups, i.e. exactly at scale.
-
-    Two conditions are REQUIRED for that skipping to actually fire
-    (measured r9, SCALE.md ``ivf_rowgroup`` mode — the r8 id-sorting
-    claim alone is FALSE for uniformly-distributed ids):
-
-    1. The candidate list must reach parquet as a real ``In`` predicate:
-       past ``spark.sql.parquet.pushdown.inFilterThreshold`` (default
-       10) Spark degrades it to a ``[min,max]`` range, which skips
-       nothing when candidates span the id space.  The engine session
-       raises the threshold to 512 (:mod:`..session`) — NOT higher:
-       Spark converts the pushed In to a nested parquet ``Or`` whose
-       evaluation recurses once per literal, and ~1000+ literals
-       overflow a worker thread's stack (measured r13) — so keep
-       ``Q × rerank`` fetches under that or accept the range fallback.
-    2. The predicate must be PER-CELL (``cell_id = c AND id IN
-       ids_in_c``): cell membership is a similarity property, so one
-       cell's ids are a uniform sample of the global id space — a
-       sorted row group covering ~rows·C consecutive global ids almost
-       surely CONTAINS some id from a global candidate list even though
-       none of its rows match, and min/max-stats skipping never fires.
-       Against the per-cell list the density drops by ~C and row groups
-       do get skipped (−40% fetch bytes at probe geometry, → the ~66%
-       geometric limit as footer overhead amortizes).  This is why the
-       index duplicates the partition value into the data column
-       ``cell_id``: partition columns do not exist inside the files, so
-       a per-cell predicate could not otherwise be pushed (the copy is
-       constant per file — RLE/dictionary encodes to ~nothing at rest).
-
-    ``writer_options`` passes parquet writer options through (e.g.
-    ``{"parquet.block.size": str(128 << 20)}`` to size row groups so a
-    GB-scale cell holds many skippable groups instead of one).
-    """
-    # r11 (ADVICE): writing past a pending split sentinel would create a
-    # centroid_id dir that ivf_recover_splits later retires and deletes
-    # (append), or rebuild from a view missing the interrupted cell
-    # (overwrite) — refuse on the write side exactly like the read side
-    _raise_if_pending_splits(path, "writing")
-    # r11: refuse to write the DIRECTORY layout into a MANIFEST-layout
-    # root (.ivf_store) — manifest readers resolve only published
-    # generation dirs, so these rows would be silently invisible
-    from ..manifest import manifest_read
-
-    if manifest_read(assigned.sparkSession, path) is not None:
-        raise ValueError(
-            f"{path!r} is a manifest-layout IVF index — write through "
-            "operators.ivf_store (write_ivf_index_manifest / "
-            "ivf_append_manifest); directory-layout files here would be "
-            "invisible to manifest readers"
-        )
-    # cell_id is pinned LONG: when the source of the copy is an inferred
-    # PARTITION column (int32) instead of the long data column, a dir
-    # mixing both widths crashes the vectorized reader on whichever
-    # footer loses schema inference
-    if "cell_id" not in assigned.columns:
-        assigned = assigned.withColumn(
-            "cell_id", F.col("centroid_id").cast("long")
-        )
-    else:
-        assigned = assigned.withColumn(
-            "cell_id", F.col("cell_id").cast("long")
-        )
-    if mode == "append":
-        # layout guard (same rationale as the corpus sink's): appending
-        # cell_id-bearing files into a pre-r9 index whose files LACK the
-        # column would make parquet fill the old files' cell_id with
-        # NULL — fetch="cell_local" would then silently drop every
-        # candidate living in an old file (wrong top-k, no error).
-        # Fail loudly at write time instead.
-        spark = assigned.sparkSession
-        from ..fsutil import table_exists
-
-        if table_exists(spark, path) and "cell_id" not in spark.read.parquet(
-            path
-        ).columns:
-            raise ValueError(
-                f"index at {path!r} predates the cell_id data column — "
-                "appending would mix NULL-cell_id files into it and "
-                "silently break fetch='cell_local'; rewrite the index "
-                "once with write_ivf_index(mode='overwrite') (reads the "
-                "full index, linear) or keep appending with the pre-r9 "
-                "code path"
-            )
-    if sort_by is not None:
-        assigned = assigned.sortWithinPartitions("centroid_id", sort_by)
-    writer = assigned.write.mode(mode)
-    for k, v in (writer_options or {}).items():
-        writer = writer.option(k, v)
-    writer.partitionBy("centroid_id").parquet(path)
-
-
-#: marker left in the index root while ivf_split_oversized swaps a cell's
-#: directories; its presence means a swap crashed mid-flight
-_SPLIT_SENTINEL = ".split_pending.centroid_id="
-
-
-def _local_index_root(path: str) -> str | None:
-    """Filesystem directory behind ``path`` if it is local, else None.
-    The directory-swap maintenance ops (:func:`ivf_split_oversized`,
-    recovery) move partition dirs with os.rename, which only a local
-    filesystem supports — on object stores use a table format's MERGE
-    or rewrite via :func:`compact_ivf_index` to a fresh path."""
-    p = path.rstrip("/")
-    if p.startswith("file://"):
-        return p[len("file://"):] or None
-    if p.startswith("file:"):
-        return p[len("file:"):]
-    head = p.split("/", 1)[0]
-    if ":" in head:  # any other scheme (hdfs:, s3a:, abfss:, gs:, ...)
-        return None
-    return p
-
-
-def _raise_if_pending_splits(path: str, op: str) -> None:
-    """Refuse to touch an IVF index with a crashed cell-split swap in
-    flight (an :func:`ivf_split_oversized` sentinel present): between
-    retiring the parent dir and promoting the subcell dirs, that cell's
-    rows live only in hidden directories, so reading would silently MISS
-    them (wrong top-k, no error) and writing would either build on the
-    truncated view or create a ``centroid_id=c`` dir that recovery later
-    retires and deletes — destroying the write.  r11 (ADVICE): enforced
-    on the WRITE paths too, not just :func:`read_ivf_index`."""
-    import os
-
-    root = _local_index_root(path)
-    if root is None or not os.path.isdir(root):
-        return
-    pending = sorted(
-        n for n in os.listdir(root) if n.startswith(_SPLIT_SENTINEL)
-    )
-    if pending:
-        raise RuntimeError(
-            f"IVF index at {path!r} has {len(pending)} interrupted "
-            f"cell split(s) ({', '.join(pending)}): {op} now would "
-            "silently miss those cells' rows or destroy their staged "
-            "copies. Run ivf_recover_splits(spark, path) to complete "
-            "the swaps, then retry."
-        )
-
-
-def read_ivf_index(spark, path: str) -> DataFrame:
-    """Read the at-rest IVF index written by :func:`write_ivf_index`.
-
-    Refuses to read an index with a crashed cell-split swap in flight
-    (a :func:`ivf_split_oversized` sentinel present): between retiring
-    the parent dir and promoting the subcell dirs, that cell's rows live
-    only in hidden directories and a plain read would silently MISS them
-    — wrong top-k, no error.  Run :func:`ivf_recover_splits` to roll the
-    swap forward, then read.
-
-    r11: a MANIFEST-layout index (:mod:`.ivf_store`, the rename-free
-    object-store-safe lifecycle) is auto-detected by its ``_manifest``
-    commit log and read through its live manifest instead — one read
-    entry point for both layouts, identical output schema."""
-    from ..manifest import manifest_read
-
-    if manifest_read(spark, path) is not None:
-        from .ivf_store import read_ivf_index_manifest
-
-        return read_ivf_index_manifest(spark, path)
-    _raise_if_pending_splits(path, "reading")
-    return spark.read.parquet(path)
-
-
-def ivf_recover_splits(spark, path: str) -> list[int]:
-    """Roll forward cell-split swaps that :func:`ivf_split_oversized`
-    left interrupted (its sentinel present).  The sentinel is written
-    only AFTER the subcell staging write committed, so roll-forward is
-    always safe: retire the parent if it is still live, promote any
-    staged subcell dirs not yet promoted, then clean up.  Idempotent —
-    a crash during recovery is recovered by running it again.  Returns
-    the recovered parent centroid ids."""
-    import os
-    import shutil
-
-    root = _local_index_root(path)
-    if root is None:
-        raise ValueError(
-            f"ivf_recover_splits needs a local filesystem path, got {path!r}"
-        )
-    recovered = []
-    for name in sorted(os.listdir(root)):
-        if not name.startswith(_SPLIT_SENTINEL):
-            continue
-        c = int(name[len(_SPLIT_SENTINEL):])
-        live = os.path.join(root, f"centroid_id={c}")
-        retired = os.path.join(root, f".centroid_id={c}.retired")
-        staging = os.path.join(root, f".centroid_id={c}.splitting")
-        if os.path.isdir(live):  # crashed before the retire rename
-            os.rename(live, retired)
-        if os.path.isdir(staging):
-            for d in sorted(os.listdir(staging)):
-                if not d.startswith("centroid_id="):
-                    continue
-                target = os.path.join(root, d)
-                if os.path.exists(target):
-                    raise RuntimeError(
-                        f"recovery collision: {target!r} already exists "
-                        f"while {d!r} is still staged — the index was "
-                        "modified outside the split protocol; resolve "
-                        "manually"
-                    )
-                os.rename(os.path.join(staging, d), target)
-            shutil.rmtree(staging)
-        if os.path.isdir(retired):
-            shutil.rmtree(retired)
-        os.remove(os.path.join(root, name))
-        recovered.append(c)
-    return recovered
-
-
-def ivf_append(
-    new_vectors: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incrementally ingest a vector batch into the at-rest IVF index:
-    assign against the PUBLISHED centroids (never retrained per batch —
-    retraining would silently re-cell the history) and append into the
-    cell partitions.  Cost is linear in the batch; the indexed corpus is
-    not re-read."""
-    write_ivf_index(
-        ivf_assign(new_vectors, centroids, id_col=id_col, vec_col=vec_col),
-        path,
-        mode="append",
-    )
-
-
-def ivf_split_oversized(
-    spark,
-    path: str,
-    centroids: DataFrame,
-    *,
-    max_rows: int,
-    k: int = 2,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Hot-cell mitigation for the at-rest IVF index — the vector-index
-    analogue of the engine's salted-join skew handling: ingest drift
-    (:func:`ivf_append` assigns against FROZEN published centroids)
-    concentrates new data in whichever cells sit nearest the new
-    distribution, and one runaway cell eventually dominates every probe
-    that touches it (a cell is the scan unit — probe cost is the sum of
-    probed CELL sizes, so one 100×-sized cell makes nprobe irrelevant).
-
-    Splits every cell holding more than ``max_rows`` rows into ``k``
-    subcells: Lloyd-train ``k`` centroids INSIDE the cell (deterministic
-    — :func:`kmeans_refine`'s exact-decimal means), reassign only that
-    cell's rows, land them as new cell partitions, retire the parent.
-    Linear in the oversized cells only; the rest of the index is
-    untouched.  Returns the UPDATED centroid relation (parents removed,
-    subcell centroids appended under fresh non-colliding ids, array
-    element type matched to the input relation) — the caller republishes
-    it exactly as after training; serving needs no other change.
-
-    One pass splits each oversized cell once (``k``-way); a cell more
-    than ``k``×max_rows oversized needs repeated passes — call in a loop
-    until the returned relation stops changing.  Layout discipline: new
-    partitions carry ``cell_id`` only when the index already does (a
-    legacy index stays PURE legacy rather than becoming the mixed
-    layout the :func:`write_ivf_index` append guard exists to prevent;
-    migrate via :func:`compact_ivf_index` first to get cell_local
-    serving).  Swap discipline per cell: stage subcell dirs → write a
-    sentinel → rename the parent aside (hidden) → promote → clean up →
-    remove the sentinel.  A crash mid-swap leaves the sentinel behind;
-    :func:`read_ivf_index` refuses to read past it (the cell's rows
-    would otherwise be silently invisible) and
-    :func:`ivf_recover_splits` rolls the swap forward.  Local
-    filesystem ONLY (directory renames) — non-local schemes raise up
-    front; at object-store scale do the equivalent rewrite through a
-    table format's MERGE or :func:`compact_ivf_index` to a fresh path.
-
-    Serving note (measured, SCALE.md r9): splitting moves cell
-    boundaries, so a query that used to resolve entirely inside the hot
-    cell may now have true neighbors straddling two subcells — at EQUAL
-    nprobe, recall dipped 1.000 → 0.975 on the 50%-skewed probe fixture
-    while scored rows dropped −49%.  If the split cells serve
-    recall-critical traffic, bump ``nprobe`` by ~1 per split generation
-    (recall recovers fully at nprobe+1 on that fixture, still scanning
-    far fewer rows than the unsplit hot cell; test-pinned in
-    tests/test_similarity.py).
-    """
-    import os
-    import shutil
-
-    live_root = _local_index_root(path)
-    if live_root is None:
-        raise ValueError(
-            f"ivf_split_oversized swaps partition directories with "
-            f"os.rename and needs a local filesystem path, got {path!r} — "
-            "on object stores rewrite through a table format MERGE or "
-            "compact_ivf_index to a fresh path instead"
-        )
-    # r11 (ADVICE): a new split pass after a crashed swap would size and
-    # split an index silently missing the interrupted cell — recover first
-    _raise_if_pending_splits(path, "splitting")
-    index = spark.read.parquet(path)
-    has_cell_col = "cell_id" in index.columns
-    sizes = index.groupBy("centroid_id").count().collect()  # C rows
-    oversized = sorted(
-        int(r["centroid_id"]) for r in sizes if r["count"] > max_rows
-    )
-    if not oversized:
-        return centroids
-    cent_type = centroids.schema["centroid"].dataType
-    next_id = (
-        max(int(r["centroid_id"]) for r in centroids.select("centroid_id").collect())
-        + 1
-    )
-    new_cent_frames = []
-    for c in oversized:
-        cell = spark.read.parquet(f"{path}/centroid_id={c}")
-        sub = kmeans_refine(
-            cell,
-            ivf_seed_centroids(cell, k, id_col=id_col, vec_col=vec_col),
-            iters=iters, id_col=id_col, vec_col=vec_col,
-        )
-        # renumber the surviving subcells (k, unless Lloyd dropped an
-        # empty one) onto fresh ids that collide with nothing
-        w = Window.orderBy("centroid_id")
-        sub = (
-            sub.withColumn(
-                "centroid_id",
-                (F.lit(next_id) + F.row_number().over(w) - F.lit(1)).cast("long"),
-            )
-            .withColumn("centroid", F.col("centroid").cast(cent_type))
-            .localCheckpoint(eager=True)
-        )
-        next_id += sub.count()
-        newly = ivf_assign(cell, sub, id_col=id_col, vec_col=vec_col).select(
-            id_col, "centroid_id"
-        )
-        re = cell.drop("centroid_id", "cell_id").join(newly, on=id_col)
-        if has_cell_col:
-            # pinned LONG, matching write_ivf_index's cell_id type
-            re = re.withColumn("cell_id", F.col("centroid_id").cast("long"))
-        staging = os.path.join(live_root, f".centroid_id={c}.splitting")
-        (
-            re.repartition(k, F.col("centroid_id"))
-            .sortWithinPartitions("centroid_id", id_col)
-            .write.mode("overwrite").partitionBy("centroid_id")
-            .parquet(staging)
-        )
-        # sentinel AFTER the staging write committed: from here the swap
-        # is roll-forward-safe (ivf_recover_splits), and read_ivf_index
-        # refuses to read past it mid-flight
-        sentinel = os.path.join(live_root, f"{_SPLIT_SENTINEL}{c}")
-        with open(sentinel, "w") as fh:
-            fh.write("")
-        retired = os.path.join(live_root, f".centroid_id={c}.retired")
-        os.rename(os.path.join(live_root, f"centroid_id={c}"), retired)
-        for d in os.listdir(staging):
-            if d.startswith("centroid_id="):
-                os.rename(
-                    os.path.join(staging, d), os.path.join(live_root, d)
-                )
-        shutil.rmtree(staging)
-        shutil.rmtree(retired)
-        os.remove(sentinel)
-        new_cent_frames.append(sub)
-    out = centroids.filter(
-        ~F.col("centroid_id").isin([int(c) for c in oversized])
-    )
-    for frame in new_cent_frames:
-        out = out.unionByName(frame)
-    return out.localCheckpoint(eager=True)
-
-
-def compact_ivf_index(
-    spark, path: str, *, target_file_mb: int = 128, id_col: str = "vec_id"
-) -> dict[str, int]:
-    """Maintenance pass closing the IVF index lifecycle (train →
-    :func:`write_ivf_index` → :func:`ivf_append` per batch → THIS →
-    serve): every append lands one file per cell per batch, so after
-    weeks of ingest a cell is hundreds of small files and each probe
-    pays open/footer costs per file instead of per-128 MB split.
-    Rewrites the index to ~``target_file_mb`` files, preserving the
-    cell partitioning and restoring the id-sorted in-file order that
-    ``fetch="cell_local"`` row-group skipping needs (appends land
-    sorted per batch, but the CELL's id order interleaves across
-    files).  Delegates to :func:`...sources.files.compact_table`
-    (near-atomic two-rename swap — the published path is never absent,
-    crash-recoverable from the hidden side dirs).
-
-    Doubles as the one-call migration the :func:`write_ivf_index`
-    append guard points at: a pre-cell_id index gets the ``cell_id``
-    data column backfilled during the rewrite it was going to pay for
-    anyway, after which appends and ``cell_local`` serving both work.
-
-    ``id_col`` must name the same id column the index was written with
-    (:func:`write_ivf_index`'s ``sort_by`` / :func:`ivf_append`'s
-    ``id_col``) — the in-file sort order ``cell_local`` row-group
-    skipping relies on is (cell, id).
-    """
-    from ..sources.files import compact_table
-
-    # r11 (ADVICE): compacting past a pending split would rewrite the
-    # index from a view missing the interrupted cell — recover first
-    _raise_if_pending_splits(path, "compacting")
-    if id_col not in spark.read.parquet(path).columns:
-        raise ValueError(
-            f"compact_ivf_index: id column {id_col!r} not in the index at "
-            f"{path!r} — pass the id_col the index was written with"
-        )
-    return compact_table(
-        spark,
-        path,
-        target_file_mb=target_file_mb,
-        partition_by=["centroid_id"],
-        sort_by=["centroid_id", id_col],
-        # cell_id pinned LONG (see write_ivf_index): centroid_id here is
-        # the INFERRED partition column (int32), and without the cast a
-        # later long-typed append makes a mixed-width dir that crashes
-        # the vectorized reader — the bug the r9 end-of-round suite caught
-        transform=lambda df: df.withColumn(
-            "cell_id",
-            (F.col("cell_id") if "cell_id" in df.columns
-             else F.col("centroid_id")).cast("long"),
-        ),
-    )
-
-
 def ivf_probes(
     queries: DataFrame,
     centroids: DataFrame,
@@ -1185,7 +729,8 @@ def ann_ivf_index_topk(
     k: int = 3,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF search against the AT-REST index (:func:`write_ivf_index`):
+    """IVF search against the AT-REST index
+    (``ivf_store.read_ivf_index_manifest``):
     identical semantics to :func:`ann_ivf_topk`, but the corpus side is
     the cell-partitioned table and the probed cells are pushed down as a
     LITERAL partition filter, so non-probed cells are pruned from the
@@ -1242,7 +787,7 @@ def ann_ivf_index_topk_quantized(
 ) -> DataFrame:
     """IVF search against an at-rest index whose cells hold int8-QUANTIZED
     payloads (:func:`quantize_embeddings` applied before
-    :func:`write_ivf_index`): the partition-pruned probe of
+    ``ivf_store.write_ivf_index_manifest``): the partition-pruned probe of
     :func:`ann_ivf_index_topk` composed with the code-space scoring of
     :func:`cosine_topk_quantized` — the IVF-with-compressed-residuals
     serving architecture of Jégou, Douze & Schmid 2011 ("Product
@@ -1272,11 +817,11 @@ def ann_ivf_index_topk_quantized(
     - ``"cell_local"``: per-cell ``(cell_id = c AND id IN ids_in_c)``
       disjunction — the shape whose row-group stats skipping actually
       fires on an at-rest index written with
-      ``write_ivf_index(sort_by=id)`` (see its docstring: a GLOBAL list
+      ``write_ivf_index_manifest`` (see its ``sort_by`` docs: a GLOBAL list
       over id-sorted cells skips nothing, because every row group's id
       range contains some candidate from ANOTHER cell).  Requires the
-      index to carry the ``cell_id`` data column (any index written by
-      write_ivf_index since r9); measured −40% fetch bytes at probe
+      index to carry the ``cell_id`` data column (every manifest index
+      does); measured −40% fetch bytes at probe
       geometry, SCALE.md r9.  On an UNSORTED at-rest layout this shape
       is a pessimization (column-index two-pass reads with zero skips —
       also measured), so it is opt-in, not autodetected.
@@ -1307,7 +852,7 @@ def ann_ivf_index_topk_quantized(
     if fetch == "cell_local" and "cell_id" not in index.columns:
         raise ValueError(
             "fetch='cell_local' needs the index's cell_id data column "
-            "(re-write the index with write_ivf_index; partition-only "
+            "(re-write the index with write_ivf_index_manifest; partition-only "
             "cell ids cannot anchor an in-file per-cell predicate)"
         )
     if fetch == "cell_local" and prune == "join":
@@ -1495,7 +1040,7 @@ def semantic_dedup(
     Plan shape: one broadcast assignment scan (ivf_assign), one
     equi-join on centroid_id (shuffle bounded by corpus size), one
     anti-join back.  At rest, write the assignment cell-partitioned
-    (write_ivf_index) and dedup each new batch against only its own
+    (write_ivf_index_manifest) and dedup each new batch against only its own
     cells' files — the incremental form mirrors the LSH/fingerprint
     index paths.
     """
@@ -1650,7 +1195,7 @@ def embedding_incremental_pairs(
     bucket larger than ``max_bucket`` (a mode/dead-embedding bucket —
     the thing that would make one task quadratic at 100 TB) is
     SUB-BUCKETED with ``sub_bits`` more sign bits (a larger effective m
-    for that bucket only, mirroring ``ivf_split_oversized``), on BOTH
+    for that bucket only, mirroring ``ivf_split_oversized_manifest``), on BOTH
     probe legs, so its near-dups are still caught — a near-dup pair
     agrees on the extra sign bits with overwhelming probability, and a
     planted copy by construction.  A sub-bucket that is STILL oversized

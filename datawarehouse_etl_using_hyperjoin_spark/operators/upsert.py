@@ -136,104 +136,7 @@ def scd2_upsert(
     )
 
 
-#: internal bucket column for the partitioned dim layout — a pure
-#: function of the key, so the same key always lands in the same
-#: partition directory across batches.  Deliberately NOT underscore-
-#: prefixed: partition directories are named ``<col>=<val>`` and a
-#: leading underscore would make every one read as a hidden entry to
-#: Hadoop-FS visibility checks (``_temporary``-style), breaking the
-#: "does the table exist yet" probe.
-DIM_BUCKET_COL = "kp_bucket"
-
-
-def read_dim(spark, path: str) -> DataFrame:
-    """Read a dim maintained by :func:`upsert_parquet_sink`, hiding the
-    internal bucket column when the bucketed layout is in use."""
-    df = spark.read.parquet(path)
-    return df.drop(DIM_BUCKET_COL) if DIM_BUCKET_COL in df.columns else df
-
-
-def _read_dim_layout(spark, path: str) -> int | None:
-    """Bucket count recorded in the dim's ``_layout`` marker (written at
-    table creation by the bucketed sink), or None when absent (flat
-    table, or a pre-r11 bucketed table — backfilled on its next batch).
-    The marker lives in an underscore dir, invisible to the data read,
-    and is itself parquet so the probe works gateway-free (Connect)."""
-    from pyspark.errors import AnalysisException
-
-    from ..fsutil import is_no_table_error
-
-    marker = f"{path}/_layout"
-    try:
-        rows = spark.read.parquet(marker).collect()
-    except AnalysisException as exc:
-        if is_no_table_error(exc, marker):
-            return None
-        raise
-    return int(rows[0]["buckets"])
-
-
-def _write_dim_layout(spark, path: str, buckets: int) -> None:
-    spark.createDataFrame([(int(buckets),)], "buckets int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/_layout")
-
-
-def _check_dim_layout(spark, path: str, buckets: int | None) -> bool:
-    """Enforce the sticky-layout contract against an EXISTING dim (r11,
-    ADVICE): rerunning the sink with a different ``buckets`` value would
-    recompute ``kp_bucket`` with the new P, so a key's old row in its
-    former bucket dir is never overwritten while the new row lands in
-    another dir — silent duplicate keys.  Raise loudly instead, like the
-    LSH-index and corpus-dir layout guards.  Returns True when a legacy
-    bucketed table (pre-marker) passed the checks and should have the
-    marker backfilled."""
-    recorded = _read_dim_layout(spark, path)
-    cols = spark.read.parquet(path).columns
-    is_bucketed = DIM_BUCKET_COL in cols
-    if is_bucketed != (buckets is not None):
-        raise ValueError(
-            f"dim layout mismatch at {path!r}: the existing table is "
-            f"{'bucketed' if is_bucketed else 'flat'} but the sink was "
-            f"built with buckets={buckets!r} — the layout is per-table "
-            "and sticky (changing it strands rows in stale directories); "
-            "keep the original setting or rebuild the dim from scratch"
-        )
-    if buckets is None:
-        return False
-    if recorded is not None:
-        if recorded != int(buckets):
-            raise ValueError(
-                f"dim bucket-count mismatch at {path!r}: table was "
-                f"created with buckets={recorded} but the sink was built "
-                f"with buckets={buckets} — a key's old row would stay in "
-                "its former bucket dir while the new row lands in "
-                "another (silent duplicate keys); use buckets={recorded} "
-                "or rebuild the dim"
-            )
-        return False
-    # legacy bucketed table without a marker: the strongest gateway-free
-    # check — any observed bucket id >= P proves a mismatch
-    from ..fsutil import list_visible
-
-    vis = list_visible(spark, path)
-    if vis is not None:
-        seen = [
-            int(name.split("=", 1)[1])
-            for name, is_dir in vis
-            if is_dir and name.startswith(f"{DIM_BUCKET_COL}=")
-        ]
-        if seen and max(seen) >= int(buckets):
-            raise ValueError(
-                f"dim bucket-count mismatch at {path!r}: existing bucket "
-                f"dir {DIM_BUCKET_COL}={max(seen)} is outside "
-                f"buckets={buckets} — the table was created with a "
-                "larger bucket count; use the original value or rebuild"
-            )
-    return True
-
-
-def upsert_parquet_sink(path: str, key: str, *, buckets: int | None = None):
+def upsert_parquet_sink(path: str, key: str):
     """``foreachBatch`` sink factory: maintain a keyed parquet dim table.
 
     Usage::
@@ -256,89 +159,26 @@ def upsert_parquet_sink(path: str, key: str, *, buckets: int | None = None):
     every existing dim row not in the current batch — here it fails the
     batch and the replay retries.
 
-    **Write amplification** (r10): with ``buckets=None`` every batch
-    rewrites the whole table — per-batch write bytes scale with |dim|,
-    fine for the reference's master data but the write-path analogue of a
-    quadratic read at 100× dim size under frequent micro-batches.  Pass
-    ``buckets=P`` to key-hash-partition the dim
-    (``pmod(xxhash64(key), P)`` → partition dir per bucket) and
-    dynamic-partition-overwrite ONLY the buckets the batch touches:
-    per-batch write bytes drop from |dim| to ``min(|batch keys|, P) ×
-    (dim_bytes / P)`` — ∝ |batch| in the regime that matters for dims
-    (update micro-batches far smaller than P; a batch with ≥P distinct
-    keys still rewrites everything, hash bucketing has no key
-    locality), and untouched partition files are byte-identical after
-    the batch (tests/test_upsert_partitioned.py pins this;
-    tools/scale_probe.py dim_write_amp measures it).  Size P so a
-    bucket ≈ a comfortable task output (dim_bytes / P ~ 64–256 MB at
-    target scale) and stays well above the expected per-batch distinct
-    key count; the bucket column is internal — read the dim back
-    through :func:`read_dim`.  The layout choice is per-table and sticky,
-    and ENFORCED (r11): the bucketed sink records P in a ``_layout``
-    marker at creation and every batch checks the declared value against
-    the existing table (marker, schema, and bucket-dir probe), raising a
-    ValueError on any mismatch — changing P mid-table would strand a
-    key's old row in its former bucket dir while the new row lands in
-    another (silent duplicate keys, the failure the loud guard replaces).
+    **Write amplification**: every batch rewrites the whole table, so
+    per-batch write bytes scale with |dim| — fine for the reference's
+    master data.  Where that matters (large dims, frequent sparse
+    updates), commit through ``sources.manifest_table.manifest_upsert_sink``
+    instead (``make_star_sink(dim_layout="manifest")``): its merge
+    rewrites only the generations holding matched keys, atomically.
+    A table this sink did not write (e.g. one carrying an extra
+    partition column) fails the batch in the union before any write.
     """
     from ..fsutil import table_exists
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        has_table = table_exists(spark, path)
-        # r11 (ADVICE): the layout is sticky — enforce, don't document
-        backfill_marker = has_table and _check_dim_layout(spark, path, buckets)
         batch = latest_per_key(
             batch_df, key, [F.col(c) for c in batch_df.columns if c != key]
         )
-        if buckets is None:
-            existing = spark.read.parquet(path) if has_table else None
-            merged = batch if existing is None else scd1_upsert(existing, batch, key=key)
-            # Materialize before overwrite: the plan reads the path it rewrites.
-            merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-            return
-
-        batch = batch.withColumn(
-            DIM_BUCKET_COL,
-            F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)).cast("int"),
-        )
-        # Buckets this batch touches — bounded by the design parameter P,
-        # never by data size.
-        touched = [r[0] for r in batch.select(DIM_BUCKET_COL).distinct().collect()]
-        if not touched:
-            if backfill_marker:
-                _write_dim_layout(spark, path, buckets)
-            return
-        if has_table:
-            # Partition-pruned read: only the touched bucket directories
-            # are scanned (the In predicate hits the partition column).
-            existing = spark.read.parquet(path).where(
-                F.col(DIM_BUCKET_COL).isin(touched)
-            )
-            merged = scd1_upsert(existing, batch, key=key)
-        else:
-            merged = batch
-        # One write task per touched bucket: without this, EVERY shuffle
-        # task writes a sliver into every touched partition dir —
-        # touched × parallelism files per batch, the small-files
-        # explosion that makes later scans pay per-file open costs.
-        merged = merged.repartition(len(touched), F.col(DIM_BUCKET_COL))
-        (
-            merged.localCheckpoint(eager=True)
-            .write.mode("overwrite")
-            # dynamic: replace only the partitions PRESENT in the output —
-            # i.e. the touched buckets; every other bucket's files are
-            # left physically untouched.
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(DIM_BUCKET_COL)
-            .parquet(path)
-        )
-        if not has_table or backfill_marker:
-            # record the bucket count so every later batch (and a rerun
-            # with a different `buckets`) is checked against it; lands
-            # in an underscore dir the data read never sees, and the
-            # dynamic overwrite above never deletes it
-            _write_dim_layout(spark, path, buckets)
+        existing = spark.read.parquet(path) if table_exists(spark, path) else None
+        merged = batch if existing is None else scd1_upsert(existing, batch, key=key)
+        # Materialize before overwrite: the plan reads the path it rewrites.
+        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
 
     return _sink
 

@@ -35,75 +35,97 @@ EXCLUDED_OPTIMIZER_RULES = (
 )
 
 
+#: The engine conf, one row per key: ``(key, value, on_foreign)``.
+#: ``value`` is a string, or a function of the core count.  ``on_foreign``
+#: says what :func:`ensure_engine_conf` does with the key on a session the
+#: engine did not build: ``"set"`` overwrites it, ``"if_unset"`` sets it
+#: only when the caller left it unset (a deliberately tuned value —
+#: including an explicitly pinned Spark default — is kept), ``None``
+#: leaves it alone (launch-time only, or not correctness-relevant).
+ENGINE_CONF = (
+    ("spark.sql.shuffle.partitions", lambda cpus: str(cpus), None),
+    ("spark.sql.adaptive.enabled", "true", "set"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true", None),
+    # Start every exchange WIDE and let AQE coalesce down: a fixed
+    # shuffle-partition count is the one knob that breaks linearity
+    # when data outgrows it (the r8 langid scale probe measured 52 s
+    # → 11.5 s at 20× sf0.1 docs from this line alone — per-partition
+    # aggregate hash maps stop spilling), while parallelismFirst
+    # coalescing keeps small exchanges at ~cpus partitions, so the
+    # sf0.1 suite is unharmed (measured at-or-faster on every query).
+    # 8×cpus: 1024 over-fragments (30.8 s — task overhead), 256 wins.
+    # Runtime-settable, so a plain session the engine did not build
+    # gets the linear-at-scale posture too.
+    (
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        lambda cpus: str(8 * cpus),
+        "if_unset",
+    ),
+    ("spark.sql.adaptive.skewJoin.enabled", "true", None),
+    # Push bounded id LISTS to parquet as a real In predicate instead
+    # of degrading to a [min,max] range past 10 values (the default).
+    # The engine's bounded-literal-collect operators (ANN rerank
+    # candidate-id fetch ≤ Q·rerank ids, probed-cell pruning ≤
+    # Q·nprobe) push hundreds of uniform ids; a range over uniform
+    # ids skips NOTHING, while the In predicate's row-group stats
+    # check skips every row group holding no candidate (measured
+    # r9: 130 → 48 MB on a 140-row-group id-sorted scan of 50
+    # uniform ids; see SCALE.md ivf_rowgroup).  CEILING measured
+    # r13: Spark converts the pushed In to a NESTED parquet Or —
+    # ~1000 literals overflow a worker thread's stack
+    # (non-deterministically at 1000, always by 1500), so the old
+    # 4096 setting CRASHED any 1000+-value fetch instead of
+    # degrading it; 512 keeps every measured win and lets bigger
+    # lists fall back to the (slower, correct) range filter.
+    ("spark.sql.parquet.pushdown.inFilterThreshold", "512", "if_unset"),
+    # Let the planner pick shuffled-hash over sort-merge when its size
+    # conditions hold, and let AQE rewrite SMJ→SHJ at runtime when
+    # every post-shuffle partition is under 64 MB.  Two DISTINCT
+    # mechanisms with distinct safety envelopes (ADVICE r14):
+    # - the AQE rewrite threshold bounds the per-task build side by
+    #   MEASURED runtime partition sizes — bounded by design;
+    # - preferSortMergeJoin=false additionally lets the STATIC
+    #   planner pick SHJ from stats-ESTIMATED sizes
+    #   (canBuildLocalHashMap: plan side < advisory partition size ×
+    #   shuffle partitions, AND ≪ the other side).  SHJ's per-task
+    #   hash map does not spill, so a badly mis-estimated build side
+    #   would build an oversized local map; mitigations in force:
+    #   AQE re-plans joins from runtime sizes when estimates drift
+    #   (local-mode static SHJ picks are re-validated by the AQE
+    #   threshold), skewJoin splits oversized partitions, and joins
+    #   with no size evidence (e.g. the as-of range join) stay SMJ —
+    #   pinned by tests/test_plans.py::test_unbounded_build_side_
+    #   join_keeps_sort_merge.
+    # Guide §3.1/§9 baseline; measured on the 8 join-heavy roster
+    # queries at sf0.1, alternating A/B both orders: 11.67→9.43 s
+    # and 9.05→8.67 s medians.  Scale posture: skips the per-side
+    # sort whose cost grows n·log(n) with partition rows.
+    ("spark.sql.join.preferSortMergeJoin", "false", None),
+    (
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
+        str(64 * 1024 * 1024),
+        None,
+    ),
+    ("spark.sql.session.timeZone", "UTC", "set"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true", None),
+    (NANOS_AS_LONG, "true", "set"),
+    ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024), None),
+    # on a foreign session this rule is MERGED into the caller's list
+    # (see ensure_engine_conf) rather than overwriting it
+    ("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES, "set"),
+    ("spark.ui.enabled", "false", None),
+)
+
+
+def _conf_value(value, cpus: int) -> str:
+    return value(cpus) if callable(value) else value
+
+
 def tuned_conf(builder: SparkSession.Builder, cpus: int) -> SparkSession.Builder:
     """Apply engine configuration to a builder (shared by tests and bench)."""
-    return (
-        builder.config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Start every exchange WIDE and let AQE coalesce down: a fixed
-        # shuffle-partition count is the one knob that breaks linearity
-        # when data outgrows it (the r8 langid scale probe measured 52 s
-        # → 11.5 s at 20× sf0.1 docs from this line alone — per-partition
-        # aggregate hash maps stop spilling), while parallelismFirst
-        # coalescing keeps small exchanges at ~cpus partitions, so the
-        # sf0.1 suite is unharmed (measured at-or-faster on every query).
-        # 8×cpus: 1024 over-fragments (30.8 s — task overhead), 256 wins.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(8 * cpus),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Push bounded id LISTS to parquet as a real In predicate instead
-        # of degrading to a [min,max] range past 10 values (the default).
-        # The engine's bounded-literal-collect operators (ANN rerank
-        # candidate-id fetch ≤ Q·rerank ids, probed-cell pruning ≤
-        # Q·nprobe) push hundreds of uniform ids; a range over uniform
-        # ids skips NOTHING, while the In predicate's row-group stats
-        # check skips every row group holding no candidate (measured
-        # r9: 130 → 48 MB on a 140-row-group id-sorted scan of 50
-        # uniform ids; see SCALE.md ivf_rowgroup).  CEILING measured
-        # r13: Spark converts the pushed In to a NESTED parquet Or —
-        # ~1000 literals overflow a worker thread's stack
-        # (non-deterministically at 1000, always by 1500), so the old
-        # 4096 setting CRASHED any 1000+-value fetch instead of
-        # degrading it; 512 keeps every measured win and lets bigger
-        # lists fall back to the (slower, correct) range filter.
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "512")
-        # Let the planner pick shuffled-hash over sort-merge when its size
-        # conditions hold, and let AQE rewrite SMJ→SHJ at runtime when
-        # every post-shuffle partition is under 64 MB.  Two DISTINCT
-        # mechanisms with distinct safety envelopes (ADVICE r14):
-        # - the AQE rewrite threshold bounds the per-task build side by
-        #   MEASURED runtime partition sizes — bounded by design;
-        # - preferSortMergeJoin=false additionally lets the STATIC
-        #   planner pick SHJ from stats-ESTIMATED sizes
-        #   (canBuildLocalHashMap: plan side < advisory partition size ×
-        #   shuffle partitions, AND ≪ the other side).  SHJ's per-task
-        #   hash map does not spill, so a badly mis-estimated build side
-        #   would build an oversized local map; mitigations in force:
-        #   AQE re-plans joins from runtime sizes when estimates drift
-        #   (local-mode static SHJ picks are re-validated by the AQE
-        #   threshold), skewJoin splits oversized partitions, and joins
-        #   with no size evidence (e.g. the as-of range join) stay SMJ —
-        #   pinned by tests/test_plans.py::test_unbounded_build_side_
-        #   join_keeps_sort_merge.
-        # Guide §3.1/§9 baseline; measured on the 8 join-heavy roster
-        # queries at sf0.1, alternating A/B both orders: 11.67→9.43 s
-        # and 9.05→8.67 s medians.  Scale posture: skips the per-side
-        # sort whose cost grows n·log(n) with partition rows.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(NANOS_AS_LONG, "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
-        .config("spark.ui.enabled", "false")
-    )
+    for key, value, _ in ENGINE_CONF:
+        builder = builder.config(key, _conf_value(value, cpus))
+    return builder
 
 
 def get_spark(
@@ -144,59 +166,35 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
 
     The verification driver constructs its own SparkSession; queries must
     still read nano-timestamp parquet and compare timestamps against a
-    UTC-naive oracle, so set the runtime-mutable subset here.
+    UTC-naive oracle, so set the ``on_foreign`` subset of
+    :data:`ENGINE_CONF` here.
     """
-    # Merge our excluded rule into whatever the session already excludes —
-    # overwriting would silently re-enable a caller's own exclusions.
-    try:
-        current = spark.conf.get("spark.sql.optimizer.excludedRules", None)
-    except Exception:  # pragma: no cover
-        current = None
-    rules = [r.strip() for r in (current or "").split(",") if r.strip()]
-    if EXCLUDED_OPTIMIZER_RULES not in rules:
-        rules.append(EXCLUDED_OPTIMIZER_RULES)
-
     try:
         par = spark.sparkContext.defaultParallelism
     except Exception:  # pragma: no cover - no active context
         par = 8
-    # wide-then-coalesce exchanges (see tuned_conf) — runtime-settable,
-    # so the grading driver's plain session gets the linear-at-scale
-    # posture too.  Set ONLY when unset: a caller that deliberately tuned
-    # its own initialPartitionNum keeps it (same merge courtesy the
-    # excludedRules conf gets above).
-    ipn_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    try:
-        ipn_unset = spark.conf.get(ipn_key, None) is None
-    except Exception:  # pragma: no cover
-        ipn_unset = True
-    # Same set-only-when-unset courtesy for the In-pushdown threshold: the
-    # 10-value Spark default silently degrades bounded id-list fetches
-    # (ANN rerank pushes ≤ Q·rerank ids) to a skip-nothing [min,max]
-    # range, so 512 is the engine default (the measured stack-safe
-    # ceiling for parquet's nested-Or conversion — see tuned_conf) —
-    # but a caller that
-    # deliberately tuned its own threshold keeps it.  Only a true None
-    # means unset (r11, ADVICE): conf.get(key, None) returns None for a
-    # genuinely untouched session and the literal value — INCLUDING an
-    # explicitly pinned "10", e.g. from cluster spark-defaults — when
-    # the caller set one, so the courtesy now honors that too.
-    inf_key = "spark.sql.parquet.pushdown.inFilterThreshold"
-    try:
-        inf_unset = spark.conf.get(inf_key, None) is None
-    except Exception:  # pragma: no cover
-        inf_unset = True
-    pairs = [
-        (NANOS_AS_LONG, "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.optimizer.excludedRules", ",".join(rules)),
-    ]
-    if inf_unset:
-        pairs.append((inf_key, "512"))
-    if ipn_unset:
-        pairs.append((ipn_key, str(8 * par)))
-    for key, value in pairs:
+    for key, value, on_foreign in ENGINE_CONF:
+        if on_foreign is None:
+            continue
+        try:
+            current = spark.conf.get(key, None)
+        except Exception:  # pragma: no cover
+            current = None
+        # Only a true None means unset (r11, ADVICE): conf.get(key, None)
+        # returns the literal value — INCLUDING an explicitly pinned
+        # Spark default such as inFilterThreshold "10" from cluster
+        # spark-defaults — whenever the caller set one.
+        if on_foreign == "if_unset" and current is not None:
+            continue
+        value = _conf_value(value, par)
+        if key == "spark.sql.optimizer.excludedRules":
+            # Merge our excluded rule into whatever the session already
+            # excludes — overwriting would silently re-enable a caller's
+            # own exclusions.
+            rules = [r.strip() for r in (current or "").split(",") if r.strip()]
+            if value not in rules:
+                rules.append(value)
+            value = ",".join(rules)
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - static conf on some builds

@@ -190,8 +190,8 @@ def compact_table(
     ``transform`` (optional, DataFrame → DataFrame) is applied to the
     read relation before packing — the hook schema-migration passes use
     to piggyback a column backfill on the rewrite they were going to pay
-    for anyway (e.g. :func:`...operators.similarity.compact_ivf_index`
-    adding ``cell_id`` to a pre-r9 index).  It must be row-preserving;
+    for anyway (e.g. :func:`...operators.corpus.compact_corpus`
+    relabelling the merged batch partitions to one epoch).  It must be row-preserving;
     the returned ``rows`` count is taken AFTER the transform.
     """
     import math

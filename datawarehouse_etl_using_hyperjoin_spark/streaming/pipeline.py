@@ -782,7 +782,6 @@ def compact_quarantine(
 def make_star_sink(
     out_dir: str,
     *,
-    dim_buckets: int | None = None,
     fact_layout: str = "partition",
     fact_stats_cols: list[str] | None = None,
     dim_layout: str = "partition",
@@ -796,12 +795,6 @@ def make_star_sink(
     before the checkpoint commit is precisely the replay window the
     idempotency claims cover) instead of testing a lookalike.
 
-    ``dim_buckets`` (opt-in, r10) switches the dim to the key-hash-
-    partitioned layout so per-batch dim write bytes track the batch, not
-    the dim (``upsert_parquet_sink(buckets=...)``; read it back through
-    ``operators.upsert.read_dim``).  Sticky per table — keep it constant
-    across restarts.
-
     ``fact_layout`` (opt-in, r11) picks the fact relation's at-rest form:
     ``"partition"`` (default) is the ``batch_id=N`` dir per micro-batch,
     replay overwrites it; ``"manifest"`` commits through the
@@ -812,10 +805,8 @@ def make_star_sink(
     layout's ``compact_corpus`` path swaps directories with renames.
     Read the fact back with ``read_manifest_table``; ``batch_id`` rides
     as a data column with the same values the partition column carries.
-    Both dim layouts are already rename-free at the engine level (static
-    or dynamic overwrite), so with ``fact_layout="manifest"`` +
-    ``dim_buckets`` the whole hot path AND the fact's maintenance avoid
-    renames end to end.
+    With ``dim_layout="manifest"`` as well, the whole hot path AND the
+    fact's maintenance avoid renames end to end.
 
     ``fact_stats_cols`` (r12, manifest layout only): record per-
     generation min/max/null stats for the named fact columns so
@@ -824,18 +815,16 @@ def make_star_sink(
     set — restarts may omit it.
 
     ``dim_layout`` (r13) picks the DIM's at-rest form the same way:
-    ``"partition"`` (default) is ``upsert_parquet_sink`` — static or
-    dynamic partition overwrite, a delete+write that is atomic only on
+    ``"partition"`` (default) is ``upsert_parquet_sink`` — a full
+    overwrite per batch, a delete+write that is atomic only on
     rename-capable filesystems; ``"manifest"`` commits each batch's
     keyed upsert through :func:`..sources.manifest_table.manifest_table_merge`
     — CoW delete of matched keys + ledgered append in ONE conditional
     PUT, closing the last non-atomic commit in the object-store
     posture (VERDICT r12 #1).  Read the dim back with
     ``read_manifest_table`` (key/bloom stats on ``product_id`` are
-    tracked automatically so merges prune their rewrite set).
-    Exclusive with ``dim_buckets`` (bucketing is the partition
-    layout's write-amplification answer; the manifest layout's is
-    generation pruning + compaction).
+    tracked automatically so merges prune their rewrite set, which
+    bounds per-batch dim write bytes by the matched generations).
     """
     from ..operators.upsert import upsert_parquet_sink
 
@@ -856,22 +845,13 @@ def make_star_sink(
             "layout has no manifest to record them in"
         )
     if dim_layout == "manifest":
-        if dim_buckets is not None:
-            raise ValueError(
-                "dim_buckets is the partition layout's write-"
-                "amplification control — with dim_layout='manifest' "
-                "the merge's generation pruning plays that role; drop "
-                "one of the two"
-            )
         from ..sources.manifest_table import manifest_upsert_sink
 
         dim_sink = manifest_upsert_sink(
             f"{out_dir}/dim_product", "product_id"
         )
     else:
-        dim_sink = upsert_parquet_sink(
-            f"{out_dir}/dim_product", "product_id", buckets=dim_buckets
-        )
+        dim_sink = upsert_parquet_sink(f"{out_dir}/dim_product", "product_id")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -915,7 +895,6 @@ def run_pipeline_streaming(
     checkpoint_dir: str | None = None,
     quarantine_lateness: str | None = None,
     quarantine_watermark_col: str = "order_date",
-    dim_buckets: int | None = None,
     fact_layout: str = "partition",
     fact_stats_cols: list[str] | None = None,
     dim_layout: str = "partition",
@@ -949,9 +928,6 @@ def run_pipeline_streaming(
     keeps the idempotent-upsert absorption unchanged.  The returned
     counts gain a ``"late"`` entry when quarantine is on.
 
-    ``dim_buckets`` (opt-in) — see :func:`make_star_sink`: bounds per-
-    batch dim write bytes by the batch, not the dim.
-
     ``fact_layout`` (opt-in, r11) — see :func:`make_star_sink`:
     ``"manifest"`` commits the fact through the generation-manifest
     batch table (ledger exactly-once, rename-free compaction — the
@@ -983,8 +959,8 @@ def run_pipeline_streaming(
     """
     enriched = stream_static_hyperjoin(txn_stream, master)
     sink = make_star_sink(
-        out_dir, dim_buckets=dim_buckets, fact_layout=fact_layout,
-        fact_stats_cols=fact_stats_cols, dim_layout=dim_layout,
+        out_dir, fact_layout=fact_layout, fact_stats_cols=fact_stats_cols,
+        dim_layout=dim_layout,
     )
     if quarantine_lateness is not None:
         sink = make_quarantine_sink(

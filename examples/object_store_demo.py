@@ -14,9 +14,9 @@ on S3/GCS.
 Stages (printed as they run):
 
 1. the reference's star pipeline in streaming form —
-   ``run_pipeline_streaming(fact_layout='manifest', dim_buckets=...,
-   maintenance_every=...)``: ledgered fact commits, bucketed dim,
-   scheduled rename-free compaction;
+   ``run_pipeline_streaming(fact_layout='manifest', dim_layout='manifest',
+   maintenance_every=...)``: ledgered fact commits, atomic dim merges,
+   quarantined late rows, scheduled rename-free compaction;
 2. streamed corpus ingest with at-rest LSH dedup,
    ``corpus_layout='manifest'``, including a simulated re-delivery the
    ledger must skip;
@@ -40,7 +40,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from datawarehouse_etl_using_hyperjoin_spark.maintenance import run_maintenance
 from datawarehouse_etl_using_hyperjoin_spark.operators.corpus import (
     make_corpus_ingest_sink,
 )

@@ -3,8 +3,8 @@
 VERDICT r10 "Next" #3 pins the contract: a manifest-generation read path
 plus split/compact via fresh-path rewrite, **tested by simulating
 rename-unavailability** (os.rename/os.replace/shutil.move banned for the
-whole manifest pipeline), with results bit-equal to the local-fs
-rename-based path.  Plus the protocol's own claims: publish is the one
+whole manifest pipeline), with results bit-equal to an independently
+computed assignment and to on-the-fly serving.  Plus the protocol's own claims: publish is the one
 commit point (crash-before-publish is invisible and retry-safe), an
 interrupted multi-cell split stays consistent per cell (no sentinel, no
 recovery op, quantizer and cells always paired), and vacuum reclaims
@@ -31,10 +31,9 @@ from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
 )
 from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
     ann_ivf_index_topk,
+    ann_ivf_topk,
     ivf_assign,
     ivf_seed_centroids,
-    read_ivf_index,
-    write_ivf_index,
 )
 from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import load_table
 
@@ -73,34 +72,23 @@ def test_manifest_lifecycle_bit_equal_to_rename_lifecycle_without_renames(
 ):
     """The full lifecycle — build, incremental append, hot-cell split,
     compaction, serve — run through the manifest store with every rename
-    primitive monkeypatched to raise, against the SAME inputs as the
-    directory-layout (rename-based) store: final index rows, quantizer,
-    and ANN serving results are identical."""
+    primitive monkeypatched to raise.  The final index rows and quantizer
+    equal an independently computed reference (the batch assignment
+    under the seed quantizer, with the hot cell's rows reassigned among
+    its subcells), and ANN serving equals the on-the-fly
+    ``ann_ivf_topk(assigned=...)`` over those rows and that quantizer."""
     em = load_table(spark, sf_dir, "embeddings")
     base = em.filter(F.col("vec_id") % 2 == 0)
     extra = em.filter(F.col("vec_id") % 2 == 1)
     cent0 = ivf_seed_centroids(base, 2).localCheckpoint(eager=True)
-
-    # reference pipeline: directory layout, rename-based maintenance
-    dpath = str(tmp_path / "ivf_dir")
-    write_ivf_index(ivf_assign(base, cent0), dpath, sort_by="vec_id")
-    write_ivf_index(ivf_assign(extra, cent0), dpath, mode="append")
+    ref = ivf_assign(em, cent0).localCheckpoint(eager=True)
     sizes = {
         int(r.centroid_id): r["count"]
-        for r in read_ivf_index(spark, dpath)
-        .groupBy("centroid_id").count().collect()
+        for r in ref.groupBy("centroid_id").count().collect()
     }
-    max_rows = max(sizes.values()) - 1  # the hot cell is oversized
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        compact_ivf_index,
-        ivf_split_oversized,
-    )
-
-    cent_dir_layout = ivf_split_oversized(
-        spark, dpath, cent0, max_rows=max_rows, k=2
-    )
-    compact_ivf_index(spark, dpath)
-    idx_dir = read_ivf_index(spark, dpath)
+    hot = max(sizes, key=sizes.get)
+    max_rows = sizes[hot] - 1  # the hot cell is oversized
+    seed_ids = [int(r.centroid_id) for r in cent0.collect()]
 
     # manifest pipeline: renames BANNED throughout
     mroot = str(tmp_path / "ivf_manifest")
@@ -113,16 +101,29 @@ def test_manifest_lifecycle_bit_equal_to_rename_lifecycle_without_renames(
         split = ivf_split_oversized_manifest(
             spark, mroot, max_rows=max_rows, k=2
         )
-        assert split  # the hot cell did split
+        assert split == [hot]  # the hot cell did split
         compact_ivf_index_manifest(spark, mroot)
         idx_man = read_ivf_index_manifest(spark, mroot)
         cents_man = read_ivf_centroids(spark, mroot)
 
-        # bit-equal state: rows, quantizer
-        assert _rows(idx_man) == _rows(idx_dir)
-        assert _cents(cents_man) == _cents(cent_dir_layout)
+        # bit-equal state: quantizer = seed minus the hot parent plus two
+        # subcells; rows = the reference assignment, hot rows re-celled
+        # among exactly those subcells
+        is_seed = F.col("centroid_id").isin(seed_ids)
+        sub = cents_man.filter(~is_seed).localCheckpoint(eager=True)
+        assert sub.count() == 2
+        assert _cents(cents_man.filter(is_seed)) == _cents(
+            cent0.filter(F.col("centroid_id") != hot)
+        )
+        hot_rows = ref.filter(F.col("centroid_id") == hot).drop("centroid_id")
+        expected = (
+            ref.filter(F.col("centroid_id") != hot)
+            .unionByName(ivf_assign(hot_rows, sub))
+            .withColumn("cell_id", F.col("centroid_id").cast("long"))
+        )
+        assert _rows(idx_man) == _rows(expected)
 
-        # identical serving results through the SAME plan
+        # identical serving results: at-rest plan vs on-the-fly
         q = em.filter(F.col("vec_id") < 6)
         got = {
             (r.query_id, r.rank): (r.neighbor_id, round(r.cos, 9))
@@ -132,14 +133,11 @@ def test_manifest_lifecycle_bit_equal_to_rename_lifecycle_without_renames(
         }
         want = {
             (r.query_id, r.rank): (r.neighbor_id, round(r.cos, 9))
-            for r in ann_ivf_index_topk(
-                q, idx_dir, cent_dir_layout, k=3, nprobe=2
+            for r in ann_ivf_topk(
+                q, em, cents_man, k=3, nprobe=2, assigned=expected
             ).collect()
         }
         assert got == want
-
-        # one read entry point: read_ivf_index auto-detects the layout
-        assert _rows(read_ivf_index(spark, mroot)) == _rows(idx_man)
 
 
 def test_publish_is_the_commit_point_crash_invisible_retry_exactly_once(
@@ -147,7 +145,7 @@ def test_publish_is_the_commit_point_crash_invisible_retry_exactly_once(
 ):
     """An append that crashes AFTER its data write but BEFORE publish is
     invisible to readers (no torn state, no sentinel, no refusal —
-    unlike the dir layout there is nothing to recover); the retried
+    there is nothing to recover); the retried
     append lands the batch exactly once."""
     em = load_table(spark, sf_dir, "embeddings")
     base = em.filter(F.col("vec_id") % 2 == 0)
@@ -180,8 +178,8 @@ def test_interrupted_split_commits_per_cell_and_rerun_completes(
     """A split pass killed between cells leaves every completed cell
     committed and the interrupted cell fully live pre-split — quantizer
     and cells stay a consistent pair (the manifest commits both
-    together), which the dir layout cannot promise (its caller holds the
-    centroid relation).  Re-running completes; vacuum then reclaims the
+    together, so no caller-held centroid relation can drift).
+    Re-running completes; vacuum then reclaims the
     orphan subcell dirs and superseded generations without touching the
     live state."""
     em = load_table(spark, sf_dir, "embeddings")
@@ -261,13 +259,10 @@ def test_layout_guards_refuse_mixing(spark, sf_dir, tmp_path):
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 2)
 
-    mroot = str(tmp_path / "man")
-    write_ivf_index_manifest(em, mroot, centroids=cent)
-    with pytest.raises(ValueError, match="manifest-layout"):
-        write_ivf_index(ivf_assign(em, cent), mroot, mode="append")
-
+    # a plain centroid_id-partitioned dump at the root: a manifest index
+    # there would leave those rows silently invisible
     droot = str(tmp_path / "dir")
-    write_ivf_index(ivf_assign(em, cent), droot)
+    ivf_assign(em, cent).write.partitionBy("centroid_id").parquet(droot)
     with pytest.raises(ValueError, match="directory-layout"):
         write_ivf_index_manifest(em, droot, centroids=cent)
 
@@ -333,7 +328,7 @@ def test_manifest_read_keeps_partition_pruning(spark, sf_dir, tmp_path):
     pruned from the FILE LISTING — must survive the manifest read's
     multi-root construction: the probe filter reaches PartitionFilters
     and the executed scan reads strictly fewer files than the index
-    holds, exactly as on the dir layout."""
+    holds, exactly as on a plain partitioned dir."""
     from datawarehouse_etl_using_hyperjoin_spark.plans.inspect import (
         plan_string,
     )
@@ -530,58 +525,6 @@ def test_ivf_store_model_under_random_ops_and_crashes(
             for r in s.read_ivf_centroids(spark, root).collect()
         }
         assert live_cells <= cent_ids  # every data cell has its centroid
-
-
-def test_migration_from_dir_layout_preserves_index_and_serving(
-    spark, sf_dir, tmp_path
-):
-    """migrate_ivf_index_to_manifest: the manifest copy holds the SAME
-    rows and serves identically; a drifted caller-held quantizer (cells
-    in the index missing from the relation) is refused loudly; the
-    migrated store then appends/compacts like a native one."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        migrate_ivf_index_to_manifest,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 2).localCheckpoint(eager=True)
-    dpath = str(tmp_path / "src_dir")
-    write_ivf_index(ivf_assign(em, cent), dpath, sort_by="vec_id")
-
-    root = str(tmp_path / "migrated")
-    migrate_ivf_index_to_manifest(spark, dpath, root, centroids=cent)
-    assert _rows(read_ivf_index_manifest(spark, root)) == _rows(
-        read_ivf_index(spark, dpath)
-    )
-    q = em.filter(F.col("vec_id") < 4)
-    a = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ann_ivf_index_topk(
-            q, read_ivf_index_manifest(spark, root),
-            read_ivf_centroids(spark, root), k=3, nprobe=2,
-        ).collect()
-    }
-    b = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ann_ivf_index_topk(
-            q, read_ivf_index(spark, dpath), cent, k=3, nprobe=2
-        ).collect()
-    }
-    assert a == b
-    # native lifecycle works on the migrated store
-    extra = em.withColumn("vec_id", F.col("vec_id") + 40_000)
-    assert ivf_append_manifest(extra, root, batch_id=1) is not None
-    assert read_ivf_index_manifest(spark, root).count() == 2 * em.count()
-
-    # drifted quantizer refused
-    with pytest.raises(ValueError, match="drifted"):
-        migrate_ivf_index_to_manifest(
-            spark, dpath, str(tmp_path / "m2"),
-            centroids=cent.filter(F.col("centroid_id") == 0),
-        )
-    # occupied root refused
-    with pytest.raises(ValueError, match="already holds"):
-        migrate_ivf_index_to_manifest(spark, dpath, root, centroids=cent)
 
 
 def test_snapshot_reads_pair_quantizer_with_cells(spark, sf_dir, tmp_path):

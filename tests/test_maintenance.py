@@ -5,7 +5,7 @@ but were four separate manual calls.  These tests pin the two closures:
 
 * ``run_maintenance`` — one call compacts a declared layout spanning all
   artifact families (corpus dir, star fact dir, bucketed index table,
-  IVF index, quarantine side dirs), rows preserved everywhere;
+  manifest IVF index, quarantine side dirs), rows preserved everywhere;
 * ``run_pipeline_streaming(maintenance_every=N)`` — a long-lived stream
   keeps its own partition-dir counts bounded WITHOUT any manual call,
   and the mid-stream passes change no query-visible values;
@@ -45,9 +45,13 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
 ):
     """One declared layout, one call: every family compacts (partition
     counts drop to merged+kept), and every family's rows survive."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        ivf_append_manifest,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         upsert_embedding_index_batch,
-        write_ivf_index,
     )
     from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
         make_quarantine_sink,
@@ -82,17 +86,17 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
         )
         upsert_embedding_index_batch(vecs, table, b, n_buckets=4)
 
-    # IVF index dir: initial write + two appends = 3 files per cell
+    # IVF index: initial write + two appends = 3 generations per cell
     ivf_dir = f"{root}/ivf"
-    for n, mode in ((0, "overwrite"), (1, "append"), (2, "append")):
-        assigned = spark.createDataFrame(
-            [
-                (n * 100 + i, [float(i), 1.0], i % 3)
-                for i in range(9)
-            ],
-            "vec_id long, embedding array<double>, centroid_id long",
+    for n in range(3):
+        vecs = spark.createDataFrame(
+            [(n * 100 + i, [float(i), 1.0]) for i in range(9)],
+            "vec_id long, embedding array<double>",
         )
-        write_ivf_index(assigned, ivf_dir, mode=mode, sort_by="vec_id")
+        if n == 0:
+            write_ivf_index_manifest(vecs, ivf_dir, n_centroids=3)
+        else:
+            ivf_append_manifest(vecs, ivf_dir)
 
     # quarantine side dirs: drive the real sink for 5 batches
     q_dir = f"{root}/qdir"
@@ -115,7 +119,7 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
         "corpus": spark.read.parquet(corpus_dir).count(),
         "fact": spark.read.parquet(fact_dir).count(),
         "lsh": spark.table(table).count(),
-        "ivf": spark.read.parquet(ivf_dir).count(),
+        "ivf": read_ivf_index_manifest(spark, ivf_dir).count(),
     }
     try:
         stats = run_maintenance(
@@ -123,26 +127,26 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
             corpus_dirs=[corpus_dir],
             fact_dirs=[fact_dir],
             lsh_tables=[table],
-            ivf_indexes=[ivf_dir],
+            ivf_manifest_indexes=[ivf_dir],
             quarantine_dirs=[q_dir],
             keep_last=1,
         )
         assert set(stats) == {
             f"corpus:{corpus_dir}", f"fact:{fact_dir}", f"lsh:{table}",
-            f"ivf:{ivf_dir}", f"quarantine:{q_dir}",
+            f"ivf_manifest:{ivf_dir}", f"quarantine:{q_dir}",
         }
         # rows preserved everywhere
         assert spark.read.parquet(corpus_dir).count() == before["corpus"]
         assert spark.read.parquet(fact_dir).count() == before["fact"]
         assert spark.table(table).count() == before["lsh"]
-        assert spark.read.parquet(ivf_dir).count() == before["ivf"]
+        assert read_ivf_index_manifest(spark, ivf_dir).count() == before["ivf"]
         # history merged: 6 → merged(1) + kept(1); 5 → 2; 4 → 2
         n_part = lambda df, c: df.select(c).distinct().count()  # noqa: E731
         assert n_part(spark.read.parquet(corpus_dir), "ingest_batch") == 2
         assert n_part(spark.read.parquet(fact_dir), "batch_id") == 2
         assert n_part(spark.table(table), "ingest_batch") == 2
-        assert stats[f"ivf:{ivf_dir}"]["files_after"] < stats[
-            f"ivf:{ivf_dir}"
+        assert stats[f"ivf_manifest:{ivf_dir}"]["files_after"] < stats[
+            f"ivf_manifest:{ivf_dir}"
         ]["files_before"]
         # hwm partitions merged too (5 → 2)
         assert n_part(spark.read.parquet(f"{q_dir}/_hwm"), "ingest_batch") == 2

@@ -556,13 +556,11 @@ def test_pipeline_manifest_dim_kill_restart_replay(
     assert dim.count() == dim.select("product_id").distinct().count()
 
 
-def test_star_sink_rejects_buckets_with_manifest_dim():
+def test_star_sink_rejects_unknown_dim_layout():
     from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
         make_star_sink,
     )
 
-    with pytest.raises(ValueError, match="dim_buckets"):
-        make_star_sink("/tmp/x", dim_layout="manifest", dim_buckets=8)
     with pytest.raises(ValueError, match="dim_layout must be"):
         make_star_sink("/tmp/x", dim_layout="zebra")
 

@@ -118,7 +118,7 @@ def test_load_star_validate_gate(spark, sf_dir, tmp_path):
 
     # clean build → publishes, no staging residue
     out = str(tmp_path / "dw_clean")
-    counts = load_star(spark, sf_dir, out, validate=True)
+    counts = load_star(spark, sf_dir, out)
     assert counts["fact_sales"] > 0
     assert os.path.isdir(f"{out}/fact_sales")
     assert not os.path.isdir(f"{out}/fact_sales.staging")
@@ -135,7 +135,7 @@ def test_load_star_validate_gate(spark, sf_dir, tmp_path):
     out_bad = str(tmp_path / "dw_orphan")
     orphan = fact.limit(1).withColumn("product_id", F.lit(-999).cast("long"))
     with pytest.raises(ValueError, match="fk_dim_product"):
-        write_star(spark, dims, fact.unionByName(orphan), out_bad, validate=True)
+        write_star(spark, dims, fact.unionByName(orphan), out_bad)
     assert not os.path.isdir(f"{out_bad}/fact_sales")
     assert os.path.isdir(f"{out_bad}/fact_sales.staging")  # quarantined
 
@@ -145,7 +145,7 @@ def test_load_star_validate_gate(spark, sf_dir, tmp_path):
         "quantity", F.lit(None).cast(dict(fact.dtypes)["quantity"])
     )
     with pytest.raises(ValueError, match="fact_not_null"):
-        write_star(spark, dims, fact.unionByName(nullrow), out_null, validate=True)
+        write_star(spark, dims, fact.unionByName(nullrow), out_null)
     assert not os.path.isdir(f"{out_null}/fact_sales")
 
     # duplicated dim PK → aborts before the fact stage
@@ -153,7 +153,7 @@ def test_load_star_validate_gate(spark, sf_dir, tmp_path):
     bad_dims = dict(dims)
     bad_dims["dim_store"] = dims["dim_store"].unionByName(dims["dim_store"].limit(1))
     with pytest.raises(ValueError, match="pk_dim_store"):
-        write_star(spark, bad_dims, fact, out_dup, validate=True)
+        write_star(spark, bad_dims, fact, out_dup)
     assert not os.path.isdir(f"{out_dup}/fact_sales")
 
 
@@ -184,7 +184,7 @@ def test_write_star_checks_all_dim_pks_before_any_write(spark, sf_dir, tmp_path)
     from datawarehouse_etl_using_hyperjoin_spark.etl import load_star, write_star
 
     out = str(tmp_path / "dw")
-    load_star(spark, sf_dir, out, validate=True)
+    load_star(spark, sf_dir, out)
     published = {p: os.path.getmtime(p) for p in glob.glob(f"{out}/dim_*/*")}
     assert published
 
@@ -196,7 +196,7 @@ def test_write_star_checks_all_dim_pks_before_any_write(spark, sf_dir, tmp_path)
         "customer_id", F.lit(None).cast(dict(cust.dtypes)["customer_id"])
     ))
     with pytest.raises(ValueError) as err:
-        write_star(spark, bad_dims, fact, out, validate=True)
+        write_star(spark, bad_dims, fact, out)
     assert "pk_dim_product: 1 violations" in str(err.value)
     assert "pk_dim_customer: 1 violations" in str(err.value)
     assert {p: os.path.getmtime(p) for p in glob.glob(f"{out}/dim_*/*")} == published
@@ -245,7 +245,7 @@ def test_fact_gate_counts_equal_violation_relations(spark, sf_dir, tmp_path):
     }
 
     with pytest.raises(ValueError) as err:
-        write_star(spark, dims, bad, str(tmp_path / "dw"), validate=True)
+        write_star(spark, dims, bad, str(tmp_path / "dw"))
     msg = str(err.value)
     assert "fk_dim_product: 2 violations" in msg
     assert "fk_dim_customer: 1 violations" in msg

@@ -3,6 +3,7 @@ where intended, pushdown reaching the scan, no Python in JVM-only paths."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse_etl_using_hyperjoin_spark.operators.etl import hyperjoin
@@ -196,6 +197,26 @@ def test_dpp_prunes_fact_partitions(spark, sf_dir, tmp_path):
     assert joined.count() == fact.filter(F.col("order_month").isin(months)).count()
 
 
+def _assert_round_robin_exchanges_only(df):
+    """Every shuffle Exchange node in ``df``'s plan partitions round-robin.
+
+    Parsed from the "simple" explain, where each node prints its
+    partitioning on its own line (``Exchange hashpartitioning(...)`` /
+    ``Exchange RoundRobinPartitioning(8)``).  The kinds parsed must
+    account for every Exchange node, so an explain-format change that
+    hides the kind fails here instead of passing on an empty set."""
+    import re
+
+    plan = plan_string(df, "simple")
+    nodes = re.findall(r"\bExchange\b", plan)
+    kinds = [
+        k.lower()
+        for k in re.findall(r"\bExchange (\w+)partitioning\b", plan, re.I)
+    ]
+    assert len(kinds) == len(nodes), plan
+    assert set(kinds) <= {"roundrobin"}, plan
+
+
 def test_extension_query_plan_shapes(spark, sf_dir):
     """Pin the scale-relevant shapes of the r5 extension queries:
     the zero-shuffle claims are load-bearing (they are what makes these
@@ -217,19 +238,17 @@ def test_extension_query_plan_shapes(spark, sf_dir):
     # >= defaultParallelism splits, i.e. at any real scale; measured
     # 1.37 s -> 0.77 s at sf0.1), so the zero-SHUFFLE-growth claim is
     # pinned as "no hash exchange" rather than "no exchange node".
-    plan = plan_string(q_repetition_metrics(spark, sf_dir))
-    for marker in (
-        "Exchange hashpartitioning", "Exchange rangepartitioning",
-        "Join", "BatchEvalPython", "MapInPandas",
-    ):
+    rep = q_repetition_metrics(spark, sf_dir)
+    plan = plan_string(rep)
+    for marker in ("Join", "BatchEvalPython", "MapInPandas"):
         assert marker not in plan, f"{marker} in q_repetition_metrics plan"
     # every Exchange NODE must be the one conditional round-robin — pin
     # the partitioning kind, not a raw substring count, so a formatting
     # change in explain output cannot silently loosen the lock (ADVICE r14)
-    import re
-
-    kinds = set(re.findall(r"Exchange (\w+)", plan))
-    assert kinds <= {"roundrobinpartitioning"}, plan
+    _assert_round_robin_exchanges_only(rep)
+    # negative control: one injected hash exchange must trip the lock
+    with pytest.raises(AssertionError):
+        _assert_round_robin_exchanges_only(rep.repartition(4, "doc_id"))
 
     # mixture sampling: filter + generate only — membership/copy decisions
     # are per-row hash arithmetic, nothing moves between partitions
@@ -392,40 +411,6 @@ def test_ann_family_shares_trained_quantizer(spark, sf_dir):
     # FINAL plan means a branch re-trained from scratch instead of
     # reading the checkpoint
     assert "decimal(27,9)" not in plan
-
-
-def test_bucketed_dim_upsert_read_is_partition_pruned(spark, tmp_path):
-    """r10: the bucketed dim sink's per-batch read must touch ONLY the
-    buckets the batch touches — the In predicate on the bucket column
-    has to land in the scan's PartitionFilters (static pruning), or the
-    'write bytes track the batch' claim would still pay a full-table
-    READ every micro-batch."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
-        DIM_BUCKET_COL,
-        upsert_parquet_sink,
-    )
-
-    path = str(tmp_path / "dim")
-    sink = upsert_parquet_sink(path, "product_id", buckets=16)
-    dim = spark.createDataFrame(
-        [(i, f"p{i}", float(i)) for i in range(2000)],
-        "product_id int, product_name string, price double",
-    )
-    sink(dim, 0)
-
-    touched = [3, 7]
-    pruned = spark.read.parquet(path).where(
-        F.col(DIM_BUCKET_COL).isin(touched)
-    )
-    plan = plan_string(pruned, "formatted")
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf and any(DIM_BUCKET_COL in l and "IN" in l.upper() for l in pf), plan
-    # (inputFiles() lists the relation's files BEFORE partition filters,
-    # so the PartitionFilters line is the pruning witness — the same
-    # convention as the static asserts in test_pipeline.py)
-    assert {r[0] for r in pruned.select(DIM_BUCKET_COL).distinct().collect()} <= set(
-        touched
-    )
 
 
 def test_unbounded_build_side_join_keeps_sort_merge(spark, sf_dir):

@@ -163,6 +163,48 @@ def test_ensure_engine_conf_sets_real_in_pushdown(registry):
         spark.conf.set(key, prev)
 
 
+def test_tuned_conf_and_ensure_engine_conf_share_one_table(registry):
+    """Both conf paths read session.ENGINE_CONF: for every key a foreign
+    session receives, ensure_engine_conf sets exactly the value
+    tuned_conf sets, and an "if_unset" key pinned by the caller
+    (the "10" threshold) survives."""
+    from datawarehouse_etl_using_hyperjoin_spark.session import (
+        ENGINE_CONF,
+        ensure_engine_conf,
+        get_spark,
+        tuned_conf,
+    )
+
+    class Recorder(dict):
+        def config(self, key, value):
+            self[key] = value
+            return self
+
+    spark = get_spark()
+    built = tuned_conf(Recorder(), spark.sparkContext.defaultParallelism)
+    shared = [key for key, _, on_foreign in ENGINE_CONF if on_foreign]
+    assert "spark.sql.parquet.pushdown.inFilterThreshold" in shared
+    assert "spark.sql.adaptive.coalescePartitions.initialPartitionNum" in shared
+    prev = {key: spark.conf.get(key, None) for key in shared}
+    try:
+        for key in shared:
+            spark.conf.unset(key)
+        ensure_engine_conf(spark)
+        assert {key: spark.conf.get(key) for key in shared} == {
+            key: built[key] for key in shared
+        }
+        pinned = "spark.sql.parquet.pushdown.inFilterThreshold"
+        spark.conf.set(pinned, "10")
+        ensure_engine_conf(spark)
+        assert spark.conf.get(pinned) == "10"
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
 def test_ensure_engine_conf_keeps_caller_tuned_in_pushdown_threshold(registry):
     """r10/r11 (ADVICE): same set-only-when-unset courtesy for the
     In-pushdown threshold — a caller that deliberately tuned it keeps

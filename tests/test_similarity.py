@@ -188,21 +188,22 @@ def test_ivf_index_search_matches_on_the_fly_and_prunes_partitions(
     on-the-fly ann_ivf_topk under the same centroids, and (b) prune
     non-probed cells from the file listing (PartitionFilters + fewer
     input files than the full index)."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         ann_ivf_topk,
-        ivf_assign,
         ivf_seed_centroids,
-        read_ivf_index,
-        write_ivf_index,
     )
     from datawarehouse_etl_using_hyperjoin_spark.plans.inspect import plan_string
 
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 16)
     path = str(tmp_path / "ivf_index")
-    write_ivf_index(ivf_assign(em, cent), path)
-    index = read_ivf_index(spark, path)
+    write_ivf_index_manifest(em, path, centroids=cent)
+    index = read_ivf_index_manifest(spark, path)
 
     q = em.filter(F.col("vec_id") < 8)
     k, nprobe = 3, 4
@@ -232,16 +233,17 @@ def test_ivf_index_search_matches_on_the_fly_and_prunes_partitions(
 
 
 def test_ivf_append_is_incremental_and_equals_batch_rebuild(spark, sf_dir, tmp_path):
-    """ivf_append lands a new batch inside the existing cell partitions
-    (no new top-level layout, history untouched) and a search over the
-    appended index equals one over a from-scratch rebuild of the union."""
+    """ivf_append_manifest lands a new batch inside the existing cells
+    (history untouched) and a search over the appended index equals one
+    over a full rebuild of the union."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        ivf_append_manifest,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
-        ivf_append,
-        ivf_assign,
         ivf_seed_centroids,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     em = load_table(spark, sf_dir, "embeddings")
@@ -250,16 +252,16 @@ def test_ivf_append_is_incremental_and_equals_batch_rebuild(spark, sf_dir, tmp_p
     cent = ivf_seed_centroids(em, 16)
 
     inc_path = str(tmp_path / "ivf_inc")
-    write_ivf_index(ivf_assign(base, cent), inc_path)
-    base_files = set(read_ivf_index(spark, inc_path).inputFiles())
-    ivf_append(batch, cent, inc_path)
-    appended = read_ivf_index(spark, inc_path)
+    write_ivf_index_manifest(base, inc_path, centroids=cent)
+    base_files = set(read_ivf_index_manifest(spark, inc_path).inputFiles())
+    ivf_append_manifest(batch, inc_path)
+    appended = read_ivf_index_manifest(spark, inc_path)
     # append-only: every pre-append file is still present (history not rewritten)
     assert base_files <= set(appended.inputFiles())
     assert appended.count() == em.count()
 
     full_path = str(tmp_path / "ivf_full")
-    write_ivf_index(ivf_assign(em, cent), full_path)
+    write_ivf_index_manifest(em, full_path, centroids=cent)
     q = em.filter(F.col("vec_id") < 8)
     key = lambda r: (r.query_id, r.rank)
     a = {
@@ -269,7 +271,7 @@ def test_ivf_append_is_incremental_and_equals_batch_rebuild(spark, sf_dir, tmp_p
     b = {
         key(r): (r.neighbor_id, round(r.cos, 12))
         for r in ann_ivf_index_topk(
-            q, read_ivf_index(spark, full_path), cent, k=3, nprobe=4
+            q, read_ivf_index_manifest(spark, full_path), cent, k=3, nprobe=4
         ).collect()
     }
     assert a == b
@@ -391,23 +393,23 @@ def test_quantized_ivf_index_serving_prunes_floats_and_reranks_exactly(
     float at-rest path bit-exactly (same cells, same floats, same exact
     cosine), so the cheap first stage loses nothing that the rerank
     budget covers."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         ann_ivf_index_topk_quantized,
-        ivf_assign,
         ivf_seed_centroids,
         quantize_embeddings,
-        read_ivf_index,
-        write_ivf_index,
     )
     from datawarehouse_etl_using_hyperjoin_spark.plans.inspect import plan_string
 
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 16).localCheckpoint(eager=True)
-    assigned = ivf_assign(em, cent)
     qpath = str(tmp_path / "ivf_quant")
-    write_ivf_index(quantize_embeddings(assigned), qpath)
-    idx_q = read_ivf_index(spark, qpath)
+    write_ivf_index_manifest(quantize_embeddings(em), qpath, centroids=cent)
+    idx_q = read_ivf_index_manifest(spark, qpath)
     q = em.filter(F.col("vec_id") < 8)
 
     # (a) codes-only serving never reads the float column of the index
@@ -428,8 +430,8 @@ def test_quantized_ivf_index_serving_prunes_floats_and_reranks_exactly(
 
     # (b) full-pool rerank == float at-rest serving, bit-exact
     fpath = str(tmp_path / "ivf_float")
-    write_ivf_index(assigned, fpath)
-    idx_f = read_ivf_index(spark, fpath)
+    write_ivf_index_manifest(em, fpath, centroids=cent)
+    idx_f = read_ivf_index_manifest(spark, fpath)
     want = {
         (r.query_id, r.rank): (r.neighbor_id, r.centroid_id, r.cos)
         for r in ann_ivf_index_topk(q, idx_f, cent, k=5, nprobe=4).collect()
@@ -462,19 +464,21 @@ def test_quantized_rerank_cell_local_fetch(spark, sf_dir, tmp_path):
     at all: every ~rows·C-wide id range contains some other cell's
     candidate; measured 2.5x fetch-byte reduction, SCALE.md r9).
     (a) results are bit-identical to the global fetch; (b) the fetch
-    filter anchors on the cell_id DATA column write_ivf_index now
-    duplicates from the partition value; (c) cell_local without that
-    column (in-memory index relation) and unknown fetch values fail
-    loudly at construction."""
+    filter anchors on the cell_id DATA column the index duplicates from
+    the partition value; (c) cell_local without that column (in-memory
+    index relation) and unknown fetch values fail loudly at
+    construction."""
     import pytest
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk_quantized,
         ivf_assign,
         ivf_seed_centroids,
         quantize_embeddings,
-        read_ivf_index,
-        write_ivf_index,
     )
     from datawarehouse_etl_using_hyperjoin_spark.plans.inspect import plan_string
 
@@ -482,8 +486,10 @@ def test_quantized_rerank_cell_local_fetch(spark, sf_dir, tmp_path):
     cent = ivf_seed_centroids(em, 16).localCheckpoint(eager=True)
     quant = quantize_embeddings(ivf_assign(em, cent))
     qpath = str(tmp_path / "ivf_quant_cl")
-    write_ivf_index(quant, qpath, sort_by="vec_id")
-    idx = read_ivf_index(spark, qpath)
+    write_ivf_index_manifest(
+        quantize_embeddings(em), qpath, centroids=cent, sort_by="vec_id"
+    )
+    idx = read_ivf_index_manifest(spark, qpath)
     assert "cell_id" in idx.columns  # the r9 data-column duplicate
     q = em.filter(F.col("vec_id") < 8)
 
@@ -510,23 +516,6 @@ def test_quantized_rerank_cell_local_fetch(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="fetch"):
         ann_ivf_index_topk_quantized(q, idx, cent, k=5, fetch="bogus")
 
-    # append-time layout guard: a pre-r9 index (files without cell_id)
-    # must refuse a cell_id-bearing append — parquet would fill the old
-    # files' cell_id with NULL and cell_local would silently drop their
-    # candidates
-    legacy = str(tmp_path / "ivf_legacy")
-    (quant.write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(legacy))  # simulated pre-r9 layout: no cell_id column
-    assert "cell_id" not in read_ivf_index(spark, legacy).columns
-    with pytest.raises(ValueError, match="predates the cell_id"):
-        write_ivf_index(
-            quantize_embeddings(
-                ivf_assign(em.filter(F.col("vec_id") < 32), cent)
-            ),
-            legacy,
-            mode="append",
-        )
-
 
 def test_ivf_split_oversized_rebalances_hot_cell(spark, sf_dir, tmp_path):
     """r9: hot-cell mitigation — the vector-index analogue of salted-join
@@ -537,24 +526,27 @@ def test_ivf_split_oversized_rebalances_hot_cell(spark, sf_dir, tmp_path):
     non-colliding subcell ids with the input relation's array type, and
     (d) leaves full-pool search results IDENTICAL (probing all cells is
     cell-structure-invariant), while small-nprobe probe cost now scales
-    with subcell sizes.  A no-op call (nothing oversized) returns the
-    relation unchanged."""
+    with subcell sizes.  A no-op pass (nothing oversized) leaves the
+    quantizer unchanged."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        ivf_split_oversized_manifest,
+        read_ivf_centroids,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
-        ivf_assign,
         ivf_seed_centroids,
-        ivf_split_oversized,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 2).localCheckpoint(eager=True)
     path = str(tmp_path / "ivf_hot")
-    write_ivf_index(ivf_assign(em, cent), path, sort_by="vec_id")
+    write_ivf_index_manifest(em, path, centroids=cent, sort_by="vec_id")
     sizes = {
         int(r.centroid_id): r["count"]
-        for r in read_ivf_index(spark, path).groupBy("centroid_id").count().collect()
+        for r in read_ivf_index_manifest(spark, path)
+        .groupBy("centroid_id").count().collect()
     }
     hot, n_hot = max(sizes.items(), key=lambda kv: kv[1])
     n_total = em.count()
@@ -565,16 +557,15 @@ def test_ivf_split_oversized_rebalances_hot_cell(spark, sf_dir, tmp_path):
         return {
             (r.query_id, r.rank): r.neighbor_id
             for r in ann_ivf_index_topk(
-                q, read_ivf_index(spark, path), c, k=3, nprobe=n_cells
+                q, read_ivf_index_manifest(spark, path), c, k=3, nprobe=n_cells
             ).collect()
         }
 
     want = full_pool(cent)
     max_rows = n_hot - 1  # only the hot cell is oversized
-    new_cent = ivf_split_oversized(
-        spark, path, cent, max_rows=max_rows, k=2
-    )
-    idx = read_ivf_index(spark, path)
+    assert ivf_split_oversized_manifest(spark, path, max_rows=max_rows, k=2) == [hot]
+    new_cent = read_ivf_centroids(spark, path)
+    idx = read_ivf_index_manifest(spark, path)
     # (a) the vector set is exactly preserved
     assert idx.count() == n_total
     assert idx.select("vec_id").distinct().count() == n_total
@@ -602,8 +593,9 @@ def test_ivf_split_oversized_rebalances_hot_cell(spark, sf_dir, tmp_path):
     # (d) full-pool search is cell-structure-invariant
     assert full_pool(new_cent) == want
     # no-op pass: nothing oversized anymore at this threshold -> the
-    # relation comes back unchanged
-    again = ivf_split_oversized(spark, path, new_cent, max_rows=n_hot, k=2)
+    # quantizer is unchanged
+    assert ivf_split_oversized_manifest(spark, path, max_rows=n_hot, k=2) == []
+    again = read_ivf_centroids(spark, path)
     assert {int(r.centroid_id) for r in again.collect()} == cent_ids
 
     # the QUANTIZED at-rest index (the 100 TB serving shape) splits the
@@ -615,11 +607,12 @@ def test_ivf_split_oversized_rebalances_hot_cell(spark, sf_dir, tmp_path):
     )
 
     qpath = str(tmp_path / "ivf_hot_quant")
-    write_ivf_index(
-        quantize_embeddings(ivf_assign(em, cent)), qpath, sort_by="vec_id"
+    write_ivf_index_manifest(
+        quantize_embeddings(em), qpath, centroids=cent, sort_by="vec_id"
     )
-    nc2 = ivf_split_oversized(spark, qpath, cent, max_rows=max_rows, k=2)
-    qidx = read_ivf_index(spark, qpath)
+    ivf_split_oversized_manifest(spark, qpath, max_rows=max_rows, k=2)
+    nc2 = read_ivf_centroids(spark, qpath)
+    qidx = read_ivf_index_manifest(spark, qpath)
     assert {"qembedding", "qscale", "cell_id"} <= set(qidx.columns)
     assert qidx.count() == n_total
     key = lambda r: (r.query_id, r.rank)
@@ -630,41 +623,43 @@ def test_ivf_split_oversized_rebalances_hot_cell(spark, sf_dir, tmp_path):
     assert g == c and len(g) == 8 * 3
 
 
+def _local_files(df):
+    return [f.removeprefix("file:") for f in df.inputFiles()]
+
+
 @pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_compact_ivf_index_packs_sorts_and_migrates(spark, sf_dir, tmp_path):
+def test_compact_ivf_index_packs_and_sorts(spark, sf_dir, tmp_path):
     """r9: the IVF maintenance pass — after N appends a cell is N small
     files with interleaved id ranges; compaction (a) shrinks file count,
     (b) restores id-sorted in-file order (what cell_local row-group
-    skipping needs), (c) changes NO search result, and (d) doubles as
-    the pre-r9 migration: a cell_id-less index gets the column
-    backfilled, after which the append guard passes and cell_local
-    serving works."""
-    import glob
-
+    skipping needs), and (c) changes NO search result."""
     import pyarrow.parquet as pq
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        compact_ivf_index_manifest,
+        ivf_append_manifest,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk_quantized,
-        compact_ivf_index,
-        ivf_append,
-        ivf_assign,
         ivf_seed_centroids,
         quantize_embeddings,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 8).localCheckpoint(eager=True)
     path = str(tmp_path / "ivf_appended")
     # initial write + 3 appended batches -> >=4 files per touched cell
-    write_ivf_index(ivf_assign(em.filter(F.col("vec_id") % 4 == 0), cent), path)
+    write_ivf_index_manifest(
+        em.filter(F.col("vec_id") % 4 == 0), path, centroids=cent
+    )
     for b in range(1, 4):
-        ivf_append(em.filter(F.col("vec_id") % 4 == b), cent, path)
+        ivf_append_manifest(em.filter(F.col("vec_id") % 4 == b), path)
     q = em.filter(F.col("vec_id") < 8)
 
     def results(fetch="global"):
-        idx = read_ivf_index(spark, path)
+        idx = read_ivf_index_manifest(spark, path)
         # quantize on the fly for the quantized operator's columns
         return {
             (r.query_id, r.rank): r.neighbor_id
@@ -675,172 +670,56 @@ def test_compact_ivf_index_packs_sorts_and_migrates(spark, sf_dir, tmp_path):
             ).collect()
         }
 
-    before_files = len(read_ivf_index(spark, path).inputFiles())
+    before_files = len(read_ivf_index_manifest(spark, path).inputFiles())
     want = results()
-    stats = compact_ivf_index(spark, path, target_file_mb=128)
+    stats = compact_ivf_index_manifest(spark, path, target_file_mb=128)
     assert stats["files_before"] == before_files
     assert stats["files_after"] < before_files
-    # in-file id order restored per cell file
-    for f in glob.glob(path + "/centroid_id=*/*.parquet"):
+    # in-file id order restored per live cell file
+    for f in _local_files(read_ivf_index_manifest(spark, path)):
         ids = pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist()
         assert ids == sorted(ids), f
     assert results() == want
     assert results(fetch="cell_local") == want
 
-    # (d) migration: simulate a pre-r9 index (no cell_id), compact, then
-    # append + cell_local both work
-    legacy = str(tmp_path / "ivf_legacy_mig")
-    assigned = ivf_assign(em.filter(F.col("vec_id") % 2 == 0), cent)
-    (assigned.write.mode("overwrite").partitionBy("centroid_id")
-             .parquet(legacy))
-    assert "cell_id" not in read_ivf_index(spark, legacy).columns
-    compact_ivf_index(spark, legacy)
-    assert "cell_id" in read_ivf_index(spark, legacy).columns
-    ivf_append(em.filter(F.col("vec_id") % 2 == 1), cent, legacy)  # guard passes
-    # force a full decode of cell_id across BOTH the migrated and the
-    # appended files: the migration's copy comes from the inferred
-    # (int32) partition column, and an unpinned type makes a mixed-width
-    # dir that crashes the vectorized reader depending on which footer
-    # wins schema inference (the r9 end-of-round suite flake)
-    mixed = read_ivf_index(spark, legacy)
-    assert dict(mixed.dtypes)["cell_id"] == "bigint"
-    assert (
-        mixed.filter(F.col("cell_id") != F.col("centroid_id")).count() == 0
-    )
-    got = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in ann_ivf_index_topk_quantized(
-            q, quantize_embeddings(mixed), cent,
-            k=3, nprobe=4, rerank=12, fetch="cell_local",
-        ).collect()
-    }
-    assert len(got) == 8 * 3
-
 
 def test_write_ivf_index_sort_by_orders_rows_within_files(spark, sf_dir, tmp_path):
-    """r8: write_ivf_index(sort_by=id) must leave every written file
-    internally id-sorted (narrow row-group min/max -> the rerank
+    """r8: write_ivf_index_manifest(sort_by=id) must leave every written
+    file internally id-sorted (narrow row-group min/max -> the rerank
     candidate fetch can skip row groups at scale), without changing
     search results."""
     import glob
 
     import pyarrow.parquet as pq
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         ivf_assign,
         ivf_seed_centroids,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 8).localCheckpoint(eager=True)
-    assigned = ivf_assign(em, cent)
     sorted_path = str(tmp_path / "ivf_sorted")
-    write_ivf_index(assigned, sorted_path, sort_by="vec_id")
-    files = glob.glob(sorted_path + "/centroid_id=*/*.parquet")
+    write_ivf_index_manifest(em, sorted_path, centroids=cent, sort_by="vec_id")
+    files = glob.glob(sorted_path + "/data/centroid_id=*/g=*/*.parquet")
     assert files
     for f in files:
         ids = pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist()
         assert ids == sorted(ids), f
-    # identical search results to the unsorted layout
-    plain_path = str(tmp_path / "ivf_plain")
-    write_ivf_index(assigned, plain_path)
+    # identical search results to the unsorted (in-memory) assignment
+    plain = ivf_assign(em, cent)
     q = em.filter(F.col("vec_id") < 8)
     key = lambda r: (r.query_id, r.rank)
     a = {key(r): r.neighbor_id for r in ann_ivf_index_topk(
-        q, read_ivf_index(spark, sorted_path), cent, k=3, nprobe=4).collect()}
+        q, read_ivf_index_manifest(spark, sorted_path), cent, k=3, nprobe=4).collect()}
     b = {key(r): r.neighbor_id for r in ann_ivf_index_topk(
-        q, read_ivf_index(spark, plain_path), cent, k=3, nprobe=4).collect()}
+        q, plain, cent, k=3, nprobe=4).collect()}
     assert a == b
-
-
-def test_ivf_split_crash_recovery_and_scheme_guard(spark, sf_dir, tmp_path):
-    """r10 (ADVICE): a crash between retiring the parent cell dir and
-    promoting the subcell dirs must NOT leave that cell's rows silently
-    invisible.  The split protocol leaves a sentinel while the swap is
-    in flight; read_ivf_index refuses to read past it and
-    ivf_recover_splits rolls the swap forward (idempotently, from any
-    crash point after staging committed).  Non-local schemes are
-    rejected up front."""
-    import os
-    import shutil
-
-    import pytest
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        _SPLIT_SENTINEL,
-        ivf_assign,
-        ivf_recover_splits,
-        ivf_seed_centroids,
-        ivf_split_oversized,
-        read_ivf_index,
-        write_ivf_index,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 2).localCheckpoint(eager=True)
-    path = str(tmp_path / "ivf_crash")
-    write_ivf_index(ivf_assign(em, cent), path, sort_by="vec_id")
-    n_total = em.count()
-    sizes = {
-        int(r.centroid_id): r["count"]
-        for r in spark.read.parquet(path).groupBy("centroid_id").count().collect()
-    }
-    hot, n_hot = max(sizes.items(), key=lambda kv: kv[1])
-
-    # non-local schemes raise before touching anything
-    for bad in ("s3a://bucket/ivf", "hdfs://nn/ivf", "abfss://c@a/ivf"):
-        with pytest.raises(ValueError, match="local filesystem"):
-            ivf_split_oversized(spark, bad, cent, max_rows=1, k=2)
-
-    # simulate the worst crash point: staging committed + sentinel
-    # written + parent retired, NOTHING promoted.  Reuse a real split's
-    # staging output by running the split, then reconstructing that
-    # state from its results.
-    new_cent = ivf_split_oversized(spark, path, cent, max_rows=n_hot - 1, k=2)
-    subcells = sorted(
-        {int(r.centroid_id) for r in new_cent.collect()} - set(sizes)
-    )
-    assert len(subcells) == 2
-    staging = os.path.join(path, f".centroid_id={hot}.splitting")
-    retired = os.path.join(path, f".centroid_id={hot}.retired")
-    os.makedirs(staging)
-    for s in subcells:
-        shutil.move(os.path.join(path, f"centroid_id={s}"),
-                    os.path.join(staging, f"centroid_id={s}"))
-    os.makedirs(retired)  # parent already moved aside (contents gone is fine)
-    sentinel = os.path.join(path, f"{_SPLIT_SENTINEL}{hot}")
-    open(sentinel, "w").close()
-
-    # mid-flight: a plain read would miss the hot cell's rows — refuse
-    with pytest.raises(RuntimeError, match="ivf_recover_splits"):
-        read_ivf_index(spark, path)
-
-    # r11 (ADVICE): the WRITE paths refuse too — an append would create
-    # rows recovery later destroys, a new split pass would split a
-    # truncated view, a compaction would rewrite it
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        compact_ivf_index,
-    )
-
-    some = em.limit(3)
-    with pytest.raises(RuntimeError, match="ivf_recover_splits"):
-        write_ivf_index(ivf_assign(some, new_cent), path, mode="append")
-    with pytest.raises(RuntimeError, match="ivf_recover_splits"):
-        ivf_split_oversized(spark, path, new_cent, max_rows=1, k=2)
-    with pytest.raises(RuntimeError, match="ivf_recover_splits"):
-        compact_ivf_index(spark, path)
-
-    # roll forward; everything converges and recovery is idempotent
-    assert ivf_recover_splits(spark, path) == [hot]
-    assert ivf_recover_splits(spark, path) == []
-    idx = read_ivf_index(spark, path)
-    assert idx.count() == n_total
-    assert idx.select("vec_id").distinct().count() == n_total
-    assert not os.path.exists(sentinel)
-    assert not os.path.exists(staging) and not os.path.exists(retired)
 
 
 def test_ivf_split_recall_recovers_at_nprobe_plus_one(spark, sf_dir, tmp_path):
@@ -850,23 +729,26 @@ def test_ivf_split_recall_recovers_at_nprobe_plus_one(spark, sf_dir, tmp_path):
     generation — is pinned here: recall@k at nprobe+1 over the split
     index is >= recall@k at nprobe over the unsplit index, while still
     scanning fewer rows than the unsplit hot cell forced."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        ivf_split_oversized_manifest,
+        read_ivf_centroids,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         cosine_topk,
-        ivf_assign,
         ivf_seed_centroids,
-        ivf_split_oversized,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 4).localCheckpoint(eager=True)
     path = str(tmp_path / "ivf_recall")
-    write_ivf_index(ivf_assign(em, cent), path, sort_by="vec_id")
+    write_ivf_index_manifest(em, path, centroids=cent, sort_by="vec_id")
     sizes = {
         int(r.centroid_id): r["count"]
-        for r in spark.read.parquet(path).groupBy("centroid_id").count().collect()
+        for r in read_ivf_index_manifest(spark, path)
+        .groupBy("centroid_id").count().collect()
     }
     n_hot = max(sizes.values())
     q = em.filter(F.col("vec_id") < 16)
@@ -880,13 +762,14 @@ def test_ivf_split_recall_recovers_at_nprobe_plus_one(spark, sf_dir, tmp_path):
         got = {
             (r.query_id, r.neighbor_id)
             for r in ann_ivf_index_topk(
-                q, read_ivf_index(spark, path), c, k=k, nprobe=nprobe
+                q, read_ivf_index_manifest(spark, path), c, k=k, nprobe=nprobe
             ).collect()
         }
         return len(got & exact) / len(exact)
 
     base = recall(cent, 2)
-    new_cent = ivf_split_oversized(spark, path, cent, max_rows=n_hot - 1, k=2)
+    ivf_split_oversized_manifest(spark, path, max_rows=n_hot - 1, k=2)
+    new_cent = read_ivf_centroids(spark, path)
     assert new_cent.count() > cent.count()  # something actually split
     assert recall(new_cent, 3) >= base
 
@@ -896,17 +779,17 @@ def test_compact_ivf_index_custom_id_col(spark, sf_dir, tmp_path):
     survive the maintenance pass — id_col flows through to the sort —
     and a WRONG id_col fails with a clear ValueError, not an opaque
     AnalysisException."""
-    import glob
-
     import pyarrow.parquet as pq
     import pytest
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        compact_ivf_index_manifest,
+        ivf_append_manifest,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        compact_ivf_index,
-        ivf_assign,
         ivf_seed_centroids,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     em = load_table(spark, sf_dir, "embeddings").withColumnRenamed(
@@ -914,17 +797,21 @@ def test_compact_ivf_index_custom_id_col(spark, sf_dir, tmp_path):
     )
     cent = ivf_seed_centroids(em, 4, id_col="doc_id").localCheckpoint(eager=True)
     path = str(tmp_path / "ivf_docid")
-    write_ivf_index(
-        ivf_assign(em, cent, id_col="doc_id"), path, sort_by="doc_id"
+    # two generations, so the pass has something to merge and re-sort
+    write_ivf_index_manifest(
+        em.filter(F.col("doc_id") % 2 == 0), path, centroids=cent,
+        id_col="doc_id", sort_by="doc_id",
     )
+    ivf_append_manifest(em.filter(F.col("doc_id") % 2 == 1), path, id_col="doc_id")
     n = em.count()
 
     with pytest.raises(ValueError, match="id column 'vec_id' not in"):
-        compact_ivf_index(spark, path)  # default id_col is wrong here
+        compact_ivf_index_manifest(spark, path)  # default id_col is wrong here
 
-    compact_ivf_index(spark, path, id_col="doc_id")
-    idx = read_ivf_index(spark, path)
+    stats = compact_ivf_index_manifest(spark, path, id_col="doc_id")
+    assert stats["gens_after"] < stats["gens_before"]
+    idx = read_ivf_index_manifest(spark, path)
     assert idx.count() == n and "cell_id" in idx.columns
-    for f in glob.glob(path + "/centroid_id=*/*.parquet"):
+    for f in _local_files(idx):
         ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
         assert ids == sorted(ids), f

@@ -1503,48 +1503,6 @@ def test_quarantine_composed_with_corpus_sink_replay_convergence(
         spark.sql(f"DROP TABLE IF EXISTS {idx}")
 
 
-def test_run_pipeline_streaming_dim_buckets_matches_default(
-    spark, sf_dir, txn_stream_dir, tmp_path_factory
-):
-    """r10: the engine pipeline's opt-in bucketed dim layout
-    (dim_buckets=N) is a pure LAYOUT change — dim/fact state after a
-    full drain is row-identical to the default full-rewrite layout, and
-    the dim is partitioned by the internal bucket column."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
-        DIM_BUCKET_COL,
-        read_dim,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        run_pipeline_streaming,
-    )
-
-    master = master_data(spark, sf_dir)
-    outs = {}
-    for label, buckets in (("default", None), ("bucketed", 8)):
-        out = str(tmp_path_factory.mktemp(f"dw_{label}"))
-        counts = run_pipeline_streaming(
-            spark,
-            read_parquet_stream(spark, txn_stream_dir, max_files_per_trigger=2),
-            master,
-            out,
-            checkpoint_dir=out + "/_ckpt",
-            dim_buckets=buckets,
-        )
-        assert counts["dim_product"] > 0 and counts["fact_enriched"] > 0
-        outs[label] = out
-
-    got_dim = read_dim(spark, f"{outs['bucketed']}/dim_product")
-    want_dim = read_dim(spark, f"{outs['default']}/dim_product")
-    assert got_dim.exceptAll(want_dim).count() == 0
-    assert want_dim.exceptAll(got_dim).count() == 0
-    raw = spark.read.parquet(f"{outs['bucketed']}/dim_product")
-    assert DIM_BUCKET_COL in raw.columns
-    got_fact = spark.read.parquet(f"{outs['bucketed']}/fact_enriched").drop("batch_id")
-    want_fact = spark.read.parquet(f"{outs['default']}/fact_enriched").drop("batch_id")
-    assert got_fact.exceptAll(want_fact).count() == 0
-    assert want_fact.exceptAll(got_fact).count() == 0
-
-
 @pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
 def test_compact_quarantine_bounds_partition_growth(spark, tmp_path_factory):
     """r10: the quarantine sink's side artifacts age one partition dir

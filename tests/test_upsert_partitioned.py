@@ -1,15 +1,11 @@
-"""r10: bounded dim-upsert write amplification.
+"""The flat dim-upsert sink and the fsutil probes it relies on.
 
-The flat `upsert_parquet_sink` rewrites the ENTIRE dim every micro-batch —
-per-batch write bytes scale with |dim|, not |batch| (the write-path
-analogue of the quadratic _hwm read r9 fixed).  The bucketed layout
-(`buckets=P`) key-hash-partitions the dim and dynamic-partition-overwrites
-only the buckets the batch touches.  These tests pin:
+These tests pin:
 
-* semantic equivalence to the flat layout (same final dim content),
-* untouched partition files byte-identical after an upsert batch,
 * replay idempotence (re-running a batch yields the same table),
-* per-batch write bytes tracking batch size while flat tracks dim size,
+* the loud failure over a dim this sink did not write: a leftover
+  key-bucketed dim (a ``kp_bucket=N`` partition column) fails the batch
+  in the union, before any write, leaving the directory byte-identical,
 * the fsutil Connect-fallback probe's no-table vs transient-error split.
 """
 
@@ -18,6 +14,8 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from datawarehouse_etl_using_hyperjoin_spark.fsutil import (
@@ -26,12 +24,8 @@ from datawarehouse_etl_using_hyperjoin_spark.fsutil import (
     table_exists,
 )
 from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
-    DIM_BUCKET_COL,
-    read_dim,
     upsert_parquet_sink,
 )
-
-BUCKETS = 8
 
 
 def _dim_batch(spark, ids, version):
@@ -42,15 +36,11 @@ def _dim_batch(spark, ids, version):
 
 
 def _snapshot_files(root):
-    """(relpath -> (size, md5)) for every data file under root (hidden
-    files AND hidden dirs — e.g. the r11 _layout marker — excluded, the
-    same visibility rule Spark reads use)."""
+    """(relpath -> (size, md5)) for every file under root, hidden ones
+    (``_SUCCESS``, ``.crc``) included."""
     out = {}
-    for dirpath, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+    for dirpath, _dirs, files in os.walk(root):
         for fn in files:
-            if fn.startswith(("_", ".")):
-                continue
             p = os.path.join(dirpath, fn)
             with open(p, "rb") as fh:
                 out[os.path.relpath(p, root)] = (
@@ -63,180 +53,39 @@ def _snapshot_files(root):
 def _rows(spark, path):
     return {
         tuple(r)
-        for r in read_dim(spark, path)
+        for r in spark.read.parquet(path)
         .select("product_id", "product_name", "price")
         .collect()
     }
 
 
-def test_bucketed_matches_flat_semantics(spark, tmp_path):
-    flat, bucketed = str(tmp_path / "flat"), str(tmp_path / "bucketed")
-    sink_f = upsert_parquet_sink(flat, "product_id")
-    sink_b = upsert_parquet_sink(bucketed, "product_id", buckets=BUCKETS)
-
-    b1 = _dim_batch(spark, range(100), 1)
-    b2 = _dim_batch(spark, range(90, 120), 2)  # 10 updates + 20 inserts
-    for sink in (sink_f, sink_b):
-        sink(b1, 0)
-        sink(b2, 1)
-
-    assert _rows(spark, flat) == _rows(spark, bucketed)
-    # the bucket column is internal: read_dim hides it, the raw read has it
-    assert DIM_BUCKET_COL in spark.read.parquet(bucketed).columns
-    assert DIM_BUCKET_COL not in read_dim(spark, bucketed).columns
-
-
-def test_untouched_partitions_byte_identical(spark, tmp_path):
+def test_flat_replay_idempotent(spark, tmp_path):
     path = str(tmp_path / "dim")
-    sink = upsert_parquet_sink(path, "product_id", buckets=BUCKETS)
-    sink(_dim_batch(spark, range(200), 1), 0)
-
-    batch2 = _dim_batch(spark, [0, 1], 2)
-    touched = {
-        r[0]
-        for r in batch2.withColumn(
-            DIM_BUCKET_COL,
-            F.pmod(F.xxhash64("product_id"), F.lit(BUCKETS)).cast("int"),
-        )
-        .select(DIM_BUCKET_COL)
-        .distinct()
-        .collect()
-    }
-    assert touched != set(range(BUCKETS)), "need untouched buckets for the test"
-
-    before = _snapshot_files(path)
-    sink(batch2, 1)
-    after = _snapshot_files(path)
-
-    def untouched_only(snap):
-        return {
-            p: v
-            for p, v in snap.items()
-            if int(p.split(f"{DIM_BUCKET_COL}=")[1].split(os.sep)[0]) not in touched
-        }
-
-    # every file in an untouched bucket survived, byte-identical
-    assert untouched_only(before) == untouched_only(after)
-    # and the touched buckets really did change
-    assert {p: v for p, v in before.items() if p not in untouched_only(before)} != {
-        p: v for p, v in after.items() if p not in untouched_only(after)
-    }
-    # semantics intact
-    rows = _rows(spark, path)
-    assert (0, "name_0_v2", 2.0) in rows and (5, "name_5_v1", 1.0) in rows
-    assert len(rows) == 200
-
-
-def test_bucketed_replay_idempotent(spark, tmp_path):
-    path = str(tmp_path / "dim")
-    sink = upsert_parquet_sink(path, "product_id", buckets=BUCKETS)
+    sink = upsert_parquet_sink(path, "product_id")
     sink(_dim_batch(spark, range(50), 1), 0)
     batch = _dim_batch(spark, range(40, 60), 2)
     sink(batch, 1)
     first = _rows(spark, path)
     sink(batch, 1)  # replay after a sink-side failure
     assert _rows(spark, path) == first
-    assert read_dim(spark, path).count() == 60
+    assert spark.read.parquet(path).count() == 60
 
 
-def test_empty_batch_is_noop(spark, tmp_path):
+def test_flat_sink_over_bucketed_dim_fails_before_any_write(spark, tmp_path):
+    """A dim left in the retired key-bucketed layout carries an extra
+    ``kp_bucket`` partition column.  The flat sink must not overwrite it:
+    the upsert's union fails with NUM_COLUMNS_MISMATCH at analysis, so
+    no file under the dim changes."""
     path = str(tmp_path / "dim")
-    sink = upsert_parquet_sink(path, "product_id", buckets=BUCKETS)
-    sink(_dim_batch(spark, range(20), 1), 0)
+    _dim_batch(spark, range(50), 1).withColumn(
+        "kp_bucket", F.pmod(F.xxhash64("product_id"), F.lit(8)).cast("int")
+    ).write.partitionBy("kp_bucket").parquet(path)
     before = _snapshot_files(path)
-    sink(_dim_batch(spark, [], 2), 1)
+    assert any(p.startswith("kp_bucket=") for p in before)
+
+    with pytest.raises(AnalysisException, match="NUM_COLUMNS_MISMATCH"):
+        upsert_parquet_sink(path, "product_id")(_dim_batch(spark, [1, 99], 2), 0)
     assert _snapshot_files(path) == before
-
-
-def test_write_bytes_track_batch_not_dim(spark, tmp_path):
-    """The headline property: per-batch REWRITTEN bytes in the bucketed
-    layout track the batch (touched buckets only), while the flat layout
-    rewrites everything every batch."""
-    flat, bucketed = str(tmp_path / "flat"), str(tmp_path / "bucketed")
-    sink_f = upsert_parquet_sink(flat, "product_id")
-    sink_b = upsert_parquet_sink(bucketed, "product_id", buckets=64)
-
-    big = _dim_batch(spark, range(5000), 1)
-    tiny = _dim_batch(spark, [7], 2)  # touches exactly one of 64 buckets
-    sink_f(big, 0)
-    sink_b(big, 0)
-
-    def written_bytes(path, before):
-        after = _snapshot_files(path)
-        return sum(
-            size for p, (size, md5) in after.items() if before.get(p) != (size, md5)
-        )
-
-    bf, bb = _snapshot_files(flat), _snapshot_files(bucketed)
-    sink_f(tiny, 1)
-    sink_b(tiny, 1)
-    flat_bytes = written_bytes(flat, bf)
-    bucketed_bytes = written_bytes(bucketed, bb)
-    # flat rewrote ~the whole dim; bucketed rewrote ~1/64th of it
-    assert bucketed_bytes < flat_bytes / 4, (bucketed_bytes, flat_bytes)
-
-
-def test_layout_guard_rejects_bucket_count_and_shape_changes(spark, tmp_path):
-    """r11 (ADVICE): the sticky layout is enforced, not just documented —
-    a rerun with a different `buckets` (or a flat/bucketed flip) raises
-    instead of silently duplicating keys across stale bucket dirs."""
-    import pytest
-
-    path = str(tmp_path / "dim")
-    upsert_parquet_sink(path, "product_id", buckets=BUCKETS)(
-        _dim_batch(spark, range(50), 1), 0
-    )
-    # different P
-    with pytest.raises(ValueError, match="bucket-count mismatch"):
-        upsert_parquet_sink(path, "product_id", buckets=BUCKETS * 2)(
-            _dim_batch(spark, [1], 2), 1
-        )
-    # bucketed -> flat
-    with pytest.raises(ValueError, match="layout mismatch"):
-        upsert_parquet_sink(path, "product_id")(_dim_batch(spark, [1], 2), 1)
-    # flat -> bucketed
-    flat = str(tmp_path / "flat")
-    upsert_parquet_sink(flat, "product_id")(_dim_batch(spark, range(5), 1), 0)
-    with pytest.raises(ValueError, match="layout mismatch"):
-        upsert_parquet_sink(flat, "product_id", buckets=BUCKETS)(
-            _dim_batch(spark, [1], 2), 1
-        )
-    # the correct P still works, and the guard survived the failed runs
-    upsert_parquet_sink(path, "product_id", buckets=BUCKETS)(
-        _dim_batch(spark, [1], 2), 1
-    )
-    rows = _rows(spark, path)
-    assert (1, "name_1_v2", 2.0) in rows and len(rows) == 50
-
-
-def test_layout_guard_backfills_legacy_marker(spark, tmp_path):
-    """A pre-r11 bucketed dim (no _layout marker) passes its first
-    checked batch via the bucket-dir probe, gets the marker backfilled,
-    and is precisely guarded from then on — including the under-detected
-    case (declared P smaller than an OBSERVED bucket id fails even
-    before the marker exists)."""
-    import shutil
-
-    import pytest
-
-    path = str(tmp_path / "dim")
-    sink = upsert_parquet_sink(path, "product_id", buckets=BUCKETS)
-    sink(_dim_batch(spark, range(50), 1), 0)
-    shutil.rmtree(os.path.join(path, "_layout"))  # simulate pre-r11 table
-
-    # a smaller P is caught by the dir probe (some dir id >= P)
-    with pytest.raises(ValueError, match="bucket-count mismatch"):
-        upsert_parquet_sink(path, "product_id", buckets=2)(
-            _dim_batch(spark, [1], 2), 1
-        )
-    # the original P passes and backfills the marker
-    sink(_dim_batch(spark, [1], 2), 1)
-    assert os.path.isdir(os.path.join(path, "_layout"))
-    # now even a LARGER P (the case the dir probe cannot see) is caught
-    with pytest.raises(ValueError, match="bucket-count mismatch"):
-        upsert_parquet_sink(path, "product_id", buckets=BUCKETS * 4)(
-            _dim_batch(spark, [1], 3), 2
-        )
 
 
 def test_fsutil_no_table_vs_transient_error(spark, tmp_path):

@@ -602,9 +602,9 @@ def measure_ivf_hotcell(
     every probe touching it pays that cell's full size and nprobe stops
     mattering.  Builds the at-rest index over a skewed corpus, serves
     queries that live INSIDE the hot blob (the worst case — they always
-    probe the hot cell), then applies :func:`ivf_split_oversized` and
-    serves the same queries against the SAME directory with the updated
-    centroids.  Split passes loop until no cell is oversized (one pass
+    probe the hot cell), then applies ``ivf_split_oversized_manifest``
+    and serves the same queries against the SAME index with its updated
+    quantizer.  Split passes loop until no cell is oversized (one pass
     splits each oversized cell k-ways; a 50%-of-corpus cell needs two).
 
     Reports the cell-size histogram, recall vs exact brute force, wall,
@@ -618,16 +618,18 @@ def measure_ivf_hotcell(
     number to watch alongside the cost drop."""
     from pyspark.sql import Window
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        ivf_split_oversized_manifest,
+        read_ivf_centroids,
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         cosine,
         cosine_topk,
-        ivf_assign,
         ivf_seed_centroids,
-        ivf_split_oversized,
         kmeans_refine,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
@@ -639,13 +641,13 @@ def measure_ivf_hotcell(
         vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
     ).localCheckpoint(eager=True)
     root = tempfile.mkdtemp(prefix="scale_probe_ivfhot_") + "/index"
-    write_ivf_index(ivf_assign(vecs, cent), root, sort_by="vec_id")
+    write_ivf_index_manifest(vecs, root, centroids=cent, sort_by="vec_id")
 
     def sizes():
         return sorted(
             (
                 r["count"]
-                for r in spark.read.parquet(root)
+                for r in read_ivf_index_manifest(spark, root)
                 .groupBy("centroid_id").count().collect()
             ),
             reverse=True,
@@ -671,14 +673,14 @@ def measure_ivf_hotcell(
             .filter(F.col("__rn") <= nprobe)
             .select("query_id", "centroid_id")
         )
-        sz = spark.read.parquet(root).groupBy("centroid_id").count()
+        sz = read_ivf_index_manifest(spark, root).groupBy("centroid_id").count()
         return int(
             probed.join(sz, on="centroid_id").agg(F.sum("count")).first()[0]
         )
 
     def serve(centroids):
         df = ann_ivf_index_topk(
-            q, read_ivf_index(spark, root), centroids, k=k, nprobe=nprobe
+            q, read_ivf_index_manifest(spark, root), centroids, k=k, nprobe=nprobe
         )
         m = run_metered(spark, df)
         got = {
@@ -693,17 +695,15 @@ def measure_ivf_hotcell(
     max_rows = int(n_total / n_cells * 2)
     before_sizes = sizes()
     before = serve(cent)
-    new_cent, passes = cent, 0
+    passes = 0
     while passes < 6:
-        nxt = ivf_split_oversized(
-            spark, root, new_cent, max_rows=max_rows, k=split_k
-        )
         passes += 1
-        if nxt is new_cent:  # nothing oversized -> relation unchanged
-            break
-        new_cent = nxt
+        if not ivf_split_oversized_manifest(
+            spark, root, max_rows=max_rows, k=split_k
+        ):
+            break  # nothing oversized
     after_sizes = sizes()
-    after = serve(new_cent)
+    after = serve(read_ivf_centroids(spark, root))
     return {
         "n_vectors": n_total,
         "n_queries": n_queries,
@@ -729,21 +729,22 @@ def measure_ivf_index(
     100 TB."""
     import tempfile as _tf
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         ann_ivf_topk,
         cosine_topk,
-        ivf_assign,
         ivf_seed_centroids,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     cent = ivf_seed_centroids(vecs, n_cells).persist()
     cent.count()
     path = _tf.mkdtemp(prefix="scale_probe_ivf_") + "/index"
-    write_ivf_index(ivf_assign(vecs, cent), path)
-    index = read_ivf_index(spark, path)
+    write_ivf_index_manifest(vecs, path, centroids=cent)
+    index = read_ivf_index_manifest(spark, path)
     q = vecs.filter(F.col("vec_id") < n_queries)
 
     at_rest = run_metered(
@@ -843,16 +844,17 @@ def measure_ivf_quantized(
     read."""
     import tempfile as _tf
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk,
         ann_ivf_index_topk_quantized,
         cosine_topk,
-        ivf_assign,
         ivf_seed_centroids,
         kmeans_refine,
         quantize_embeddings,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
@@ -863,17 +865,17 @@ def measure_ivf_quantized(
     cent = kmeans_refine(
         vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
     ).localCheckpoint(eager=True)
-    assigned = ivf_assign(vecs, cent)
     root = _tf.mkdtemp(prefix="scale_probe_ivfq_")
-    write_ivf_index(assigned, root + "/float")
+    write_ivf_index_manifest(vecs, root + "/float", centroids=cent)
     # id-sorted cells: narrow row-group id ranges let the rerank stage's
     # candidate-id fetch skip row groups (only bites once cells span
     # multiple row groups — free either way)
-    write_ivf_index(
-        quantize_embeddings(assigned), root + "/quant", sort_by="vec_id"
+    write_ivf_index_manifest(
+        quantize_embeddings(vecs), root + "/quant", centroids=cent,
+        sort_by="vec_id",
     )
-    idx_f = read_ivf_index(spark, root + "/float")
-    idx_q = read_ivf_index(spark, root + "/quant")
+    idx_f = read_ivf_index_manifest(spark, root + "/float")
+    idx_q = read_ivf_index_manifest(spark, root + "/quant")
 
     def recall(df) -> float:
         got = {
@@ -899,7 +901,7 @@ def measure_ivf_quantized(
         import pyarrow.parquet as _pq
 
         tot: dict[str, int] = {}
-        for f in _glob.glob(path + "/centroid_id=*/*.parquet"):
+        for f in _glob.glob(path + "/data/centroid_id=*/g=*/*.parquet"):
             md = _pq.ParquetFile(f).metadata
             for rg in range(md.num_row_groups):
                 g = md.row_group(rg)
@@ -936,8 +938,8 @@ def measure_ivf_rowgroup_skip(
     probe's 256-cell point was footer-dominated — single row group per
     cell, 'identical numbers at probe scale as expected').
 
-    Simulates the GB-cell regime by shrinking ``parquet.block.size``
-    instead of inflating rows (same row-groups-per-cell geometry, probe
+    Simulates the GB-cell regime by shrinking ``parquet.block.size`` (set
+    on the Hadoop conf for the two index writes) instead of inflating rows (same row-groups-per-cell geometry, probe
     cost): each cell holds tens of row groups, candidates per cell ≪ row
     groups per cell — the regime where skipping can bite.  Measures the
     REAL operator's rerank candidate fetch (stage 1 runs eagerly at
@@ -946,7 +948,9 @@ def measure_ivf_rowgroup_skip(
     {insertion-order, id-sorted} × {global In at Spark's default
     threshold 10 (degraded to a [min,max] range), global In at the
     engine threshold (real In predicate), per-cell cell_local
-    predicate}.  What r9 established (and this probe pins): a GLOBAL
+    predicate}; the "unsorted" layout is the index written with
+    ``sort_by="qscale"``, an order unrelated to the id (the manifest
+    writer always sorts within a cell).  What r9 established (and this probe pins): a GLOBAL
     candidate list cannot skip id-sorted row groups at all — cell
     membership is a similarity property, so every ~rows·C-wide sorted
     id range contains some other cell's candidate — and only
@@ -958,44 +962,51 @@ def measure_ivf_rowgroup_skip(
 
     import pyarrow.parquet as _pq
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
+        read_ivf_index_manifest,
+        write_ivf_index_manifest,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         ann_ivf_index_topk_quantized,
-        ivf_assign,
         ivf_seed_centroids,
         kmeans_refine,
         quantize_embeddings,
-        read_ivf_index,
-        write_ivf_index,
     )
 
     q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
     cent = kmeans_refine(
         vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
     ).localCheckpoint(eager=True)
-    # one writer task per cell → ONE file per cell directory holding many
-    # row groups (without this, every input partition writes its own
-    # sliver per cell and both layouts degenerate to wide-id-range
-    # two-row-group files — the r8 footer-dominated geometry again)
-    quant = (
-        quantize_embeddings(ivf_assign(vecs, cent))
-        .repartition(n_cells, F.col("centroid_id"))
-        .localCheckpoint(eager=True)
-    )
+    # every writer task lands one file per cell it holds; the reported
+    # geometry (cell files, row groups per file) says how many row
+    # groups each file spans at this block size
+    quant = quantize_embeddings(vecs).localCheckpoint(eager=True)
     root = tempfile.mkdtemp(prefix="scale_probe_ivfrg_")
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
     opts = {
         "parquet.block.size": str(block_bytes),
         "parquet.page.size": str(page_bytes),
     }
-    write_ivf_index(quant, root + "/unsorted", writer_options=opts)
-    write_ivf_index(
-        quant, root + "/sorted", sort_by="vec_id", writer_options=opts
-    )
+    saved = {k_: hconf.get(k_) for k_ in opts}
+    try:
+        for k_, v in opts.items():
+            hconf.set(k_, v)
+        for layout, order in (("unsorted", "qscale"), ("sorted", "vec_id")):
+            write_ivf_index_manifest(
+                quant, f"{root}/{layout}", centroids=cent, sort_by=order
+            )
+    finally:
+        for k_, v in saved.items():
+            if v is None:
+                hconf.unset(k_)
+            else:
+                hconf.set(k_, v)
 
     def cell_geometry(path: str) -> dict[str, float]:
         """row groups per cell file + mean id-range width per row group
         (the narrow-min/max evidence sorting is supposed to buy)."""
         n_files, n_groups, widths = 0, 0, []
-        for f in _glob.glob(path + "/centroid_id=*/*.parquet"):
+        for f in _glob.glob(path + "/data/centroid_id=*/g=*/*.parquet"):
             md = _pq.ParquetFile(f).metadata
             n_files += 1
             n_groups += md.num_row_groups
@@ -1038,7 +1049,7 @@ def measure_ivf_rowgroup_skip(
         ("cell_local", "cell_local", engine_thr),
     )
     for layout in ("unsorted", "sorted"):
-        idx = read_ivf_index(spark, f"{root}/{layout}")
+        idx = read_ivf_index_manifest(spark, f"{root}/{layout}")
         for name, fetch, thr in variants:
             spark.conf.set(thr_key, thr)
             try:
@@ -1733,166 +1744,6 @@ def measure_corpus_diff(spark, docs) -> dict[str, float]:
     t0 = _t.time()
     corpus_diff(docs, new).write.format("noop").mode("overwrite").save()
     return {"corpus_diff": round(_t.time() - t0, 2)}
-
-
-def measure_dim_write_amp(
-    spark, dim_rows: int, batch_rows: int, bucket_rows: int = 6_250
-) -> dict[str, dict[str, float]]:
-    """r10 (verdict #1): per-micro-batch WRITE bytes of the dim upsert
-    sink.  The flat layout rewrites the whole table every batch (bytes ∝
-    |dim|); the bucketed layout (key-hash partitions + dynamic partition
-    overwrite) rewrites only touched buckets — ``min(|batch keys|, P) ×
-    bucket_bytes``.  Production sizing keeps bucket width FIXED
-    (64–256 MB) so P grows with the dim; this probe mirrors that
-    (``P = dim_rows / bucket_rows``) with a fixed small update batch —
-    the dim regime (master-data changes are sparse; the reference's
-    stream updates a handful of dim rows per batch) — so flat bytes grow
-    linearly with the dim while bucketed bytes stay ~flat at
-    |batch keys| × bucket_bytes."""
-    import os as _os
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
-        upsert_parquet_sink,
-    )
-
-    def dim_batch(ids):
-        return ids.select(
-            F.col("id").alias("product_id"),
-            F.concat(F.lit("product_"), F.col("id")).alias("product_name"),
-            F.md5(F.col("id").cast("string")).alias("category"),
-            (F.pmod(F.col("id") * 131, 100_000) / 100.0).alias("price"),
-        )
-
-    def files_of(root):
-        out = {}
-        for dirpath, _dirs, files in _os.walk(root):
-            for fn in files:
-                if fn.startswith(("_", ".")):
-                    continue
-                p = _os.path.join(dirpath, fn)
-                out[_os.path.relpath(p, root)] = _os.path.getsize(p)
-        return out
-
-    buckets = max(8, dim_rows // bucket_rows)
-    result: dict[str, dict[str, float]] = {}
-    for label, bkt in (("flat", None), ("bucketed", buckets)):
-        path = tempfile.mkdtemp(prefix="dim_amp_") + "/dim"
-        sink = upsert_parquet_sink(path, "product_id", buckets=bkt)
-        sink(dim_batch(spark.range(dim_rows)), 0)
-        before = files_of(path)
-        # fixed-size update batch: half updates, half inserts
-        batch = dim_batch(
-            spark.range(dim_rows - batch_rows // 2, dim_rows + batch_rows // 2)
-        )
-        t0 = time.time()
-        sink(batch, 1)
-        wall = time.time() - t0
-        after = files_of(path)
-        written = sum(
-            size for p, size in after.items() if before.get(p) != size
-        )
-        result[label] = {
-            "dim_rows": dim_rows,
-            "batch_rows": batch_rows,
-            "buckets": buckets if bkt else 1,
-            "table_bytes": sum(after.values()),
-            "batch_write_bytes": written,
-            "batch_write_mb": round(written / 1e6, 2),
-            "batch_wall_sec": round(wall, 2),
-        }
-    return result
-
-
-def measure_ivf_manifest_overhead(
-    spark,
-    vecs,
-    *,
-    n_cells: int = 32,
-    n_queries: int = 64,
-    nprobe: int = 4,
-    n_appends: int = 8,
-) -> dict[str, dict]:
-    """r11: what the rename-free manifest commit protocol costs at SERVE
-    time.  Same vectors, same quantizer, both layouts; identical probe
-    (``ann_ivf_index_topk``) timed median-of-3 at three lifecycle points:
-    freshly built, after ``n_appends`` incremental batches (the manifest
-    index holds one generation dir per touched cell per append — the
-    aging worst case), and after compaction.  The manifest's extra
-    serve-time work is one LIST + one KB-scale GET (resolution) plus a
-    multi-dir file listing; everything else is the same pruned scan."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        compact_ivf_index_manifest,
-        ivf_append_manifest,
-        read_ivf_centroids,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        compact_ivf_index,
-        ivf_append,
-        ivf_assign,
-        ivf_seed_centroids,
-        kmeans_refine,
-        read_ivf_index,
-    )
-
-    base = vecs.filter(F.col("vec_id") % (n_appends + 1) == 0)
-    cent = kmeans_refine(
-        base, ivf_seed_centroids(base, n_cells), iters=1
-    ).localCheckpoint(eager=True)
-    q = vecs.limit(n_queries).localCheckpoint(eager=True)
-
-    droot = tempfile.mkdtemp(prefix="ivfman_") + "/dir"
-    mroot = tempfile.mkdtemp(prefix="ivfman_") + "/man"
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        write_ivf_index,
-    )
-
-    write_ivf_index(ivf_assign(base, cent), droot, sort_by="vec_id")
-    write_ivf_index_manifest(base, mroot, centroids=cent, sort_by="vec_id")
-
-    def serve(layout: str) -> float:
-        walls = []
-        for _ in range(3):
-            t0 = time.time()
-            if layout == "dir":
-                idx, cc = read_ivf_index(spark, droot), cent
-            else:
-                idx = read_ivf_index_manifest(spark, mroot)
-                cc = read_ivf_centroids(spark, mroot)
-            ann_ivf_index_topk(q, idx, cc, k=3, nprobe=nprobe).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            walls.append(time.time() - t0)
-        return round(sorted(walls)[1], 2)
-
-    out: dict[str, dict] = {
-        "n_vecs": vecs.count(), "n_cells": n_cells,
-        "n_queries": n_queries, "nprobe": nprobe, "n_appends": n_appends,
-    }
-    out["fresh"] = {"dir_sec": serve("dir"), "manifest_sec": serve("man")}
-    for b in range(1, n_appends + 1):
-        batch = vecs.filter(F.col("vec_id") % (n_appends + 1) == b)
-        ivf_append(batch, cent, droot)
-        ivf_append_manifest(batch, mroot, batch_id=b)
-    out["aged"] = {
-        "dir_sec": serve("dir"), "manifest_sec": serve("man"),
-        "dir_files": len(read_ivf_index(spark, droot).inputFiles()),
-        "manifest_files": len(
-            read_ivf_index_manifest(spark, mroot).inputFiles()
-        ),
-    }
-    compact_ivf_index(spark, droot)
-    compact_ivf_index_manifest(spark, mroot)
-    out["compacted"] = {
-        "dir_sec": serve("dir"), "manifest_sec": serve("man"),
-        "dir_files": len(read_ivf_index(spark, droot).inputFiles()),
-        "manifest_files": len(
-            read_ivf_index_manifest(spark, mroot).inputFiles()
-        ),
-    }
-    return out
 
 
 def measure_fact_layout(
@@ -2677,41 +2528,35 @@ def measure_star_pipeline(
     *,
     mult: int = 20,
     n_batches: int = 20,
-    dim_buckets: int = 64,
     dim_mult: int = 1,
 ) -> dict[str, dict]:
     """r11 (VERDICT r10 "Next" #5): the COMPOSED star pipeline — stream →
     hyperjoin enrichment → quarantine split → dim upsert + fact append,
     the exact ``run_pipeline_streaming`` dataflow driven through a real
     ``writeStream``/``foreachBatch`` — at ``mult``× the sf transaction
-    volume, recording per-batch wall and WRITE BYTES as the stream ages,
-    flat vs bucketed dim layout (``dim_buckets``).
+    volume, recording per-batch wall and WRITE BYTES as the stream ages.
 
-    Two stream shapes, because batch key coverage decides the bucketed
-    layout's win (the honest boundary from the isolated ``dim_write_amp``
-    probe: ≥P distinct keys per batch = full rewrite either way):
+    Two stream shapes, because batch key coverage decides how much of
+    the dim a batch touches:
 
     * ``dense``  — batches are random row slices, so every batch touches
-      ~every product: bucketed ≈ flat is the EXPECTED outcome, and any
-      bucketed overhead shows here;
+      ~every product;
     * ``sparse`` — batches are product-id range slices (category-sharded
-      ingest), so each batch touches ~1/n_batches of the key space: the
-      dim-write regime the bucketed layout exists for, now measured
-      inside the full composition instead of the isolated sink.
+      ingest), so each batch touches ~1/n_batches of the key space.
 
-    ``dim_mult > 1`` moves the composition into the LARGE-dim regime the
-    isolated ``dim_write_amp`` probe measured: the dim is pre-seeded
-    (bulk initial load, the engine's S5 shape) with the master
-    replicated ``dim_mult``× under shifted product ids, so the stream's
-    per-batch upserts hit a dim ``dim_mult``× larger than the touched
-    key set — flat rewrites the whole dim every batch, bucketed only the
-    touched buckets.  ``dim_mult = 1`` (the sf-master dim, ~20k rows at
-    sf0.1) measures the SMALL-dim side of the crossover, where flat's
-    single-file rewrite beats the bucketed layout's per-bucket footer
-    overhead — both honest data points.
+    ``dim_mult > 1`` moves the composition into the LARGE-dim regime:
+    the dim is pre-seeded (bulk initial load, the engine's S5 shape)
+    with the master replicated ``dim_mult``× under shifted product ids,
+    so the stream's per-batch upserts hit a dim ``dim_mult``× larger
+    than the touched key set — the flat sink rewrites the whole dim
+    every batch (``all_manifest_pipeline`` measures the write-bounded
+    manifest dim).
     """
     import os as _os
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
+        upsert_parquet_sink,
+    )
     from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
         master_data,
         transactions,
@@ -2780,88 +2625,73 @@ def measure_star_pipeline(
         "txn_rows": big.count(),
         "dim_rows": n_products * dim_mult,
         "dim_mult": dim_mult,
-        "dim_buckets": dim_buckets,
     }
     for shape, stream_path in streams.items():
-        for label, bkt in (("flat", None), ("bucketed", dim_buckets)):
-            out_dir = tempfile.mkdtemp(prefix="star_pipe_") + "/dw"
-            if dim_seed is not None:
-                from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
-                    upsert_parquet_sink,
-                )
+        out_dir = tempfile.mkdtemp(prefix="star_pipe_") + "/dw"
+        if dim_seed is not None:
+            upsert_parquet_sink(f"{out_dir}/dim_product", "product_id")(dim_seed, 0)
+        per_batch = []
+        inner = make_quarantine_sink(
+            make_star_sink(out_dir),
+            out_dir,
+            watermark_col="order_date",
+            lateness="3650 days",
+        )
+        # baseline AFTER any dim pre-seed, so batch 0's write bytes
+        # measure the batch, not the bulk load
+        state = {"before": files_of(out_dir)}
 
-                upsert_parquet_sink(
-                    f"{out_dir}/dim_product", "product_id", buckets=bkt
-                )(dim_seed, 0)
-            per_batch = []
-            inner = make_quarantine_sink(
-                make_star_sink(out_dir, dim_buckets=bkt),
-                out_dir,
-                watermark_col="order_date",
-                lateness="3650 days",
+        def sink(batch_df, batch_id, _inner=inner, _s=state, _pb=per_batch, _out=out_dir):
+            t0 = time.time()
+            _inner(batch_df, batch_id)
+            wall = time.time() - t0
+            after = files_of(_out)
+            written = sum(
+                sz for p, sz in after.items()
+                if _s["before"].get(p) != sz
             )
-            # baseline AFTER any dim pre-seed, so batch 0's write bytes
-            # measure the batch, not the bulk load
-            state = {"before": files_of(out_dir)}
+            dim_written = sum(
+                sz for p, sz in after.items()
+                if p.startswith("dim_product")
+                and _s["before"].get(p) != sz
+            )
+            _s["before"] = after
+            _pb.append(
+                {
+                    "batch": batch_id,
+                    "wall_sec": round(wall, 2),
+                    "write_mb": round(written / 1e6, 2),
+                    "dim_write_mb": round(dim_written / 1e6, 2),
+                }
+            )
 
-            def sink(batch_df, batch_id, _inner=inner, _s=state, _pb=per_batch, _out=out_dir):
-                t0 = time.time()
-                _inner(batch_df, batch_id)
-                wall = time.time() - t0
-                after = files_of(_out)
-                written = sum(
-                    sz for p, sz in after.items()
-                    if _s["before"].get(p) != sz
-                )
-                dim_written = sum(
-                    sz for p, sz in after.items()
-                    if p.startswith("dim_product")
-                    and _s["before"].get(p) != sz
-                )
-                _s["before"] = after
-                _pb.append(
-                    {
-                        "batch": batch_id,
-                        "wall_sec": round(wall, 2),
-                        "write_mb": round(written / 1e6, 2),
-                        "dim_write_mb": round(dim_written / 1e6, 2),
-                    }
-                )
-
-            enriched = stream_static_hyperjoin(
-                read_parquet_stream(spark, stream_path, max_files_per_trigger=1),
-                master,
-            )
-            q = (
-                enriched.writeStream.outputMode("append")
-                .option("checkpointLocation", out_dir + "/_ckpt")
-                .foreachBatch(sink)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            walls = [b["wall_sec"] for b in per_batch]
-            dim_mb = [b["dim_write_mb"] for b in per_batch]
-            out[f"{shape}_{label}"] = {
-                "batches": len(per_batch),
-                "total_wall_sec": round(sum(walls), 2),
-                "first3_wall": walls[:3],
-                "last3_wall": walls[-3:],
-                "dim_write_mb_first3": dim_mb[:3],
-                "dim_write_mb_last3": dim_mb[-3:],
-                "dim_write_mb_total": round(sum(dim_mb), 2),
-                "fact_rows": spark.read.parquet(
-                    f"{out_dir}/fact_enriched"
-                ).count(),
-                "per_batch": per_batch,
-            }
-    for shape in ("dense", "sparse"):
-        f, b = out[f"{shape}_flat"], out[f"{shape}_bucketed"]
-        if b["dim_write_mb_total"]:
-            out[f"{shape}_dim_write_ratio_flat_over_bucketed"] = round(
-                f["dim_write_mb_total"] / b["dim_write_mb_total"], 2
-            )
-        assert f["fact_rows"] == b["fact_rows"], "layouts must agree on facts"
+        enriched = stream_static_hyperjoin(
+            read_parquet_stream(spark, stream_path, max_files_per_trigger=1),
+            master,
+        )
+        q = (
+            enriched.writeStream.outputMode("append")
+            .option("checkpointLocation", out_dir + "/_ckpt")
+            .foreachBatch(sink)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        walls = [b["wall_sec"] for b in per_batch]
+        dim_mb = [b["dim_write_mb"] for b in per_batch]
+        out[f"{shape}_flat"] = {
+            "batches": len(per_batch),
+            "total_wall_sec": round(sum(walls), 2),
+            "first3_wall": walls[:3],
+            "last3_wall": walls[-3:],
+            "dim_write_mb_first3": dim_mb[:3],
+            "dim_write_mb_last3": dim_mb[-3:],
+            "dim_write_mb_total": round(sum(dim_mb), 2),
+            "fact_rows": spark.read.parquet(
+                f"{out_dir}/fact_enriched"
+            ).count(),
+            "per_batch": per_batch,
+        }
     return out
 
 
@@ -3347,7 +3177,6 @@ def main() -> None:
             near_dup_pairs,
             read_embedding_index,
             sign_bucket,
-            upsert_embedding_index_batch,
         )
 
         spark = get_spark(
@@ -3615,22 +3444,6 @@ def main() -> None:
             n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 400)),
         )}, indent=2))
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "dim_write_amp":
-        spark = get_spark(
-            "scale-probe-dimamp",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        batch_rows = int(os.environ.get("SCALE_PROBE_BATCH_ROWS", 8))
-        out = {}
-        for dim_rows in (100_000, 400_000, 1_600_000):
-            out[f"dim_{dim_rows}"] = measure_dim_write_amp(
-                spark, dim_rows, batch_rows,
-                bucket_rows=int(os.environ.get("SCALE_PROBE_BUCKET_ROWS", 6_250)),
-            )
-        print(json.dumps({"dim_write_amp": out}, indent=2))
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "fact_layout":
         spark = get_spark(
             "scale-probe-factlayout",
@@ -3694,29 +3507,6 @@ def main() -> None:
             split_mb=float(os.environ.get("SCALE_PROBE_SPLIT_MB", 2)),
         )}, indent=2))
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "ivf_manifest":
-        spark = get_spark(
-            "scale-probe-ivfman",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        vec_path = tempfile.mkdtemp(prefix="scale_probe_") + "/vectors"
-        synth_clustered_vectors(
-            spark, int(os.environ.get("SCALE_PROBE_VECS", 400_000)), 32,
-            vec_path,
-            n_blobs=int(os.environ.get("SCALE_PROBE_BLOBS", 32)),
-            spread=float(os.environ.get("SCALE_PROBE_SPREAD", 0.15)),
-        )
-        print(json.dumps({"ivf_manifest": measure_ivf_manifest_overhead(
-            spark,
-            spark.read.parquet(vec_path).localCheckpoint(eager=True),
-            n_cells=int(os.environ.get("SCALE_PROBE_CELLS", 32)),
-            n_queries=int(os.environ.get("SCALE_PROBE_QUERIES", 64)),
-            nprobe=int(os.environ.get("SCALE_PROBE_NPROBE", 4)),
-            n_appends=int(os.environ.get("SCALE_PROBE_APPENDS", 8)),
-        )}, indent=2))
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "star_pipeline":
         spark = get_spark(
             "scale-probe-star",
@@ -3729,7 +3519,6 @@ def main() -> None:
             os.environ.get("SCALE_PROBE_SF_DIR", "/root/testdata/sf0.1"),
             mult=int(os.environ.get("SCALE_PROBE_MULT", 20)),
             n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 20)),
-            dim_buckets=int(os.environ.get("SCALE_PROBE_DIM_BUCKETS", 64)),
             dim_mult=int(os.environ.get("SCALE_PROBE_DIM_MULT", 1)),
         )}, indent=2))
         return
