@@ -20,9 +20,12 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .operators.constraints import (
     fact_counts,
@@ -53,6 +56,20 @@ FACT_NOT_NULL = [
     "order_id", "line_number", "customer_id", "product_id",
     "store_id", "supplier_id", "order_date", "quantity", "sales",
 ]
+
+
+def _run_together(spark: SparkSession, actions: list) -> list:
+    """Run independent Spark actions at once, one thread per action, and
+    return their results in order.
+
+    Each thread inherits the caller's local properties (job group,
+    description, scheduler pool), so the jobs it launches are attributed
+    and cancellable like the caller's own.  Every action runs to its end
+    before the first failure, in submission order, is re-raised, so no
+    job is still running when this returns or raises."""
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(a)) for a in actions]
+    return [f.result() for f in futures]
 
 
 def ingest(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -109,37 +126,52 @@ def write_star(
     """Persist a star schema, enforcing the createDW.sql constraints on
     load the way the reference's MySQL did.
 
-    Validation order mirrors the reference: every dim's PK is checked
-    before any dim is written (createDW.sql:8,26,38,49,67 — a dup/NULL
-    key aborts the load), all five in one aggregate action whose per-dim
-    row totals are also the returned dim counts.  Then the fact is
-    written to a STAGING path, and its FK-per-dim and NOT NULL contracts
-    (createDW.sql:83-98) are checked against the data as written, all in
-    one parquet scan that also returns the fact row count (no recompute
-    of the assembly plan).  Only a clean fact is promoted to the
-    published path; a violating batch raises with the staging dir left
-    for inspection and the published fact unchanged (note: the dims HAVE
-    been refreshed by that point — a rejected fact batch leaves new dims
-    paired with the previous fact until the batch is fixed and re-run;
-    SCD1 dims are idempotent so the re-run converges).  Violation samples
-    are only fetched for a failed check.  Promotion is a near-atomic
-    two-rename swap (live → ``.old``, staging → live, delete ``.old``) so
-    the published path is never absent; on HDFS the same gate promotes
-    via FileSystem.rename, and on object stores it composes with a
-    table-format commit instead (sources/table_formats.py) — the gate
-    logic (validate the WRITTEN data, publish only clean) is identical.
+    The order is fixed: PK gate → writes → FK/NOT NULL gate → promote.
+
+    1. Every dim's PK is checked before anything is written
+       (createDW.sql:8,26,38,49,67 — a dup/NULL key aborts the load), all
+       five in one aggregate action whose per-dim row totals are also the
+       returned dim counts.
+    2. The five dim writes and the fact's STAGING write are independent,
+       so they are submitted together (one thread each, the caller's job
+       group inherited) and all six are awaited.  The staged fact goes
+       through a ``REBALANCE`` on ``order_month``: the write runs in
+       several tasks even from a single input split, lands one file per
+       month at small size, and AQE splits an oversized month to the
+       advisory partition size at scale.  A failed write lets the other
+       writes finish and then raises; the published fact is unchanged,
+       but ``fact_sales.staging`` may be left in place and the dims that
+       did write are refreshed.
+    3. The FK-per-dim and NOT NULL contracts (createDW.sql:83-98) are
+       checked against the data as written, all in one parquet scan that
+       also returns the fact row count (no recompute of the assembly
+       plan).  A violating batch raises with the staging dir left for
+       inspection and the published fact unchanged (the dims HAVE been
+       refreshed by then — a rejected fact batch leaves new dims paired
+       with the previous fact until the batch is fixed and re-run; SCD1
+       dims are idempotent so the re-run converges).  Violation samples
+       are only fetched for a failed check.
+    4. Only a clean fact is promoted to the published path, by a
+       near-atomic two-rename swap (live → ``.old``, staging → live,
+       delete ``.old``) so the published path is never absent; on HDFS
+       the same gate promotes via FileSystem.rename, and on object
+       stores it composes with a table-format commit instead
+       (sources/table_formats.py) — the gate logic (validate the WRITTEN
+       data, publish only clean) is identical.
     """
     keys = {name: [STAR_DIM_KEYS[name][0]] for name in dims}
     counts, bad = pk_counts({name: (df, keys[name]) for name, df in dims.items()})
     raise_violations(bad, lambda: {
         f"pk_{name}": pk_violations(df, keys[name]) for name, df in dims.items()
     })
-    for name, df in dims.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-
     target = f"{out_dir}/fact_sales"
     staging = f"{out_dir}/fact_sales.staging"
-    fact.write.mode("overwrite").partitionBy("order_month").parquet(staging)
+    staged = fact.hint("rebalance", "order_month").write.mode("overwrite")
+    _run_together(spark, [
+        *(partial(df.write.mode("overwrite").parquet, f"{out_dir}/{name}")
+          for name, df in dims.items()),
+        partial(staged.partitionBy("order_month").parquet, staging),
+    ])
     written = spark.read.parquet(staging)
     star = {
         name: (spark.read.parquet(f"{out_dir}/{name}"), pk, fk)
@@ -184,6 +216,15 @@ def load_star(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
 def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """≈ StreamGeneratorThread.main(): ingest → hyperjoin → star load.
 
+    The enriched-stream count and the star load share no data, so they
+    run at the same time (the reference likewise ran its producers and
+    its join/load consumer concurrently); inside the load, the dim
+    writes and the fact staging write overlap too, while the load keeps
+    its order PK gate → writes → FK/NOT NULL gate → promote (see
+    :func:`write_star`).  Every job either side launches carries the
+    caller's job group, and both sides finish before this returns or
+    raises.
+
     Returns per-table row counts (the reference's success signal was
     console prints + rowsAffected checks, StreamGeneratorThread.java:
     172-176 — counts are the relational equivalent).
@@ -192,8 +233,10 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
     enriched = run_hyperjoin(txn, master)
     # the flagship pipeline publishes only an integrity-checked star — the
     # reference's MySQL constraints were enforced on load (createDW.sql)
-    counts = load_star(spark, sf_dir, out_dir)
-    counts["enriched_stream"] = enriched.count()
+    counts, n_enriched = _run_together(
+        spark, [partial(load_star, spark, sf_dir, out_dir), enriched.count]
+    )
+    counts["enriched_stream"] = n_enriched
     return counts
 
 

@@ -2117,7 +2117,16 @@ def q_summary_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregated once instead of twice (r14 shape: shared fact
     checkpoint + two full aggregations over it).  The full-rebuild
     Spark plan stays exercised and plan-locked via the standalone
-    ``q_summary_rollup`` builder (tests/test_plans.py)."""
+    ``q_summary_rollup`` builder (tests/test_plans.py).
+
+    The envelope, in plain words: the ``rebuild`` tag carries the merged
+    summary, not a second aggregation.  It equals a straight rebuild bit
+    for bit only while every quantity and sales sum stays below about
+    4.5e13 in absolute value, because up to there a double holds each
+    2-decimal sum exactly, so folding partials through DECIMAL loses
+    nothing.  Beyond it the two may differ in the last bit.  The fixture
+    sums sit many orders of magnitude below the bound, and the DuckDB
+    oracle, not this tag, is the independent rebuild."""
     from ..etl import build_summary, merge_summaries
 
     t = {n: load_table(spark, sf_dir, n) for n in

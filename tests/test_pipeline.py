@@ -253,6 +253,88 @@ def test_fact_gate_counts_equal_violation_relations(spark, sf_dir, tmp_path):
     assert "fk_dim_supplier" not in msg
 
 
+def _job_ids_for_group(sc, group):
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_pipeline_jobs_inherit_the_callers_job_group(spark, sf_dir, tmp_path):
+    """run_pipeline overlaps independent actions on worker threads; each
+    worker inherits the caller's local properties, so every job it
+    launches, from any thread, lands in the caller's job group, and all
+    of them have finished when it returns."""
+    sc = spark.sparkContext
+    group = "run-pipeline-inherits-group"
+
+    def sentinel(name):
+        sc.setJobGroup(name, name)
+        spark.range(1).count()
+        return _job_ids_for_group(sc, name)
+
+    try:
+        first = max(sentinel("run-pipeline-before"))
+        sc.setJobGroup(group, "run_pipeline under a caller-set job group")
+        run_pipeline(spark, sf_dir, str(tmp_path / "dw"))
+        ours = _job_ids_for_group(sc, group)
+        last = min(sentinel("run-pipeline-after"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job ids are sequential: every job between the two sentinels was
+    # launched by the call, and every one of them carries its group
+    assert ours and ours == set(range(first + 1, last))
+    assert not sc.statusTracker().getActiveJobsIds()
+
+
+def test_write_star_failed_dim_write_waits_for_the_others(spark, sf_dir, tmp_path):
+    """A dim write that fails while the other writes are in flight makes
+    write_star raise only after every write has finished: no Spark job is
+    left running and no fact is published."""
+    import os
+
+    import pytest
+
+    from datawarehouse_etl_using_hyperjoin_spark.etl import write_star
+
+    dims, fact = _star_inputs(spark, sf_dir)
+    # the PK gate reads only store_id, so the poisoned column fails the
+    # dim's write and nothing before it
+    store = dims["dim_store"]
+    bad_dims = dict(dims)
+    bad_dims["dim_store"] = store.withColumn("store_name", F.when(
+        F.col("store_id").isNotNull(), F.raise_error(F.lit("dim_store write fails"))
+    ))
+    out = str(tmp_path / "dw")
+    with pytest.raises(Exception, match="dim_store write fails"):
+        write_star(spark, bad_dims, fact, out)
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+    assert not os.path.isdir(f"{out}/fact_sales")
+
+
+def test_write_star_lands_one_file_per_fact_month(spark, sf_dir, tmp_path):
+    """The staged fact is rebalanced on order_month before the
+    partitioned write: a fact spread over 8 input partitions still lands
+    exactly one parquet file per month, with rows and sales unchanged."""
+    import glob
+
+    from datawarehouse_etl_using_hyperjoin_spark.etl import write_star
+
+    dims, fact = _star_inputs(spark, sf_dir)
+    out = str(tmp_path / "dw")
+    write_star(spark, dims, fact.repartition(8), out)
+    months = glob.glob(f"{out}/fact_sales/order_month=*")
+    assert len(months) > 12
+    for month in months:
+        assert len(glob.glob(f"{month}/*.parquet")) == 1, month
+
+    def totals(df):
+        return df.agg(
+            F.count(F.lit(1)), F.sum(F.col("sales").cast("decimal(18,2)"))
+        ).first()
+
+    assert totals(spark.read.parquet(f"{out}/fact_sales")) == totals(fact)
+
+
 def test_refresh_fact_month_compacts_refreshed_partition(spark, sf_dir, tmp_path):
     """Per-month refresh is where small files accumulate (one file per
     shuffle partition per rewrite), so refresh_fact_month compacts the
