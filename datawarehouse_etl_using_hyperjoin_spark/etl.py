@@ -155,8 +155,8 @@ def write_star(
        near-atomic two-rename swap (live → ``.old``, staging → live,
        delete ``.old``) so the published path is never absent; on HDFS
        the same gate promotes via FileSystem.rename, and on object
-       stores it composes with a table-format commit instead
-       (sources/table_formats.py) — the gate logic (validate the WRITTEN
+       stores it composes with a manifest commit instead
+       (sources/manifest_table.py) — the gate logic (validate the WRITTEN
        data, publish only clean) is identical.
     """
     keys = {name: [STAR_DIM_KEYS[name][0]] for name in dims}
@@ -240,108 +240,6 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
     return counts
 
 
-def refresh_fact_month(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    month: str,
-    *,
-    compact: bool = True,
-    target_file_mb: int = 128,
-    cluster_by: list[str] | None = None,
-    refresh_summary: bool = False,
-) -> int:
-    """Incremental fact maintenance: rebuild ONE order-month partition.
-
-    The month-partitioned layout's payoff (SCALE.md): a late-arriving
-    correction or backfill recomputes and atomically replaces only the
-    affected partition — ``partitionOverwriteMode=dynamic`` makes the
-    overwrite touch exactly the partitions present in the written frame,
-    leaving every other month's files untouched.  At 100 TB this is the
-    difference between rewriting ~0.1% and rewriting everything.
-
-    Per-month refresh is also exactly where small files accumulate (each
-    rewrite lands one file per shuffle partition regardless of bytes), so
-    by default the refreshed month's directory is immediately compacted
-    to ~``target_file_mb`` files (``sources.files.compact_table`` on the
-    leaf partition dir — its staging/old side dirs are hidden names, so
-    concurrent scans of the table root never see them).  ``cluster_by``
-    additionally range-clusters the rewrite (e.g. ``["order_id"]``) so
-    min/max footer stats stay selective on the cluster key.
-
-    ``refresh_summary`` chains :func:`refresh_summary_month` after the
-    rewrite (+compaction) so the materialized rollup never serves stale
-    months — pass it whenever the warehouse publishes ``summary_sales``.
-
-    Returns the row count of the refreshed partition.
-    """
-    t = {n: load_table(spark, sf_dir, n) for n in
-         ("lineitem", "orders", "customer", "part", "supplier", "nation")}
-    fact = assemble_fact(
-        t["lineitem"], t["orders"], t["customer"], t["part"], t["supplier"], t["nation"]
-    ).withColumn("order_month", F.date_format("order_date", "yyyy-MM"))
-    one_month = fact.filter(F.col("order_month") == month)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        one_month.write.mode("overwrite").partitionBy("order_month").parquet(
-            f"{out_dir}/fact_sales"
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if compact:
-        from .sources.files import compact_table
-
-        compact_table(
-            spark,
-            f"{out_dir}/fact_sales/order_month={month}",
-            target_file_mb=target_file_mb,
-            sort_by=cluster_by,
-        )
-    if refresh_summary:
-        refresh_summary_month(spark, out_dir, month)
-    return one_month.count()
-
-
-def expire_fact_months(
-    spark: SparkSession,
-    out_dir: str,
-    keep_from: str,
-    *,
-    tables: tuple[str, ...] = ("fact_sales", "summary_sales"),
-) -> dict[str, list[str]]:
-    """Retention pass: drop every ``order_month`` partition strictly older
-    than ``keep_from`` (inclusive lower bound, 'yyyy-MM') from the fact
-    and, when present, the summary.
-
-    Month partitioning makes retention a pure METADATA operation — no
-    scan, no rewrite, no tombstones: expired months are directory
-    deletes, and every surviving file is untouched (readers see either
-    the old or the new listing, never partial months).  This is the
-    lifecycle complement of :func:`refresh_fact_month` — data enters and
-    leaves the warehouse one month-partition at a time.  The reference
-    kept all history forever (its MySQL DW had no retention story).
-
-    Lexicographic comparison IS chronological for zero-padded 'yyyy-MM'.
-    Returns {table: [expired months]} so callers can log/audit the drop.
-    """
-    import glob
-
-    expired: dict[str, list[str]] = {}
-    for table in tables:
-        root = f"{out_dir}/{table}"
-        if not os.path.isdir(root):
-            continue
-        dropped = []
-        for p in sorted(glob.glob(f"{root}/order_month=*")):
-            month = os.path.basename(p).split("=", 1)[1]
-            if month < keep_from:
-                shutil.rmtree(p)
-                dropped.append(month)
-        expired[table] = dropped
-    return expired
-
-
 # The materialized-summary grain: month × product × store.  Measures are
 # MERGEABLE ONLY (sums, counts, min/max) — a mean or percentile stored
 # here could not be maintained per-partition; derive ratios at query
@@ -358,9 +256,9 @@ def build_summary(fact: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFram
     re-INSERTs everything); here the summary composes with the
     month-partitioned fact: because every measure is mergeable and
     ``order_month`` is both a fact partition AND a summary grain key,
-    one fact partition maps to exactly one summary partition, so
-    :func:`refresh_summary_month` maintains the rollup incrementally —
-    never re-aggregating history.
+    one fact partition maps to exactly one summary partition, so the
+    rollup can be maintained incrementally (:func:`merge_summaries`,
+    :func:`refresh_summary_incremental`) — never re-aggregating history.
 
     ``extra_keys``: additional grouping columns (e.g. a batch/side tag,
     so several partial summaries come out of ONE fact pass and Spark's
@@ -407,9 +305,8 @@ def _fold_summaries(u: DataFrame) -> DataFrame:
 def merge_summaries(old: DataFrame, delta: DataFrame) -> DataFrame:
     """Merge two summary relations at the same grain
     (:func:`_fold_summaries` over their union) — the combine step of
-    incremental rollup maintenance when a delta does NOT align with a
-    fact partition (late rows, cross-month backfills; the aligned case
-    is :func:`refresh_summary_month`)."""
+    incremental rollup maintenance, including deltas that do NOT align
+    with a fact partition (late rows, cross-month backfills)."""
     return _fold_summaries(old.unionByName(delta))
 
 
@@ -497,102 +394,3 @@ def read_summary_incremental(
 
     return _fold_summaries(read_manifest_table(spark, summary_root))
 
-
-def write_summary(spark: SparkSession, out_dir: str) -> int:
-    """Full build of the summary table from the published fact, written
-    partitioned by ``order_month`` (same incremental unit as the fact).
-    Run once at bootstrap; afterwards :func:`refresh_summary_month` keeps
-    it current month by month."""
-    fact = spark.read.parquet(f"{out_dir}/fact_sales")
-    build_summary(fact).write.mode("overwrite").partitionBy("order_month").parquet(
-        f"{out_dir}/summary_sales"
-    )
-    return spark.read.parquet(f"{out_dir}/summary_sales").count()
-
-
-def refresh_summary_month(spark: SparkSession, out_dir: str, month: str) -> int:
-    """Incremental rollup maintenance: after a fact partition is refreshed
-    (:func:`refresh_fact_month`), re-aggregate ONLY that month.
-
-    The source scan is partition-pruned to the one refreshed month (a
-    literal filter on the fact's partition column), and the write
-    dynamically overwrites only that month's summary partition — cost is
-    O(one month), independent of table history.  Correct because the
-    grain includes the partition key and every measure is mergeable:
-    no summary row aggregates across months, so months refresh
-    independently."""
-    fact = spark.read.parquet(f"{out_dir}/fact_sales").filter(
-        F.col("order_month") == month
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        build_summary(fact).write.mode("overwrite").partitionBy(
-            "order_month"
-        ).parquet(f"{out_dir}/summary_sales")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return (
-        spark.read.parquet(f"{out_dir}/summary_sales")
-        .filter(F.col("order_month") == month)
-        .count()
-    )
-
-
-def dashboard_agg(
-    spark: SparkSession,
-    out_dir: str,
-    keys: list[str],
-    *,
-    months: list[str] | None = None,
-) -> DataFrame:
-    """Aggregate-aware dashboard query (the classic aggregate navigator):
-    mergeable measures at any grain COARSER than or equal to the summary
-    grain are answered from ``summary_sales`` — re-merged, never re-
-    derived (sum of sums, sum of counts, min of mins, max of maxes) — and
-    only a grain the summary cannot serve (a key outside
-    ``SUMMARY_KEYS``) falls back to scanning the fact.  At 100 TB that is
-    the difference between reading a few thousand rollup rows and a full
-    fact scan for every dashboard refresh; correctness is guaranteed by
-    the summary's mergeable-only measure contract (see
-    :func:`build_summary`).
-
-    ``months`` prunes to the given ``order_month`` partitions on either
-    path (partition filter → only those leaf dirs are read).  Money/qty
-    re-merges go through exact DECIMAL (the stored doubles are exact
-    2-dp values, so the cast is lossless) — the re-merged total is
-    bit-identical to a direct fact aggregation regardless of
-    partitioning.  Output: keys + n_lines, sum_qty, sum_sale, min_sale,
-    max_sale, avg_sale.
-    """
-    from_summary = set(keys) <= set(SUMMARY_KEYS)
-    src = spark.read.parquet(
-        f"{out_dir}/{'summary_sales' if from_summary else 'fact_sales'}"
-    )
-    if months is not None:
-        src = src.filter(F.col("order_month").isin(*months))
-    if from_summary:
-        agg = src.groupBy(*keys).agg(
-            F.sum("n_lines").alias("n_lines"),
-            F.sum(F.col("sum_qty").cast("decimal(28,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("sum_sale").cast("decimal(28,2)"))
-            .cast("double")
-            .alias("sum_sale"),
-            F.min("min_sale").alias("min_sale"),
-            F.max("max_sale").alias("max_sale"),
-        )
-    else:
-        agg = src.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("sales").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_sale"),
-            F.min("sales").alias("min_sale"),
-            F.max("sales").alias("max_sale"),
-        )
-    return agg.withColumn("avg_sale", F.col("sum_sale") / F.col("n_lines"))

@@ -367,8 +367,8 @@ def contamination_check(
     from .dedup import ensure_compute_parallelism, with_shingle_array
 
     # one corpus scan: the distinct-shingle array is built once (staged
-    # token projection — the inline shingle_array form re-ran the regex
-    # split per shingle inside the interpreted lambda), its size rides
+    # token projection — an inline split would re-run the regex per
+    # shingle inside the interpreted lambda), its size rides
     # along through the explode, and compute parallelism is decoupled
     # from scan splits like every other shingle-hashing stage.
     # Measured 5.3 s → ~1.5 s at sf0.1.

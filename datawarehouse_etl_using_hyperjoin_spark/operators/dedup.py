@@ -58,37 +58,18 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame
     )
 
 
-def shingle_array(text_col: str, k: int = 3):
-    """Word k-gram shingles of a text column, as an array expression (no
-    explode — stays one Tungsten value per row).
-
-    NOTE: the tokenizing ``split`` sits INSIDE the transform lambda, and
-    higher-order functions are interpreted (no codegen, no subexpression
-    elimination), so the regex split re-runs once per shingle — fine for
-    one-off use, ~3× the whole stage on a hot path.  Hot paths should use
-    :func:`with_shingle_array`, which stages the token array as a named
-    projection first."""
-    w = F.split(F.trim(F.col(text_col)), r"\s+")
-    return F.when(
-        F.size(w) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(w, i, k)),
-        ),
-    ).otherwise(F.array(F.trim(F.col(text_col))))
-
-
 def with_shingle_array(
     df: DataFrame, text_col: str, k: int = 3, out: str = "shingles"
 ) -> DataFrame:
-    """``df`` plus a word-k-gram shingle array column ``out`` — same values
-    as :func:`shingle_array`, but the token array is projected ONCE as a
-    named column first.  Because the named array is referenced several
-    times (two sizes + the slice in the lambda), CollapseProject keeps it
-    in its own stage instead of re-inlining the regex split into the
-    interpreted per-element lambda — measured 3.6 s → 1.1 s for the 8-gram
-    arrays over the sf0.1 corpus (same CollapseProject lesson as the
-    minhash ``__h32`` staging below and the r3 simhash rewrite)."""
+    """``df`` plus a word-k-gram shingle array column ``out`` (texts shorter
+    than ``k`` words shingle to themselves).  The token array is projected
+    ONCE as a named column first.  Because the named array is referenced
+    several times (two sizes + the slice in the lambda), CollapseProject
+    keeps it in its own stage instead of re-inlining the regex split into
+    the interpreted per-element lambda, where higher-order functions run
+    without codegen — measured 3.6 s → 1.1 s for the 8-gram arrays over
+    the sf0.1 corpus (same CollapseProject lesson as the minhash
+    ``__h32`` staging below and the r3 simhash rewrite)."""
     toks = df.withColumn(
         "__shingle_toks", F.split(F.trim(F.col(text_col)), r"\s+")
     )

@@ -1,6 +1,6 @@
 """Mergeable sketches — incremental statistics at rest.
 
-``approx_count_distinct`` (used by ``profile_table``) answers one query
+``approx_count_distinct`` answers one query
 over one scan and throws its state away.  At 100 TB the useful form is
 the MERGEABLE sketch (Spark's Apache-DataSketches-backed HllSketch,
 ``hll_sketch_agg``): sketch each ingest batch / date partition ONCE

@@ -375,31 +375,6 @@ def c4_gates(
 
 
 # --------------------------------------------- n-gram language ID (trained)
-def char_ngrams(
-    text: Column, n: int = 3, max_chars: int | None = None
-) -> Column:
-    """Array of character ``n``-grams over whitespace-normalized
-    lowercase text (single spaces kept inside grams — they carry
-    word-boundary signal, per Cavnar & Trenkle 1994).  ``max_chars``
-    truncates first: language signal saturates within a few hundred
-    characters, and every downstream stage scales with gram count, so
-    classifying on a prefix is the standard cost control.
-    Shorter-than-n texts contribute themselves as one gram; empty →
-    empty array.  Pure column expression."""
-    src = F.substring(text, 1, max_chars) if max_chars else text
-    t = F.regexp_replace(F.lower(F.trim(src)), r"\s+", " ")
-    length = F.length(t)
-    win = F.transform(
-        F.sequence(F.lit(1), length - (n - 1)),
-        lambda i: F.substring(t, i, n),
-    )
-    return (
-        F.when(length >= n, win)
-        .when(length > 0, F.array(t))
-        .otherwise(F.array().cast("array<string>"))
-    )
-
-
 def exploded_ngrams(df, key_cols, text_col: str, n: int, max_chars):
     """(key..., gram) rows — the normalized text is staged as a NAMED
     column before the gram transform, because an inline expression
@@ -459,7 +434,7 @@ def char_ngram_profile(
     relation: the labeled corpus is touched once, the profile output is
     ``n_langs × top_k`` rows (KBs — broadcast it at serve time).
     Grams come from each doc's first ``max_chars`` characters (the same
-    truncation the serve side uses — see :func:`char_ngrams`)."""
+    truncation the serve side uses — see :func:`exploded_ngrams`)."""
     from pyspark.sql import Window
 
     if grams is None:

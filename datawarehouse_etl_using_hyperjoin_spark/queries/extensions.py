@@ -78,8 +78,8 @@ GROUP BY 1, 2, 3"""
 def q_summary_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized rollup at summary grain (month × product × store),
     aggregated straight off the assembled fact — the dashboard relation
-    `etl.write_summary` persists partitioned by month and
-    `refresh_summary_month` maintains incrementally.  Measures are
+    `etl.build_summary` defines and `etl.merge_summaries` maintains
+    incrementally.  Measures are
     mergeable-only by design (etl.py SUMMARY_KEYS note); money sums go
     through exact decimal per-element casts so the result is
     partition-invariant."""
@@ -1476,14 +1476,13 @@ def q_summary_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     each side summarized, and the partials merged — the oracle is the
     FULL-rebuild rollup, so the value check proves merge(Σ(old),
     Σ(delta)) ≡ Σ(old ∪ delta) bit-exactly (counts/sums re-enter
-    decimal before combining; min/max are idempotent).  This is the
-    non-partition-aligned complement of refresh_summary_month: late or
+    decimal before combining; min/max are idempotent).  Late or
     backfilled rows merge at summary grain without re-aggregating
-    history.  Plan shape: the split rides as an extra grouping key over
+    history, whether or not they align with a fact month.  Plan shape: the split rides as an extra grouping key over
     one fact aggregation; Catalyst pushes the group-key filters below
     the agg, so this self-contained demo still assembles the fact once
     per side — in production the OLD side is the materialized summary
-    read back from disk (write_summary), so only the delta ever touches
+    read back from disk, so only the delta ever touches
     the fact, and the merge exchanges only SUMMARY-sized relations
     (that read-back path is what test_etl_operators pins)."""
     from ..etl import build_summary, merge_summaries

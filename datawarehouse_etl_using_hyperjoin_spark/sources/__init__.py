@@ -1,7 +1,6 @@
 from .fixtures import (  # noqa: F401
     FIXTURE_TABLES,
     load_table,
-    load_tables,
     master_data,
     transactions,
 )

@@ -1,46 +1,14 @@
-"""File-format sources/sinks beyond parquet: CSV, JSON, ORC.
+"""At-rest layout helpers for parquet tables: bucketed catalog tables,
+Z-order keys and small-file compaction.
 
-The reference reads only JDBC (StreamGeneratorThread.java:48-55); a
-warehouse ingests landed files too.  Conventions enforced here:
-
-- **explicit schemas always** — ``inferSchema`` triggers a full extra pass
-  over the data (a non-starter at 100 TB) and infers nondeterministically;
-- parquet/ORC keep predicate pushdown + column pruning; CSV/JSON are
-  row-formats read once and landed to parquet immediately (the
-  ``land_to_parquet`` helper) so every downstream scan is columnar.
+The reference reads only JDBC (StreamGeneratorThread.java:48-55); the
+warehouse's own tables are parquet, and these helpers decide how their
+files are laid out so scans prune and joins skip the exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType, *, header: bool = True, **options
-) -> DataFrame:
-    return spark.read.options(header=header, **options).schema(schema).csv(path)
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType, **options
-) -> DataFrame:
-    return spark.read.options(**options).schema(schema).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def land_to_parquet(
-    df: DataFrame, path: str, *, partition_by: list[str] | None = None, mode: str = "overwrite"
-) -> None:
-    """Land a row-format ingest as partitioned parquet (the columnar
-    at-rest form every downstream query scans)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def write_bucketed(

@@ -81,12 +81,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    if not names:
-        names = FIXTURE_TABLES
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's transaction stream as a relation (FIXTURES.md §C).
 

@@ -3,9 +3,9 @@
 Reference: per-thread ``DriverManager.getConnection`` + ``SELECT *`` scans
 (StreamGeneratorThread.java:48-55; MasterDataStreamGeneratorThread.java:
 30-40) and per-tuple autocommit UPDATE sinks (StreamGeneratorThread.java:
-151-354).  Spark-side equivalents below; no MySQL exists in the test
-container, so these are exercised only when a driver jar + URL are supplied
-(the fixture path uses parquet throughout).
+151-354).  Spark-side equivalents below; no roster query reads JDBC (the
+fixture path uses parquet throughout), so tests/test_jdbc.py runs them
+against Spark's embedded Derby driver.
 
 Scale posture: a naive JDBC read is a single-connection single-partition
 scan — the 100 TB version must set ``partitionColumn/lowerBound/upperBound/

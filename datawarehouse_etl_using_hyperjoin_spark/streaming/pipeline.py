@@ -116,63 +116,6 @@ def windowed_event_counts(
     )
 
 
-def session_windows(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """ST4: native session windows (gap-based), the streaming counterpart
-    of the batch q_event_windows session branch (lag+cumsum)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("win"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
-def running_counts_stateful(
-    events: DataFrame, key_col: str = "user_id"
-) -> DataFrame:
-    """ST2: custom stateful operator via ``applyInPandasWithState`` — a
-    per-key running event counter that survives across micro-batches.
-
-    This is the engine's version of the reference's explicit operator
-    state (the shared hash table mutated across loop iterations,
-    StreamGeneratorThread.java:24,72-74,126): keyed state owned by the
-    state store, updated batch-wise in Arrow-backed pandas, with timeout
-    hooks for eviction where the reference popped queue entries.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        batch_n = 0
-        for pdf in pdfs:
-            batch_n += len(pdf)
-        (total,) = state.get if state.exists else (0,)
-        total += batch_n
-        state.update((total,))
-        yield pd.DataFrame(
-            {"key": [key[0]], "n_events": [total], "batch_events": [batch_n]}
-        )
-
-    return events.withColumn("key", F.col(key_col)).groupBy("key").applyInPandasWithState(
-        update,
-        outputStructType="key long, n_events long, batch_events long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def stream_stream_join(
     left: DataFrame,
     right: DataFrame,
@@ -235,61 +178,6 @@ def orders_lineitem_stream_join(
         "o_custkey",
         "l_partkey",
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("net_price"),
-    )
-
-
-def running_totals_tws(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """ST2 (Spark 4 API): per-key running count+sum via
-    ``transformWithStateInPandas`` — the successor of
-    ``applyInPandasWithState`` (see ``running_counts_stateful``) with
-    named, individually-evictable state variables (ValueState/ListState/
-    MapState + timers) instead of one opaque state tuple.
-
-    Same reference semantics as the shared hash table mutated across loop
-    iterations (StreamGeneratorThread.java:24,72-74,126), but the state is
-    owned by the checkpointed state store, so it survives restarts — the
-    reference loses all buffers on crash.
-
-    Requires ``protobuf`` (the TWS driver worker speaks protobuf to the
-    JVM); absent from the test container, so the pytest is import-gated —
-    the operator itself is cluster-ready.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            if self._totals.exists():
-                prev_n, prev_total = self._totals.get()
-                n += int(prev_n)
-                total += float(prev_total)
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"key": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withColumn("key", F.col(key_col))
-        .groupBy("key")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType="key long, n_events long, total_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
     )
 
 

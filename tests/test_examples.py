@@ -29,7 +29,7 @@ def _run_example(module_name: str, monkeypatch, spark):
         spark.sparkContext.setLogLevel("WARN")
 
 
-# data_selection_demo and warehouse_lifecycle_demo call spark.stop() as
+# data_selection_demo and object_store_demo call spark.stop() as
 # standalone scripts should — running them in-process would kill the
 # shared test session, so they stay CLI-only
 @pytest.mark.parametrize(

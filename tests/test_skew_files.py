@@ -1,50 +1,8 @@
-"""Skew-mitigation helpers + file-format sources."""
+"""Skew mitigation at the engine level: AQE splits a hot join partition."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from datawarehouse_etl_using_hyperjoin_spark.operators.skew import (
-    replicate_broadcast_join,
-    salted_sum,
-)
-from datawarehouse_etl_using_hyperjoin_spark.sources.files import (
-    land_to_parquet,
-    read_csv,
-    read_json,
-)
-from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import load_table
-
-
-def test_salted_sum_matches_plain_aggregate(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    plain = {
-        (r.l_returnflag,): r.s
-        for r in li.groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("s"))
-        .collect()
-    }
-    salted = salted_sum(
-        li,
-        ["l_returnflag"],
-        {"s": F.sum(F.col("l_quantity").cast("decimal(18,2)"))},
-        n_salt=8,
-    )
-    got = {(r.l_returnflag,): r.s for r in salted.collect()}
-    assert got == plain
-
-
-def test_replicated_salt_join_matches_plain_join(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
-    part = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("l_partkey"), "p_name"
-    )
-    plain = li.join(part, on="l_partkey")
-    salted = replicate_broadcast_join(li, part, "l_partkey", n_salt=4)
-    assert salted.count() == plain.count()
-    a = plain.agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))).first()[0]
-    b = salted.agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))).first()[0]
-    assert a == b
 
 
 def test_aqe_splits_skewed_join_partition(spark):
@@ -95,29 +53,3 @@ def test_aqe_splits_skewed_join_partition(spark):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-
-
-def test_csv_json_round_trip(spark, sf_dir, tmp_path):
-    nation = load_table(spark, sf_dir, "nation")
-    csv_dir, json_dir, pq_dir = (str(tmp_path / d) for d in ("csv", "json", "pq"))
-    nation.write.mode("overwrite").option("header", True).csv(csv_dir)
-    nation.write.mode("overwrite").json(json_dir)
-
-    back_csv = read_csv(spark, csv_dir, nation.schema)
-    back_json = read_json(spark, json_dir, nation.schema)
-    want = sorted(map(tuple, nation.collect()))
-    assert sorted(map(tuple, back_csv.collect())) == want
-    assert sorted(map(tuple, back_json.collect())) == want
-
-    land_to_parquet(back_csv, pq_dir)
-    assert sorted(map(tuple, spark.read.parquet(pq_dir).collect())) == want
-
-
-def test_orc_round_trip(spark, sf_dir, tmp_path):
-    from datawarehouse_etl_using_hyperjoin_spark.sources.files import read_orc
-
-    nation = load_table(spark, sf_dir, "nation")
-    orc_dir = str(tmp_path / "orc")
-    nation.write.mode("overwrite").orc(orc_dir)
-    back = read_orc(spark, orc_dir)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))

@@ -23,7 +23,6 @@ from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
     consume_once,
     read_parquet_stream,
     run_to_memory,
-    session_windows,
     stream_static_hyperjoin,
     windowed_event_counts,
     with_event_time,
@@ -119,14 +118,6 @@ def test_sliding_window_counts_match_batch_expansion(spark, events_stream_dir):
     assert sum(got.values()) == 2 * ev.count()
 
 
-def test_session_windows_run(spark, events_stream_dir):
-    stream = read_parquet_stream(spark, events_stream_dir, max_files_per_trigger=1)
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    out = _drain(spark, session_windows(stream), name)
-    rows = out.collect()
-    assert rows and all(r.session_end > r.session_start for r in rows)
-
-
 def test_consume_once_drops_duplicate_keys(spark, events_stream_dir):
     # one batch per source leg (time-shuffled files + multi-batch would hit
     # legitimate watermark late-drops; see tumbling test note)
@@ -137,35 +128,6 @@ def test_consume_once_drops_duplicate_keys(spark, events_stream_dir):
     out = _drain(spark, consume_once(doubled, ["event_id"]), name)
     n_unique = spark.read.parquet(events_stream_dir).select("event_id").distinct().count()
     assert out.count() == n_unique
-
-
-def test_stateful_running_counts_accumulate_across_batches(
-    spark, events_stream_dir
-):
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        running_counts_stateful,
-    )
-
-    stream = read_parquet_stream(spark, events_stream_dir, max_files_per_trigger=1)
-    name = f"state_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(running_counts_stateful(stream), name, output_mode="update")
-    out = spark.sql(f"SELECT * FROM {name}")
-    # update mode emits one row per key per batch; the LAST emission per
-    # key carries the accumulated total == the batch count of that key
-    latest = out.groupBy("key").agg(F.max("n_events").alias("n"))
-    want = {
-        r.user_id: r.n
-        for r in spark.read.parquet(events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    got = {r.key: r.n for r in latest.collect()}
-    q.stop()
-    assert got == want
-    # and state genuinely spanned batches: some key must have emitted
-    # a partial (batch_events < n_events) along the way
-    assert out.filter(F.col("batch_events") < F.col("n_events")).count() > 0
 
 
 def test_watermark_bounds_state_and_advances(spark, sf_dir, tmp_path_factory):
@@ -357,43 +319,6 @@ def test_dedup_within_watermark_state_expires_plain_dedup_never(
     # plain dropDuplicates: key 1 suppressed forever
     assert out2.filter(F.col("event_id") == 1).count() == 1
     assert out2.count() == 3
-
-
-def test_transform_with_state_running_totals(spark, events_stream_dir):
-    # the TWS python driver worker needs protobuf, absent in this container
-    pytest.importorskip("google.protobuf")
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        running_totals_tws,
-    )
-
-    stream = read_parquet_stream(spark, events_stream_dir, max_files_per_trigger=1)
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(running_totals_tws(stream), name, output_mode="update")
-    out = spark.sql(f"SELECT * FROM {name}")
-    latest = out.groupBy("key").agg(F.max("n_events").alias("n"))
-    want = {
-        r.user_id: r.n
-        for r in spark.read.parquet(events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    got = {r.key: r.n for r in latest.collect()}
-    q.stop()
-    assert got == want
-
-
-def test_kafka_wrapper_fails_actionably_without_connector(spark):
-    from datawarehouse_etl_using_hyperjoin_spark.sources.kafka import (
-        KafkaConnectorMissing,
-        kafka_source_available,
-        read_kafka_stream,
-    )
-
-    if kafka_source_available(spark):
-        pytest.skip("kafka connector present; wrapper exercised on clusters")
-    with pytest.raises(KafkaConnectorMissing, match="--packages"):
-        read_kafka_stream(spark, "localhost:9092", "events")
 
 
 def test_foreachbatch_upsert_sink(spark, sf_dir, tmp_path_factory, txn_stream_dir):

@@ -453,80 +453,6 @@ def measure_corpus_quality(spark, docs) -> dict[str, dict[str, float]]:
     return out
 
 
-def measure_dashboard_routing(spark, n_rows: int) -> dict[str, dict[str, float]]:
-    """The aggregate navigator's value at probe scale: a month-grain
-    dashboard aggregation answered from the materialized rollup vs the
-    same answer re-derived from the full fact — the read-amplification
-    the summary exists to remove (etl.dashboard_agg)."""
-    import tempfile as _tf
-
-    from datawarehouse_etl_using_hyperjoin_spark.etl import dashboard_agg
-
-    out = _tf.mkdtemp(prefix="probe_dash_")
-    fact = spark.range(n_rows).select(
-        F.concat(
-            F.lit("19"),
-            (95 + F.pmod(F.xxhash64("id"), 5)).cast("string"),
-            F.lit("-0"),
-            (1 + F.pmod(F.xxhash64(F.col("id") + 3), 9)).cast("string"),
-        ).alias("order_month"),
-        # 45 months × 200 products × 25 stores ≈ 225 K summary rows from
-        # 10 M fact rows (~44× reduction — a modest real-world rollup;
-        # dashboards over wide date ranges see far more)
-        F.pmod(F.xxhash64(F.col("id") + 7), 200).alias("product_id"),
-        F.pmod(F.xxhash64(F.col("id") + 11), 25).alias("store_id"),
-        (1 + F.pmod(F.xxhash64(F.col("id") + 13), 50)).cast("double").alias("quantity"),
-        (F.pmod(F.xxhash64(F.col("id") + 17), 900000) / 100).alias("sales"),
-    )
-    fact.write.mode("overwrite").partitionBy("order_month").parquet(
-        f"{out}/fact_sales"
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.etl import build_summary
-
-    build_summary(spark.read.parquet(f"{out}/fact_sales")).write.mode(
-        "overwrite"
-    ).partitionBy("order_month").parquet(f"{out}/summary_sales")
-    routed = dashboard_agg(spark, out, ["order_month", "store_id"])
-    # the same answer re-derived from the fact (what every dashboard
-    # refresh would cost without the rollup)
-    direct = (
-        spark.read.parquet(f"{out}/fact_sales")
-        .groupBy("order_month", "store_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("sales").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_sale"),
-            F.min("sales").alias("min_sale"),
-            F.max("sales").alias("max_sale"),
-        )
-    )
-    def table_stats(name):
-        import glob as _g
-        import os as _os
-
-        files = _g.glob(f"{out}/{name}/**/*.parquet", recursive=True)
-        return {
-            "rows": spark.read.parquet(f"{out}/{name}").count(),
-            "at_rest_mb": round(
-                sum(_os.path.getsize(f) for f in files) / (1 << 20), 1
-            ),
-        }
-
-    return {
-        # at-rest size ratio = the read amplification the navigator
-        # removes; on local NVMe wall barely moves (scheduling-bound),
-        # at 100 TB the scan IS the cost
-        "summary_table": table_stats("summary_sales"),
-        "fact_table": table_stats("fact_sales"),
-        "from_summary": run_metered(spark, routed),
-        "from_fact": run_metered(spark, direct),
-    }
-
-
 def synth_vectors(spark, n: int, dim: int, path: str) -> None:
     """Deterministic synthetic embeddings: n vectors of dim floats in
     [-1, 1) from hash arithmetic (no RNG)."""
@@ -3714,7 +3640,6 @@ def main() -> None:
         ),
         "zorder_pruning": measure_zorder_pruning(spark, n_rows),
         "corpus_quality": measure_corpus_quality(spark, docs_big),
-        "dashboard_routing": measure_dashboard_routing(spark, n_rows),
     }
     vec_path = tempfile.mkdtemp(prefix="scale_probe_") + "/vectors"
     n_vecs = int(os.environ.get("SCALE_PROBE_VECS", 200_000))
