@@ -188,3 +188,23 @@ def list_visible(spark: SparkSession, path: str):
         for st in fs.listStatus(jpath)
         if not st.getPath().getName().startswith(("_", "."))
     ]
+
+
+def dir_listing(spark: SparkSession, path: str):
+    """``(name, length, mtime)`` of every entry directly under ``path``,
+    hidden ones included, sorted by name, from one ``listStatus``: ``()``
+    when the path does not exist, ``None`` when no JVM gateway is
+    available (Connect).  Two equal listings mean no writer replaced,
+    added or removed a file in between (Spark's writers never edit a
+    file in place), which is what a caller holding a copy of the table
+    in memory needs to know before it trusts that copy."""
+    handle = hadoop_fs(spark, path)
+    if handle is None:
+        return None
+    fs, jpath = handle
+    if not fs.exists(jpath):
+        return ()
+    return tuple(sorted(
+        (st.getPath().getName(), st.getLen(), st.getModificationTime())
+        for st in fs.listStatus(jpath)
+    ))

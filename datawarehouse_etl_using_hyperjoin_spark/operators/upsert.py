@@ -9,9 +9,10 @@ so the upsert is the canonical anti-join + union:
 
 At scale the anti-join shuffles both sides on the key once; for a dim that
 fits in memory the updates side broadcast makes it shuffle-free.  The
-``foreachBatch`` wrapper makes the same helper the streaming sink (ST6) —
-idempotent per batch because re-running the same update batch yields the
-same table state.
+``foreachBatch`` sink (ST6) computes the same result as one window over
+``batch ∪ existing``, merging into a copy of the dim it keeps in memory
+between batches — idempotent per batch because re-running the same
+update batch yields the same table state.
 """
 
 from __future__ import annotations
@@ -136,6 +137,40 @@ def scd2_upsert(
     )
 
 
+def _merge_latest(batch: DataFrame, existing: DataFrame | None, key: str) -> DataFrame:
+    """``scd1_upsert(existing, latest_per_key(batch, key, V))`` as ONE
+    window over ``batch ∪ existing``, so dedup and merge share one shuffle
+    on ``key``: per key, batch rows rank before existing rows, then by
+    ``V`` (every non-key column, ascending), and the first row wins.
+
+    This equals the anti-join form whenever ``existing`` holds each
+    non-NULL key at most once, as the dim :func:`upsert_parquet_sink`
+    maintains does.  NULL keys keep the anti-join's semantics: an
+    existing NULL-key row never matches an update, so every one of them
+    survives unchanged beside the batch's winning NULL-key row.  A
+    table whose columns differ from the batch's fails in the union, at
+    analysis, before any job runs."""
+    version = [F.col(c) for c in batch.columns if c != key]
+    both = batch.withColumn("__src", F.lit(0))
+    if existing is not None:
+        both = both.unionByName(existing.withColumn("__src", F.lit(1)))
+    w = Window.partitionBy(key).orderBy(F.col("__src"), *version)
+    return (
+        both.withColumn("__rn", F.row_number().over(w))
+        .filter((F.col("__rn") == 1) | (F.col(key).isNull() & (F.col("__src") == 1)))
+        .drop("__rn", "__src")
+    )
+
+
+def _release(dim: DataFrame) -> None:
+    """Free a ``localCheckpoint``'s blocks now instead of at JVM GC.  A
+    no-op under Spark Connect, which has no JVM handle and releases a
+    checkpoint when its frame is collected."""
+    jdf = getattr(dim, "_jdf", None)
+    if jdf is not None:
+        jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def upsert_parquet_sink(path: str, key: str):
     """``foreachBatch`` sink factory: maintain a keyed parquet dim table.
 
@@ -145,15 +180,32 @@ def upsert_parquet_sink(path: str, key: str):
              .foreachBatch(upsert_parquet_sink("/dw/dim_product", "product_id"))
              .start())
 
-    Reads the current table (if any), applies :func:`scd1_upsert`, and
-    overwrites — the batch job analogue of the reference's per-tuple JDBC
+    Each call merges the batch into the current table with
+    :func:`_merge_latest` (one window: dedup and SCD1 merge in one
+    shuffle; per key a batch row beats the table's row, and among a key's
+    batch rows the first by every non-key column ascending wins) and
+    overwrites the table with the result: the batch job analogue of the reference's per-tuple JDBC
     UPDATE loop, but atomic per micro-batch and idempotent on replay (ST6:
     the reference's autocommit per-tuple writes are at-least-once at best,
     StreamGeneratorThread.java:159).
 
-    The "no table yet" case is an explicit FS existence check
-    (:func:`~..fsutil.table_exists` — JVM ``FileSystem.exists`` with a
-    Spark Connect read-probe fallback), NOT a swallowed read exception
+    **Resident dim.**  The merged table is ``localCheckpoint``-ed before
+    the overwrite (the plan must not read the path it rewrites), and the
+    sink keeps that copy after a successful call, with the directory
+    listing (name, length, mtime of each entry; :func:`~..fsutil.dir_listing`)
+    taken right after its own write.  The next call merges into the
+    resident copy, with no read of the table, only when the listing is
+    unchanged.  It reads the table from disk instead on the first call
+    of a sink instance (so a restart or replay reads what is committed),
+    on the call after a failed call (the resident copy is dropped before
+    any work), when any other writer has touched the directory, and
+    under Spark Connect (no listing).  Once a new generation is written
+    the previous one's checkpoint blocks are released at once, so one
+    sink holds one generation.
+
+    The "no table yet" case on a disk read is an explicit FS existence
+    check (:func:`~..fsutil.table_exists` — JVM ``FileSystem.exists`` with
+    a Spark Connect read-probe fallback), NOT a swallowed read exception
     (r9, same fix as the quarantine sink's _hwm read): a transient read
     failure silently treated as "empty dim" would make the overwrite DROP
     every existing dim row not in the current batch — here it fails the
@@ -168,17 +220,32 @@ def upsert_parquet_sink(path: str, key: str):
     A table this sink did not write (e.g. one carrying an extra
     partition column) fails the batch in the union before any write.
     """
-    from ..fsutil import table_exists
+    from ..fsutil import dir_listing, table_exists
+
+    resident: list[tuple[DataFrame, tuple]] = []  # at most one (dim, listing)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = latest_per_key(
-            batch_df, key, [F.col(c) for c in batch_df.columns if c != key]
-        )
-        existing = spark.read.parquet(path) if table_exists(spark, path) else None
-        merged = batch if existing is None else scd1_upsert(existing, batch, key=key)
-        # Materialize before overwrite: the plan reads the path it rewrites.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+        held = resident.pop() if resident else None
+        dim = None
+        try:
+            if held is not None and dir_listing(spark, path) == held[1]:
+                existing = held[0]
+            elif table_exists(spark, path):
+                existing = spark.read.parquet(path)
+            else:
+                existing = None
+            dim = _merge_latest(batch_df, existing, key).localCheckpoint(eager=True)
+            dim.write.mode("overwrite").parquet(path)
+            listing = dir_listing(spark, path)
+            if listing is not None:
+                resident.append((dim, listing))
+                dim = None
+        finally:
+            if held is not None:
+                _release(held[0])
+            if dim is not None:
+                _release(dim)
 
     return _sink
 

@@ -19,10 +19,13 @@ Timestamps are converted to TimestampType (session tz pinned UTC by
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..etl import _run_together
 from ..operators.etl import hyperjoin
 
 
@@ -678,6 +681,18 @@ def make_star_sink(
     standalone factory: per micro-batch, keyed SCD1 upsert of the product
     dim + idempotent per-batch fact append under ``out_dir``.
 
+    The batch goes to the dim sink as is: both dim sinks collapse each
+    key to one row by value (every non-key column, ascending), so two
+    versions of one product in a batch leave the same dim row whatever
+    their row order.  With the default
+    dim layout the dim upsert and the fact append share no output, so
+    they are submitted together (``etl._run_together``) and both are
+    awaited before the sink returns or raises: the replay window is the
+    same as when they ran one after the other.  The default dim sink
+    merges each batch into the dim it wrote one batch earlier, kept in
+    memory, and reads the dim from disk only when it cannot trust that
+    copy (see :func:`..operators.upsert.upsert_parquet_sink`).
+
     Exposed separately so restart-recovery tests can wrap the EXACT
     production sink with crash injection (a raise after the writes but
     before the checkpoint commit is precisely the replay window the
@@ -709,7 +724,8 @@ def make_star_sink(
     keyed upsert through :func:`..sources.manifest_table.manifest_table_merge`
     — CoW delete of matched keys + ledgered append in ONE conditional
     PUT, closing the last non-atomic commit in the object-store
-    posture (VERDICT r12 #1).  Read the dim back with
+    posture (VERDICT r12 #1).  That arm runs the dim upsert before the
+    fact append, one after the other.  Read the dim back with
     ``read_manifest_table`` (key/bloom stats on ``product_id`` are
     tracked automatically so merges prune their rewrite set, which
     bounds per-batch dim write bytes by the matched generations).
@@ -744,10 +760,11 @@ def make_star_sink(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            dim_updates = batch_df.select(
-                "product_id", "product_name", "product_price"
-            ).dropDuplicates(["product_id"])
-            dim_sink(dim_updates, batch_id)
+            dim_write = partial(
+                dim_sink,
+                batch_df.select("product_id", "product_name", "product_price"),
+                batch_id,
+            )
             fact = batch_df.select(
                 "order_id", "line_number", "product_id", "quantity",
                 "product_price_num", "total_sale",
@@ -755,19 +772,26 @@ def make_star_sink(
             if fact_layout == "manifest":
                 from ..sources.manifest_table import manifest_table_append
 
-                # dim upsert runs FIRST and is keyed-idempotent, so a
-                # ledger hit here (replayed committed batch) still
-                # converges the dim before skipping the fact write
-                manifest_table_append(
+                # a replayed committed batch is a ledger hit: the append
+                # is skipped, while the dim upsert, keyed-idempotent and
+                # independent of the ledger, re-runs and converges
+                fact_write = partial(
+                    manifest_table_append,
                     fact.withColumn("batch_id", F.lit(int(batch_id))),
                     f"{out_dir}/fact_enriched",
                     batch_id,
                     stats_cols=fact_stats_cols,
                 )
             else:
-                fact.write.mode("overwrite").parquet(
-                    f"{out_dir}/fact_enriched/batch_id={batch_id}"
+                fact_write = partial(
+                    fact.write.mode("overwrite").parquet,
+                    f"{out_dir}/fact_enriched/batch_id={batch_id}",
                 )
+            if dim_layout == "manifest":
+                dim_write()
+                fact_write()
+            else:
+                _run_together(batch_df.sparkSession, [dim_write, fact_write])
         finally:
             batch_df.unpersist()
 
@@ -805,6 +829,17 @@ def run_pipeline_streaming(
     idempotent writes are what upgrade it to effectively-once).  Readers
     see one ``fact_enriched`` relation with ``batch_id`` as a partition
     column.  Drains synchronously; returns row counts.
+
+    Per micro-batch (default layouts) the sink runs one shuffle for the
+    dim: the batch's product rows and the current dim go through one
+    window on ``product_id`` that dedups and merges at once.  The current
+    dim is the copy the sink kept in memory after its last write, used
+    only while the dim directory's listing is the one recorded after that
+    write; the first batch after a start, the batch after a failed one,
+    and a dim touched by any other writer read it from disk, so restart
+    and replay see exactly what is committed.  The dim upsert and the
+    fact append run together and both finish before the micro-batch
+    commits (see :func:`make_star_sink`).
 
     ``quarantine_lateness`` (opt-in) makes the engine path's late-data
     policy EXPLICIT instead of implicit in the sink's idempotency: the

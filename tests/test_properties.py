@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -49,6 +49,69 @@ def test_upsert_key_algebra(spark, existing, updates):
     assert set(got) == set(want)
     for k in (u_latest if updates else {98: 0}):
         assert got[k] == want[k]
+
+
+dim_rows = st.lists(
+    st.tuples(
+        st.none() | st.integers(0, 4), st.integers(0, 3), st.sampled_from(["x", "y", None])
+    ),
+    max_size=8,
+)
+sink_steps = st.lists(
+    st.tuples(st.sampled_from(["batch", "rewrite"]), dim_rows), min_size=1, max_size=4
+)
+
+
+def _key_unique(rows):
+    """An at-rest dim as an external writer may leave it: one row per
+    non-NULL key, any number of NULL-key rows."""
+    seen, out = set(), []
+    for r in rows:
+        if r[0] is None or r[0] not in seen:
+            seen.add(r[0])
+            out.append(r)
+    return out
+
+
+@given(steps=sink_steps)
+@example(steps=[  # resident dim, then an external rewrite with two NULL-key rows
+    ("batch", [(1, 0, "x"), (None, 1, "x")]),
+    ("rewrite", [(1, 3, "y"), (2, 0, None), (None, 2, "y"), (None, 2, "y")]),
+    ("batch", [(2, 1, "x"), (2, 0, "y"), (None, 0, None)]),
+])
+@_settings
+def test_upsert_sink_equals_the_scd1_fold(spark, tmp_path, steps):
+    """Calls through ONE upsert_parquet_sink leave the table the fold
+    ``scd1_upsert(existing, latest_per_key(batch))`` gives, with NULL keys,
+    several versions of a key in one batch, and external rewrites of the
+    table between calls, which the sink's listing guard must notice
+    before it merges into its resident copy."""
+    import uuid
+
+    from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
+        latest_per_key,
+        upsert_parquet_sink,
+    )
+
+    schema = "k int, a int, b string"
+    path = str(tmp_path / uuid.uuid4().hex)
+    sink = upsert_parquet_sink(path, "k")
+    model = None
+    for i, (kind, rows) in enumerate(steps):
+        if kind == "rewrite":
+            model = spark.createDataFrame(_key_unique(rows), schema).localCheckpoint()
+            model.write.mode("overwrite").parquet(path)
+            continue
+        batch = spark.createDataFrame(rows, schema)
+        sink(batch, i)
+        latest = latest_per_key(batch, "k", [F.col("a"), F.col("b")])
+        model = latest if model is None else scd1_upsert(model, latest, key="k")
+        model = model.localCheckpoint()
+
+    def ordered(df):
+        return sorted(map(tuple, df.collect()), key=lambda r: [(v is None, v) for v in r])
+
+    assert ordered(spark.read.parquet(path)) == ordered(model)
 
 
 ts_rows = st.lists(
