@@ -1,6 +1,6 @@
 """Plan-inspection helpers: assert the physical plan is the one you'd want
-at 100 TB (broadcast where intended, filters pushed to the scan, codegen
-spans wide).  Used by tests and the bench tuning loop."""
+at 100 TB (broadcast where intended, filters pushed to the scan).  Used by
+tests and the bench tuning loop."""
 
 from __future__ import annotations
 
@@ -22,10 +22,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan_string(df)
 
 
-def has_shuffle(df: DataFrame) -> bool:
-    return "Exchange" in plan_string(df, "simple")
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters line(s) of the scan nodes ('' if none)."""
     return "\n".join(
@@ -33,7 +29,3 @@ def pushed_filters(df: DataFrame) -> str:
         for line in plan_string(df).splitlines()
         if "PushedFilters" in line
     )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return plan_string(df, "simple").count("WholeStageCodegen")

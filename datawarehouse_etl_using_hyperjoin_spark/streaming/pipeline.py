@@ -7,7 +7,8 @@ Reference → Spark mapping:
   22-71)           → ``readStream`` + trigger interval + maxFilesPerTrigger
 - 100-row chunking (StreamGeneratorThread.java:20,58) → micro-batch bounds
 - BlockingQueue buffers + hash table (StreamGeneratorThread.java:23-25)
-                    → the engine's own stream-static join state
+                    → the master, checkpointed once per query and
+                      broadcast to each micro-batch
 - consume-once evict-on-match (StreamGeneratorThread.java:126)
                     → ``dropDuplicatesWithinWatermark`` on the stream key
 - per-tuple JDBC dim updates (StreamGeneratorThread.java:151-354)
@@ -65,11 +66,27 @@ def stream_static_hyperjoin(
 ) -> DataFrame:
     """ST3: the streaming HyperJoin — stream transactions ⋈ static master.
 
-    The master side is a batch DataFrame re-resolved per micro-batch (the
-    reference re-reads master_data continuously for the same effect,
-    MasterDataStreamGeneratorThread.java:37-40); Catalyst broadcasts it, so
-    the stream side never shuffles.
+    When ``txn_stream`` is a stream, the master is materialized once, here,
+    with an eager ``localCheckpoint``: the reference builds its master hash
+    table once and probes every chunk against it
+    (StreamGeneratorThread.java:21,24,72-81).  Each micro-batch then only
+    broadcasts rows already in memory instead of re-scanning and re-joining
+    the master's inputs (part ⋈ supplier ⋈ nation for
+    ``sources.fixtures.master_data``).  Catalyst broadcasts the master, so
+    the stream side never shuffles.  A batch ``txn_stream`` keeps the lazy
+    plan and runs no job here.
+
+    The stream joins the master as it was when this function was called.
+    A file-backed master already behaved so: its file listing is fixed when
+    the DataFrame is created, so a file appended to the master directory
+    mid-stream was never joined, and an overwritten master failed the next
+    micro-batch (``FAILED_READ_FILE.FILE_NOT_EXIST``); now the stream
+    survives the overwrite and keeps the start-time rows.  A non-file
+    master (JDBC) used to be re-queried every micro-batch and is now read
+    once.  To pick up new master data, start a new query with a new call.
     """
+    if txn_stream.isStreaming:
+        master = master.localCheckpoint(eager=True)
     return hyperjoin(txn_stream, master)
 
 
@@ -817,6 +834,10 @@ def run_pipeline_streaming(
     (StreamGeneratorThread.java:373-406): transaction stream → HyperJoin
     enrichment (stream–static, broadcast master) → per-micro-batch keyed
     upsert of the product dimension + append of enriched fact rows.
+
+    ``master`` is read once, when this function is called, and held in
+    memory for the whole drain (see :func:`stream_static_hyperjoin`):
+    master data changed during the drain reaches the next call.
 
     One ``foreachBatch`` sink does both writes so a micro-batch commits
     dim and fact together (the reference opened five JDBC connections per

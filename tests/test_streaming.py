@@ -6,6 +6,7 @@ analogue on the same rows."""
 from __future__ import annotations
 
 import shutil
+import time
 import uuid
 
 import pytest
@@ -64,6 +65,145 @@ def test_stream_static_hyperjoin_matches_batch(spark, sf_dir, txn_stream_dir):
     s = out.agg(F.sum(F.col("total_sale").cast("decimal(18,2)"))).first()[0]
     b = batch.agg(F.sum(F.col("total_sale").cast("decimal(18,2)"))).first()[0]
     assert s == b
+
+
+def test_stream_static_hyperjoin_joins_the_start_time_master(
+    spark, sf_dir, txn_stream_dir, tmp_path_factory
+):
+    """The stream joins the master as it was when the join was built.
+    Mid-stream, a file appended to the master directory and then an
+    overwrite of the whole directory change no output row, and the query
+    does not fail (a file-backed master joined without a snapshot fails the
+    micro-batch after the overwrite with FAILED_READ_FILE.FILE_NOT_EXIST)."""
+    root = str(tmp_path_factory.mktemp("master_snapshot"))
+    master_dir, out = f"{root}/master", f"{root}/out"
+    full = master_data(spark, sf_dir)
+    txn = spark.read.parquet(txn_stream_dir)
+    held_out = txn.agg(F.min("product_id")).first()[0]
+    start = full.filter(F.col("product_id") != held_out)
+    start.write.parquet(master_dir)
+
+    def sink(batch_df, batch_id):
+        batch_df.write.mode("append").parquet(out)
+        if batch_id == 0:
+            # a new master file that holds the product the start lacks
+            full.filter(F.col("product_id") == held_out).write.mode(
+                "append"
+            ).parquet(master_dir)
+        elif batch_id == 1:
+            # every product repriced, written over the start's files
+            full.withColumn("product_price", F.lit("$1.00")).write.mode(
+                "overwrite"
+            ).parquet(master_dir)
+
+    stream = read_parquet_stream(spark, txn_stream_dir, max_files_per_trigger=1)
+    q = (
+        stream_static_hyperjoin(stream, spark.read.parquet(master_dir))
+        .writeStream.outputMode("append")
+        .foreachBatch(sink)
+        .option("checkpointLocation", f"{root}/ckpt")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert q.exception() is None
+        assert q.lastProgress["batchId"] >= 3  # batches ran after both changes
+    finally:
+        q.stop()
+    want = stream_static_hyperjoin(txn, start)
+    got = spark.read.parquet(out).select(*want.columns)
+    assert 0 < want.count() < txn.count()
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def _plan_leaves(plan):
+    """Leaf operators of a JVM physical plan, walked through AQE's wrapper
+    and its query stages."""
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _plan_leaves(plan.executedPlan())
+    if kind.endswith("QueryStageExec"):
+        return _plan_leaves(plan.plan())
+    children = plan.children()
+    if children.size() == 0:
+        return [plan]
+    return [leaf for i in range(children.size()) for leaf in _plan_leaves(children.apply(i))]
+
+
+def _assert_master_resident(q, stream_dir):
+    """Plan lock on a drained stream-static HyperJoin: the last micro-batch
+    scans files only for the stream, and the master comes from the scan
+    of its checkpoint."""
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    leaves = {}
+    for leaf in _plan_leaves(plan):
+        leaves.setdefault(leaf.getClass().getSimpleName(), []).append(leaf)
+    assert sorted((k, len(v)) for k, v in leaves.items()) == [
+        ("FileSourceScanExec", 1), ("RDDScanExec", 1)
+    ], leaves
+    roots = leaves["FileSourceScanExec"][0].relation().location().rootPaths()
+    paths = [roots.apply(i).toString() for i in range(roots.size())]
+    assert paths and all(stream_dir in p for p in paths), paths
+    assert leaves["RDDScanExec"][0].rdd().isCheckpointed()
+
+
+def test_stream_static_hyperjoin_plan_scans_only_the_stream(
+    spark, sf_dir, txn_stream_dir
+):
+    """A stream input is joined against one checkpoint of the master, taken
+    at call time; a batch input keeps the lazy plan and runs no job at call
+    time."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.etl import hyperjoin
+
+    sc = spark.sparkContext
+    master = master_data(spark, sf_dir)
+    txn = spark.read.parquet(txn_stream_dir)
+    stream = read_parquet_stream(spark, txn_stream_dir, max_files_per_trigger=1)
+
+    def sentinel(name):
+        # job ids are sequential; the status store is fed asynchronously
+        sc.setJobGroup(name, name)
+        spark.range(1).count()
+        deadline = time.monotonic() + 30
+        while not (ids := sc.statusTracker().getJobIdsForGroup(name)):
+            assert time.monotonic() < deadline, name
+            time.sleep(0.05)
+        return set(ids)
+
+    try:
+        before = max(sentinel("hj-call-0"))
+        batch = stream_static_hyperjoin(txn, master)
+        between = min(sentinel("hj-call-1"))
+        streamed = stream_static_hyperjoin(stream, master)
+        after = min(sentinel("hj-call-2"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert between == before + 1  # batch call: no job
+    assert after > between + 1  # stream call: the checkpoint's job
+    kinds = [
+        leaf.getClass().getSimpleName()
+        for leaf in _plan_leaves(batch._jdf.queryExecution().executedPlan())
+    ]
+    assert "RDDScanExec" not in kinds
+    assert kinds.count("FileSourceScanExec") > 1  # the master's own inputs
+
+    q = run_to_memory(streamed, f"hj_{uuid.uuid4().hex[:8]}")
+    try:
+        _assert_master_resident(q, txn_stream_dir)
+    finally:
+        q.stop()
+    # negative control: the join over the unsnapshotted master re-scans
+    # the master's inputs in every micro-batch and fails the lock
+    q = run_to_memory(hyperjoin(stream, master), f"hj_{uuid.uuid4().hex[:8]}")
+    try:
+        with pytest.raises(AssertionError):
+            _assert_master_resident(q, txn_stream_dir)
+    finally:
+        q.stop()
 
 
 def test_windowed_counts_match_batch_tumbling(spark, events_stream_dir):

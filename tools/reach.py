@@ -147,8 +147,6 @@ KEEP: dict[str, str] = {
     "plans.inspect.plan_string": _D2,
     "plans.inspect.pushed_filters": _D2,
     "plans.inspect.uses_broadcast_join": _D2,
-    "plans.inspect.has_shuffle": _D2,
-    "plans.inspect.codegen_stage_count": _D2,
     "operators.asof._to_tolerance": _HELPER + "asof_join(tolerance=)",
     "functions.scalar.parse_json_strict": _deferred("test_etl_operators, 1"),
     "operators.bpe.apply_merge": _deferred("test_bpe, 6 with bpe_train/bpe_encode"),
