@@ -36,6 +36,7 @@ from .operators.constraints import (
     raise_violations,
 )
 from .operators.etl import assemble_fact, build_dim, first_match, hyperjoin
+from .operators.text import ensure_compute_parallelism
 from .sources.fixtures import load_table, master_data, transactions
 
 # The createDW.sql contract (createDW.sql:2-98): dim name → (dim PK, fact
@@ -145,8 +146,13 @@ def write_star(
     3. The FK-per-dim and NOT NULL contracts (createDW.sql:83-98) are
        checked against the data as written, all in one parquet scan that
        also returns the fact row count (no recompute of the assembly
-       plan).  A violating batch raises with the staging dir left for
-       inspection and the published fact unchanged (the dims HAVE been
+       plan).  The staged fact and the dims are read back with the
+       schemas the load already holds, so the read-back infers no schema
+       from file footers; it only lists the files (the staged fact's
+       month dirs in one listing job sized to the cores, see
+       ``session.ENGINE_CONF``).  A violating batch raises with the
+       staging dir left for inspection and the published fact
+       unchanged (the dims HAVE been
        refreshed by then — a rejected fact batch leaves new dims paired
        with the previous fact until the batch is fixed and re-run; SCD1
        dims are idempotent so the re-run converges).  Violation samples
@@ -172,9 +178,9 @@ def write_star(
           for name, df in dims.items()),
         partial(staged.partitionBy("order_month").parquet, staging),
     ])
-    written = spark.read.parquet(staging)
+    written = spark.read.schema(fact.schema).parquet(staging)
     star = {
-        name: (spark.read.parquet(f"{out_dir}/{name}"), pk, fk)
+        name: (spark.read.schema(dims[name].schema).parquet(f"{out_dir}/{name}"), pk, fk)
         for name, (pk, fk) in STAR_DIM_KEYS.items()
     }
     counts["fact_sales"], bad = fact_counts(written, star, FACT_NOT_NULL)
@@ -202,13 +208,23 @@ def load_star(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     Fact is partitioned by order month (dynamic partition pruning +
     bounded incremental rebuilds at scale); dims are plain parquet.
     The createDW.sql integrity gate runs on load (see :func:`write_star`).
+
+    When ``lineitem``'s scan offers fewer splits than
+    ``defaultParallelism`` (a small table written as one file), it is
+    hash-partitioned on ``l_orderkey`` before the fact is assembled, so
+    the scan, the broadcast-join probes and the rebalance write run on
+    every core instead of in one task.  The key is the fact's
+    co-partitionable join key; a round-robin spread would sort its one
+    input partition first.  A lineitem that arrives in enough files is
+    not touched.
     """
     _, master = ingest(spark, sf_dir)
     dims = build_dimensions(spark, sf_dir, master)
     t = {n: load_table(spark, sf_dir, n) for n in
          ("lineitem", "orders", "customer", "part", "supplier", "nation")}
+    lineitem = ensure_compute_parallelism(t["lineitem"], keys=("l_orderkey",))
     fact = assemble_fact(
-        t["lineitem"], t["orders"], t["customer"], t["part"], t["supplier"], t["nation"]
+        lineitem, t["orders"], t["customer"], t["part"], t["supplier"], t["nation"]
     ).withColumn("order_month", F.date_format("order_date", "yyyy-MM"))
     return write_star(spark, dims, fact, out_dir)
 

@@ -12,7 +12,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def ensure_compute_parallelism(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def ensure_compute_parallelism(
+    df: DataFrame, parallelism: int | None = None, keys: tuple[str, ...] = ()
+) -> DataFrame:
     """Repartition a compute-bound stage's input up to ``parallelism`` when
     the scan provides fewer splits.
 
@@ -23,15 +25,21 @@ def ensure_compute_parallelism(df: DataFrame, parallelism: int | None = None) ->
     corpus is small relative to the cluster.  A 100 TB corpus arrives in
     ≫ ``defaultParallelism`` files and is never needlessly shuffled.
 
-    NON-file sources (a localCheckpoint result, a foreachBatch
-    micro-batch, any in-memory relation) report no input files, which
-    r14 treated as "splits are scarce" — an UNCONDITIONAL round-robin
-    shuffle per call however wide the input actually was (ADVICE r14).
-    For those the actual RDD partition count decides instead: the plans
-    reaching here with no file scan are shallow (checkpoint scan /
-    micro-batch projection), so the one-off plan conversion is cheap,
-    and a derived relation that already arrives in ≥ ``parallelism``
-    partitions is passed through untouched at any scale.
+    NON-file sources report no input files.  When the analyzed plan is a
+    leaf ``LogicalRDD`` (a localCheckpoint result, a foreachBatch
+    micro-batch) its RDD partition count decides: that count is fixed
+    before the call, so reading it converts no plan, and a relation that
+    already arrives in ≥ ``parallelism`` partitions passes through
+    untouched at any scale.  Any other non-file plan (a range, a local
+    relation, a projection or join over a checkpoint) is taken as scarce
+    and spread: its partition count is only known once AQE has run it.
+    So is a plan that cannot be inspected (Spark Connect).
+
+    The spread is round-robin, or a hash on ``keys`` when given.  The
+    key form suits a single-split input feeding joins on that key: a
+    round-robin exchange sorts each input partition first
+    (``spark.sql.execution.sortBeforeRepartition``), which on one split
+    costs what the spread saves.
 
     (Lives here rather than in ``dedup`` — its original home, which still
     re-exports it — because the text/lm/importance operators need it and
@@ -45,11 +53,13 @@ def ensure_compute_parallelism(df: DataFrame, parallelism: int | None = None) ->
         n_splits = 0
     if n_splits == 0:
         try:
-            n_splits = df.rdd.getNumPartitions()
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                n_splits = plan.rdd().getNumPartitions()
         except Exception:  # Connect / unplannable → assume scarce
             n_splits = 0
     if n_splits < parallelism:
-        return df.repartition(parallelism)
+        return df.repartition(parallelism, *keys)
     return df
 
 # A tiny English stopword list — enough signal for an n-gram/stopword

@@ -299,3 +299,141 @@ def test_write_star_lands_one_file_per_fact_month(spark, sf_dir, tmp_path):
 
     assert totals(spark.read.parquet(f"{out}/fact_sales")) == totals(fact)
 
+
+def _plan_nodes(plan, ancestors=()):
+    """(node, ancestors) pairs of a JVM physical plan, walked through AQE's
+    wrapper, its query stages and broadcast exchanges."""
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _plan_nodes(plan.executedPlan(), ancestors)
+    if kind.endswith("QueryStageExec"):
+        return _plan_nodes(plan.plan(), ancestors)
+    out = [(plan, ancestors)]
+    children = plan.children()
+    for i in range(children.size()):
+        out += _plan_nodes(children.apply(i), ancestors + (kind,))
+    return out
+
+
+def _assert_fact_spread_on_orderkey(staged):
+    """Plan lock on the staged-fact write: exactly one hash exchange on
+    l_orderkey, under every broadcast join of the fact and over the
+    lineitem scan, and no other shuffle but the order_month rebalance."""
+    shuffles = {}
+    for node, above in _plan_nodes(staged._jdf.queryExecution().executedPlan()):
+        if node.getClass().getSimpleName() != "ShuffleExchangeExec":
+            continue
+        part, cols = node.outputPartitioning(), ()
+        if part.getClass().getSimpleName() == "HashPartitioning":
+            exprs = part.expressions()
+            cols = tuple(exprs.apply(i).name() for i in range(exprs.size()))
+        shuffles.setdefault(cols, []).append((node, above))
+    assert sorted(shuffles) == [("l_orderkey",), ("order_month",)], shuffles
+    [(spread, above)] = shuffles[("l_orderkey",)]
+    assert above.count("BroadcastHashJoinExec") == 5, above
+    scans = [
+        n.relation().location().rootPaths().apply(0).getName()
+        for n, _ in _plan_nodes(spread)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert scans == ["lineitem.parquet"], scans
+
+
+def _staged_fact(spark, sf_dir, monkeypatch):
+    """The fact load_star hands to write_star, as the staged write plans it."""
+    from datawarehouse_etl_using_hyperjoin_spark import etl
+
+    seen = {}
+    monkeypatch.setattr(etl, "write_star", lambda s, dims, fact, out: seen.update(fact=fact))
+    etl.load_star(spark, sf_dir, "unused")
+    return seen["fact"].hint("rebalance", "order_month")
+
+
+def test_load_star_spreads_a_single_split_fact_on_orderkey(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """load_star hash-spreads lineitem on l_orderkey when its scan offers
+    fewer splits than defaultParallelism (the one-file fixture), so the
+    fact's joins and rebalance write run on every core.  Negative control:
+    the same tables with lineitem re-written as defaultParallelism files
+    get no spread, and the lock fails."""
+    import os
+
+    import pytest
+
+    par = spark.sparkContext.defaultParallelism
+    assert len(load_table(spark, sf_dir, "lineitem").inputFiles()) < par
+    _assert_fact_spread_on_orderkey(_staged_fact(spark, sf_dir, monkeypatch))
+
+    wide = tmp_path / "sf_wide"
+    wide.mkdir()
+    for name in ("orders", "customer", "part", "supplier", "nation"):
+        os.symlink(f"{sf_dir}/{name}.parquet", wide / f"{name}.parquet")
+    load_table(spark, sf_dir, "lineitem").repartition(par).write.parquet(
+        str(wide / "lineitem.parquet")
+    )
+    assert len(load_table(spark, str(wide), "lineitem").inputFiles()) >= par
+    with pytest.raises(AssertionError):
+        _assert_fact_spread_on_orderkey(_staged_fact(spark, str(wide), monkeypatch))
+
+
+def test_write_star_read_back_lists_within_the_cores(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """write_star reads the staged fact and the five dims back with the
+    schemas it already holds: the read-back launches no parquet
+    schema-inference job, only the staged fact's listing of its month
+    dirs, in at most defaultParallelism tasks."""
+    import glob
+    import time
+
+    from datawarehouse_etl_using_hyperjoin_spark import etl
+
+    sc = spark.sparkContext
+    group = "write-star-read-back"
+    run_together, gate = etl._run_together, etl.fact_counts
+
+    def writes_then_read_back(spark_, actions):
+        out = run_together(spark_, actions)
+        sc.setJobGroup(group, group)
+        return out
+
+    def gate_outside_the_group(*args):
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        return gate(*args)
+
+    dims, fact = _star_inputs(spark, sf_dir)
+    out = str(tmp_path / "dw")
+    monkeypatch.setattr(etl, "_run_together", writes_then_read_back)
+    monkeypatch.setattr(etl, "fact_counts", gate_outside_the_group)
+    try:
+        etl.write_star(spark, dims, fact, out)
+        # the listener bus is ordered: once this sentinel is in the store,
+        # every read-back job before it is too
+        sc.setJobGroup("read-back-sentinel", "sentinel")
+        spark.range(1).count()
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup("read-back-sentinel"):
+            assert time.monotonic() < deadline
+            time.sleep(0.05)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # the listing is a job only past the discovery threshold (32 paths)
+    assert len(glob.glob(f"{out}/fact_sales/order_month=*")) > 32
+    store = sc._jsc.sc().statusStore()
+    jobs = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        data = store.job(job_id)
+        desc = data.description().get() if data.description().isDefined() else ""
+        jobs.append((desc, data.numTasks()))
+    # the listing job carries its own description; a footer-inference
+    # job carries the caller's
+    listing = "Listing leaf files and directories for "
+    listings = [n for desc, n in jobs if desc.startswith(listing)]
+    inferred = len(jobs) - len(listings)
+    assert not inferred and len(listings) == 1 and listings[0] <= sc.defaultParallelism, (
+        f"{inferred} schema-inference jobs; listing tasks {listings}"
+    )

@@ -467,11 +467,14 @@ def test_unbounded_build_side_join_keeps_sort_merge(spark, sf_dir):
 
 
 def test_compute_parallelism_decouple_noop_on_wide_derived_input(spark):
-    """ensure_compute_parallelism on NON-file sources (ADVICE r14): a
-    derived/materialized relation that already arrives in >= parallelism
-    partitions must pass through UNTOUCHED (r14 unconditionally round-robin
-    shuffled every such input — inputFiles() is empty for them), while a
-    narrow derived relation still gains the spread."""
+    """ensure_compute_parallelism on NON-file sources (ADVICE r14, r15): a
+    checkpoint that already arrives in >= parallelism partitions must pass
+    through UNTOUCHED (r14 unconditionally round-robin shuffled every such
+    input — inputFiles() is empty for them), while a narrow one still
+    gains the spread.  The partition count is read only off a leaf
+    LogicalRDD: any other non-file plan, here a projection over the wide
+    checkpoint, is taken as scarce and spread.  The keyed form spreads on
+    a hash of its keys."""
     from datawarehouse_etl_using_hyperjoin_spark.operators.text import (
         ensure_compute_parallelism,
     )
@@ -488,3 +491,15 @@ def test_compute_parallelism_decouple_noop_on_wide_derived_input(spark):
     out = ensure_compute_parallelism(narrow)
     assert out is not narrow
     assert out.rdd.getNumPartitions() == par
+    derived = wide.select((F.col("id") * 2).alias("id"))
+    assert not derived.inputFiles()
+    out = ensure_compute_parallelism(derived)
+    assert out is not derived
+    assert out.rdd.getNumPartitions() == par
+
+    keyed = ensure_compute_parallelism(narrow, keys=("id",))
+    plan = keyed._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "RepartitionByExpression"
+    exprs = plan.partitionExpressions()
+    assert [exprs.apply(i).name() for i in range(exprs.size())] == ["id"]
+    assert keyed.rdd.getNumPartitions() == par
