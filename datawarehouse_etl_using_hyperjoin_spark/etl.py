@@ -160,10 +160,7 @@ def write_star(
     4. Only a clean fact is promoted to the published path, by a
        near-atomic two-rename swap (live → ``.old``, staging → live,
        delete ``.old``) so the published path is never absent; on HDFS
-       the same gate promotes via FileSystem.rename, and on object
-       stores it composes with a manifest commit instead
-       (sources/manifest_table.py) — the gate logic (validate the WRITTEN
-       data, publish only clean) is identical.
+       the same gate promotes via FileSystem.rename.
     """
     keys = {name: [STAR_DIM_KEYS[name][0]] for name in dims}
     counts, bad = pk_counts({name: (df, keys[name]) for name, df in dims.items()})
@@ -273,8 +270,8 @@ def build_summary(fact: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFram
     month-partitioned fact: because every measure is mergeable and
     ``order_month`` is both a fact partition AND a summary grain key,
     one fact partition maps to exactly one summary partition, so the
-    rollup can be maintained incrementally (:func:`merge_summaries`,
-    :func:`refresh_summary_incremental`) — never re-aggregating history.
+    rollup can be maintained incrementally (:func:`merge_summaries`) —
+    never re-aggregating history.
 
     ``extra_keys``: additional grouping columns (e.g. a batch/side tag,
     so several partial summaries come out of ONE fact pass and Spark's
@@ -324,89 +321,3 @@ def merge_summaries(old: DataFrame, delta: DataFrame) -> DataFrame:
     incremental rollup maintenance, including deltas that do NOT align
     with a fact partition (late rows, cross-month backfills)."""
     return _fold_summaries(old.unionByName(delta))
-
-
-def refresh_summary_incremental(
-    spark: SparkSession, fact_root: str, summary_root: str
-) -> dict[str, int]:
-    """Cursor-driven rollup maintenance over a MANIFEST-layout fact
-    (r13, VERDICT r12 #5 — the in-repo consumer of
-    ``read_manifest_table_changes``): each call reads exactly the fact
-    rows appended since the last refresh (O(new data) — a ledger diff
-    unions only the post-cursor generations, never a table scan),
-    aggregates them to one PARTIAL summary, and commits it to a
-    manifest batch table at ``summary_root`` in one conditional PUT.
-
-    The CURSOR IS THE LEDGER: each partial commits under the fact head
-    seq it covered, so the next refresh resumes from
-    ``max(committed batch ids)`` with no side-channel cursor file to
-    tear — a replayed/raced refresh of the same head is detected by the
-    ledger and skipped (exactly-once), and a crash before publish
-    changes nothing.  Read the rollup back with
-    :func:`read_summary_incremental` (combine-on-read over the
-    partials); :func:`..maintenance.run_maintenance` compacts the
-    partials like any manifest table — sound because the fold is
-    order-insensitive.
-
-    Boundaries are the CDC read's, surfaced loudly: the cursor manifest
-    must still be retained (``manifest_vacuum`` window), and a
-    compaction that merged post-cursor fact batches makes their rows
-    inseparable — size the fact's maintenance ``keep_last`` above the
-    refresh lag, exactly the documented retention-vs-reader contract.
-
-    Returns ``{"cursor_from", "cursor_to", "refreshed"}`` (``refreshed``
-    0 = nothing new, no publish)."""
-    from .manifest import manifest_read
-    from .sources.manifest_table import (
-        manifest_table_append,
-        read_manifest_table,
-        read_manifest_table_changes,
-    )
-
-    head_m = manifest_read(spark, fact_root)
-    if head_m is None:
-        raise ValueError(
-            f"no manifest table at {fact_root!r} — the summary cursor "
-            "consumes a manifest-layout fact"
-        )
-    head = int(head_m["seq"])
-    summary_m = manifest_read(spark, summary_root)
-    cursor = (
-        max((int(b) for b in summary_m.get("batches", {})), default=0)
-        if summary_m is not None
-        else 0
-    )
-    if head <= cursor:
-        return {"cursor_from": cursor, "cursor_to": cursor, "refreshed": 0}
-    # both reads are pinned as_of the captured head: a fact append
-    # landing between the head capture and the read must NOT be folded
-    # into this partial, because the cursor commits as `head` — an
-    # unpinned read would aggregate the racing batch now AND re-read it
-    # on the next refresh (double count).  Pinned, the partial covers
-    # exactly the batches committed at or before its recorded batch_id.
-    if cursor == 0:
-        # first refresh: baseline over the whole fact
-        delta = read_manifest_table(spark, fact_root, as_of=head)
-    else:
-        delta = read_manifest_table_changes(spark, fact_root, cursor, as_of=head)
-    partial = build_summary(delta)
-    res = manifest_table_append(partial, summary_root, batch_id=head)
-    return {
-        "cursor_from": cursor,
-        "cursor_to": head,
-        "refreshed": 0 if res is None else 1,
-    }
-
-
-def read_summary_incremental(
-    spark: SparkSession, summary_root: str
-) -> DataFrame:
-    """The materialized rollup: combine-on-read over the committed
-    partial summaries (:func:`_fold_summaries` — exchanges a
-    summary-sized relation only).  Equal to ``build_summary`` over the
-    full fact after every refresh, bit-identically (the decimal
-    re-entry argument in the fold's docstring)."""
-    from .sources.manifest_table import read_manifest_table
-
-    return _fold_summaries(read_manifest_table(spark, summary_root))
-

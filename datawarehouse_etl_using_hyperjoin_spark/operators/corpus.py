@@ -439,33 +439,12 @@ def make_corpus_ingest_sink(
     n_bands: int = 4,
     shingle_k: int = 3,
     max_bucket: int = 1000,
-    corpus_layout: str = "partition",
-    corpus_stats_cols: list[str] | None = None,
     doc_meta_dir: str | None = None,
 ):
     """foreachBatch handler: gate each micro-batch, near-dup it against
-    the AT-REST LSH index, append survivors + their signatures.
-
-    ``corpus_layout`` (r11) picks the survivors' at-rest form:
-
-    - ``"partition"`` (default): one ``ingest_batch=N`` partition dir
-      per batch, replay overwrites it — the local-fs shape, compacted
-      by :func:`compact_corpus` (rename swap).
-    - ``"manifest"``: the generation-manifest batch table
-      (:mod:`...sources.manifest_table`) — the object-store-safe shape:
-      no rename anywhere, the commit point is a manifest PUT, and the
-      batch LEDGER detects a replayed committed batch outright (read the
-      corpus back with ``read_manifest_table``; compact via
-      ``compact_manifest_table`` / ``run_maintenance(manifest_tables=)``).
-      On a ledger hit the band upsert below still runs — it is an
-      idempotent partition overwrite, so a crash BETWEEN the two commits
-      (corpus published, index not yet) converges on replay.  The LSH
-      index stays a bucketed catalog table in both modes; its per-batch
-      dynamic partition overwrite is delete+write, no engine-level
-      rename.  ``corpus_stats_cols`` (r12, manifest mode only) records
-      per-generation min/max/null stats for the named survivor columns
-      so downstream ``read_manifest_table(where=...)`` reads skip
-      generations (sticky once set — restarts may omit it).
+    the AT-REST LSH index, append survivors + their signatures.  The
+    survivors land in one ``ingest_batch=N`` partition dir per batch,
+    replay overwrites it; :func:`compact_corpus` compacts the dir.
 
     This is the historical-dedup half :func:`prepare_corpus_stream`
     deliberately leaves out of the per-row stream: each batch computes
@@ -496,15 +475,13 @@ def make_corpus_ingest_sink(
     ``lang_pred``), its ingest ``status`` (``kept`` /
     ``duplicate_text`` / ``duplicate_id`` / ``near_dup``) and
     ``last_ingest_batch`` — through the SAME
-    :func:`...sources.manifest_table.manifest_upsert_sink` the star
-    pipeline's ``dim_layout="manifest"`` uses: each batch is one keyed
-    ``manifest_table_merge`` (CoW delete of matched ids + ledgered
-    append in ONE conditional-PUT publish), so a re-sent id UPDATES its
-    row (the corpus itself stays first-write-wins) and a replayed
-    committed batch is a ledger no-op.  The dim answers "what happened
-    to doc X and why" without scanning the corpus.  Read it back with
-    ``read_manifest_table(doc_meta_dir)``; it ages like any manifest
-    table (``run_maintenance(manifest_tables=[...])``).
+    :func:`.upsert.upsert_parquet_sink` the star pipeline's product dim
+    uses: each batch is one keyed SCD1 merge and overwrite, so a re-sent
+    id UPDATES its row (the corpus itself stays first-write-wins) and a
+    replayed batch converges to the same dim.  The dim answers "what
+    happened to doc X and why" without scanning the corpus.  Read it
+    back with ``spark.read.parquet(doc_meta_dir)``; it does not age
+    (the upsert rewrites it in place).
 
     Use::
 
@@ -521,48 +498,14 @@ def make_corpus_ingest_sink(
         upsert_lsh_index_batch,
     )
 
-    if corpus_layout not in ("partition", "manifest"):
-        raise ValueError(
-            f"corpus_layout must be 'partition' or 'manifest', got "
-            f"{corpus_layout!r}"
-        )
-    if corpus_stats_cols and corpus_layout != "manifest":
-        raise ValueError(
-            "corpus_stats_cols needs corpus_layout='manifest' — "
-            "generation stats live in the manifest commit log; the "
-            "partition layout has no manifest to record them in"
-        )
     meta_sink = None
     if doc_meta_dir is not None:
-        from ..sources.manifest_table import manifest_upsert_sink
+        from .upsert import upsert_parquet_sink
 
-        # the second manifest_upsert_sink consumer (the star dim is the
-        # first): keyed merge per batch, ledger-exactly-once, stats +
-        # Bloom on the id so each merge prunes its rewrite set
-        meta_sink = manifest_upsert_sink(doc_meta_dir, id_col)
+        meta_sink = upsert_parquet_sink(doc_meta_dir, id_col)
     layout_checked = []
 
-    def _guard_manifest_layout(spark) -> None:
-        # the manifest guard is simpler: the dir must be manifest-shaped
-        # (or absent) — a partition-layout or pre-r7 flat corpus mixed
-        # under a manifest root would be invisible to manifest readers
-        if layout_checked:
-            return
-        from ..fsutil import list_visible
-
-        entries = list_visible(spark, out_dir)
-        for name, _is_dir in entries or []:
-            if name not in ("_manifest", "data"):
-                raise ValueError(
-                    f"corpus dir {out_dir!r} contains non-manifest entry "
-                    f"{name!r} — corpus_layout='manifest' needs a fresh "
-                    "directory (or one already in manifest layout); "
-                    "rows outside the manifest would be invisible to "
-                    "read_manifest_table"
-                )
-        layout_checked.append(True)
-
-    def _guard_corpus_layout(spark) -> None:
+    def _guard_batch_dirs(spark) -> None:
         # mirror of upsert_lsh_index_batch's ingest_batch guard, for the
         # corpus dir: an out_dir populated by the pre-r7 sink holds FLAT
         # appended parquet files; mixing those with ingest_batch=N
@@ -608,10 +551,7 @@ def make_corpus_ingest_sink(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if corpus_layout == "manifest":
-            _guard_manifest_layout(spark)
-        else:
-            _guard_corpus_layout(spark)
+        _guard_batch_dirs(spark)
         scored = corpus_metrics(batch_df, id_col, text_col)
         gated = _quality_gate(
             scored, min_quality=min_quality, min_tokens=min_tokens, langs=langs
@@ -688,23 +628,9 @@ def make_corpus_ingest_sink(
         # append is a dynamic partition overwrite keyed by batch id —
         # so a replayed batch converges to the same state instead of
         # duplicating rows (the r6 at-least-once caveat, closed)
-        if corpus_layout == "manifest":
-            from ..sources.manifest_table import manifest_table_append
-
-            # carries ingest_batch as a DATA column so reads match the
-            # partition layout's schema; a ledger hit (replayed committed
-            # batch) returns None and skips only the corpus write — the
-            # band upsert below re-lands idempotently either way
-            manifest_table_append(
-                kept.withColumn("ingest_batch", F.lit(int(batch_id))),
-                out_dir,
-                batch_id,
-                stats_cols=corpus_stats_cols,
-            )
-        else:
-            kept.write.mode("overwrite").parquet(
-                f"{out_dir}/ingest_batch={int(batch_id)}"
-            )
+        kept.write.mode("overwrite").parquet(
+            f"{out_dir}/ingest_batch={int(batch_id)}"
+        )
         upsert_lsh_index_batch(
             bands.join(kept.select(id_col), id_col, "semi"),
             index_table,
@@ -716,9 +642,8 @@ def make_corpus_ingest_sink(
             # no recompute, no re-read): keyed merge into the dim, so a
             # re-sent id UPDATES its row while the corpus stays
             # first-write-wins.  Runs LAST: a crash before it replays
-            # the batch, the corpus/index writes no-op on their
-            # ledgers/overwrites, and this merge converges (its own
-            # ledger skips an already-committed batch).
+            # the batch, the corpus/index overwrites land the same rows
+            # again, and this keyed merge converges to the same dim.
             meta = meta_src.select(
                 id_col, "fingerprint", "ws_tokens", "quality_score",
                 "lang_pred",
@@ -766,9 +691,8 @@ def compact_corpus(
     batch_col: str = "ingest_batch",
 ) -> dict[str, int]:
     """Maintenance pass for the streamed corpus directory — the parquet-dir
-    member of the engine's at-rest triad (corpus dir here, LSH band table
-    via ``dedup.compact_lsh_index``, IVF index via
-    ``ivf_store.compact_ivf_index_manifest``), all with the same contract: every
+    member of the engine's at-rest pair (corpus dir here, LSH band table
+    via ``dedup.compact_lsh_index``), both with the same contract: every
     :func:`make_corpus_ingest_sink` batch lands its own ``ingest_batch=N``
     partition dir, so a long-lived stream leaves O(stream age) partition
     dirs and every corpus read pays the listing.

@@ -508,7 +508,7 @@ def compact_lsh_index(
     spark, table: str, *, keep_last: int = 2
 ) -> dict[str, int]:
     """Maintenance pass for the at-rest LSH index — the bucketed-table
-    sibling of ``compact_ivf_index_manifest``: every
+    sibling of ``operators.corpus.compact_corpus``: every
     :func:`upsert_lsh_index_batch` lands ``n_buckets`` files in its own
     ``ingest_batch`` partition, so after B batches the table is B×32
     files and each per-batch incremental scan pays open/footer/listing

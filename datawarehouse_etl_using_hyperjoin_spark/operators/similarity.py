@@ -501,9 +501,9 @@ def quantize_embeddings(
 
     At 100 TB the embedding column IS the table — 64 float32 dims are
     256 B/row before a single metadata byte — so quantizing the indexed
-    corpus (e.g. the ``ivf_store.write_ivf_index_manifest`` cells) cuts every probe's
-    scan bytes 4× at a reconstruction error bounded by scale/2 per
-    element (max|x|/254).  All JVM-side array expressions — no Python, no
+    corpus (e.g. the cells of a ``centroid_id``-partitioned index) cuts
+    every probe's scan bytes 4× at a reconstruction error bounded by
+    scale/2 per element (max|x|/254).  All JVM-side array expressions — no Python, no
     shuffle; the original vector column is kept (drop it at write time
     when the index should hold only quantized payloads).
 
@@ -719,56 +719,6 @@ def _ivf_probe_cells(
     return probe_df, probed_cells
 
 
-def ann_ivf_index_topk(
-    queries: DataFrame,
-    index: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF search against the AT-REST index
-    (``ivf_store.read_ivf_index_manifest``):
-    identical semantics to :func:`ann_ivf_topk`, but the corpus side is
-    the cell-partitioned table and the probed cells are pushed down as a
-    LITERAL partition filter, so non-probed cells are pruned from the
-    file listing before any bytes are read.
-
-    The probe set is materialized driver-side first — bounded by
-    ``min(Q·nprobe, C)`` distinct cell ids (the same
-    bounded-literal-collect pattern as ``exact_group_quantiles``'s chunk
-    boundaries), never by data volume — because a literal ``isin`` prunes
-    at PLANNING time on any Spark version/source, where relying on
-    runtime DPP would leave correctness of the pruning to an optimizer
-    heuristic.
-    """
-    probe_df, probed_cells = _ivf_probe_cells(
-        queries, centroids, id_col, vec_col, nprobe
-    )
-    cells = index.filter(F.col("centroid_id").isin(probed_cells)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        # partition-column type is inferred on read (int); normalize so the
-        # probe join and the output schema match ann_ivf_topk exactly
-        F.col("centroid_id").cast("long").alias("centroid_id"),
-    ).withColumn("__cn", norm(F.col("__cvec")))
-    scored = (
-        F.broadcast(probe_df.withColumn("__qn", norm(F.col("__qvec"))))
-        .join(cells, on="centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cos",
-            dot(F.col("__qvec"), F.col("__cvec"))
-            / (F.col("__qn") * F.col("__cn")),
-        )
-        .drop("__qvec", "__cvec", "__qn", "__cn")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def ann_ivf_index_topk_quantized(
     queries: DataFrame,
     index: DataFrame,
@@ -781,16 +731,16 @@ def ann_ivf_index_topk_quantized(
     k: int = 3,
     nprobe: int = 4,
     rerank: int = 0,
-    fetch: str = "global",
     probes: DataFrame | None = None,
     prune: str = "literal",
 ) -> DataFrame:
     """IVF search against an at-rest index whose cells hold int8-QUANTIZED
-    payloads (:func:`quantize_embeddings` applied before
-    ``ivf_store.write_ivf_index_manifest``): the partition-pruned probe of
-    :func:`ann_ivf_index_topk` composed with the code-space scoring of
-    :func:`cosine_topk_quantized` — the IVF-with-compressed-residuals
-    serving architecture of Jégou, Douze & Schmid 2011 ("Product
+    payloads (:func:`quantize_embeddings` applied before a
+    ``partitionBy("centroid_id")`` parquet write): the probed cells pushed
+    down as a LITERAL partition filter, so non-probed cells are pruned
+    from the file listing before any bytes are read, composed with the
+    code-space scoring of :func:`cosine_topk_quantized` — the
+    IVF-with-compressed-residuals serving architecture of Jégou, Douze & Schmid 2011 ("Product
     Quantization for Nearest Neighbor Search", IVFADC) with faiss-style
     scalar (SQ8) codes in place of product codes, re-expressed as
     DataFrame plans.
@@ -808,23 +758,7 @@ def ann_ivf_index_topk_quantized(
     ``Q·rerank``-row relation against the pruned float scan — the float
     column is read for probed cells only, and candidate cost is
     query-bound, not corpus-bound).  Output schema matches
-    :func:`ann_ivf_index_topk`.
-
-    ``fetch`` picks the candidate-fetch predicate shape:
-
-    - ``"global"`` (default): one ``id IN (all candidates)`` filter.
-      Right for in-memory index relations and un-sorted at-rest cells.
-    - ``"cell_local"``: per-cell ``(cell_id = c AND id IN ids_in_c)``
-      disjunction — the shape whose row-group stats skipping actually
-      fires on an at-rest index written with
-      ``write_ivf_index_manifest`` (see its ``sort_by`` docs: a GLOBAL list
-      over id-sorted cells skips nothing, because every row group's id
-      range contains some candidate from ANOTHER cell).  Requires the
-      index to carry the ``cell_id`` data column (every manifest index
-      does); measured −40% fetch bytes at probe
-      geometry, SCALE.md r9.  On an UNSORTED at-rest layout this shape
-      is a pessimization (column-index two-pass reads with zero skips —
-      also measured), so it is opt-in, not autodetected.
+    :func:`ann_ivf_topk`.
 
     ``probes`` (optional, r15): a precomputed :func:`ivf_probes` relation
     over the same queries and centroids — see ``ann_ivf_topk(probes=)``.
@@ -835,7 +769,11 @@ def ann_ivf_index_topk_quantized(
     - ``"literal"`` (default): driver-side bounded collects pushed down
       as LITERAL predicates (``centroid_id IN probed``, ``id IN
       candidates``) — the AT-REST shape, where the literals prune
-      partitions/row groups of the parquet index at planning time.
+      partitions/row groups of the parquet index at planning time.  The
+      probe set is bounded by ``min(Q·nprobe, C)`` distinct cell ids,
+      never by data volume, and a literal ``isin`` prunes at PLANNING
+      time on any Spark version/source, where runtime DPP would leave
+      the pruning to an optimizer heuristic.
     - ``"join"`` (r15): no driver collects — the probe relation is
       broadcast-joined on ``centroid_id`` (restricting stage 1 to probed
       cells exactly as the literal does) and the float fetch is a
@@ -845,23 +783,8 @@ def ann_ivf_index_topk_quantized(
       each collect serializes a driver round-trip into query
       construction (guide §2.5 — the r14 profiler measured q_ann_family
       construction ≈ 3× its execution)."""
-    if fetch not in ("global", "cell_local"):
-        raise ValueError(f"fetch must be 'global' or 'cell_local', got {fetch!r}")
     if prune not in ("literal", "join"):
         raise ValueError(f"prune must be 'literal' or 'join', got {prune!r}")
-    if fetch == "cell_local" and "cell_id" not in index.columns:
-        raise ValueError(
-            "fetch='cell_local' needs the index's cell_id data column "
-            "(re-write the index with write_ivf_index_manifest; partition-only "
-            "cell ids cannot anchor an in-file per-cell predicate)"
-        )
-    if fetch == "cell_local" and prune == "join":
-        raise ValueError(
-            "fetch='cell_local' builds a per-cell literal disjunction — "
-            "it requires prune='literal' (the at-rest shape); "
-            "prune='join' serves in-memory indexes, whose fetch is a "
-            "semi join"
-        )
     if prune == "join":
         probe_df = (
             _check_probes(probes)
@@ -929,27 +852,15 @@ def ann_ivf_index_topk_quantized(
             "semi",
         )
     else:
-        # candidate (cell, id) pairs are bounded by Q·rerank (design
-        # parameters, never data volume — the same bounded-literal-collect
-        # pattern as the probe cells); pushing them into the float fetch
-        # lets parquet skip row groups holding no candidate, instead of
+        # candidate ids are bounded by Q·rerank (design parameters,
+        # never data volume — the same bounded-literal-collect pattern as
+        # the probe cells); pushing them into the float fetch lets
+        # parquet skip row groups holding no candidate, instead of
         # re-reading every probed cell's float column.  The checkpoint
         # above means stage-1 scoring runs ONCE, not once more per
         # downstream consumer.
-        pairs = cand.select("centroid_id", "neighbor_id").distinct().collect()
-        if fetch == "cell_local":
-            by_cell: dict = {}
-            for r in pairs:
-                by_cell.setdefault(r.centroid_id, []).append(r.neighbor_id)
-            cand_filter = F.lit(False)  # no candidates → empty fetch
-            for c, ids in sorted(by_cell.items()):
-                cand_filter = cand_filter | (
-                    (F.col("cell_id") == c) & F.col(id_col).isin(sorted(ids))
-                )
-        else:
-            cand_filter = F.col(id_col).isin(
-                sorted({r.neighbor_id for r in pairs})
-            )
+        ids = cand.select("neighbor_id").distinct().collect()
+        cand_filter = F.col(id_col).isin(sorted(r.neighbor_id for r in ids))
         floats = probed.filter(cand_filter).select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
         )
@@ -1040,8 +951,8 @@ def semantic_dedup(
     Plan shape: one broadcast assignment scan (ivf_assign), one
     equi-join on centroid_id (shuffle bounded by corpus size), one
     anti-join back.  At rest, write the assignment cell-partitioned
-    (write_ivf_index_manifest) and dedup each new batch against only its own
-    cells' files — the incremental form mirrors the LSH/fingerprint
+    (``partitionBy("centroid_id")``) and dedup each new batch against only
+    its own cells' files — the incremental form mirrors the LSH/fingerprint
     index paths.
     """
     # the assignment feeds the size gate, both self-join sides AND the
@@ -1195,8 +1106,8 @@ def embedding_incremental_pairs(
     bucket larger than ``max_bucket`` (a mode/dead-embedding bucket —
     the thing that would make one task quadratic at 100 TB) is
     SUB-BUCKETED with ``sub_bits`` more sign bits (a larger effective m
-    for that bucket only, mirroring ``ivf_split_oversized_manifest``), on BOTH
-    probe legs, so its near-dups are still caught — a near-dup pair
+    for that bucket only, the LSH form of splitting a hot IVF cell), on
+    BOTH probe legs, so its near-dups are still caught — a near-dup pair
     agrees on the extra sign bits with overwhelming probability, and a
     planted copy by construction.  A sub-bucket that is STILL oversized
     (≥ ``max_bucket`` identical sign patterns — e.g. an exact-duplicate

@@ -213,10 +213,7 @@ def upsert_parquet_sink(path: str, key: str):
 
     **Write amplification**: every batch rewrites the whole table, so
     per-batch write bytes scale with |dim| — fine for the reference's
-    master data.  Where that matters (large dims, frequent sparse
-    updates), commit through ``sources.manifest_table.manifest_upsert_sink``
-    instead (``make_star_sink(dim_layout="manifest")``): its merge
-    rewrites only the generations holding matched keys, atomically.
+    master data.
     A table this sink did not write (e.g. one carrying an extra
     partition column) fails the batch in the union before any write.
     """

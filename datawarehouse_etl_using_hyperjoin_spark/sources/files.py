@@ -143,12 +143,7 @@ def compact_table(
     root never see staging or old data as extra partitions.  (Local
     filesystem here; on HDFS use FileSystem.rename, on object stores a
     table-format commit — the pack-from-listing sizing logic is the
-    portable part.  r11: the engine's rename-FREE commit protocol —
-    fresh-path generation rewrite + atomic manifest publish, every
-    primitive a 1:1 object-store call — lives in :mod:`...manifest` and
-    is deployed for the IVF index in ``operators.ivf_store``
-    (``compact_ivf_index_manifest`` is this pass's object-store-safe
-    sibling, test-pinned bit-equal with renames banned).)
+    portable part.)
 
     Returns {"files_before", "files_after", "rows"} so callers can assert
     the compaction actually compacted.  Partitioned layouts pass

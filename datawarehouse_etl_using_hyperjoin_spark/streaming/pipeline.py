@@ -420,7 +420,6 @@ def make_quarantine_sink(
     *,
     watermark_col: str = "ts",
     lateness: str = "10 minutes",
-    side_layout: str = "partition",
 ):
     """Wrap a ``foreachBatch`` sink with a persisted late-data quarantine:
     each batch is split by :func:`quarantine_late` against the maximum
@@ -456,49 +455,9 @@ def make_quarantine_sink(
     the high watermark to None would let every late row in that batch
     bypass quarantine and double-count in SUM-merging summaries, and
     would shift the replay cutoff this docstring promises is stable.
-
-    ``side_layout`` (r11) picks the side artifacts' at-rest form:
-    ``"partition"`` (default) is the per-batch dir layout above;
-    ``"manifest"`` commits ``late`` and ``_hwm`` through the ledgered
-    generation-manifest batch table (:mod:`..sources.manifest_table`) —
-    the object-store posture: rename-free (incl. their compaction),
-    replays ledger-detected, and the O(1) cutoff read becomes a LEDGER
-    LOOKUP of batch ``N-1``'s generation (still one tiny direct-path
-    read, stream-age-independent).  Empty late splits stop being a
-    special case: a zero-row generation merges away in ordinary
-    compaction, where the partition layout needed the r10
-    empty-partition reap.  Read the artifacts back with
-    ``read_manifest_table``; compact via ``compact_quarantine`` (which
-    auto-detects the layout) or ``run_maintenance``.
     """
     _validate_lateness(lateness)
-    if side_layout not in ("partition", "manifest"):
-        raise ValueError(
-            f"side_layout must be 'partition' or 'manifest', got "
-            f"{side_layout!r}"
-        )
     hwm_dir = f"{out_dir}/_hwm"
-
-    def _prior_hwm_manifest(spark: SparkSession, batch_id: int):
-        from ..manifest import manifest_read
-        from ..sources.manifest_table import read_manifest_table
-
-        live = manifest_read(spark, hwm_dir)
-        if live is None:
-            return None  # no history yet
-        # O(1) fast path: the ledger names the previous batch's
-        # generation directly — one tiny read, whatever the stream age
-        g = live["batches"].get(str(int(batch_id) - 1))
-        if g is not None:
-            prev = spark.read.parquet(f"{hwm_dir}/data/g={int(g)}")
-            if "cum_max_ts" in prev.columns:
-                return prev.agg(F.max("cum_max_ts")).first()[0]
-        # fallback (id gap / replay): running max over every committed
-        # batch EXCEPT this one — same cutoff the fast path carries
-        prior = read_manifest_table(spark, hwm_dir).where(
-            F.col("ingest_batch") != int(batch_id)
-        )
-        return prior.agg(F.max("max_ts")).first()[0]
 
     def _prior_hwm(spark: SparkSession, batch_id: int):
         from ..fsutil import dir_exists, table_exists
@@ -530,25 +489,13 @@ def make_quarantine_sink(
         spark = batch_df.sparkSession
         batch_df.persist()
         try:
-            if side_layout == "manifest":
-                hwm = _prior_hwm_manifest(spark, batch_id)
-            else:
-                hwm = _prior_hwm(spark, batch_id)
+            hwm = _prior_hwm(spark, batch_id)
             on_time, late = quarantine_late(
                 batch_df, watermark_col, lateness, high_watermark=hwm
             )
-            if side_layout == "manifest":
-                from ..sources.manifest_table import manifest_table_append
-
-                manifest_table_append(
-                    late.withColumn("ingest_batch", F.lit(int(batch_id))),
-                    f"{out_dir}/late",
-                    batch_id,
-                )
-            else:
-                late.write.mode("overwrite").parquet(
-                    f"{out_dir}/late/ingest_batch={int(batch_id)}"
-                )
+            late.write.mode("overwrite").parquet(
+                f"{out_dir}/late/ingest_batch={int(batch_id)}"
+            )
             inner_sink(on_time, batch_id)
             own = batch_df.agg(
                 F.max(F.col(watermark_col).cast("timestamp"))
@@ -557,18 +504,9 @@ def make_quarantine_sink(
             hwm_row = spark.createDataFrame(
                 [(own, cum)], "max_ts timestamp, cum_max_ts timestamp"
             )
-            if side_layout == "manifest":
-                from ..sources.manifest_table import manifest_table_append
-
-                manifest_table_append(
-                    hwm_row.withColumn("ingest_batch", F.lit(int(batch_id))),
-                    hwm_dir,
-                    batch_id,
-                )
-            else:
-                hwm_row.write.mode("overwrite").parquet(
-                    f"{hwm_dir}/ingest_batch={int(batch_id)}"
-                )
+            hwm_row.write.mode("overwrite").parquet(
+                f"{hwm_dir}/ingest_batch={int(batch_id)}"
+            )
         finally:
             batch_df.unpersist()
 
@@ -580,11 +518,10 @@ def compact_quarantine(
     out_dir: str,
     *,
     keep_last: int = 2,
-    live_stream: bool = False,
 ) -> dict[str, dict[str, int]]:
     """Maintenance pass for the quarantine sink's side artifacts — the
     last members of the per-batch-partition family to get one
-    (``operators.corpus.compact_corpus`` docstring lists the triad): a
+    (``operators.corpus.compact_corpus`` docstring lists the others): a
     long-lived :func:`make_quarantine_sink` stream leaves one
     ``late/ingest_batch=N`` and one ``_hwm/ingest_batch=N`` partition
     dir PER MICRO-BATCH, so after 10⁵ batches both directories are 10⁵
@@ -623,28 +560,6 @@ def compact_quarantine(
     for rel in ("late", "_hwm"):
         path = f"{out_dir}/{rel}"
         if not dir_exists(spark, path):
-            continue
-        from ..manifest import manifest_read
-
-        if manifest_read(spark, path) is not None:
-            # manifest side layout (make_quarantine_sink side_layout=
-            # "manifest"): generations compact + vacuum rename-free; a
-            # zero-row late generation merges away like any other, so
-            # the partition layout's empty-dir reap has no counterpart
-            from ..sources.manifest_table import (
-                compact_manifest_table,
-                vacuum_manifest_table,
-            )
-
-            stats = compact_manifest_table(spark, path, keep_last=keep_last)
-            floor = 2 if live_stream else 1
-            stats.update(
-                vacuum_manifest_table(
-                    spark, path, keep_manifests=max(floor, keep_last),
-                    live_stream=live_stream,
-                )
-            )
-            out[rel] = stats
             continue
         if rel == "late":
             entries = list_visible(spark, path)
@@ -687,92 +602,30 @@ def compact_quarantine(
     return out
 
 
-def make_star_sink(
-    out_dir: str,
-    *,
-    fact_layout: str = "partition",
-    fact_stats_cols: list[str] | None = None,
-    dim_layout: str = "partition",
-):
+def make_star_sink(out_dir: str):
     """The ``foreachBatch`` body of :func:`run_pipeline_streaming` as a
     standalone factory: per micro-batch, keyed SCD1 upsert of the product
     dim + idempotent per-batch fact append under ``out_dir``.
 
-    The batch goes to the dim sink as is: both dim sinks collapse each
+    The batch goes to the dim sink as is: the dim sink collapses each
     key to one row by value (every non-key column, ascending), so two
     versions of one product in a batch leave the same dim row whatever
-    their row order.  With the default
-    dim layout the dim upsert and the fact append share no output, so
-    they are submitted together (``etl._run_together``) and both are
-    awaited before the sink returns or raises: the replay window is the
-    same as when they ran one after the other.  The default dim sink
-    merges each batch into the dim it wrote one batch earlier, kept in
-    memory, and reads the dim from disk only when it cannot trust that
-    copy (see :func:`..operators.upsert.upsert_parquet_sink`).
+    their row order.  The dim upsert and the fact append share no
+    output, so they are submitted together (``etl._run_together``) and
+    both are awaited before the sink returns or raises: the replay
+    window is the same as when they ran one after the other.  The dim
+    sink merges each batch into the dim it wrote one batch earlier, kept
+    in memory, and reads the dim from disk only when it cannot trust
+    that copy (see :func:`..operators.upsert.upsert_parquet_sink`).
 
     Exposed separately so restart-recovery tests can wrap the EXACT
     production sink with crash injection (a raise after the writes but
     before the checkpoint commit is precisely the replay window the
     idempotency claims cover) instead of testing a lookalike.
-
-    ``fact_layout`` (opt-in, r11) picks the fact relation's at-rest form:
-    ``"partition"`` (default) is the ``batch_id=N`` dir per micro-batch,
-    replay overwrites it; ``"manifest"`` commits through the
-    generation-manifest batch table (:mod:`..sources.manifest_table`) —
-    the object-store posture: replays are LEDGER-detected rather than
-    relying on overwrite idempotency, and the fact's compaction
-    (``compact_manifest_table``) is rename-free, where the partition
-    layout's ``compact_corpus`` path swaps directories with renames.
-    Read the fact back with ``read_manifest_table``; ``batch_id`` rides
-    as a data column with the same values the partition column carries.
-    With ``dim_layout="manifest"`` as well, the whole hot path AND the
-    fact's maintenance avoid renames end to end.
-
-    ``fact_stats_cols`` (r12, manifest layout only): record per-
-    generation min/max/null stats for the named fact columns so
-    ``read_manifest_table(where=...)`` can skip generations at read
-    time (``sources.manifest_table`` generation pruning).  Sticky once
-    set — restarts may omit it.
-
-    ``dim_layout`` (r13) picks the DIM's at-rest form the same way:
-    ``"partition"`` (default) is ``upsert_parquet_sink`` — a full
-    overwrite per batch, a delete+write that is atomic only on
-    rename-capable filesystems; ``"manifest"`` commits each batch's
-    keyed upsert through :func:`..sources.manifest_table.manifest_table_merge`
-    — CoW delete of matched keys + ledgered append in ONE conditional
-    PUT, closing the last non-atomic commit in the object-store
-    posture (VERDICT r12 #1).  That arm runs the dim upsert before the
-    fact append, one after the other.  Read the dim back with
-    ``read_manifest_table`` (key/bloom stats on ``product_id`` are
-    tracked automatically so merges prune their rewrite set, which
-    bounds per-batch dim write bytes by the matched generations).
     """
     from ..operators.upsert import upsert_parquet_sink
 
-    if fact_layout not in ("partition", "manifest"):
-        raise ValueError(
-            f"fact_layout must be 'partition' or 'manifest', got "
-            f"{fact_layout!r}"
-        )
-    if dim_layout not in ("partition", "manifest"):
-        raise ValueError(
-            f"dim_layout must be 'partition' or 'manifest', got "
-            f"{dim_layout!r}"
-        )
-    if fact_stats_cols and fact_layout != "manifest":
-        raise ValueError(
-            "fact_stats_cols needs fact_layout='manifest' — generation "
-            "stats live in the manifest commit log; the partition "
-            "layout has no manifest to record them in"
-        )
-    if dim_layout == "manifest":
-        from ..sources.manifest_table import manifest_upsert_sink
-
-        dim_sink = manifest_upsert_sink(
-            f"{out_dir}/dim_product", "product_id"
-        )
-    else:
-        dim_sink = upsert_parquet_sink(f"{out_dir}/dim_product", "product_id")
+    dim_sink = upsert_parquet_sink(f"{out_dir}/dim_product", "product_id")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -786,29 +639,11 @@ def make_star_sink(
                 "order_id", "line_number", "product_id", "quantity",
                 "product_price_num", "total_sale",
             )
-            if fact_layout == "manifest":
-                from ..sources.manifest_table import manifest_table_append
-
-                # a replayed committed batch is a ledger hit: the append
-                # is skipped, while the dim upsert, keyed-idempotent and
-                # independent of the ledger, re-runs and converges
-                fact_write = partial(
-                    manifest_table_append,
-                    fact.withColumn("batch_id", F.lit(int(batch_id))),
-                    f"{out_dir}/fact_enriched",
-                    batch_id,
-                    stats_cols=fact_stats_cols,
-                )
-            else:
-                fact_write = partial(
-                    fact.write.mode("overwrite").parquet,
-                    f"{out_dir}/fact_enriched/batch_id={batch_id}",
-                )
-            if dim_layout == "manifest":
-                dim_write()
-                fact_write()
-            else:
-                _run_together(batch_df.sparkSession, [dim_write, fact_write])
+            fact_write = partial(
+                fact.write.mode("overwrite").parquet,
+                f"{out_dir}/fact_enriched/batch_id={batch_id}",
+            )
+            _run_together(batch_df.sparkSession, [dim_write, fact_write])
         finally:
             batch_df.unpersist()
 
@@ -824,9 +659,6 @@ def run_pipeline_streaming(
     checkpoint_dir: str | None = None,
     quarantine_lateness: str | None = None,
     quarantine_watermark_col: str = "order_date",
-    fact_layout: str = "partition",
-    fact_stats_cols: list[str] | None = None,
-    dim_layout: str = "partition",
     maintenance_every: int | None = None,
     maintenance_keep_last: int = 2,
 ) -> dict[str, int]:
@@ -851,9 +683,9 @@ def run_pipeline_streaming(
     see one ``fact_enriched`` relation with ``batch_id`` as a partition
     column.  Drains synchronously; returns row counts.
 
-    Per micro-batch (default layouts) the sink runs one shuffle for the
-    dim: the batch's product rows and the current dim go through one
-    window on ``product_id`` that dedups and merges at once.  The current
+    Per micro-batch the sink runs one shuffle for the dim: the batch's
+    product rows and the current dim go through one window on
+    ``product_id`` that dedups and merges at once.  The current
     dim is the copy the sink kept in memory after its last write, used
     only while the dim directory's listing is the one recorded after that
     write; the first batch after a start, the batch after a failed one,
@@ -872,23 +704,6 @@ def run_pipeline_streaming(
     keeps the idempotent-upsert absorption unchanged.  The returned
     counts gain a ``"late"`` entry when quarantine is on.
 
-    ``fact_layout`` (opt-in, r11) — see :func:`make_star_sink`:
-    ``"manifest"`` commits the fact through the generation-manifest
-    batch table (ledger exactly-once, rename-free compaction — the
-    object-store posture); the returned counts and ``maintenance_every``
-    adapt automatically.  ``fact_stats_cols`` (r12, manifest layout
-    only) records per-generation stats for the named fact columns so
-    downstream ``read_manifest_table(where=...)`` reads skip
-    generations — see :func:`make_star_sink`.
-
-    ``dim_layout`` (opt-in, r13) — see :func:`make_star_sink`:
-    ``"manifest"`` commits the dim's keyed upsert as ONE conditional
-    PUT per batch (``manifest_table_merge`` — CoW delete of matched
-    keys + ledgered append), making EVERY commit in the pipeline
-    atomic on an object store; read the dim back with
-    ``read_manifest_table``.  The returned counts and
-    ``maintenance_every`` adapt automatically.
-
     ``maintenance_every`` (opt-in, r11) closes the operational loop the
     per-artifact compaction passes left open (each existed but had to
     be remembered separately): every N-th committed micro-batch runs
@@ -902,43 +717,25 @@ def run_pipeline_streaming(
     rewrites in place) and needs no pass.
     """
     enriched = stream_static_hyperjoin(txn_stream, master)
-    sink = make_star_sink(
-        out_dir, fact_layout=fact_layout, fact_stats_cols=fact_stats_cols,
-        dim_layout=dim_layout,
-    )
+    sink = make_star_sink(out_dir)
     if quarantine_lateness is not None:
         sink = make_quarantine_sink(
             sink,
             out_dir,
             watermark_col=quarantine_watermark_col,
             lateness=quarantine_lateness,
-            # the object-store switch flips the pipeline's artifacts
-            # together: manifest fact => manifest late/_hwm
-            side_layout=fact_layout,
         )
     if maintenance_every is not None:
         from ..maintenance import make_maintenance_sink
 
-        layout_kinds: dict[str, list[str]] = {}
-        fact_kind = (
-            "manifest_tables" if fact_layout == "manifest" else "fact_dirs"
-        )
-        layout_kinds[fact_kind] = [f"{out_dir}/fact_enriched"]
-        if dim_layout == "manifest":
-            # the manifest dim ages one generation per batch — the same
-            # compaction pass bounds it (sound: merge keeps the table
-            # key-unique at rest, so merging dirs changes no answer)
-            layout_kinds.setdefault("manifest_tables", []).append(
-                f"{out_dir}/dim_product"
-            )
         sink = make_maintenance_sink(
             sink,
             maintenance_every,
             keep_last=maintenance_keep_last,
+            fact_dirs=[f"{out_dir}/fact_enriched"],
             quarantine_dirs=(
                 [out_dir] if quarantine_lateness is not None else []
             ),
-            **layout_kinds,
         )
     writer = enriched.writeStream.outputMode("append").foreachBatch(sink)
     if checkpoint_dir:
@@ -946,22 +743,8 @@ def run_pipeline_streaming(
     q = writer.start()
     q.processAllAvailable()
     q.stop()
-    if fact_layout == "manifest":
-        from ..sources.manifest_table import read_manifest_table
-
-        fact_count = read_manifest_table(
-            spark, f"{out_dir}/fact_enriched"
-        ).count()
-    else:
-        fact_count = spark.read.parquet(f"{out_dir}/fact_enriched").count()
-    if dim_layout == "manifest":
-        from ..sources.manifest_table import read_manifest_table
-
-        dim_count = read_manifest_table(
-            spark, f"{out_dir}/dim_product"
-        ).count()
-    else:
-        dim_count = spark.read.parquet(f"{out_dir}/dim_product").count()
+    fact_count = spark.read.parquet(f"{out_dir}/fact_enriched").count()
+    dim_count = spark.read.parquet(f"{out_dir}/dim_product").count()
     counts = {
         "dim_product": dim_count,
         "fact_enriched": fact_count,
@@ -972,39 +755,17 @@ def run_pipeline_streaming(
         from ..fsutil import dir_exists
 
         late_dir = f"{out_dir}/late"
-        if fact_layout == "manifest":
-            # mirror the partition branch's guard: a stream where every
-            # batch's late split was empty can leave only footerless
-            # generation dirs (schema inference fails) — and a stream of
-            # zero batches leaves no manifest at all (ValueError).  Both
-            # mean "no late rows", not a failure.
-            try:
-                counts["late"] = read_manifest_table(spark, late_dir).count()
-            except ValueError as exc:
-                # ONLY the two "no late rows" shapes — a wrong-table-kind
-                # manifest at this root is corruption and must surface
-                if (
-                    "no table manifest" not in str(exc)
-                    and "lists no generations" not in str(exc)
-                ):
-                    raise
-                counts["late"] = 0
-            except AnalysisException as exc:
-                if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
-                    raise
-                counts["late"] = 0
-        else:
-            try:
-                counts["late"] = (
-                    spark.read.parquet(late_dir).count()
-                    if dir_exists(spark, late_dir)
-                    else 0
-                )
-            except AnalysisException:
-                # dir exists but holds no parquet footers: every batch's
-                # late split was empty (empty-DF overwrites write only
-                # _SUCCESS)
-                counts["late"] = 0
+        try:
+            counts["late"] = (
+                spark.read.parquet(late_dir).count()
+                if dir_exists(spark, late_dir)
+                else 0
+            )
+        except AnalysisException:
+            # dir exists but holds no parquet footers: every batch's
+            # late split was empty (empty-DF overwrites write only
+            # _SUCCESS)
+            counts["late"] = 0
     return counts
 
 

@@ -768,9 +768,9 @@ def test_corpus_sink_id_uniqueness_within_and_across_batches(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {idx}")
 
 
-def test_corpus_layout_guard_connect_fallback(spark, tmp_path, monkeypatch):
+def test_corpus_batch_dir_guard_connect_fallback(spark, tmp_path, monkeypatch):
     """r11 (ADVICE): under Spark Connect (list_visible -> None) the
-    corpus layout guard used to silently no-op, so a pre-r7 flat corpus
+    corpus batch-dir guard used to silently no-op, so a pre-r7 flat corpus
     dir could be mixed with ingest_batch=N partitions — exactly the
     misread the guard exists to fail loudly on.  The Connect fallback
     schema-probes the dir instead: a flat layout (no ingest_batch
@@ -822,20 +822,17 @@ def test_corpus_layout_guard_connect_fallback(spark, tmp_path, monkeypatch):
 @pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
 def test_corpus_sink_doc_metadata_dim(spark, tmp_path):
     """r14 (VERDICT r13 #5): ``doc_meta_dir=`` threads the SAME
-    ``manifest_upsert_sink`` the star dim uses through the corpus
+    ``upsert_parquet_sink`` the star dim uses through the corpus
     ingest — one keyed merge per batch recording every quality-gated
     doc's metrics and fate.  Pinned: statuses (kept / duplicate_text /
     duplicate_id / near_dup), key-uniqueness at rest, a re-sent
     previously-dropped id UPDATING its row (the merge story — the
-    corpus itself stays first-write-wins), and replay exactly-once via
-    the dim's own ledger."""
+    corpus itself stays first-write-wins), and a replayed batch
+    converging to the same dim."""
     import uuid as _uuid
 
     from datawarehouse_etl_using_hyperjoin_spark.operators.corpus import (
         make_corpus_ingest_sink,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        read_manifest_table,
     )
 
     TEXT_A = (
@@ -867,7 +864,7 @@ def test_corpus_sink_doc_metadata_dim(spark, tmp_path):
     def dim():
         return {
             r.doc_id: (r.status, r.last_ingest_batch)
-            for r in read_manifest_table(spark, meta_dir).collect()
+            for r in spark.read.parquet(meta_dir).collect()
         }
 
     try:
@@ -885,8 +882,8 @@ def test_corpus_sink_doc_metadata_dim(spark, tmp_path):
         assert got[5] == ("kept", 1)
         assert got[1] == ("kept", 0)          # untouched rows persist
 
-        # replay batch 1: corpus, index AND dim all converge (the dim's
-        # merge is a ledger no-op)
+        # replay batch 1: corpus, index AND dim all converge (the keyed
+        # merge lands the same rows again)
         before = dim()
         sink(docs([(2, "changed text for two"), (4, NEAR_A),
                    (5, TEXT_C)]), 1)
@@ -899,7 +896,7 @@ def test_corpus_sink_doc_metadata_dim(spark, tmp_path):
         got = dim()
         assert got[3] == ("kept", 2)
         # dim is key-unique at rest; corpus stays first-write-wins
-        t = read_manifest_table(spark, meta_dir)
+        t = spark.read.parquet(meta_dir)
         assert t.count() == t.select("doc_id").distinct().count() == 5
         corpus_ids = sorted(
             r.doc_id for r in spark.read.parquet(out).collect()
@@ -920,50 +917,53 @@ def test_corpus_sink_doc_meta_crash_between_commits_converges(
     """Crash AFTER the corpus/index writes but BEFORE the dim merge:
     the replayed batch converges — corpus partition overwrite is
     byte-idempotent, the index upsert is keyed by batch, and the dim
-    merge commits on the retry (its ledger had no entry)."""
+    merge commits on the retry."""
+    import os
     import uuid as _uuid
 
     import pytest
 
+    from datawarehouse_etl_using_hyperjoin_spark.operators import upsert
     from datawarehouse_etl_using_hyperjoin_spark.operators.corpus import (
         make_corpus_ingest_sink,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources import (
-        manifest_table as mt,
     )
 
     out = str(tmp_path / "corpus")
     meta_dir = str(tmp_path / "doc_meta")
     idx = f"crash_idx_{_uuid.uuid4().hex[:8]}"
-    sink = make_corpus_ingest_sink(
-        out, idx, min_quality=0.0, min_tokens=1, doc_meta_dir=meta_dir
-    )
     batch = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta"),
          (2, "one two three four five six")],
         "doc_id long, text string",
     )
-    real = mt.manifest_table_merge
+    real = upsert.upsert_parquet_sink
     calls = {"n": 0}
 
-    def crashing(*a, **k):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("crash before dim publish")
-        return real(*a, **k)
+    def crashing_factory(path, key):
+        inner = real(path, key)
+
+        def dim_sink(df, batch_id):
+            calls["n"] += 1
+            if calls["n"] == 1:
+                raise RuntimeError("crash before dim publish")
+            return inner(df, batch_id)
+
+        return dim_sink
 
     try:
         with monkeypatch.context() as mp:
-            mp.setattr(mt, "manifest_table_merge", crashing)
-            with pytest.raises(RuntimeError, match="crash before dim"):
-                sink(batch, 0)
-            # corpus landed, dim did not — the crash window
-            assert spark.read.parquet(out).count() == 2
-            with pytest.raises(ValueError):
-                mt.read_manifest_table(spark, meta_dir)
-            sink(batch, 0)  # replay converges everywhere
+            mp.setattr(upsert, "upsert_parquet_sink", crashing_factory)
+            sink = make_corpus_ingest_sink(
+                out, idx, min_quality=0.0, min_tokens=1, doc_meta_dir=meta_dir
+            )
+        with pytest.raises(RuntimeError, match="crash before dim"):
+            sink(batch, 0)
+        # corpus landed, dim did not — the crash window
         assert spark.read.parquet(out).count() == 2
-        t = mt.read_manifest_table(spark, meta_dir)
+        assert not os.path.exists(meta_dir)
+        sink(batch, 0)  # replay converges everywhere
+        assert spark.read.parquet(out).count() == 2
+        t = spark.read.parquet(meta_dir)
         assert sorted(
             (r.doc_id, r.status) for r in t.collect()
         ) == [(1, "kept"), (2, "kept")]

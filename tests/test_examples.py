@@ -29,9 +29,9 @@ def _run_example(module_name: str, monkeypatch, spark):
         spark.sparkContext.setLogLevel("WARN")
 
 
-# data_selection_demo and object_store_demo call spark.stop() as
-# standalone scripts should — running them in-process would kill the
-# shared test session, so they stay CLI-only
+# data_selection_demo calls spark.stop() as a standalone script should —
+# running it in-process would kill the shared test session, so it stays
+# CLI-only
 @pytest.mark.parametrize(
     "module_name",
     [

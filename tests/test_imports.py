@@ -58,11 +58,11 @@ def _package_imports(path: str):
 
 
 def test_every_package_import_resolves():
-    checked, missing = 0, []
+    checked, missing = set(), []
     for path in _sources():
         for module, name, line in _package_imports(path):
             where = f"{os.path.relpath(path, ROOT)}:{line}"
-            checked += 1
+            checked.add(os.path.relpath(path, ROOT).split(os.sep)[0])
             try:
                 mod = importlib.import_module(module)
             except ImportError as exc:
@@ -76,5 +76,6 @@ def test_every_package_import_resolves():
                 found = False
             if not found:
                 missing.append(f"{where}: {module}.{name}")
-    assert checked > 1000
+    # the walk is not vacuous: every scanned tree and file imports the package
+    assert checked == set(TREES) | set(FILES), checked
     assert not missing, "\n".join(missing)

@@ -1,11 +1,11 @@
 """One-call / scheduled maintenance over the at-rest artifact families.
 
-r11 (VERDICT r10 "What's wrong" #3): the four compaction passes existed
-but were four separate manual calls.  These tests pin the two closures:
+r11 (VERDICT r10 "What's wrong" #3): the compaction passes existed but
+were separate manual calls.  These tests pin the two closures:
 
 * ``run_maintenance`` — one call compacts a declared layout spanning all
   artifact families (corpus dir, star fact dir, bucketed index table,
-  manifest IVF index, quarantine side dirs), rows preserved everywhere;
+  quarantine side dirs), rows preserved everywhere;
 * ``run_pipeline_streaming(maintenance_every=N)`` — a long-lived stream
   keeps its own partition-dir counts bounded WITHOUT any manual call,
   and the mid-stream passes change no query-visible values;
@@ -45,11 +45,6 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
 ):
     """One declared layout, one call: every family compacts (partition
     counts drop to merged+kept), and every family's rows survive."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_append_manifest,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
         upsert_embedding_index_batch,
     )
@@ -86,18 +81,6 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
         )
         upsert_embedding_index_batch(vecs, table, b, n_buckets=4)
 
-    # IVF index: initial write + two appends = 3 generations per cell
-    ivf_dir = f"{root}/ivf"
-    for n in range(3):
-        vecs = spark.createDataFrame(
-            [(n * 100 + i, [float(i), 1.0]) for i in range(9)],
-            "vec_id long, embedding array<double>",
-        )
-        if n == 0:
-            write_ivf_index_manifest(vecs, ivf_dir, n_centroids=3)
-        else:
-            ivf_append_manifest(vecs, ivf_dir)
-
     # quarantine side dirs: drive the real sink for 5 batches
     q_dir = f"{root}/qdir"
     seen = []
@@ -119,7 +102,6 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
         "corpus": spark.read.parquet(corpus_dir).count(),
         "fact": spark.read.parquet(fact_dir).count(),
         "lsh": spark.table(table).count(),
-        "ivf": read_ivf_index_manifest(spark, ivf_dir).count(),
     }
     try:
         stats = run_maintenance(
@@ -127,27 +109,22 @@ def test_run_maintenance_one_call_covers_every_artifact_family(
             corpus_dirs=[corpus_dir],
             fact_dirs=[fact_dir],
             lsh_tables=[table],
-            ivf_manifest_indexes=[ivf_dir],
             quarantine_dirs=[q_dir],
             keep_last=1,
         )
         assert set(stats) == {
             f"corpus:{corpus_dir}", f"fact:{fact_dir}", f"lsh:{table}",
-            f"ivf_manifest:{ivf_dir}", f"quarantine:{q_dir}",
+            f"quarantine:{q_dir}",
         }
         # rows preserved everywhere
         assert spark.read.parquet(corpus_dir).count() == before["corpus"]
         assert spark.read.parquet(fact_dir).count() == before["fact"]
         assert spark.table(table).count() == before["lsh"]
-        assert read_ivf_index_manifest(spark, ivf_dir).count() == before["ivf"]
         # history merged: 6 → merged(1) + kept(1); 5 → 2; 4 → 2
         n_part = lambda df, c: df.select(c).distinct().count()  # noqa: E731
         assert n_part(spark.read.parquet(corpus_dir), "ingest_batch") == 2
         assert n_part(spark.read.parquet(fact_dir), "batch_id") == 2
         assert n_part(spark.table(table), "ingest_batch") == 2
-        assert stats[f"ivf_manifest:{ivf_dir}"]["files_after"] < stats[
-            f"ivf_manifest:{ivf_dir}"
-        ]["files_before"]
         # hwm partitions merged too (5 → 2)
         assert n_part(spark.read.parquet(f"{q_dir}/_hwm"), "ingest_batch") == 2
     finally:
@@ -264,202 +241,10 @@ def test_maintained_sink_replay_converges(spark, sf_dir, tmp_path_factory):
     assert run(replay_batch=3) == clean
 
 
-def test_run_maintenance_covers_the_manifest_ivf_store(
-    spark, sf_dir, tmp_path
-):
-    """The cadence hook reaches the manifest-backed IVF index too:
-    compaction collapses its per-append generations and vacuum reclaims
-    the superseded dirs, rows and serving state unchanged."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_append_manifest,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        load_table,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    root = str(tmp_path / "ivf_m")
-    write_ivf_index_manifest(em.filter(F.col("vec_id") % 3 == 0), root,
-                             n_centroids=2)
-    for rem in (1, 2):
-        ivf_append_manifest(em.filter(F.col("vec_id") % 3 == rem), root)
-    n = em.count()
-    before = read_ivf_index_manifest(spark, root)
-    assert before.count() == n
-    files_before = len(before.inputFiles())
-    # keep_last=1: retain only the newest snapshot, so the vacuum half
-    # actually reclaims the superseded generations (r11 snapshot-aware
-    # retention keeps every RETAINED manifest's generations readable —
-    # with keep_last=2 the pre-compaction snapshot would survive intact)
-    stats = run_maintenance(spark, ivf_manifest_indexes=[root], keep_last=1)
-    key = f"ivf_manifest:{root}"
-    assert stats[key]["rows"] == n
-    assert stats[key]["files_after"] < files_before
-    assert stats[key]["data_dirs_deleted"] >= 1
-    after = read_ivf_index_manifest(spark, root)
-    assert after.count() == n
-    assert after.select("vec_id").distinct().count() == n
-
-
-@pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_pipeline_manifest_fact_layout_parity_and_bounded_generations(
-    spark, sf_dir, eight_file_stream_dir, tmp_path_factory
-):
-    """run_pipeline_streaming(fact_layout='manifest'): identical fact
-    content and dim state to the partition layout over the same 8-batch
-    stream, with the fact committed through the ledgered manifest table;
-    maintenance_every compacts GENERATIONS (rename-free) instead of
-    partition dirs, and the count stays bounded in stream age."""
-    from datawarehouse_etl_using_hyperjoin_spark.manifest import manifest_read
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        read_manifest_table,
-    )
-
-    master = master_data(spark, sf_dir)
-    ref_out = str(tmp_path_factory.mktemp("fact_ref"))
-    ref = run_pipeline_streaming(
-        spark,
-        read_parquet_stream(spark, eight_file_stream_dir, max_files_per_trigger=1),
-        master,
-        ref_out,
-        checkpoint_dir=ref_out + "/_ckpt",
-    )
-    out = str(tmp_path_factory.mktemp("fact_man"))
-    counts = run_pipeline_streaming(
-        spark,
-        read_parquet_stream(spark, eight_file_stream_dir, max_files_per_trigger=1),
-        master,
-        out,
-        checkpoint_dir=out + "/_ckpt",
-        fact_layout="manifest",
-        maintenance_every=2,
-        maintenance_keep_last=1,
-    )
-    assert counts == ref
-    ref_fact = spark.read.parquet(f"{ref_out}/fact_enriched")
-    fact = read_manifest_table(spark, f"{out}/fact_enriched")
-    data_cols = [c for c in ref_fact.columns if c != "batch_id"]
-    assert fact.select(data_cols).exceptAll(ref_fact.select(data_cols)).count() == 0
-    assert ref_fact.select(data_cols).exceptAll(fact.select(data_cols)).count() == 0
-    assert _decimal_sum(fact) == _decimal_sum(ref_fact)
-    # batch_id rides as a data column with the same values
-    assert {
-        int(r[0]) for r in ref_fact.select("batch_id").distinct().collect()
-    } == set(range(8))
-    assert fact.select("batch_id").distinct().count() == 8
-    # generations bounded by the cadence: merged(1) + kept(1) + ≤2 new
-    live = manifest_read(spark, f"{out}/fact_enriched")
-    assert len(live["gens"]) <= 4
-    # the ledger recorded every micro-batch exactly once
-    assert set(live["batches"]) == {str(b) for b in range(8)}
-
-
-@pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_pipeline_manifest_quarantine_parity_and_compaction(
-    spark, sf_dir, tmp_path_factory
-):
-    """fact_layout='manifest' flips the quarantine side artifacts to the
-    ledgered manifest layout too: identical straggler diversion to the
-    partition layout on the same stream (late ids equal, fact excludes
-    them), the O(1) cutoff read rides the ledger, and compact_quarantine
-    auto-detects the layout — zero-row late generations merge away with
-    no special empty-dir reap."""
-    import time
-
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        read_manifest_table,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        compact_quarantine,
-    )
-
-    txns = transactions(spark, sf_dir)
-    recent = txns.filter(F.year("order_date") >= 1998)
-    old = txns.filter(F.year("order_date") <= 1996).limit(7)
-    n_old = old.count()
-    root = str(tmp_path_factory.mktemp("mq_stream"))
-
-    def _append(df, tag):
-        import os as _os
-
-        sub = f"{root}/_{tag}"
-        df.coalesce(1).write.parquet(sub)
-        for f in _os.listdir(sub):
-            if f.endswith(".parquet"):
-                _os.rename(f"{sub}/{f}", f"{root}/{tag}_{f}")
-
-    # 3 on-time batches in increasing event-time ranges (each batch's
-    # min is within the lateness window of the prior max, so nothing
-    # on-time quarantines) then a straggler batch: several hwm
-    # generations, deterministic late set
-    parts = [
-        recent.filter(F.year("order_date") == 1998),
-        recent.filter(F.year("order_date") == 1999),
-        recent.filter(F.year("order_date") >= 2000),
-    ]
-    for i, p in enumerate(parts):
-        _append(p, f"b{i}")
-        time.sleep(1.1)
-    _append(old, "b3")
-
-    results = {}
-    for layout in ("partition", "manifest"):
-        out = str(tmp_path_factory.mktemp(f"mq_{layout}"))
-        counts = run_pipeline_streaming(
-            spark,
-            read_parquet_stream(spark, root, max_files_per_trigger=1),
-            master_data(spark, sf_dir),
-            out,
-            checkpoint_dir=out + "/_ckpt",
-            quarantine_lateness="365 days",
-            fact_layout=layout,
-        )
-        if layout == "manifest":
-            late = read_manifest_table(spark, f"{out}/late")
-        else:
-            late = spark.read.parquet(f"{out}/late")
-        results[layout] = (
-            counts,
-            {(r.order_id, r.line_number) for r in late.collect()},
-            out,
-        )
-    p_counts, p_late, _ = results["partition"]
-    m_counts, m_late, m_out = results["manifest"]
-    assert m_counts == p_counts
-    assert m_late == p_late
-    assert m_counts["late"] == n_old
-    # hwm rode the ledger: one committed batch per micro-batch
-    from datawarehouse_etl_using_hyperjoin_spark.manifest import manifest_read
-
-    hwm_live = manifest_read(spark, f"{m_out}/_hwm")
-    assert set(hwm_live["batches"]) == {"0", "1", "2", "3"}
-    # auto-detected manifest compaction bounds generations (incl. the
-    # zero-row late generations of the on-time batches)
-    stats = compact_quarantine(spark, m_out, keep_last=1)
-    assert stats["late"]["gens_after"] < stats["late"]["gens_before"]
-    assert stats["_hwm"]["gens_after"] < stats["_hwm"]["gens_before"]
-    assert read_manifest_table(spark, f"{m_out}/late").count() == n_old
-    assert {
-        (r.order_id, r.line_number)
-        for r in read_manifest_table(spark, f"{m_out}/late").collect()
-    } == p_late
-
-
-def test_manifest_layout_all_empty_late_reports_zero(
-    spark, sf_dir, tmp_path_factory
-):
-    """ADVICE r11 (low): with fact_layout='manifest' + quarantine, a
-    stream where EVERY batch's late split is empty (the common
-    no-straggler case) must report late=0 like the partition branch —
-    not raise on reading the all-empty late table.  With the r12
-    schema-in-manifest the generations are readable even footerless; the
-    guard additionally covers legacy tables and zero-batch streams."""
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        read_manifest_table,
-    )
-
+def test_pipeline_all_empty_late_reports_zero(spark, sf_dir, tmp_path_factory):
+    """ADVICE r11 (low): with quarantine on, a stream where EVERY
+    batch's late split is empty (the common no-straggler case) must
+    report late=0 — not raise on reading the all-empty late dirs."""
     stream_dir = str(tmp_path_factory.mktemp("noq"))
     transactions(spark, sf_dir).limit(200).repartition(2).write.mode(
         "overwrite"
@@ -472,9 +257,6 @@ def test_manifest_layout_all_empty_late_reports_zero(
         out,
         checkpoint_dir=out + "/_ckpt",
         quarantine_lateness="3650 days",  # nothing is ever late
-        fact_layout="manifest",
     )
     assert counts["late"] == 0
     assert counts["fact_enriched"] == 200
-    # the late table exists, with the schema recorded, and is empty
-    assert read_manifest_table(spark, f"{out}/late").count() == 0

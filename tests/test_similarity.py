@@ -3,7 +3,6 @@ bucketed ANN consistency, near-dup pairs."""
 
 from __future__ import annotations
 
-import pytest
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -181,38 +180,66 @@ def test_ivf_recall_grows_with_nprobe(spark, sf_dir):
     assert r16 == 1.0
 
 
+def _write_cell_index(vectors, centroids, path):
+    """The at-rest IVF index: the cell assignment of ``vectors`` (with
+    any payload columns beside the vector, e.g. int8 codes) written with
+    ``partitionBy("centroid_id")``, rows sorted by (cell, id) within each
+    file.  Returns the index read back."""
+    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
+        ivf_assign,
+    )
+
+    assigned = ivf_assign(vectors, centroids)
+    extra = [c for c in vectors.columns if c not in assigned.columns]
+    if extra:
+        assigned = assigned.join(vectors.select("vec_id", *extra), "vec_id")
+    (
+        assigned.withColumn("centroid_id", F.col("centroid_id").cast("long"))
+        .sortWithinPartitions("centroid_id", "vec_id")
+        .write.partitionBy("centroid_id")
+        .parquet(path)
+    )
+    return vectors.sparkSession.read.parquet(path)
+
+
 def test_ivf_index_search_matches_on_the_fly_and_prunes_partitions(
     spark, sf_dir, tmp_path
 ):
     """The at-rest IVF index must (a) return bit-identical results to the
-    on-the-fly ann_ivf_topk under the same centroids, and (b) prune
-    non-probed cells from the file listing (PartitionFilters + fewer
-    input files than the full index)."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
+    on-the-fly ann_ivf_topk under the same centroids (literal-pruned
+    serving, reranked over the whole probed pool), as does the roster's
+    in-memory form (prune="join"), and (b) prune non-probed cells from
+    the file listing (PartitionFilters + fewer input files than the full
+    index)."""
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
+        ann_ivf_index_topk_quantized,
         ann_ivf_topk,
+        ivf_assign,
         ivf_seed_centroids,
+        quantize_embeddings,
     )
     from datawarehouse_etl_using_hyperjoin_spark.plans.inspect import plan_string
 
     em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 16)
+    cent = ivf_seed_centroids(em, 16).localCheckpoint(eager=True)
     path = str(tmp_path / "ivf_index")
-    write_ivf_index_manifest(em, path, centroids=cent)
-    index = read_ivf_index_manifest(spark, path)
+    index = _write_cell_index(quantize_embeddings(em), cent, path)
 
     q = em.filter(F.col("vec_id") < 8)
     k, nprobe = 3, 4
-    via_index = ann_ivf_index_topk(q, index, cent, k=k, nprobe=nprobe)
+    via_index = ann_ivf_index_topk_quantized(
+        q, index, cent, k=k, nprobe=nprobe, rerank=10**6
+    )
+    in_memory = ann_ivf_index_topk_quantized(
+        q, quantize_embeddings(ivf_assign(em, cent)), cent, k=k,
+        nprobe=nprobe, rerank=10**6, prune="join",
+    )
     on_the_fly = ann_ivf_topk(q, em, cent, k=k, nprobe=nprobe)
     key = lambda r: (r.query_id, r.rank)
     a = {key(r): (r.neighbor_id, r.centroid_id, round(r.cos, 12)) for r in via_index.collect()}
     b = {key(r): (r.neighbor_id, r.centroid_id, round(r.cos, 12)) for r in on_the_fly.collect()}
-    assert a == b and len(a) == 8 * k
+    c = {key(r): (r.neighbor_id, r.centroid_id, round(r.cos, 12)) for r in in_memory.collect()}
+    assert a == b == c and len(a) == 8 * k
 
     # pruning evidence: the probed-cell filter reaches PartitionFilters…
     pruned = index.filter(F.col("centroid_id").isin([0, 1, 2]))
@@ -230,51 +257,6 @@ def test_ivf_index_search_matches_on_the_fly_and_prunes_partitions(
     }
     assert len(read_files) == 3  # one file per probed cell at this size
     assert len(read_files) < len(index.inputFiles())
-
-
-def test_ivf_append_is_incremental_and_equals_batch_rebuild(spark, sf_dir, tmp_path):
-    """ivf_append_manifest lands a new batch inside the existing cells
-    (history untouched) and a search over the appended index equals one
-    over a full rebuild of the union."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_append_manifest,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        ivf_seed_centroids,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    base = em.filter(F.col("vec_id") < 400)
-    batch = em.filter(F.col("vec_id") >= 400)
-    cent = ivf_seed_centroids(em, 16)
-
-    inc_path = str(tmp_path / "ivf_inc")
-    write_ivf_index_manifest(base, inc_path, centroids=cent)
-    base_files = set(read_ivf_index_manifest(spark, inc_path).inputFiles())
-    ivf_append_manifest(batch, inc_path)
-    appended = read_ivf_index_manifest(spark, inc_path)
-    # append-only: every pre-append file is still present (history not rewritten)
-    assert base_files <= set(appended.inputFiles())
-    assert appended.count() == em.count()
-
-    full_path = str(tmp_path / "ivf_full")
-    write_ivf_index_manifest(em, full_path, centroids=cent)
-    q = em.filter(F.col("vec_id") < 8)
-    key = lambda r: (r.query_id, r.rank)
-    a = {
-        key(r): (r.neighbor_id, round(r.cos, 12))
-        for r in ann_ivf_index_topk(q, appended, cent, k=3, nprobe=4).collect()
-    }
-    b = {
-        key(r): (r.neighbor_id, round(r.cos, 12))
-        for r in ann_ivf_index_topk(
-            q, read_ivf_index_manifest(spark, full_path), cent, k=3, nprobe=4
-        ).collect()
-    }
-    assert a == b
 
 
 def test_quantize_embeddings_roundtrip_error_bounded(spark, sf_dir):
@@ -390,16 +372,12 @@ def test_quantized_ivf_index_serving_prunes_floats_and_reranks_exactly(
     index selects ONLY (id, codes, scale) — the float embedding column's
     pages are never read even though the index stores it for reranking.
     (b) Reranking over the ENTIRE probed candidate pool reproduces the
-    float at-rest path bit-exactly (same cells, same floats, same exact
+    float IVF search bit-exactly (same cells, same floats, same exact
     cosine), so the cheap first stage loses nothing that the rerank
     budget covers."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
     from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
         ann_ivf_index_topk_quantized,
+        ann_ivf_topk,
         ivf_seed_centroids,
         quantize_embeddings,
     )
@@ -408,8 +386,7 @@ def test_quantized_ivf_index_serving_prunes_floats_and_reranks_exactly(
     em = load_table(spark, sf_dir, "embeddings")
     cent = ivf_seed_centroids(em, 16).localCheckpoint(eager=True)
     qpath = str(tmp_path / "ivf_quant")
-    write_ivf_index_manifest(quantize_embeddings(em), qpath, centroids=cent)
-    idx_q = read_ivf_index_manifest(spark, qpath)
+    idx_q = _write_cell_index(quantize_embeddings(em), cent, qpath)
     q = em.filter(F.col("vec_id") < 8)
 
     # (a) codes-only serving never reads the float column of the index
@@ -428,13 +405,10 @@ def test_quantized_ivf_index_serving_prunes_floats_and_reranks_exactly(
     ), plan
     assert codes.count() == 8 * 5
 
-    # (b) full-pool rerank == float at-rest serving, bit-exact
-    fpath = str(tmp_path / "ivf_float")
-    write_ivf_index_manifest(em, fpath, centroids=cent)
-    idx_f = read_ivf_index_manifest(spark, fpath)
+    # (b) full-pool rerank == float IVF search, bit-exact
     want = {
         (r.query_id, r.rank): (r.neighbor_id, r.centroid_id, r.cos)
-        for r in ann_ivf_index_topk(q, idx_f, cent, k=5, nprobe=4).collect()
+        for r in ann_ivf_topk(q, em, cent, k=5, nprobe=4).collect()
     }
     got = {
         (r.query_id, r.rank): (r.neighbor_id, r.centroid_id, r.cos)
@@ -455,363 +429,3 @@ def test_quantized_ivf_index_serving_prunes_floats_and_reranks_exactly(
         1 for key, nb in small.items() if want.get(key, (None,))[0] == nb
     )
     assert overlap / len(want) >= 0.8, overlap
-
-
-def test_quantized_rerank_cell_local_fetch(spark, sf_dir, tmp_path):
-    """r9: the per-cell candidate-fetch predicate (fetch='cell_local') —
-    the shape whose row-group skipping actually fires on an id-sorted
-    at-rest index (a GLOBAL candidate list cannot skip sorted row groups
-    at all: every ~rows·C-wide id range contains some other cell's
-    candidate; measured 2.5x fetch-byte reduction, SCALE.md r9).
-    (a) results are bit-identical to the global fetch; (b) the fetch
-    filter anchors on the cell_id DATA column the index duplicates from
-    the partition value; (c) cell_local without that column (in-memory
-    index relation) and unknown fetch values fail loudly at
-    construction."""
-    import pytest
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk_quantized,
-        ivf_assign,
-        ivf_seed_centroids,
-        quantize_embeddings,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.plans.inspect import plan_string
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 16).localCheckpoint(eager=True)
-    quant = quantize_embeddings(ivf_assign(em, cent))
-    qpath = str(tmp_path / "ivf_quant_cl")
-    write_ivf_index_manifest(
-        quantize_embeddings(em), qpath, centroids=cent, sort_by="vec_id"
-    )
-    idx = read_ivf_index_manifest(spark, qpath)
-    assert "cell_id" in idx.columns  # the r9 data-column duplicate
-    q = em.filter(F.col("vec_id") < 8)
-
-    key = lambda r: (r.query_id, r.rank)
-    want = {key(r): (r.neighbor_id, round(r.cos, 9)) for r in
-            ann_ivf_index_topk_quantized(
-                q, idx, cent, k=5, nprobe=4, rerank=20).collect()}
-    cl = ann_ivf_index_topk_quantized(
-        q, idx, cent, k=5, nprobe=4, rerank=20, fetch="cell_local"
-    )
-    got = {key(r): (r.neighbor_id, round(r.cos, 9)) for r in cl.collect()}
-    assert got == want and len(got) == 8 * 5
-    # the per-cell predicate reached the float-fetch scan
-    plan = plan_string(cl)
-    assert any(
-        "cell_id" in l and "PushedFilters" in l for l in plan.splitlines()
-    ), plan
-
-    # in-memory index (no cell_id column) must refuse cell_local
-    with pytest.raises(ValueError, match="cell_id"):
-        ann_ivf_index_topk_quantized(
-            q, quant, cent, k=5, nprobe=4, rerank=20, fetch="cell_local"
-        )
-    with pytest.raises(ValueError, match="fetch"):
-        ann_ivf_index_topk_quantized(q, idx, cent, k=5, fetch="bogus")
-
-
-def test_ivf_split_oversized_rebalances_hot_cell(spark, sf_dir, tmp_path):
-    """r9: hot-cell mitigation — the vector-index analogue of salted-join
-    skew handling.  A 2-centroid quantizer makes one cell hold most of
-    the corpus; splitting it (a) preserves the vector set exactly (no
-    loss, no dup), (b) yields subcells strictly smaller than the parent
-    that sum to it, (c) retires the parent centroid id and appends fresh
-    non-colliding subcell ids with the input relation's array type, and
-    (d) leaves full-pool search results IDENTICAL (probing all cells is
-    cell-structure-invariant), while small-nprobe probe cost now scales
-    with subcell sizes.  A no-op pass (nothing oversized) leaves the
-    quantizer unchanged."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_split_oversized_manifest,
-        read_ivf_centroids,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        ivf_seed_centroids,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 2).localCheckpoint(eager=True)
-    path = str(tmp_path / "ivf_hot")
-    write_ivf_index_manifest(em, path, centroids=cent, sort_by="vec_id")
-    sizes = {
-        int(r.centroid_id): r["count"]
-        for r in read_ivf_index_manifest(spark, path)
-        .groupBy("centroid_id").count().collect()
-    }
-    hot, n_hot = max(sizes.items(), key=lambda kv: kv[1])
-    n_total = em.count()
-    q = em.filter(F.col("vec_id") < 8)
-
-    def full_pool(c):
-        n_cells = c.count()
-        return {
-            (r.query_id, r.rank): r.neighbor_id
-            for r in ann_ivf_index_topk(
-                q, read_ivf_index_manifest(spark, path), c, k=3, nprobe=n_cells
-            ).collect()
-        }
-
-    want = full_pool(cent)
-    max_rows = n_hot - 1  # only the hot cell is oversized
-    assert ivf_split_oversized_manifest(spark, path, max_rows=max_rows, k=2) == [hot]
-    new_cent = read_ivf_centroids(spark, path)
-    idx = read_ivf_index_manifest(spark, path)
-    # (a) the vector set is exactly preserved
-    assert idx.count() == n_total
-    assert idx.select("vec_id").distinct().count() == n_total
-    # (b)+(c) parent retired, subcells smaller and sum to the parent
-    new_sizes = {
-        int(r.centroid_id): r["count"]
-        for r in idx.groupBy("centroid_id").count().collect()
-    }
-    assert hot not in new_sizes
-    subcells = set(new_sizes) - set(sizes)
-    assert len(subcells) == 2
-    assert all(new_sizes[s] < n_hot for s in subcells)
-    assert sum(new_sizes[s] for s in subcells) == n_hot
-    cent_ids = {int(r.centroid_id) for r in new_cent.collect()}
-    assert cent_ids == (set(sizes) - {hot}) | subcells
-    assert (
-        new_cent.schema["centroid"].dataType
-        == cent.schema["centroid"].dataType
-    )
-    # cell_id data column kept consistent on the new partitions
-    assert idx.filter(
-        F.col("centroid_id").isin([int(s) for s in subcells])
-        & (F.col("cell_id") != F.col("centroid_id"))
-    ).count() == 0
-    # (d) full-pool search is cell-structure-invariant
-    assert full_pool(new_cent) == want
-    # no-op pass: nothing oversized anymore at this threshold -> the
-    # quantizer is unchanged
-    assert ivf_split_oversized_manifest(spark, path, max_rows=n_hot, k=2) == []
-    again = read_ivf_centroids(spark, path)
-    assert {int(r.centroid_id) for r in again.collect()} == cent_ids
-
-    # the QUANTIZED at-rest index (the 100 TB serving shape) splits the
-    # same way: codes survive the per-cell rewrite and cell_local
-    # serving over the split index still bit-matches the global fetch
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk_quantized,
-        quantize_embeddings,
-    )
-
-    qpath = str(tmp_path / "ivf_hot_quant")
-    write_ivf_index_manifest(
-        quantize_embeddings(em), qpath, centroids=cent, sort_by="vec_id"
-    )
-    ivf_split_oversized_manifest(spark, qpath, max_rows=max_rows, k=2)
-    nc2 = read_ivf_centroids(spark, qpath)
-    qidx = read_ivf_index_manifest(spark, qpath)
-    assert {"qembedding", "qscale", "cell_id"} <= set(qidx.columns)
-    assert qidx.count() == n_total
-    key = lambda r: (r.query_id, r.rank)
-    g = {key(r): r.neighbor_id for r in ann_ivf_index_topk_quantized(
-        q, qidx, nc2, k=3, nprobe=4, rerank=12, fetch="global").collect()}
-    c = {key(r): r.neighbor_id for r in ann_ivf_index_topk_quantized(
-        q, qidx, nc2, k=3, nprobe=4, rerank=12, fetch="cell_local").collect()}
-    assert g == c and len(g) == 8 * 3
-
-
-def _local_files(df):
-    return [f.removeprefix("file:") for f in df.inputFiles()]
-
-
-@pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_compact_ivf_index_packs_and_sorts(spark, sf_dir, tmp_path):
-    """r9: the IVF maintenance pass — after N appends a cell is N small
-    files with interleaved id ranges; compaction (a) shrinks file count,
-    (b) restores id-sorted in-file order (what cell_local row-group
-    skipping needs), and (c) changes NO search result."""
-    import pyarrow.parquet as pq
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        compact_ivf_index_manifest,
-        ivf_append_manifest,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk_quantized,
-        ivf_seed_centroids,
-        quantize_embeddings,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 8).localCheckpoint(eager=True)
-    path = str(tmp_path / "ivf_appended")
-    # initial write + 3 appended batches -> >=4 files per touched cell
-    write_ivf_index_manifest(
-        em.filter(F.col("vec_id") % 4 == 0), path, centroids=cent
-    )
-    for b in range(1, 4):
-        ivf_append_manifest(em.filter(F.col("vec_id") % 4 == b), path)
-    q = em.filter(F.col("vec_id") < 8)
-
-    def results(fetch="global"):
-        idx = read_ivf_index_manifest(spark, path)
-        # quantize on the fly for the quantized operator's columns
-        return {
-            (r.query_id, r.rank): r.neighbor_id
-            for r in ann_ivf_index_topk_quantized(
-                q,
-                quantize_embeddings(idx) if "qembedding" not in idx.columns else idx,
-                cent, k=3, nprobe=4, rerank=12, fetch=fetch,
-            ).collect()
-        }
-
-    before_files = len(read_ivf_index_manifest(spark, path).inputFiles())
-    want = results()
-    stats = compact_ivf_index_manifest(spark, path, target_file_mb=128)
-    assert stats["files_before"] == before_files
-    assert stats["files_after"] < before_files
-    # in-file id order restored per live cell file
-    for f in _local_files(read_ivf_index_manifest(spark, path)):
-        ids = pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist()
-        assert ids == sorted(ids), f
-    assert results() == want
-    assert results(fetch="cell_local") == want
-
-
-def test_write_ivf_index_sort_by_orders_rows_within_files(spark, sf_dir, tmp_path):
-    """r8: write_ivf_index_manifest(sort_by=id) must leave every written
-    file internally id-sorted (narrow row-group min/max -> the rerank
-    candidate fetch can skip row groups at scale), without changing
-    search results."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        ivf_assign,
-        ivf_seed_centroids,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 8).localCheckpoint(eager=True)
-    sorted_path = str(tmp_path / "ivf_sorted")
-    write_ivf_index_manifest(em, sorted_path, centroids=cent, sort_by="vec_id")
-    files = glob.glob(sorted_path + "/data/centroid_id=*/g=*/*.parquet")
-    assert files
-    for f in files:
-        ids = pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist()
-        assert ids == sorted(ids), f
-    # identical search results to the unsorted (in-memory) assignment
-    plain = ivf_assign(em, cent)
-    q = em.filter(F.col("vec_id") < 8)
-    key = lambda r: (r.query_id, r.rank)
-    a = {key(r): r.neighbor_id for r in ann_ivf_index_topk(
-        q, read_ivf_index_manifest(spark, sorted_path), cent, k=3, nprobe=4).collect()}
-    b = {key(r): r.neighbor_id for r in ann_ivf_index_topk(
-        q, plain, cent, k=3, nprobe=4).collect()}
-    assert a == b
-
-
-def test_ivf_split_recall_recovers_at_nprobe_plus_one(spark, sf_dir, tmp_path):
-    """r10 (verdict #7): splitting a hot cell moves cell boundaries, so
-    recall at EQUAL nprobe may dip (measured 1.000 -> 0.975, SCALE.md
-    r9).  The actionable guidance — bump nprobe by one per split
-    generation — is pinned here: recall@k at nprobe+1 over the split
-    index is >= recall@k at nprobe over the unsplit index, while still
-    scanning fewer rows than the unsplit hot cell forced."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_split_oversized_manifest,
-        read_ivf_centroids,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        cosine_topk,
-        ivf_seed_centroids,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cent = ivf_seed_centroids(em, 4).localCheckpoint(eager=True)
-    path = str(tmp_path / "ivf_recall")
-    write_ivf_index_manifest(em, path, centroids=cent, sort_by="vec_id")
-    sizes = {
-        int(r.centroid_id): r["count"]
-        for r in read_ivf_index_manifest(spark, path)
-        .groupBy("centroid_id").count().collect()
-    }
-    n_hot = max(sizes.values())
-    q = em.filter(F.col("vec_id") < 16)
-    k = 5
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk(q, em, k=k).collect()
-    }
-
-    def recall(c, nprobe):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ann_ivf_index_topk(
-                q, read_ivf_index_manifest(spark, path), c, k=k, nprobe=nprobe
-            ).collect()
-        }
-        return len(got & exact) / len(exact)
-
-    base = recall(cent, 2)
-    ivf_split_oversized_manifest(spark, path, max_rows=n_hot - 1, k=2)
-    new_cent = read_ivf_centroids(spark, path)
-    assert new_cent.count() > cent.count()  # something actually split
-    assert recall(new_cent, 3) >= base
-
-
-def test_compact_ivf_index_custom_id_col(spark, sf_dir, tmp_path):
-    """r10 (ADVICE): an index built with a non-default id column must
-    survive the maintenance pass — id_col flows through to the sort —
-    and a WRONG id_col fails with a clear ValueError, not an opaque
-    AnalysisException."""
-    import pyarrow.parquet as pq
-    import pytest
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        compact_ivf_index_manifest,
-        ivf_append_manifest,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ivf_seed_centroids,
-    )
-
-    em = load_table(spark, sf_dir, "embeddings").withColumnRenamed(
-        "vec_id", "doc_id"
-    )
-    cent = ivf_seed_centroids(em, 4, id_col="doc_id").localCheckpoint(eager=True)
-    path = str(tmp_path / "ivf_docid")
-    # two generations, so the pass has something to merge and re-sort
-    write_ivf_index_manifest(
-        em.filter(F.col("doc_id") % 2 == 0), path, centroids=cent,
-        id_col="doc_id", sort_by="doc_id",
-    )
-    ivf_append_manifest(em.filter(F.col("doc_id") % 2 == 1), path, id_col="doc_id")
-    n = em.count()
-
-    with pytest.raises(ValueError, match="id column 'vec_id' not in"):
-        compact_ivf_index_manifest(spark, path)  # default id_col is wrong here
-
-    stats = compact_ivf_index_manifest(spark, path, id_col="doc_id")
-    assert stats["gens_after"] < stats["gens_before"]
-    idx = read_ivf_index_manifest(spark, path)
-    assert idx.count() == n and "cell_id" in idx.columns
-    for f in _local_files(idx):
-        ids = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
-        assert ids == sorted(ids), f

@@ -3,7 +3,7 @@
 These tests pin:
 
 * the dim winner for a product with two versions in one batch does not
-  depend on the batch's row order, on both dim layouts,
+  depend on the batch's row order,
 * the flat dim sink's resident copy: a failed call drops it (its blocks
   are freed and the next call reads the table from disk), and one sink
   holds one generation however many calls it serves,
@@ -56,24 +56,16 @@ def _persistent_rdds(spark, mark: int) -> int:
     return sum(1 for i in ids if i > mark)
 
 
-@pytest.mark.parametrize("dim_layout", ["partition", "manifest"])
-def test_dim_winner_does_not_depend_on_row_order(spark, tmp_path, dim_layout):
+def test_dim_winner_does_not_depend_on_row_order(spark, tmp_path):
     """Two versions of product 7 in one batch, in both row orders, leave
-    the same dim row: the dim sinks pick the winner by value, and no
+    the same dim row: the dim sink picks the winner by value, and no
     upstream first-row dedup picks it by position."""
     versions = [(1, 7, 20.0), (2, 7, 25.0), (3, 8, 5.0)]
     dims = []
     for name, rows in (("fwd", versions), ("rev", versions[::-1])):
         out = str(tmp_path / name)
-        make_star_sink(out, dim_layout=dim_layout)(_enriched(spark, rows), 0)
-        if dim_layout == "manifest":
-            from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-                read_manifest_table,
-            )
-
-            dim = read_manifest_table(spark, f"{out}/dim_product")
-        else:
-            dim = spark.read.parquet(f"{out}/dim_product")
+        make_star_sink(out)(_enriched(spark, rows), 0)
+        dim = spark.read.parquet(f"{out}/dim_product")
         dims.append(sorted(map(tuple, dim.select(
             "product_id", "product_name", "product_price"
         ).collect())))

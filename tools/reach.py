@@ -18,9 +18,8 @@ Python workers (pandas/Arrow UDFs) is invisible to a driver profiler; such
 functions need a keep reason that cites the UDF call site.
 
 Every unreached function is then classed by the tables below: ``EXCLUDED``
-(out of scope here: the at-rest protocol decision of ROADMAP direction 5)
-or ``KEEP`` (a recorded reason).  Anything else is a deletion candidate, and
-the probe exits 1 when one is left.
+(out of scope here) or ``KEEP`` (a recorded reason).  Anything else is a
+deletion candidate, and the probe exits 1 when one is left.
 
 Usage (about 5 min on 4 cores):
 
@@ -60,21 +59,7 @@ DEMOS = (
 
 # out of scope for this audit: a whole module when the key ends in ".py",
 # else one function
-_D5 = "direction 5: at-rest protocol decision pending"
 EXCLUDED = {
-    "sources/manifest_table.py": _D5,
-    "manifest.py": _D5,
-    "operators/ivf_store.py": _D5,
-    "maintenance.py": _D5,
-    "etl.refresh_summary_incremental": _D5,
-    "etl.read_summary_incremental": _D5,
-    "operators.corpus.compact_corpus": _D5,
-    "streaming.pipeline.compact_quarantine": _D5,
-    "sources.files.compact_table": _D5,
-    "sources.files.with_zorder": _D5 + " (compact_table's zorder_by= helper)",
-    "sources.files.zorder_value": _D5 + " (compact_table's zorder_by= helper)",
-    "operators.similarity.ann_ivf_index_topk": _D5 + " (manifest IVF serving)",
-    "operators.similarity._ivf_probe_cells": _D5 + " (manifest IVF serving)",
     "streaming.pipeline.run_pipeline_streaming": "direction 4: to be measured directly",
 }
 
@@ -86,6 +71,8 @@ _PAPER = "(e) the reference's own behaviour: "
 _TOOL = "(f) tier-1 tooling: "
 _D2 = "(f) direction 2 (plan census) owns plans/inspect"
 _HELPER = "(h) helper a reached function calls under one of its parameters: "
+_AGING = ("(i) the partition layout's aging pass, run by "
+          "run_pipeline_streaming(maintenance_every=): ")
 
 
 LEGEND = """\
@@ -94,8 +81,10 @@ only on a failure or fallback path; (c) it runs only inside Python workers;
 (d) a test uses it as the reference for a product path; (e) it is the
 reference's own behaviour; (f) tier-1 tooling uses it, or direction 2 owns
 it; (g) deferred: only tests call it, and retiring it retires those
-default-tier tests, so it waits for the next audit step (this one retired
-20 tests); (h) a reached function calls it under one of its parameters.
+default-tier tests, so it waits for the next audit step; (h) a reached
+function calls it under one of its parameters; (i) it bounds the per-batch
+partition dirs the streaming sinks leave, and
+`run_pipeline_streaming(maintenance_every=)` runs it.
 """
 
 
@@ -148,6 +137,17 @@ KEEP: dict[str, str] = {
     "plans.inspect.pushed_filters": _D2,
     "plans.inspect.uses_broadcast_join": _D2,
     "operators.asof._to_tolerance": _HELPER + "asof_join(tolerance=)",
+    "operators.similarity._ivf_probe_cells": _HELPER
+    + "ann_ivf_index_topk_quantized(prune='literal'), the at-rest serving shape",
+    "maintenance.make_maintenance_sink": _AGING + "the cadence wrapper",
+    "maintenance.run_maintenance": _AGING + "one call over every artifact family",
+    "operators.corpus.compact_corpus": _AGING + "the fact and corpus batch dirs",
+    "streaming.pipeline.compact_quarantine": _AGING + "the late/_hwm batch dirs",
+    "sources.files.compact_table": _AGING + "compact_corpus's rewrite and dir swap",
+    "sources.files.with_zorder": _deferred("test_compaction, 1; tools/scale_probe.py "
+                                           "measure_zorder_pruning"),
+    "sources.files.zorder_value": _deferred("test_compaction, 2; tools/scale_probe.py "
+                                            "measure_zorder_pruning"),
     "functions.scalar.parse_json_strict": _deferred("test_etl_operators, 1"),
     "operators.bpe.apply_merge": _deferred("test_bpe, 6 with bpe_train/bpe_encode"),
     "operators.bpe.bpe_train": _deferred("test_bpe, 6; examples/data_selection_demo"),

@@ -493,216 +493,6 @@ def synth_clustered_vectors(
     ).write.mode("overwrite").parquet(path)
 
 
-def synth_skewed_vectors(
-    spark, n: int, dim: int, path: str, *, n_blobs: int = 8,
-    hot_weight: int = 7, spread: float = 0.15,
-) -> None:
-    """Deterministic SKEWED clustered embeddings: blob 0 receives
-    ``hot_weight`` of every 10 + (n_blobs-1) hash slots, the remaining
-    blobs one each — the ingest-drift regime where one IVF cell ends up
-    holding most of the corpus.  Same hash-derived construction as
-    :func:`synth_clustered_vectors` (no RNG, bit-stable)."""
-    slot = F.pmod(F.xxhash64("id"), hot_weight + n_blobs - 1)
-    blob = F.when(slot < hot_weight, F.lit(0)).otherwise(
-        slot - hot_weight + 1
-    )
-    emb = F.transform(
-        F.sequence(F.lit(1), F.lit(dim)),
-        lambda i: (
-            F.pmod(F.xxhash64(blob * 131 + i), 1000) / 500.0 - 1.0
-            + (F.pmod(F.xxhash64(F.col("id") * 97 + i), 1000) / 500.0 - 1.0)
-            * spread
-        ).cast("float"),
-    )
-    spark.range(n).select(
-        F.col("id").alias("vec_id"), emb.alias("embedding")
-    ).write.mode("overwrite").parquet(path)
-
-
-def measure_ivf_hotcell(
-    spark, vecs, *, n_cells: int = 8, n_queries: int = 8, k: int = 10,
-    nprobe: int = 2, lloyd_iters: int = 1, split_k: int = 4,
-) -> dict[str, object]:
-    """r9: the hot-cell claim, measured — a cell is the probe's SCAN
-    UNIT, so when ingest drift concentrates the corpus into one cell,
-    every probe touching it pays that cell's full size and nprobe stops
-    mattering.  Builds the at-rest index over a skewed corpus, serves
-    queries that live INSIDE the hot blob (the worst case — they always
-    probe the hot cell), then applies ``ivf_split_oversized_manifest``
-    and serves the same queries against the SAME index with its updated
-    quantizer.  Split passes loop until no cell is oversized (one pass
-    splits each oversized cell k-ways; a 50%-of-corpus cell needs two).
-
-    Reports the cell-size histogram, recall vs exact brute force, wall,
-    read bytes, and — the number the split actually re-bounds —
-    ``scored_rows``: Σ over queries of their probed cells' sizes, i.e.
-    candidate-scoring work.  (Union scan bytes move much less for a
-    query BATCH: different queries probe different subcells, so the
-    union of probed partitions stays wide even though each query's own
-    scoring set collapsed; per-query latency and work follow
-    scored_rows/Q.)  Recall may move when boundaries move — the honest
-    number to watch alongside the cost drop."""
-    from pyspark.sql import Window
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_split_oversized_manifest,
-        read_ivf_centroids,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        cosine,
-        cosine_topk,
-        ivf_seed_centroids,
-        kmeans_refine,
-    )
-
-    q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
-    ground = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk(q, vecs, k=k).select("query_id", "neighbor_id").collect()
-    }
-    cent = kmeans_refine(
-        vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
-    ).localCheckpoint(eager=True)
-    root = tempfile.mkdtemp(prefix="scale_probe_ivfhot_") + "/index"
-    write_ivf_index_manifest(vecs, root, centroids=cent, sort_by="vec_id")
-
-    def sizes():
-        return sorted(
-            (
-                r["count"]
-                for r in read_ivf_index_manifest(spark, root)
-                .groupBy("centroid_id").count().collect()
-            ),
-            reverse=True,
-        )
-
-    def scored_rows(centroids) -> int:
-        """Σ over queries of their nprobe probed cells' row counts —
-        the candidate-scoring work the serve pays, computed from the
-        same top-nprobe-centroids ranking the operator uses."""
-        qs = (
-            q.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("__qv"),
-            )
-            .crossJoin(F.broadcast(centroids))
-            .withColumn("__qc", cosine(F.col("__qv"), F.col("centroid")))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("__qc").desc(), F.col("centroid_id")
-        )
-        probed = (
-            qs.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= nprobe)
-            .select("query_id", "centroid_id")
-        )
-        sz = read_ivf_index_manifest(spark, root).groupBy("centroid_id").count()
-        return int(
-            probed.join(sz, on="centroid_id").agg(F.sum("count")).first()[0]
-        )
-
-    def serve(centroids):
-        df = ann_ivf_index_topk(
-            q, read_ivf_index_manifest(spark, root), centroids, k=k, nprobe=nprobe
-        )
-        m = run_metered(spark, df)
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in df.select("query_id", "neighbor_id").collect()
-        }
-        m["recall_at_k"] = round(len(got & ground) / len(ground), 3)
-        m["scored_rows"] = scored_rows(centroids)
-        return m
-
-    n_total = vecs.count()
-    max_rows = int(n_total / n_cells * 2)
-    before_sizes = sizes()
-    before = serve(cent)
-    passes = 0
-    while passes < 6:
-        passes += 1
-        if not ivf_split_oversized_manifest(
-            spark, root, max_rows=max_rows, k=split_k
-        ):
-            break  # nothing oversized
-    after_sizes = sizes()
-    after = serve(read_ivf_centroids(spark, root))
-    return {
-        "n_vectors": n_total,
-        "n_queries": n_queries,
-        "k": k,
-        "nprobe": nprobe,
-        "max_rows": max_rows,
-        "split_passes": passes,
-        "cell_sizes_before": before_sizes,
-        "cell_sizes_after": after_sizes,
-        "hot_cell_serve_before": before,
-        "hot_cell_serve_after": after,
-    }
-
-
-def measure_ivf_index(
-    spark, vecs, n_cells: int = 64, n_queries: int = 16, nprobe: int = 4
-) -> dict[str, object]:
-    """The at-rest IVF index claim, measured: ANN over the cell-partitioned
-    index (probed cells pruned from the file listing before any bytes are
-    read) vs the on-the-fly path (full corpus assigned per query batch) vs
-    brute force.  Also reports the fraction of index files the pruned scan
-    actually reads — the number that becomes ~nprobe/C of corpus bytes at
-    100 TB."""
-    import tempfile as _tf
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        ann_ivf_topk,
-        cosine_topk,
-        ivf_seed_centroids,
-    )
-
-    cent = ivf_seed_centroids(vecs, n_cells).persist()
-    cent.count()
-    path = _tf.mkdtemp(prefix="scale_probe_ivf_") + "/index"
-    write_ivf_index_manifest(vecs, path, centroids=cent)
-    index = read_ivf_index_manifest(spark, path)
-    q = vecs.filter(F.col("vec_id") < n_queries)
-
-    at_rest = run_metered(
-        spark, ann_ivf_index_topk(q, index, cent, k=5, nprobe=nprobe)
-    )
-    fly = run_metered(spark, ann_ivf_topk(q, vecs, cent, k=5, nprobe=nprobe))
-    brute = run_metered(spark, cosine_topk(q, vecs, k=5))
-
-    # pruning fraction: rebuild the probe-cell filter and count files the
-    # executed scan touches vs the full listing
-    probes = ann_ivf_index_topk(q, index, cent, k=5, nprobe=nprobe).select(
-        "centroid_id"
-    ).distinct()
-    cells = [r[0] for r in probes.collect()]
-    read_files = (
-        index.filter(F.col("centroid_id").isin(cells))
-        .select(F.input_file_name())
-        .distinct()
-        .count()
-    )
-    cent.unpersist()
-    return {
-        "n_cells": n_cells,
-        "nprobe": nprobe,
-        "n_queries": n_queries,
-        "at_rest_index": at_rest,
-        "on_the_fly_assign": fly,
-        "brute_force": brute,
-        "files_read_fraction": round(read_files / max(1, len(index.inputFiles())), 3),
-    }
-
-
 def measure_ivf_recall(
     spark, vecs, *, n_cells_list=(64, 256), n_queries: int = 64, k: int = 10,
     nprobes=(1, 2, 4, 8), lloyd_iters: int = 1,
@@ -750,253 +540,6 @@ def measure_ivf_recall(
                 "wall_sec": round(wall, 2),
                 "recall_at_k": round(len(got & ground) / len(ground), 3),
             }
-    return out
-
-
-def measure_ivf_quantized(
-    spark, vecs, *, n_cells: int = 64, n_queries: int = 64, k: int = 10,
-    nprobe: int = 4, lloyd_iters: int = 1,
-) -> dict[str, object]:
-    """int8-quantized at-rest IVF SERVING vs float serving, measured at
-    the SCALE.md-recommended operating point (clustered corpus, nprobe≥4):
-    wall, read bytes (read_mb from /proc/<jvm>/io rchar — the
-    read-amplification signal that rules at 100 TB; null when rchar
-    metering is unavailable, i.e. non-Linux / Spark Connect), and
-    recall@k vs exact brute force, for (a) the float
-    index, (b) codes-only quantized serving, (c) quantized + float rerank
-    of 4k candidates.  The quantized index stores BOTH codes and floats;
-    parquet column pruning keeps the float pages unread in stage 1, so
-    variant (c) buys back float-exact ordering for a query-bound extra
-    read."""
-    import tempfile as _tf
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk,
-        ann_ivf_index_topk_quantized,
-        cosine_topk,
-        ivf_seed_centroids,
-        kmeans_refine,
-        quantize_embeddings,
-    )
-
-    q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
-    ground = {
-        (r.query_id, r.neighbor_id)
-        for r in cosine_topk(q, vecs, k=k).select("query_id", "neighbor_id").collect()
-    }
-    cent = kmeans_refine(
-        vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
-    ).localCheckpoint(eager=True)
-    root = _tf.mkdtemp(prefix="scale_probe_ivfq_")
-    write_ivf_index_manifest(vecs, root + "/float", centroids=cent)
-    # id-sorted cells: narrow row-group id ranges let the rerank stage's
-    # candidate-id fetch skip row groups (only bites once cells span
-    # multiple row groups — free either way)
-    write_ivf_index_manifest(
-        quantize_embeddings(vecs), root + "/quant", centroids=cent,
-        sort_by="vec_id",
-    )
-    idx_f = read_ivf_index_manifest(spark, root + "/float")
-    idx_q = read_ivf_index_manifest(spark, root + "/quant")
-
-    def recall(df) -> float:
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in df.select("query_id", "neighbor_id").collect()
-        }
-        return round(len(got & ground) / len(ground), 3)
-
-    variants = {
-        "float_index": lambda: ann_ivf_index_topk(
-            q, idx_f, cent, k=k, nprobe=nprobe
-        ),
-        "quantized_codes_only": lambda: ann_ivf_index_topk_quantized(
-            q, idx_q, cent, k=k, nprobe=nprobe
-        ),
-        "quantized_rerank_4k": lambda: ann_ivf_index_topk_quantized(
-            q, idx_q, cent, k=k, nprobe=nprobe, rerank=4 * k
-        ),
-    }
-    def column_mb(path: str) -> dict[str, float]:
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        tot: dict[str, int] = {}
-        for f in _glob.glob(path + "/data/centroid_id=*/g=*/*.parquet"):
-            md = _pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    key = c.path_in_schema.split(".")[0]
-                    tot[key] = tot.get(key, 0) + c.total_compressed_size
-        return {k_: round(v / (1 << 20), 2) for k_, v in sorted(tot.items())}
-
-    out: dict[str, object] = {
-        "n_vectors": vecs.count(),
-        "n_cells": n_cells,
-        "n_queries": n_queries,
-        "k": k,
-        "nprobe": nprobe,
-        # at-rest column footprint: the byte ratio that rules once cell
-        # files are GB-sized and per-file overhead amortizes away
-        "index_column_mb": column_mb(root + "/quant"),
-    }
-    for name, make in variants.items():
-        m = run_metered(spark, make())
-        m["recall_at_k"] = recall(make())
-        out[name] = m
-    return out
-
-
-def measure_ivf_rowgroup_skip(
-    spark, vecs, *, n_cells: int = 16, n_queries: int = 4, k: int = 10,
-    nprobe: int = 4, rerank_mult: int = 4, lloyd_iters: int = 1,
-    block_bytes: int = 128 << 10, page_bytes: int = 32 << 10,
-) -> dict[str, object]:
-    """VERDICT r9 item 3: prove the id-sorted-cell row-group-skipping
-    claim with cells that actually SPAN multiple row groups (the r8
-    probe's 256-cell point was footer-dominated — single row group per
-    cell, 'identical numbers at probe scale as expected').
-
-    Simulates the GB-cell regime by shrinking ``parquet.block.size`` (set
-    on the Hadoop conf for the two index writes) instead of inflating rows (same row-groups-per-cell geometry, probe
-    cost): each cell holds tens of row groups, candidates per cell ≪ row
-    groups per cell — the regime where skipping can bite.  Measures the
-    REAL operator's rerank candidate fetch (stage 1 runs eagerly at
-    construction via the operator's bounded collect, so ``run_metered``
-    on the returned frame meters the fetch) across the matrix
-    {insertion-order, id-sorted} × {global In at Spark's default
-    threshold 10 (degraded to a [min,max] range), global In at the
-    engine threshold (real In predicate), per-cell cell_local
-    predicate}; the "unsorted" layout is the index written with
-    ``sort_by="qscale"``, an order unrelated to the id (the manifest
-    writer always sorts within a cell).  What r9 established (and this probe pins): a GLOBAL
-    candidate list cannot skip id-sorted row groups at all — cell
-    membership is a similarity property, so every ~rows·C-wide sorted
-    id range contains some other cell's candidate — and only
-    sorted+cell_local drops read bytes; cell_local on the unsorted
-    layout is a measured PESSIMIZATION (column-index two-pass, zero
-    skips).  Results must be identical across all variants.  read_mb is
-    null on non-Linux (see :func:`run_metered`)."""
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.similarity import (
-        ann_ivf_index_topk_quantized,
-        ivf_seed_centroids,
-        kmeans_refine,
-        quantize_embeddings,
-    )
-
-    q = vecs.filter(F.col("vec_id") < n_queries).localCheckpoint(eager=True)
-    cent = kmeans_refine(
-        vecs, ivf_seed_centroids(vecs, n_cells), iters=lloyd_iters
-    ).localCheckpoint(eager=True)
-    # every writer task lands one file per cell it holds; the reported
-    # geometry (cell files, row groups per file) says how many row
-    # groups each file spans at this block size
-    quant = quantize_embeddings(vecs).localCheckpoint(eager=True)
-    root = tempfile.mkdtemp(prefix="scale_probe_ivfrg_")
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-    opts = {
-        "parquet.block.size": str(block_bytes),
-        "parquet.page.size": str(page_bytes),
-    }
-    saved = {k_: hconf.get(k_) for k_ in opts}
-    try:
-        for k_, v in opts.items():
-            hconf.set(k_, v)
-        for layout, order in (("unsorted", "qscale"), ("sorted", "vec_id")):
-            write_ivf_index_manifest(
-                quant, f"{root}/{layout}", centroids=cent, sort_by=order
-            )
-    finally:
-        for k_, v in saved.items():
-            if v is None:
-                hconf.unset(k_)
-            else:
-                hconf.set(k_, v)
-
-    def cell_geometry(path: str) -> dict[str, float]:
-        """row groups per cell file + mean id-range width per row group
-        (the narrow-min/max evidence sorting is supposed to buy)."""
-        n_files, n_groups, widths = 0, 0, []
-        for f in _glob.glob(path + "/data/centroid_id=*/g=*/*.parquet"):
-            md = _pq.ParquetFile(f).metadata
-            n_files += 1
-            n_groups += md.num_row_groups
-            idx = next(
-                i for i in range(len(md.schema))
-                if md.schema.column(i).name == "vec_id"
-            )
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is not None and st.has_min_max:
-                    widths.append(st.max - st.min)
-        return {
-            "cell_files": n_files,
-            "row_groups": n_groups,
-            "row_groups_per_cell": round(n_groups / max(n_files, 1), 1),
-            "mean_rowgroup_id_range": round(
-                sum(widths) / max(len(widths), 1)
-            ),
-        }
-
-    thr_key = "spark.sql.parquet.pushdown.inFilterThreshold"
-    engine_thr = spark.conf.get(thr_key)
-    out: dict[str, object] = {
-        "n_vectors": vecs.count(),
-        "n_cells": n_cells,
-        "n_queries": n_queries,
-        "k": k,
-        "nprobe": nprobe,
-        "rerank": rerank_mult * k,
-        "parquet_block_bytes": block_bytes,
-        "geometry": {
-            "unsorted": cell_geometry(root + "/unsorted"),
-            "sorted": cell_geometry(root + "/sorted"),
-        },
-    }
-    results: dict[str, set] = {}
-    variants = (
-        ("global_thr10", "global", "10"),
-        ("global_in", "global", engine_thr),
-        ("cell_local", "cell_local", engine_thr),
-    )
-    for layout in ("unsorted", "sorted"):
-        idx = read_ivf_index_manifest(spark, f"{root}/{layout}")
-        for name, fetch, thr in variants:
-            spark.conf.set(thr_key, thr)
-            try:
-                df = ann_ivf_index_topk_quantized(
-                    q, idx, cent, k=k, nprobe=nprobe,
-                    rerank=rerank_mult * k, fetch=fetch,
-                )
-                m = run_metered(spark, df)
-                results[f"{layout}.{name}"] = {
-                    (r.query_id, r.neighbor_id, r.rank)
-                    for r in df.select(
-                        "query_id", "neighbor_id", "rank"
-                    ).collect()
-                }
-                out[f"{layout}_{name}"] = m
-            finally:
-                spark.conf.set(thr_key, engine_thr)
-    first = next(iter(results.values()))
-    out["results_invariant_across_variants"] = all(
-        v == first for v in results.values()
-    )
     return out
 
 
@@ -1672,782 +1215,6 @@ def measure_corpus_diff(spark, docs) -> dict[str, float]:
     return {"corpus_diff": round(_t.time() - t0, 2)}
 
 
-def measure_fact_layout(
-    spark,
-    sf_dir: str,
-    *,
-    mult: int = 20,
-    n_batches: int = 20,
-    maintenance_every: int | None = None,
-    min_merge_mb: int | None = None,
-) -> dict[str, dict]:
-    """r11: what the LEDGERED manifest fact commit costs vs the
-    partition layout, isolated to the sink (the rest of the composed
-    pipeline is identical — ``star_pipeline`` measures that).  The SAME
-    enriched batches drive ``make_star_sink`` in both layouts; per-batch
-    wall and the manifest's publish overhead (one KB-scale PUT + a
-    read-back of the live manifest per batch) are what differ.  Also
-    records a replayed delivery's cost in each layout: the partition
-    layout re-executes the full batch write (idempotent overwrite), the
-    manifest layout detects it in the ledger and skips the fact write
-    after the dim upsert.
-
-    ``maintenance_every`` (r12, VERDICT r11 Next #4) adds a THIRD
-    variant: the manifest layout with ``make_maintenance_sink`` live on
-    the same cadence hook the pipeline exposes — demonstrating, inside
-    the composed 20× sink, that the generation count stays BOUNDED at
-    O(keep_last + every) instead of O(stream age), per-batch wall stays
-    flat (the cadence passes pay for themselves), and the aged full-read
-    cost the r11 probe decomposed (~0.5 s manifest resolution +
-    generation-root listing) is retired.  Every variant records
-    ``gens_per_batch`` (manifest layouts) and a final ``read_wall_sec``."""
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        master_data,
-        transactions,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        make_star_sink,
-        stream_static_hyperjoin,
-    )
-
-    master = master_data(spark, sf_dir).localCheckpoint(eager=True)
-    big = (
-        transactions(spark, sf_dir)
-        .crossJoin(
-            F.broadcast(spark.range(mult).withColumnRenamed("id", "__rep"))
-        )
-        .withColumn(
-            "order_id", F.col("order_id") + F.col("__rep") * F.lit(10_000_000)
-        )
-        .drop("__rep")
-    )
-    enriched = stream_static_hyperjoin(big, master).withColumn(
-        "__b", F.pmod(F.xxhash64("order_id", "line_number"), F.lit(n_batches))
-    ).localCheckpoint(eager=True)
-    batches = [
-        enriched.filter(F.col("__b") == b).drop("__b")
-        for b in range(n_batches)
-    ]
-    out: dict[str, dict] = {
-        "mult": mult, "n_batches": n_batches, "rows": enriched.count(),
-    }
-    variants: list[tuple[str, int | None, int | None]] = [
-        ("partition", None, None), ("manifest", None, None),
-    ]
-    if maintenance_every:
-        # untier by forcing an effectively-infinite freeze threshold so
-        # the quadratic-rewrite shape is measured next to the tiered one
-        variants.append(("manifest", int(maintenance_every), 1 << 20))
-        if min_merge_mb:
-            variants.append(
-                ("manifest", int(maintenance_every), int(min_merge_mb))
-            )
-    from datawarehouse_etl_using_hyperjoin_spark.manifest import manifest_read
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        read_manifest_table,
-    )
-
-    for layout, every, tier in variants:
-        root = tempfile.mkdtemp(prefix="fact_layout_") + "/dw"
-        fact_root = f"{root}/fact_enriched"
-        sink = make_star_sink(root, fact_layout=layout)
-        inner_sink = sink  # replay timing bypasses the maintenance
-        # wrapper: with (n_batches-1) % every == 0 the wrapped call
-        # would run a full compaction pass inside the replay timer,
-        # misreporting the ledger-skip cost this field isolates
-        if every:
-            from datawarehouse_etl_using_hyperjoin_spark.maintenance import (
-                make_maintenance_sink,
-            )
-
-            passes: list[dict] = []
-
-            def on_stats(bid, st, _p=passes, _r=fact_root):
-                s = st.get(f"manifest_table:{_r}", {})
-                _p.append({
-                    "batch": bid,
-                    "merged_rows": (
-                        s.get("rows", 0)
-                        if s.get("gens_after") != s.get("gens_before")
-                        else 0
-                    ),
-                })
-
-            sink = make_maintenance_sink(
-                sink, every, keep_last=2, manifest_tables=[fact_root],
-                min_merge_mb=tier, on_stats=on_stats,
-            )
-        walls, gens_per_batch = [], []
-        for b, df in enumerate(batches):
-            t0 = time.time()
-            sink(df, b)
-            walls.append(round(time.time() - t0, 2))
-            if layout == "manifest":
-                gens_per_batch.append(
-                    len(manifest_read(spark, fact_root)["gens"])
-                )
-        t0 = time.time()
-        # re-delivery of a committed batch (inner sink: see note above)
-        inner_sink(batches[-1], n_batches - 1)
-        replay_wall = round(time.time() - t0, 2)
-        t0 = time.time()
-        if layout == "manifest":
-            fact_rows = read_manifest_table(spark, fact_root).count()
-        else:
-            fact_rows = spark.read.parquet(fact_root).count()
-        read_wall = round(time.time() - t0, 2)
-        key = layout
-        if every:
-            key += f"+maint{every}"
-            if tier and tier < (1 << 20):
-                key += f"+tier{tier}mb"
-        out[key] = {
-            "total_wall_sec": round(sum(walls), 2),
-            "first3_wall": walls[:3],
-            "last3_wall": walls[-3:],
-            "replay_wall_sec": replay_wall,
-            "read_wall_sec": read_wall,
-            "fact_rows": fact_rows,
-        }
-        if gens_per_batch:
-            out[key]["gens_per_batch"] = gens_per_batch
-        if every:
-            out[key]["maintenance_passes"] = passes
-            out[key]["rewritten_rows_total"] = sum(
-                p["merged_rows"] for p in passes
-            )
-        assert out[key]["fact_rows"] == out["partition"]["fact_rows"]
-    return out
-
-
-def measure_manifest_stats(
-    spark,
-    *,
-    n_batches: int = 64,
-    rows_per_batch: int = 200_000,
-) -> dict:
-    """Generation-stats data skipping on an AGED manifest table (r12).
-
-    An event-time-keyed stream (batch b covers day b — the natural
-    append-mostly-ordered shape of a log/fact table) ages into
-    ``n_batches`` generations; a narrow time-window read is the probe.
-    Four measurements:
-
-    1. append cost with vs without stats collection (the per-batch
-       single-row agg the stats add);
-    2. the aged narrow read, unpruned (``read + filter``) vs pruned
-       (``where=``): wall, generations touched, files touched;
-    3. the same read after a PLAIN compaction (one merged generation —
-       the worst case for generation stats: the merged range spans
-       everything, pruning degrades to the residual filter);
-    4. after a RANGE-SPLIT clustered compaction: pruning restored on
-       the compacted layout.
-    """
-    import datetime as _dt
-    import shutil as _sh
-
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        compact_manifest_table,
-        manifest_table_append,
-        plan_manifest_read,
-        read_manifest_table,
-    )
-
-    day0 = F.to_date(F.lit("2024-01-01"))
-
-    def batch(b: int):
-        return (
-            spark.range(rows_per_batch)
-            .select(
-                (F.col("id") + b * rows_per_batch).alias("doc_id"),
-                F.date_add(day0, b).alias("d"),
-                (F.rand(seed=b) * 100).alias("score"),
-                F.concat(F.lit("payload-"), F.col("id")).alias("text"),
-            )
-        )
-
-    out: dict = {}
-    roots = {}
-    for variant, cols, bloom in (
-        ("no_stats", None, None),
-        ("stats", ["d"], None),
-        ("bloom", ["d"], ["doc_id"]),
-    ):
-        root = tempfile.mkdtemp(prefix="manstats_") + "/t"
-        roots[variant] = root
-        t0 = time.time()
-        for b in range(n_batches):
-            manifest_table_append(
-                batch(b), root, b,
-                stats_cols=cols if b == 0 else None,  # sticky thereafter
-                bloom_cols=bloom if b == 0 else None,
-            )
-        out[f"append_wall_{variant}"] = round(time.time() - t0, 2)
-
-    root = roots["stats"]
-    lo, hi = (
-        _dt.date(2024, 1, 1) + _dt.timedelta(days=n_batches // 2),
-        _dt.date(2024, 1, 1) + _dt.timedelta(days=n_batches // 2 + 1),
-    )
-    where = [("d", "between", (lo, hi))]
-
-    def timed_reads(label: str) -> None:
-        t0 = time.time()
-        full = read_manifest_table(spark, root).where(
-            F.col("d").between(F.lit(lo), F.lit(hi))
-        )
-        n_full = full.count()
-        files_full = len(full.inputFiles())
-        unpruned = round(time.time() - t0, 3)
-        t0 = time.time()
-        pruned = read_manifest_table(spark, root, where=where)
-        n_pruned = pruned.count()
-        files_pruned = len(pruned.inputFiles())
-        pruned_wall = round(time.time() - t0, 3)
-        plan = plan_manifest_read(spark, root, where)
-        assert n_full == n_pruned, (label, n_full, n_pruned)
-        out[label] = {
-            "rows": n_full,
-            "unpruned_wall": unpruned,
-            "pruned_wall": pruned_wall,
-            "gens_total": plan["total"],
-            "gens_scanned": plan["scanned"],
-            "files_unpruned": files_full,
-            "files_pruned": files_pruned,
-        }
-
-    timed_reads("aged_read")
-
-    # OR-window read (r13): TWO disjoint day ranges in one predicate —
-    # pruning is the union of the per-disjunct survivor sets, so the
-    # read touches both ranges' generations and nothing else (the shape
-    # that fell back to an unpredicated scan when where= was AND-only)
-    lo2, hi2 = (
-        _dt.date(2024, 1, 1) + _dt.timedelta(days=n_batches // 4),
-        _dt.date(2024, 1, 1) + _dt.timedelta(days=n_batches // 4 + 1),
-    )
-    or_where = [(
-        "or",
-        [[("d", "between", (lo, hi))], [("d", "between", (lo2, hi2))]],
-    )]
-    t0 = time.time()
-    or_read = read_manifest_table(spark, root, where=or_where)
-    or_rows = or_read.count()
-    or_wall = round(time.time() - t0, 3)
-    or_plan = plan_manifest_read(spark, root, or_where)
-    t0 = time.time()
-    or_full = read_manifest_table(spark, root).where(
-        F.col("d").between(F.lit(lo), F.lit(hi))
-        | F.col("d").between(F.lit(lo2), F.lit(hi2))
-    )
-    n_or_full = or_full.count()
-    or_unpruned = round(time.time() - t0, 3)
-    assert or_rows == n_or_full, (or_rows, n_or_full)
-    out["or_window_read"] = {
-        "rows": or_rows,
-        "unpruned_wall": or_unpruned,
-        "pruned_wall": or_wall,
-        "gens_total": or_plan["total"],
-        "gens_scanned": or_plan["scanned"],
-    }
-
-    # Bloom point lookup on the bloom-enabled aged table: a doc_id exists
-    # in exactly one generation, but every generation's [min,max] id
-    # range matches it — min/max stats cannot prune, the Bloom can
-    broot = roots["bloom"]
-    target_id = (n_batches // 2) * rows_per_batch + 7
-    t0 = time.time()
-    full = read_manifest_table(spark, broot).where(
-        F.col("doc_id") == target_id
-    )
-    n_full = full.count()
-    lookup_unpruned = round(time.time() - t0, 3)
-    t0 = time.time()
-    pruned = read_manifest_table(
-        spark, broot, where=[("doc_id", "=", target_id)]
-    )
-    n_pruned = pruned.count()
-    files_pruned = len(pruned.inputFiles())
-    lookup_pruned = round(time.time() - t0, 3)
-    plan = plan_manifest_read(spark, broot, [("doc_id", "=", target_id)])
-    assert n_full == n_pruned == 1, (n_full, n_pruned)
-    out["point_lookup"] = {
-        "unpruned_wall": lookup_unpruned,
-        "bloom_wall": lookup_pruned,
-        "gens_total": plan["total"],
-        "gens_scanned": plan["scanned"],
-        "files_pruned": files_pruned,
-    }
-
-    # copy-on-write keyed delete on the bloom table: pruning decides the
-    # rewrite set, so erasing a handful of ids from the 64-generation
-    # table should rewrite ~1 generation, not the table
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        manifest_table_delete,
-    )
-
-    victims = [target_id, target_id + 1, target_id + 2]
-    t0 = time.time()
-    dstats = manifest_table_delete(
-        spark, broot, [("doc_id", "in", victims)]
-    )
-    out["point_delete"] = {
-        "wall": round(time.time() - t0, 3),
-        "rows_deleted": dstats["rows_deleted"],
-        "gens_rewritten": dstats["gens_rewritten"],
-        "gens_untouched": dstats["gens_untouched"],
-    }
-
-    # keyed MERGE (r13): upsert 3 keys into the aged 64-generation
-    # table — the rewrite set is pruning-chosen, so the merge rewrites
-    # ~1 true-holder generation + appends 1 batch generation, never the
-    # table (the object-store-atomic dim-upsert path)
-    from datawarehouse_etl_using_hyperjoin_spark.manifest import (
-        manifest_read as _mread,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        manifest_table_merge,
-    )
-
-    mkeys = [target_id + 10, target_id + 11, target_id + 12]
-    upd = spark.createDataFrame(
-        [(k, _dt.date(2024, 6, 1), 0.0, "merged") for k in mkeys],
-        "doc_id long, d date, score double, text string",
-    )
-    gens_pre = set(_mread(spark, broot)["gens"])
-    t0 = time.time()
-    manifest_table_merge(upd, broot, "doc_id", 900_000)
-    merge_wall = round(time.time() - t0, 3)
-    gens_post = set(_mread(spark, broot)["gens"])
-    out["point_merge"] = {
-        "wall": merge_wall,
-        "rows_upserted": len(mkeys),
-        "gens_untouched": len(gens_pre & gens_post),
-        "gens_total_before": len(gens_pre),
-    }
-
-    # skipping BACKFILL at aged geometry (r13, VERDICT r12 #6): the
-    # 64-generation pre-tracking table gains stats+blooms with NO data
-    # rewrite (identical generation ids), then the same 2-day window
-    # read prunes — how a 100 TB table that predates tracking gets
-    # pruning
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        backfill_manifest_skipping,
-    )
-
-    nroot = roots["no_stats"]
-    gens_pre = set(_mread(spark, nroot)["gens"])
-    t0 = time.time()
-    bstats = backfill_manifest_skipping(
-        spark, nroot, stats_cols=["d"], bloom_cols=["doc_id"]
-    )
-    backfill_wall = round(time.time() - t0, 3)
-    gens_post = set(_mread(spark, nroot)["gens"])
-    assert gens_pre == gens_post  # no data rewrite, ever
-    t0 = time.time()
-    bread = read_manifest_table(spark, nroot, where=where)
-    b_rows = bread.count()
-    bwall = round(time.time() - t0, 3)
-    bplan = plan_manifest_read(spark, nroot, where)
-    out["backfill_aged"] = {
-        "wall": backfill_wall,
-        "stats_backfilled": bstats["stats_backfilled"],
-        "blooms_backfilled": bstats["blooms_backfilled"],
-        "gens_rewritten": 0,
-        "window_read_wall": bwall,
-        "window_rows": b_rows,
-        "gens_scanned": bplan["scanned"],
-        "gens_total": bplan["total"],
-    }
-
-    # snapshot the aged table for the clustered variant BEFORE the plain
-    # compaction rewrites it in place
-    root2 = tempfile.mkdtemp(prefix="manstats_") + "/t"
-    _sh.copytree(roots["stats"], root2, dirs_exist_ok=True)
-
-    # plain compaction: everything melts into ONE generation — stats'
-    # worst case, measured honestly
-    compact_manifest_table(spark, root, keep_last=2, min_merge_mb=1 << 20)
-    timed_reads("after_plain_compaction")
-
-    # clustered rebuild of the same aged table: range-split into ~64 MB
-    # generations on the time key
-    root = root2
-    compact_manifest_table(
-        spark, root, keep_last=2, min_merge_mb=1 << 20,
-        sort_by=["d"], range_split_mb=64,
-    )
-    timed_reads("after_range_split_compaction")
-    return out
-
-
-def measure_dv_delete(
-    spark,
-    *,
-    n_batches: int = 64,
-    rows_per_batch: int = 200_000,
-) -> dict:
-    """Probe for merge-on-read DELETE (VERDICT r13 #1): is a
-    deletion-vector sidecar decisively cheaper than copy-on-write for a
-    WIDE LOW-SELECTIVITY delete — a handful of rows in EVERY generation
-    of an aged table (the GDPR-ish erasure where key pruning cannot
-    shrink the rewrite set because every generation truly holds a row)?
-
-    Builds the aged 64-generation table (12.8 M rows, stats+Bloom on
-    doc_id), picks one victim id per generation, then measures:
-
-    1. CoW wall (``manifest_table_delete`` — rewrites all 64 gens);
-    2. DV-prototype build wall: ONE scan recording matched
-       (file, row_index) positions via ``_metadata``, written as a
-       KB-scale parquet sidecar — no data rewrite;
-    3. reader tax: full-scan aggregate and a pruned 2-day window read,
-       plain vs with the DV anti-applied (broadcast anti-join on
-       (file, pos)) — the recurring cost every merge-on-read reader
-       pays until compaction materializes.
-    """
-    import datetime as _dt
-    import shutil as _sh
-
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        manifest_table_append,
-        manifest_table_delete,
-        read_manifest_table,
-    )
-
-    day0 = F.to_date(F.lit("2024-01-01"))
-
-    def batch(b: int):
-        return spark.range(rows_per_batch).select(
-            (F.col("id") + b * rows_per_batch).alias("doc_id"),
-            F.date_add(day0, b).alias("d"),
-            (F.rand(seed=b) * 100).alias("score"),
-            F.concat(F.lit("payload-"), F.col("id")).alias("text"),
-        )
-
-    root = tempfile.mkdtemp(prefix="dvprobe_") + "/t"
-    t0 = time.time()
-    for b in range(n_batches):
-        manifest_table_append(
-            batch(b), root, b,
-            stats_cols=["d"] if b == 0 else None,
-            bloom_cols=["doc_id"] if b == 0 else None,
-        )
-    out: dict = {"build_wall": round(time.time() - t0, 2)}
-    victims = [b * rows_per_batch + 7 for b in range(n_batches)]
-
-    # reader baseline BEFORE any delete
-    def agg_wall():
-        t0 = time.time()
-        n = read_manifest_table(spark, root).where(
-            F.col("score") < 50
-        ).count()
-        return round(time.time() - t0, 3), n
-
-    out["full_agg_plain_wall"], n_plain = agg_wall()
-
-    # window-read baseline BEFORE any delete
-    lo = _dt.date(2024, 1, 1) + _dt.timedelta(days=n_batches // 2)
-    hi = lo + _dt.timedelta(days=1)
-    t0 = time.time()
-    w_plain = read_manifest_table(
-        spark, root, where=[("d", "between", (lo, hi))]
-    ).count()
-    out["window_read_plain_wall"] = round(time.time() - t0, 3)
-
-    # --- CoW on a copy of the same aged table ---
-    root2 = tempfile.mkdtemp(prefix="dvprobe_") + "/t"
-    _sh.copytree(root, root2, dirs_exist_ok=True)
-    t0 = time.time()
-    dstats = manifest_table_delete(
-        spark, root2, [("doc_id", "in", victims)]
-    )
-    out["cow_delete_wall"] = round(time.time() - t0, 2)
-    out["cow_gens_rewritten"] = dstats["gens_rewritten"]
-    out["cow_rows_deleted"] = dstats["rows_deleted"]
-
-    # --- DV (the shipped strategy="dv") on the original ---
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        materialize_manifest_deletes,
-    )
-
-    t0 = time.time()
-    vstats = manifest_table_delete(
-        spark, root, [("doc_id", "in", victims)], strategy="dv"
-    )
-    out["dv_delete_wall"] = round(time.time() - t0, 3)
-    out["dv_gens_vectored"] = vstats["gens_vectored"]
-    out["dv_rows_deleted"] = vstats["rows_deleted"]
-    out["dv_bytes"] = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _d, fs in os.walk(f"{root}/dv")
-        for f in fs
-        if f.endswith(".parquet")
-    )
-
-    # reader tax while vectors are live (merge-on-read)
-    t0 = time.time()
-    n_dv = read_manifest_table(spark, root).where(
-        F.col("score") < 50
-    ).count()
-    out["full_agg_dv_wall"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    w_dv = read_manifest_table(
-        spark, root, where=[("d", "between", (lo, hi))]
-    ).count()
-    out["window_read_dv_wall"] = round(time.time() - t0, 3)
-    out["window_rows_plain"] = w_plain
-    out["window_rows_dv"] = w_dv
-
-    # explicit materialization: pays the CoW wall ONCE, off the delete
-    # path, after which reads drop the anti-join
-    t0 = time.time()
-    mstats = materialize_manifest_deletes(spark, root)
-    out["materialize_wall"] = round(time.time() - t0, 2)
-    out["materialize_gens"] = mstats["gens_materialized"]
-    t0 = time.time()
-    n_mat = read_manifest_table(spark, root).where(
-        F.col("score") < 50
-    ).count()
-    out["full_agg_after_materialize_wall"] = round(time.time() - t0, 3)
-
-    out["full_agg_rows_check"] = {
-        "plain": n_plain,
-        "dv": n_dv,
-        "materialized": n_mat,
-        "cow": read_manifest_table(spark, root2)
-        .where(F.col("score") < 50)
-        .count(),
-    }
-    return out
-
-
-def measure_merge_antijoin(
-    spark,
-    *,
-    n_batches: int = 64,
-    rows_per_batch: int = 200_000,
-) -> dict:
-    """Probe for the merge's no-driver-key-list degradation path
-    (VERDICT r13 #4): past ``_MERGE_INLIST_MAX`` (100 k) distinct batch
-    keys, ``manifest_table_merge`` never collects keys — candidate
-    pruning is skipped and the rewrite filter is an anti-JOIN over all
-    generations.  The documented claim is "the right plan anyway for a
-    merge that touches most of the table"; this measures it at the aged
-    64-generation / 12.8 M-row geometry:
-
-    * mid-size merge (50 k keys, one key per 256 rows — IN-LIST path:
-      driver collect + InSet rewrite filter);
-    * huge merge (~150 k keys, one per 85 rows — ANTI-JOIN path);
-    both spread across ALL generations, so the rewrite set is the whole
-    table either way and the walls isolate the path mechanics, not the
-    rewrite size.
-    """
-    from datawarehouse_etl_using_hyperjoin_spark.manifest import (
-        manifest_read as _mread,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        _MERGE_INLIST_MAX,
-        manifest_table_append,
-        manifest_table_merge,
-        read_manifest_table,
-    )
-
-    day0 = F.to_date(F.lit("2024-01-01"))
-
-    def batch(b: int):
-        return spark.range(rows_per_batch).select(
-            (F.col("id") + b * rows_per_batch).alias("doc_id"),
-            F.date_add(day0, b).alias("d"),
-            (F.rand(seed=b) * 100).alias("score"),
-            F.concat(F.lit("payload-"), F.col("id")).alias("text"),
-        )
-
-    root = tempfile.mkdtemp(prefix="mergeprobe_") + "/t"
-    t0 = time.time()
-    for b in range(n_batches):
-        manifest_table_append(
-            batch(b), root, b,
-            stats_cols=["d", "doc_id"] if b == 0 else None,
-            bloom_cols=["doc_id"] if b == 0 else None,
-        )
-    out: dict = {"build_wall": round(time.time() - t0, 2)}
-    n_rows = n_batches * rows_per_batch
-
-    def upd(modulus: int, residue: int):
-        return spark.range(n_rows).where(
-            F.col("id") % modulus == residue
-        ).select(
-            F.col("id").alias("doc_id"),
-            F.to_date(F.lit("2024-06-01")).alias("d"),
-            F.lit(0.0).alias("score"),
-            F.lit("merged").alias("text"),
-        )
-
-    for label, modulus in (("inlist_50k", 256), ("antijoin_150k", 85)):
-        u = upd(modulus, 13)
-        n_keys = u.count()
-        gens_pre = set(_mread(spark, root)["gens"])
-        t0 = time.time()
-        manifest_table_merge(u, root, "doc_id", 1000 + modulus)
-        wall = round(time.time() - t0, 2)
-        m = _mread(spark, root)
-        out[label] = {
-            "n_keys": n_keys,
-            "path": (
-                "inlist" if n_keys <= _MERGE_INLIST_MAX else "antijoin"
-            ),
-            "wall": wall,
-            "gens_untouched": len(gens_pre & set(m["gens"])),
-            "gens_total_after": len(m["gens"]),
-        }
-        # the merged keys read back with the batch's values, key-unique
-        t = read_manifest_table(
-            spark, root, where=[("d", "=", _probe_date("2024-06-01"))]
-        )
-        assert t.count() >= n_keys, (label, t.count(), n_keys)
-    out["rows_final"] = read_manifest_table(spark, root).count()
-    assert out["rows_final"] == n_rows  # merges replaced, never added
-    return out
-
-
-def _probe_date(s: str):
-    import datetime as _dt
-
-    return _dt.date.fromisoformat(s)
-
-
-def measure_ivf_fetch(
-    spark,
-    *,
-    n_vecs: int = 2_000_000,
-    dim: int = 32,
-    n_cells: int = 64,
-    n_batches: int = 8,
-) -> dict:
-    """IVF point fetch by id with vs without Bloom sidecars (r13,
-    VERDICT r12 #4): an aged manifest index (build + ``n_batches``
-    appends), then fetch one id.  Without sidecars the fetch lists and
-    scans every (cell, generation) dir; with them the plan is pure
-    driver bit math over KB-scale sidecars and the read touches O(true
-    holder) dirs.  Parquet row-group stats compose inside the survivors
-    (the (cell, id)-sorted in-file order)."""
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_append_manifest,
-        ivf_enable_id_blooms,
-        ivf_fetch_by_id,
-        plan_ivf_fetch,
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-
-    vec_path = tempfile.mkdtemp(prefix="ivffetch_") + "/vectors"
-    synth_clustered_vectors(spark, n_vecs, dim, vec_path, n_blobs=n_cells)
-    vecs = spark.read.parquet(vec_path)
-    per = n_vecs // (n_batches + 1)
-    root = tempfile.mkdtemp(prefix="ivffetch_") + "/ivf"
-    write_ivf_index_manifest(
-        vecs.where(F.col("vec_id") < per), root, n_centroids=n_cells
-    )
-    for b in range(n_batches):
-        ivf_append_manifest(
-            vecs.where(
-                (F.col("vec_id") >= (b + 1) * per)
-                & (F.col("vec_id") < (b + 2) * per)
-            ),
-            root, batch_id=b,
-        )
-    target = per * (n_batches // 2) + 17
-    out: dict = {}
-
-    # without sidecars: full (cell, generation) listing + filter
-    t0 = time.time()
-    full = read_ivf_index_manifest(spark, root).where(
-        F.col("vec_id") == target
-    )
-    n_full = full.count()
-    out["fetch_unbloomed_wall"] = round(time.time() - t0, 3)
-    out["dirs_total"] = plan_ivf_fetch(spark, root, [target])["total"]
-
-    t0 = time.time()
-    bstats = ivf_enable_id_blooms(spark, root)
-    out["enable_wall"] = round(time.time() - t0, 3)
-    out["gens_built"] = bstats["gens_built"]
-
-    t0 = time.time()
-    got = ivf_fetch_by_id(spark, root, [target])
-    n_bloom = got.count()
-    out["fetch_bloom_wall"] = round(time.time() - t0, 3)
-    plan = plan_ivf_fetch(spark, root, [target])
-    assert n_full == n_bloom == 1, (n_full, n_bloom)
-    out["dirs_scanned"] = plan["scanned"]
-    out["dirs_skipped"] = plan["skipped"]
-    # warm second fetch: sidecars now LRU-cached on the driver
-    t0 = time.time()
-    assert ivf_fetch_by_id(spark, root, [target + 1]).count() == 1
-    out["fetch_bloom_warm_wall"] = round(time.time() - t0, 3)
-    return out
-
-
-def measure_manifest_zorder(
-    spark,
-    *,
-    n_rows: int = 8_000_000,
-    n_batches: int = 16,
-    split_mb: float = 2,
-) -> dict:
-    """Z-order vs single-column clustering on a 2-D query workload
-    (r12).  A table with two INDEPENDENT uniform keys (x, y) — the
-    adversarial case for single-column sort — is compacted two ways at
-    the same generation size; the probe reads are a ~8% x-window and a
-    ~8% y-window.  Reported per layout: generations scanned / total and
-    the pruned read wall per dimension."""
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        compact_manifest_table,
-        manifest_table_append,
-        plan_manifest_read,
-        read_manifest_table,
-    )
-
-    per = n_rows // n_batches
-    out: dict = {}
-    for variant, kwargs in (
-        ("xsort", dict(sort_by=["x"])),
-        ("zorder", dict(zorder_by=["x", "y"])),
-    ):
-        root = tempfile.mkdtemp(prefix="manz_") + "/t"
-        for b in range(n_batches):
-            batch = spark.range(per).select(
-                (F.col("id") + b * per).alias("doc_id"),
-                F.pmod(F.xxhash64((F.col("id") + b * per) * 2), F.lit(10_000))
-                .alias("x"),
-                F.pmod(F.xxhash64((F.col("id") + b * per) * 3), F.lit(10_000))
-                .alias("y"),
-            )
-            manifest_table_append(
-                batch, root, b, stats_cols=["x", "y"] if b == 0 else None
-            )
-        t0 = time.time()
-        compact_manifest_table(
-            spark, root, keep_last=0, min_merge_mb=1 << 20,
-            range_split_mb=split_mb, **kwargs,
-        )
-        compact_wall = round(time.time() - t0, 2)
-        stats: dict = {"compact_wall": compact_wall}
-        for col in ("x", "y"):
-            where = [(col, "between", (4000, 4800))]
-            plan = plan_manifest_read(spark, root, where)
-            t0 = time.time()
-            n = read_manifest_table(spark, root, where=where).count()
-            stats[col] = {
-                "wall": round(time.time() - t0, 3),
-                "rows": n,
-                "gens_scanned": plan["scanned"],
-                "gens_total": plan["total"],
-            }
-        out[variant] = stats
-    return out
-
-
 def measure_star_pipeline(
     spark,
     sf_dir: str,
@@ -2475,8 +1242,7 @@ def measure_star_pipeline(
     with the master replicated ``dim_mult``× under shifted product ids,
     so the stream's per-batch upserts hit a dim ``dim_mult``× larger
     than the touched key set — the flat sink rewrites the whole dim
-    every batch (``all_manifest_pipeline`` measures the write-bounded
-    manifest dim).
+    every batch.
     """
     import os as _os
 
@@ -2618,155 +1384,6 @@ def measure_star_pipeline(
             ).count(),
             "per_batch": per_batch,
         }
-    return out
-
-
-def measure_all_manifest_pipeline(
-    spark,
-    sf_dir: str,
-    *,
-    mult: int = 20,
-    n_batches: int = 20,
-    maintenance_every: int = 5,
-    n_docs: int = 100_000,
-) -> dict:
-    """r14 (VERDICT r13 #6): the composed pipelines in FULL all-manifest
-    posture — every at-rest artifact on the generation-manifest protocol
-    under ONE maintenance cadence — at 20× volume:
-
-    * STAR: ``run_pipeline_streaming`` with ``fact_layout + dim_layout
-      = "manifest"`` (quarantine on, so the ``late``/``_hwm`` side
-      artifacts ride ``side_layout="manifest"`` automatically) and
-      ``maintenance_every`` live — fact appends, dim keyed merges, side
-      appends and their compactions/vacuums all commit through
-      conditional-PUT manifests;
-    * CORPUS: ``make_corpus_ingest_sink(corpus_layout="manifest",
-      doc_meta_dir=...)`` wrapped in ``make_maintenance_sink`` — corpus
-      appends + doc-metadata dim merges (the r14 second
-      ``manifest_upsert_sink`` consumer) under the same cadence.
-
-    Pass criterion: every family's generation count stays BOUNDED
-    (≈ tiered-big + keep_last + cadence window, NOT O(batches)) and the
-    stream drains with per-batch wall flat — the five manifest
-    consumers compose under one cadence without stepping on each
-    other's commits.
-    """
-    from datawarehouse_etl_using_hyperjoin_spark.maintenance import (
-        make_maintenance_sink,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.manifest import (
-        manifest_read as _mread,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.corpus import (
-        make_corpus_ingest_sink,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        master_data,
-        transactions,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
-        read_manifest_table,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        read_parquet_stream,
-        run_pipeline_streaming,
-    )
-
-    out: dict = {"mult": mult, "n_batches": n_batches,
-                 "maintenance_every": maintenance_every}
-
-    # ---- STAR, all-manifest, cadence live ----
-    txns = transactions(spark, sf_dir)
-    master = master_data(spark, sf_dir).localCheckpoint(eager=True)
-    big = (
-        txns.crossJoin(
-            F.broadcast(spark.range(mult).withColumnRenamed("id", "__rep"))
-        )
-        .withColumn(
-            "order_id", F.col("order_id") + F.col("__rep") * F.lit(10_000_000)
-        )
-        .drop("__rep")
-    )
-    stream_path = tempfile.mkdtemp(prefix="allman_") + "/txn"
-    big.repartition(n_batches).write.parquet(stream_path)
-    dw = tempfile.mkdtemp(prefix="allman_") + "/dw"
-    t0 = time.time()
-    counts = run_pipeline_streaming(
-        spark,
-        read_parquet_stream(spark, stream_path, max_files_per_trigger=1),
-        master,
-        dw,
-        quarantine_lateness="60 days",
-        fact_layout="manifest",
-        dim_layout="manifest",
-        fact_stats_cols=["order_id", "product_id"],
-        maintenance_every=maintenance_every,
-    )
-    out["star_wall"] = round(time.time() - t0, 2)
-    out["star_counts"] = {k: int(v) for k, v in counts.items()}
-
-    def gens(root) -> int:
-        m = _mread(spark, root)
-        return len(m["gens"]) if m else -1
-
-    out["star_gens"] = {
-        "fact": gens(f"{dw}/fact_enriched"),
-        "dim": gens(f"{dw}/dim_product"),
-        "late": gens(f"{dw}/late"),
-        "hwm": gens(f"{dw}/_hwm"),
-    }
-    # parity: manifest fact row count equals the drained on-time rows
-    assert (
-        read_manifest_table(spark, f"{dw}/fact_enriched").count()
-        == counts["fact_enriched"]
-    )
-
-    # ---- CORPUS + doc-meta dim, all-manifest, cadence live ----
-    docs_path = tempfile.mkdtemp(prefix="allman_") + "/docs"
-    synth_documents(spark, n_docs, docs_path)
-    docs = spark.read.parquet(docs_path)
-    corpus_out = tempfile.mkdtemp(prefix="allman_") + "/corpus"
-    meta_dir = tempfile.mkdtemp(prefix="allman_") + "/doc_meta"
-    idx = f"allman_idx_{int(time.time())}"
-    corpus_sink = make_maintenance_sink(
-        make_corpus_ingest_sink(
-            corpus_out, idx, min_quality=0.0, min_tokens=1,
-            corpus_layout="manifest", corpus_stats_cols=["doc_id"],
-            doc_meta_dir=meta_dir,
-        ),
-        maintenance_every,
-        manifest_tables=[corpus_out, meta_dir],
-    )
-    per = docs.count() // n_batches
-    t0 = time.time()
-    walls = []
-    try:
-        for b in range(n_batches):
-            tb = time.time()
-            corpus_sink(
-                docs.where(
-                    (F.col("doc_id") >= b * per)
-                    & (F.col("doc_id") < (b + 1) * per)
-                ),
-                b,
-            )
-            walls.append(round(time.time() - tb, 2))
-        out["corpus_wall"] = round(time.time() - t0, 2)
-        out["corpus_batch_walls_first3"] = walls[:3]
-        out["corpus_batch_walls_last3"] = walls[-3:]
-        out["corpus_gens"] = {
-            "corpus": gens(corpus_out),
-            "doc_meta": gens(meta_dir),
-        }
-        out["corpus_rows"] = read_manifest_table(spark, corpus_out).count()
-        meta = read_manifest_table(spark, meta_dir)
-        out["doc_meta_rows"] = meta.count()
-        # the dim stays key-unique at rest through merges + compactions
-        assert out["doc_meta_rows"] == (
-            meta.select("doc_id").distinct().count()
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {idx}")
     return out
 
 
@@ -3336,28 +1953,6 @@ def main() -> None:
             out[f"merges_{n_merges}"] = row
         print(json.dumps({"bpe_encode": out}, indent=2))
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "ivf_quantized":
-        spark = get_spark(
-            "scale-probe-ivfq", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        vec_path = tempfile.mkdtemp(prefix="scale_probe_") + "/vectors"
-        n_vecs = int(os.environ.get("SCALE_PROBE_VECS", 200_000))
-        synth_clustered_vectors(
-            spark, n_vecs, 32, vec_path,
-            n_blobs=int(os.environ.get("SCALE_PROBE_BLOBS", 32)),
-            spread=float(os.environ.get("SCALE_PROBE_SPREAD", 0.15)),
-        )
-        vecs = spark.read.parquet(vec_path).localCheckpoint(eager=True)
-        print(json.dumps({"ivf_quantized": measure_ivf_quantized(
-            spark, vecs,
-            n_cells=int(os.environ.get("SCALE_PROBE_CELLS", 64)),
-            n_queries=int(os.environ.get("SCALE_PROBE_QUERIES", 64)),
-            nprobe=int(os.environ.get("SCALE_PROBE_NPROBE", 4)),
-            lloyd_iters=int(os.environ.get("SCALE_PROBE_LLOYD_ITERS", 1)),
-        )}, indent=2))
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "quarantine_hwm":
         spark = get_spark(
             "scale-probe-qhwm",
@@ -3368,69 +1963,6 @@ def main() -> None:
         print(json.dumps({"quarantine_hwm": measure_quarantine_hwm(
             spark,
             n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 400)),
-        )}, indent=2))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "fact_layout":
-        spark = get_spark(
-            "scale-probe-factlayout",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        print(json.dumps({"fact_layout": measure_fact_layout(
-            spark,
-            os.environ.get("SCALE_PROBE_SF_DIR", "/root/testdata/sf0.1"),
-            mult=int(os.environ.get("SCALE_PROBE_MULT", 20)),
-            n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 20)),
-            maintenance_every=int(
-                os.environ.get("SCALE_PROBE_MAINT_EVERY", 0)
-            ) or None,
-            min_merge_mb=int(
-                os.environ.get("SCALE_PROBE_MIN_MERGE_MB", 0)
-            ) or None,
-        )}, indent=2))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "manifest_stats":
-        spark = get_spark(
-            "scale-probe-manstats",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        print(json.dumps({"manifest_stats": measure_manifest_stats(
-            spark,
-            n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 64)),
-            rows_per_batch=int(
-                os.environ.get("SCALE_PROBE_ROWS_PER_BATCH", 200_000)
-            ),
-        )}, indent=2))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "ivf_fetch":
-        spark = get_spark(
-            "scale-probe-ivffetch",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        print(json.dumps({"ivf_fetch": measure_ivf_fetch(
-            spark,
-            n_vecs=int(os.environ.get("SCALE_PROBE_VECS", 2_000_000)),
-            n_cells=int(os.environ.get("SCALE_PROBE_CELLS", 64)),
-            n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 8)),
-        )}, indent=2))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "manifest_zorder":
-        spark = get_spark(
-            "scale-probe-manz",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        print(json.dumps({"manifest_zorder": measure_manifest_zorder(
-            spark,
-            n_rows=int(os.environ.get("SCALE_PROBE_ROWS", 8_000_000)),
-            n_batches=int(os.environ.get("SCALE_PROBE_BATCHES", 16)),
-            split_mb=float(os.environ.get("SCALE_PROBE_SPLIT_MB", 2)),
         )}, indent=2))
         return
     if len(sys.argv) > 1 and sys.argv[1] == "star_pipeline":
@@ -3482,49 +2014,6 @@ def main() -> None:
             ),
             "stream_join_state_default_hdfs": measure_stream_join_state(spark),
         }, indent=2))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "ivf_hotcell":
-        spark = get_spark(
-            "scale-probe-ivfhot",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        vec_path = tempfile.mkdtemp(prefix="scale_probe_") + "/vectors"
-        n_vecs = int(os.environ.get("SCALE_PROBE_VECS", 400_000))
-        synth_skewed_vectors(
-            spark, n_vecs, 32, vec_path,
-            n_blobs=int(os.environ.get("SCALE_PROBE_BLOBS", 8)),
-        )
-        vecs = spark.read.parquet(vec_path).localCheckpoint(eager=True)
-        print(json.dumps({"ivf_hotcell": measure_ivf_hotcell(
-            spark, vecs,
-            n_cells=int(os.environ.get("SCALE_PROBE_CELLS", 8)),
-            nprobe=int(os.environ.get("SCALE_PROBE_NPROBE", 2)),
-        )}, indent=2))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "ivf_rowgroup":
-        spark = get_spark(
-            "scale-probe-ivfrg",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)),
-            extra_conf=METERED_SESSION_CONF,
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        vec_path = tempfile.mkdtemp(prefix="scale_probe_") + "/vectors"
-        n_vecs = int(os.environ.get("SCALE_PROBE_VECS", 400_000))
-        synth_clustered_vectors(
-            spark, n_vecs, 32, vec_path,
-            n_blobs=int(os.environ.get("SCALE_PROBE_BLOBS", 16)),
-            spread=float(os.environ.get("SCALE_PROBE_SPREAD", 0.15)),
-        )
-        vecs = spark.read.parquet(vec_path).localCheckpoint(eager=True)
-        print(json.dumps({"ivf_rowgroup": measure_ivf_rowgroup_skip(
-            spark, vecs,
-            n_cells=int(os.environ.get("SCALE_PROBE_CELLS", 16)),
-            n_queries=int(os.environ.get("SCALE_PROBE_QUERIES", 4)),
-            nprobe=int(os.environ.get("SCALE_PROBE_NPROBE", 4)),
-            block_bytes=int(os.environ.get("SCALE_PROBE_BLOCK", 128 << 10)),
-        )}, indent=2))
         return
     if len(sys.argv) > 1 and sys.argv[1] in ("ivf_recall", "ivf_recall_clustered"):
         clustered = sys.argv[1] == "ivf_recall_clustered"
@@ -3641,12 +2130,6 @@ def main() -> None:
         "zorder_pruning": measure_zorder_pruning(spark, n_rows),
         "corpus_quality": measure_corpus_quality(spark, docs_big),
     }
-    vec_path = tempfile.mkdtemp(prefix="scale_probe_") + "/vectors"
-    n_vecs = int(os.environ.get("SCALE_PROBE_VECS", 200_000))
-    synth_vectors(spark, n_vecs, 32, vec_path)
-    report["metered"]["ivf_index_200k_vecs"] = measure_ivf_index(
-        spark, spark.read.parquet(vec_path)
-    )
     # exact-quantiles strategy crossover: 3 groups → per-group distributions
     # of n/3 rows; the default windowed strategy serializes each group's
     # cumulative walk on one core, the chunked prefix sum distributes it
