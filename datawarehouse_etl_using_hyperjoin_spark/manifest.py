@@ -3,9 +3,8 @@
 Directory-swap maintenance (``compact_table``'s two-rename swap) is
 correct on a LOCAL filesystem but has no object-store analogue —
 ``os.rename`` does not exist on S3/GCS (VERDICT r10, "What's missing"
-#5).  This module is the rename-free commit protocol every
-object-store-safe artifact uses (the IVF index store, the manifest
-batch table), the same shape Iceberg/Delta use for exactly this reason
+#5).  This module is the rename-free commit protocol of the manifest
+batch table (``sources.manifest_table``), the same shape Iceberg/Delta use for exactly this reason
 (public design; implementation original):
 
 * data is only ever written to FRESH paths (a new ``generation``
@@ -262,8 +261,7 @@ def _delete(spark: SparkSession, path: str, *, recursive: bool) -> bool:
     return True
 
 
-#: rebase attempts per ledgered append before giving up — shared by the
-#: batch table and the IVF store (the two stores claim one protocol)
+#: rebase attempts per ledgered append before giving up
 MAX_REBASES = 5
 
 
@@ -449,7 +447,8 @@ def manifest_vacuum(
     publish of its own can be mid-write; a concurrent OTHER writer's
     in-flight local publish is outside the crash model (object-store
     PUTs cannot tear at all).  Data-dir reclamation is the table owner's
-    job (it knows its layout) — e.g. ``operators.ivf_store.ivf_vacuum``.
+    job (it knows its layout) — e.g.
+    ``sources.manifest_table.vacuum_manifest_table``.
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the live manifest)")

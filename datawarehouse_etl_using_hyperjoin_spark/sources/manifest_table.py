@@ -1,5 +1,9 @@
 """Generic manifest-backed batch table: rename-free streaming at rest.
 
+A standalone library: no pipeline, sink factory or maintenance pass
+selects it (the partition layout is the one at-rest form they write);
+it is called directly, and its tests pin it until it is retired.
+
 The corpus-shaped sinks (streamed corpus, star fact, quarantine) get
 exactly-once from per-batch PARTITION overwrite and bounded aging from
 ``compact_table``'s two-RENAME swap — both local-fs idioms.  This is the
@@ -56,9 +60,8 @@ a stale snapshot).
 r14 additions: MERGE-ON-READ deletion vectors
 (``manifest_table_delete(strategy="dv")`` — matched row positions in a
 KB-scale sidecar, no data rewrite; see the deletion-vector section
-below), with explicit and cadence materialization
-(:func:`materialize_manifest_deletes`, ``maintenance.run_maintenance``),
-and the merge dropping fully-replaced generations instead of writing
+below), materialized explicitly (:func:`materialize_manifest_deletes`)
+or by any rewrite of a vectored generation, and the merge dropping fully-replaced generations instead of writing
 empty replacement dirs.
 """
 
@@ -113,7 +116,7 @@ def _live(spark: SparkSession, root: str, at: int | None = None) -> dict:
             "manifest_table_append creates it"
         )
     if m.get("table") != "batch-table":
-        # same protocol, different table kind (e.g. an ivf-index root):
+        # same protocol, different table kind:
         # fail with the actual mismatch, not a KeyError on 'gens'
         raise ValueError(
             f"manifest at {root!r} is a {m.get('table')!r} table, not a "
@@ -447,7 +450,7 @@ def _bloom_might_contain_pair(
     """Membership test from a PRECOMPUTED ``(h1, h2)`` double-hash pair
     (:func:`_bloom_h1_h2_py`) — the md5 is per-value, not per-filter, so
     a caller probing one id list against many sidecars hashes each id
-    once and reuses the pair here (``plan_ivf_fetch`` does)."""
+    once and reuses the pair here."""
     for i in range(k):
         p = (h1 + i * h2) % m
         byte = packed[(p >> 6) * 8 + ((p & 63) >> 3)]
@@ -468,9 +471,7 @@ def _bloom_positions_expr(col: str, m: int, k: int):
     """The k Kirsch-Mitzenmacher bit positions of ``col`` as an ARRAY
     column — md5-canonical double hashing so the DRIVER can probe the
     same bits without Spark (:func:`_bloom_h1_h2_py`).  ``conv(hex, 16,
-    10)`` on 15 hex chars stays under 2^60 — exact in a long.  Shared
-    by the batch table's per-generation builds and the IVF store's
-    per-(cell, generation) builds."""
+    10)`` on 15 hex chars stays under 2^60 — exact in a long."""
     hx = F.md5(F.col(col).cast("string"))
     h1 = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long") % F.lit(m)
     h2 = (
@@ -2391,9 +2392,8 @@ def manifest_upsert_sink(
     ``version_cols`` picks the within-batch winner per key (defaults to
     all non-key columns, matching ``upsert_parquet_sink``'s collapse).
     Aging: one generation per batch — schedule
-    :func:`compact_manifest_table` (``maintenance.run_maintenance``
-    handles manifest tables), sound here because merge keeps the table
-    key-unique at rest."""
+    :func:`compact_manifest_table`, sound here because merge keeps the
+    table key-unique at rest."""
     eff_stats = [key] if stats_cols is None else list(stats_cols)
     eff_bloom = [key] if bloom_cols is None else list(bloom_cols)
 
@@ -2850,8 +2850,8 @@ def vacuum_manifest_table(
     THE CONTRACT IS TIME-BASED: keep the retention window (the wall
     time ``keep_manifests`` commits span) longer than the longest read
     you run against the table.  ``live_stream=True`` declares that the
-    table's owning stream is committing concurrently (what
-    ``make_maintenance_sink`` passes) and REFUSES ``keep_manifests``
+    table's owning stream is committing concurrently and REFUSES
+    ``keep_manifests``
     below 2 — with only the newest manifest retained, every new commit
     immediately invalidates the manifest any in-flight reader resolved,
     so even instant reads race."""

@@ -21,8 +21,7 @@ def spark():
     # not by throughput.  4 post-shuffle partitions (vs cpus=8) and a
     # 16-partition AQE start keep real parallelism for the join/agg tests
     # while halving the fixed-cost multiplier: measured r15 on
-    # the (since deleted) manifest-merge tests 195 s -> 135 s (-31%) with
-    # identical results.
+    # test_manifest_merge.py 195 s -> 135 s (-31%) with identical results.
     # Engine defaults (session.tuned_conf) are unchanged — this tunes the
     # TEST session only, the same way a production deployment would size
     # shuffle partitions to its data, and any test that needs a specific

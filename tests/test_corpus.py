@@ -768,7 +768,7 @@ def test_corpus_sink_id_uniqueness_within_and_across_batches(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {idx}")
 
 
-def test_corpus_batch_dir_guard_connect_fallback(spark, tmp_path, monkeypatch):
+def test_corpus_layout_guard_connect_fallback(spark, tmp_path, monkeypatch):
     """r11 (ADVICE): under Spark Connect (list_visible -> None) the
     corpus batch-dir guard used to silently no-op, so a pre-r7 flat corpus
     dir could be mixed with ingest_batch=N partitions — exactly the

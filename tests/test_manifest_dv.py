@@ -3,9 +3,8 @@
 ``manifest_table_delete(strategy="dv")`` records matched rows'
 (file, position) addresses in a KB-scale parquet sidecar and publishes a
 manifest naming it per touched generation — no data rewrite.  The probe
-that decided this ships in ``tools/scale_probe.measure_dv_delete``:
-4.2 s vs 65.5 s CoW for a 64-row wide delete on the 64-generation /
-12.8 M-row aged table (SCALE.md r14).  The contract under test:
+that decided this measured 4.2 s vs 65.5 s CoW for a 64-row wide delete
+on the 64-generation / 12.8 M-row aged table (SCALE.md r14).  The contract under test:
 
 * reads (full, predicated, incremental, time-traveled) anti-apply live
   vectors — never resurrect a deleted row, never lose a live one;
@@ -339,28 +338,6 @@ def test_vacuum_reclaims_materialized_vectors_past_retention(
     out = vacuum_manifest_table(spark, root, keep_manifests=1)
     assert out["dv_files_deleted"] == 1
     assert read_manifest_table(spark, root).count() == 159
-
-
-def test_run_maintenance_materializes_vectors(spark, tmp_path):
-    """The cadence story: one maintenance pass folds live vectors (the
-    compaction alone would leave frozen/keep_last generations paying
-    the anti-join forever), then compacts and vacuums as usual."""
-    from datawarehouse_etl_using_hyperjoin_spark.maintenance import (
-        run_maintenance,
-    )
-
-    root = str(tmp_path / "t")
-    _build(spark, root)
-    manifest_table_delete(
-        spark, root, [("doc_id", "in", [1, 301])], strategy="dv"
-    )
-    out = run_maintenance(
-        spark, manifest_tables=[root], keep_last=2, min_merge_mb=64
-    )
-    st = out[f"manifest_table:{root}"]
-    assert st["gens_materialized"] == 2 and st["rows_dropped"] == 2
-    assert manifest_read(spark, root).get("dvs") is None
-    assert read_manifest_table(spark, root).count() == 158
 
 
 def test_relocated_table_applies_vectors(spark, tmp_path):

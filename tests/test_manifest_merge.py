@@ -412,159 +412,6 @@ def test_manifest_upsert_sink_is_a_foreachbatch_body(
     assert m["bloom_cols"] == ["product_id"]
 
 
-# ---------------------------------------------------------------------------
-# pipeline threading: dim_layout="manifest"
-
-
-@pytest.fixture(scope="module")
-def _stream8(spark, sf_dir, tmp_path_factory):
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        transactions,
-    )
-
-    path = str(tmp_path_factory.mktemp("txn8m"))
-    transactions(spark, sf_dir).repartition(8).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return path
-
-
-@pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_pipeline_manifest_dim_layout_parity(
-    spark, sf_dir, _stream8, tmp_path_factory
-):
-    """run_pipeline_streaming(dim_layout='manifest'): identical dim and
-    fact state to the partition layout over the same 8-batch stream —
-    with EVERY commit in the pipeline now one atomic conditional PUT —
-    and maintenance bounds the dim's generation count too."""
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        master_data,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        read_parquet_stream,
-        run_pipeline_streaming,
-    )
-
-    master = master_data(spark, sf_dir)
-    ref_out = str(tmp_path_factory.mktemp("dim_ref"))
-    ref = run_pipeline_streaming(
-        spark,
-        read_parquet_stream(spark, _stream8, max_files_per_trigger=1),
-        master,
-        ref_out,
-        checkpoint_dir=ref_out + "/_ckpt",
-    )
-    out = str(tmp_path_factory.mktemp("dim_man"))
-    counts = run_pipeline_streaming(
-        spark,
-        read_parquet_stream(spark, _stream8, max_files_per_trigger=1),
-        master,
-        out,
-        checkpoint_dir=out + "/_ckpt",
-        dim_layout="manifest",
-        fact_layout="manifest",
-        maintenance_every=2,
-        maintenance_keep_last=1,
-    )
-    assert counts == ref
-    ref_dim = spark.read.parquet(f"{ref_out}/dim_product")
-    dim = read_manifest_table(spark, f"{out}/dim_product")
-    assert sorted(map(tuple, dim.collect())) == sorted(
-        map(tuple, ref_dim.select(*dim.columns).collect())
-    )
-    # key-unique at rest
-    assert dim.count() == dim.select("product_id").distinct().count()
-    # maintenance bounded the dim's generations (8 batches, cadence 2)
-    live = mt.manifest_read(spark, f"{out}/dim_product")
-    assert len(live["gens"]) <= 5
-    assert set(live["batches"]) == {str(b) for b in range(8)}
-
-
-@pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_pipeline_manifest_dim_kill_restart_replay(
-    spark, sf_dir, _stream8, tmp_path_factory
-):
-    """Crash AFTER the dim merge + fact append but BEFORE the checkpoint
-    commit (the foreachBatch replay window): the restart redelivers the
-    batch, both ledgers detect it, and the final state equals an
-    uninterrupted run's."""
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        master_data,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        make_star_sink,
-        read_parquet_stream,
-        stream_static_hyperjoin,
-    )
-
-    master = master_data(spark, sf_dir)
-    out = str(tmp_path_factory.mktemp("dim_crash"))
-    ckpt = out + "/_ckpt"
-    inner = make_star_sink(
-        out, dim_layout="manifest", fact_layout="manifest"
-    )
-    crashed = {"done": False}
-
-    def crashing(batch_df, batch_id):
-        inner(batch_df, batch_id)
-        if batch_id == 3 and not crashed["done"]:
-            crashed["done"] = True
-            raise RuntimeError("injected crash before checkpoint commit")
-
-    enriched = stream_static_hyperjoin(
-        read_parquet_stream(spark, _stream8, max_files_per_trigger=1), master
-    )
-    q = (
-        enriched.writeStream.outputMode("append")
-        .foreachBatch(crashing)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    with pytest.raises(Exception):
-        q.processAllAvailable()
-    q.stop()
-    # restart: batch 3 is REDELIVERED (its checkpoint commit was lost)
-    q2 = (
-        enriched.writeStream.outputMode("append")
-        .foreachBatch(crashing)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    # reference: uninterrupted run over the same stream
-    ref_out = str(tmp_path_factory.mktemp("dim_crash_ref"))
-    ref_sink = make_star_sink(
-        ref_out, dim_layout="manifest", fact_layout="manifest"
-    )
-    q3 = (
-        enriched.writeStream.outputMode("append")
-        .foreachBatch(ref_sink)
-        .option("checkpointLocation", ref_out + "/_ckpt")
-        .start()
-    )
-    q3.processAllAvailable()
-    q3.stop()
-    dim = read_manifest_table(spark, f"{out}/dim_product")
-    ref_dim = read_manifest_table(spark, f"{ref_out}/dim_product")
-    assert sorted(map(tuple, dim.collect())) == sorted(
-        map(tuple, ref_dim.collect())
-    )
-    fact = read_manifest_table(spark, f"{out}/fact_enriched")
-    ref_fact = read_manifest_table(spark, f"{ref_out}/fact_enriched")
-    assert fact.count() == ref_fact.count()
-    assert dim.count() == dim.select("product_id").distinct().count()
-
-
-def test_star_sink_rejects_unknown_dim_layout():
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        make_star_sink,
-    )
-
-    with pytest.raises(ValueError, match="dim_layout must be"):
-        make_star_sink("/tmp/x", dim_layout="zebra")
-
-
 def test_merge_racing_merge_both_commit(spark, tmp_path):
     """Two MERGES race one head: the loser rebases against the winner's
     commit and re-derives — including re-pruning against generations

@@ -441,75 +441,6 @@ def _star_batch(spark, b, n=30):
     )
 
 
-def test_star_sink_threads_fact_stats(spark, tmp_path):
-    from datawarehouse_etl_using_hyperjoin_spark.streaming.pipeline import (
-        make_star_sink,
-    )
-
-    out = str(tmp_path / "dw")
-    sink = make_star_sink(
-        out, fact_layout="manifest", fact_stats_cols=["total_sale"]
-    )
-    for b in range(3):
-        sink(_star_batch(spark, b), b)
-
-    fact_root = f"{out}/fact_enriched"
-    m = mt.manifest_read(spark, fact_root)
-    assert m["stats_cols"] == ["total_sale"]
-    assert len(m["stats"]) == 3
-    plan = plan_manifest_read(spark, fact_root, [("total_sale", ">=", 2000.0)])
-    assert plan["scanned"] == 1 and plan["skipped"] == 2
-    got = read_manifest_table(
-        spark, fact_root, where=[("total_sale", ">=", 2000.0)]
-    )
-    assert got.count() == 30
-
-    # stats need a manifest to live in
-    with pytest.raises(ValueError, match="fact_layout='manifest'"):
-        make_star_sink(out, fact_stats_cols=["total_sale"])
-
-
-def test_corpus_sink_stats_need_manifest_layout():
-    from datawarehouse_etl_using_hyperjoin_spark.operators.corpus import (
-        make_corpus_ingest_sink,
-    )
-
-    with pytest.raises(ValueError, match="corpus_layout='manifest'"):
-        make_corpus_ingest_sink(
-            "/tmp/x", "tbl", corpus_stats_cols=["doc_id"]
-        )
-
-
-def test_run_maintenance_clusters_manifest_tables(spark, tmp_path):
-    """The scheduled pass can sort-cluster and range-split the tables it
-    compacts, so generation stats stay selective on a maintained
-    stream's table without a separate manual compaction."""
-    from datawarehouse_etl_using_hyperjoin_spark.maintenance import (
-        run_maintenance,
-    )
-
-    root = str(tmp_path / "t")
-    for b in range(6):
-        manifest_table_append(
-            _batch(spark, b, n=40), root, b, stats_cols=["d"]
-        )
-    out = run_maintenance(
-        spark,
-        manifest_tables=[root],
-        keep_last=0,
-        min_merge_mb=1,
-        manifest_sort_by=["d"],
-        manifest_range_split_mb=0.002,
-    )
-    stats = out[f"manifest_table:{root}"]
-    assert stats["gens_after"] > 2  # genuinely split
-    m = mt.manifest_read(spark, root)
-    assert len(m["stats"]) == len(m["gens"])
-    plan = plan_manifest_read(spark, root, [("d", "=", _day(31))])
-    assert plan["scanned"] == 1
-    assert read_manifest_table(spark, root).count() == 240
-
-
 def _overlap_batch(spark, b, n=20):
     """doc_id = 10*i + b: every batch spans ~the same [min,max] range, so
     min/max stats CANNOT prune a point lookup — only the Bloom can."""
@@ -1071,39 +1002,6 @@ def test_incremental_changes_follow_schema_evolution(spark, tmp_path):
     got = read_manifest_table_changes(spark, root, s0)
     assert got.columns == ["doc_id", "lang"]  # head schema, evolved
     assert [(r.doc_id, r.lang) for r in got.collect()] == [(2, "en")]
-
-
-def test_run_maintenance_zorder_clusters(spark, tmp_path):
-    from datawarehouse_etl_using_hyperjoin_spark.maintenance import (
-        run_maintenance,
-    )
-
-    root = str(tmp_path / "t")
-    for b in range(4):
-        df = spark.range(200).select(
-            (F.col("id") + b * 1000).alias("doc_id"),
-            F.pmod(F.xxhash64((F.col("id") + b * 1000) * 2), F.lit(100))
-            .alias("x"),
-            F.pmod(F.xxhash64((F.col("id") + b * 1000) * 3), F.lit(100))
-            .alias("y"),
-        )
-        manifest_table_append(
-            df, root, b, stats_cols=["x", "y"] if b == 0 else None
-        )
-    out = run_maintenance(
-        spark,
-        manifest_tables=[root],
-        keep_last=0,
-        min_merge_mb=1,
-        manifest_zorder_by=["x", "y"],
-        manifest_range_split_mb=0.002,
-    )
-    stats = out[f"manifest_table:{root}"]
-    assert stats["gens_after"] > 2
-    for col in ("x", "y"):
-        plan = plan_manifest_read(spark, root, [(col, "between", (10, 25))])
-        assert plan["scanned"] < plan["total"], (col, plan)
-    assert read_manifest_table(spark, root).count() == 800
 
 
 def test_copy_on_write_delete_touches_only_matching_generations(

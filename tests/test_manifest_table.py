@@ -16,7 +16,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from datawarehouse_etl_using_hyperjoin_spark.maintenance import run_maintenance
 from datawarehouse_etl_using_hyperjoin_spark.sources import manifest_table as mt
 from datawarehouse_etl_using_hyperjoin_spark.sources.manifest_table import (
     compact_manifest_table,
@@ -104,128 +103,22 @@ def test_crash_before_publish_is_invisible_and_retry_lands_once(
     assert read_manifest_table(spark, root).count() == 20
 
 
-def test_run_maintenance_covers_manifest_tables(spark, tmp_path):
-    root = str(tmp_path / "mtab_maint")
-    for b in range(5):
-        manifest_table_append(_batch(spark, b), root, b)
-    stats = run_maintenance(spark, manifest_tables=[root], keep_last=1)
-    key = f"manifest_table:{root}"
-    assert stats[key]["gens_after"] < stats[key]["gens_before"]
-    assert stats[key]["data_dirs_deleted"] >= 1
-    assert read_manifest_table(spark, root).count() == 50
-
-
 def test_reserved_generation_column_is_refused_loudly(spark, tmp_path):
     df = spark.range(3).select(F.col("id"), F.lit(1).alias("g"))
     with pytest.raises(ValueError, match="reserves column name 'g'"):
         manifest_table_append(df, str(tmp_path / "r"), 0)
 
 
-@pytest.mark.slow  # soak tier (pytest.ini): run with -m ""
-def test_corpus_sink_manifest_layout_matches_partition_layout(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """make_corpus_ingest_sink(corpus_layout='manifest'): same gating,
-    same index-backed near-dup survivors as the partition layout on the
-    same batches, but the corpus commits through the rename-free
-    manifest table (renames banned) — replays detected by the ledger,
-    and a crash between the corpus publish and the band upsert converges
-    on replay."""
-    import uuid as _uuid
-
-    from datawarehouse_etl_using_hyperjoin_spark.operators.corpus import (
-        make_corpus_ingest_sink,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        load_table,
-    )
-
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 60)
-        .localCheckpoint(eager=True)
-    )
-    near = base.filter(F.col("doc_id") % 2 == 0).select(
-        (F.col("doc_id") + 10_000).alias("doc_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    ).localCheckpoint(eager=True)
-    batches = [base, near]
-
-    def run(layout, root, table):
-        sink = make_corpus_ingest_sink(
-            root, table, min_quality=0.0, min_tokens=1,
-            corpus_layout=layout,
-        )
-        for b, df in enumerate(batches):
-            sink(df, b)
-        return sink
-
-    p_root = str(tmp_path / "p_corpus")
-    p_table = f"mt_p_{_uuid.uuid4().hex[:8]}"
-    m_root = str(tmp_path / "m_corpus")
-    m_table = f"mt_m_{_uuid.uuid4().hex[:8]}"
-    try:
-        run("partition", p_root, p_table)
-        with monkeypatch.context() as mp:
-            _ban_renames(mp)
-            m_sink = run("manifest", m_root, m_table)
-            want = {
-                (r.doc_id, r.text)
-                for r in spark.read.parquet(p_root)
-                .select("doc_id", "text").collect()
-            }
-            got_df = read_manifest_table(spark, m_root)
-            got = {
-                (r.doc_id, r.text)
-                for r in got_df.select("doc_id", "text").collect()
-            }
-            assert got == want and got
-            # ingest_batch rides as a data column with the same values
-            assert {
-                (r.doc_id, int(r.ingest_batch)) for r in got_df.collect()
-            } == {
-                (r.doc_id, int(r.ingest_batch))
-                for r in spark.read.parquet(p_root).collect()
-            }
-            # replay of a committed batch: ledger-detected, corpus
-            # unchanged, band re-upsert idempotent
-            m_sink(batches[1], 1)
-            assert read_manifest_table(spark, m_root).count() == len(got)
-            assert spark.table(m_table).count() == spark.table(
-                p_table
-            ).count()
-        # layout guard: a partition-layout dir refuses manifest mode
-        bad = make_corpus_ingest_sink(
-            p_root, m_table, min_quality=0.0, min_tokens=1,
-            corpus_layout="manifest",
-        )
-        with pytest.raises(ValueError, match="non-manifest entry"):
-            bad(base, 5)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {p_table}")
-        spark.sql(f"DROP TABLE IF EXISTS {m_table}")
-
-
-def test_stale_publish_and_wrong_table_kind_are_refused(
-    spark, sf_dir, tmp_path
-):
+def test_stale_publish_and_wrong_table_kind_are_refused(spark, tmp_path):
     """Two loud-failure contracts of the shared protocol: (a) a writer
     whose target seq fell behind the newest on-disk manifest (a
     single-writer violation — its publish would be invisible to readers
     while it believes it committed) is REFUSED; (b) pointing one store
     kind at the other's root fails with the actual mismatch, on reads
-    AND on the build/append entry points, instead of corrupting the
-    commit log."""
+    AND on the append entry point, instead of corrupting the commit
+    log."""
     from datawarehouse_etl_using_hyperjoin_spark.manifest import (
         manifest_publish,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        read_ivf_index_manifest,
-        write_ivf_index_manifest,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.sources.fixtures import (
-        load_table,
     )
 
     root = str(tmp_path / "guards")
@@ -234,18 +127,13 @@ def test_stale_publish_and_wrong_table_kind_are_refused(
     with pytest.raises(RuntimeError, match="stale publish"):
         manifest_publish(spark, root, {"table": "batch-table"}, seq=1)
 
-    em = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="not an ivf-index"):
-        read_ivf_index_manifest(spark, root)
-    with pytest.raises(ValueError, match="not an ivf-index"):
-        write_ivf_index_manifest(em, root, n_centroids=2)
-
-    ivf_root = str(tmp_path / "ivf_guard")
-    write_ivf_index_manifest(em, ivf_root, n_centroids=2)
+    # a root committed through the same protocol by another table kind
+    other_root = str(tmp_path / "other_kind")
+    manifest_publish(spark, other_root, {"table": "other-kind"}, seq=0)
     with pytest.raises(ValueError, match="not a batch-table"):
-        read_manifest_table(spark, ivf_root)
+        read_manifest_table(spark, other_root)
     with pytest.raises(ValueError, match="not a batch-table"):
-        manifest_table_append(_batch(spark, 0), ivf_root, 0)
+        manifest_table_append(_batch(spark, 0), other_root, 0)
 
 
 from hypothesis import HealthCheck, given, settings as hyp_settings
@@ -416,15 +304,17 @@ def test_vacuum_retention_counts_valid_manifests_only(spark, tmp_path):
     # a crashed publish's torn remnant, newest by seq
     with open(f"{root}/_manifest/v00000003.json", "w") as fh:
         fh.write('{"format": "generation-manifest/1", "seq"')
-    # the production-reachable path: run_maintenance keep_last=1
-    stats = run_maintenance(spark, manifest_tables=[root], keep_last=1)
+    # the aging pass at its tightest retention: compact, then vacuum
+    # keeping one manifest
+    compact_manifest_table(spark, root, keep_last=1)
+    stats = vacuum_manifest_table(spark, root, keep_manifests=1)
     t = read_manifest_table(spark, root)
     assert t.count() == 20
     assert t.select("doc_id").distinct().count() == 20
     # the torn orphan is gone, the live manifest retained
     assert not os.path.exists(f"{root}/_manifest/v00000003.json")
     assert os.path.exists(f"{root}/_manifest/v00000002.json")
-    assert stats[f"manifest_table:{root}"]["data_dirs_deleted"] >= 0
+    assert stats["data_dirs_deleted"] >= 0
 
 
 def test_compact_keep_last_beyond_generation_count_is_a_noop(
@@ -620,32 +510,17 @@ def test_append_rebase_detects_rival_commit_of_same_batch(
 def test_snapshot_vacuum_race_discipline(spark, tmp_path):
     """r12 (VERDICT Next #3): the Iceberg-classic retention race.  (a) A
     vacuum invoked for a LIVE stream's table refuses keep_manifests < 2
-    loudly; run_maintenance(live_stream=True) floors it instead of
-    passing keep_last=1 through.  (b) A pinned as_of read STRADDLING a
+    loudly.  (b) A pinned as_of read STRADDLING a
     vacuum: within the retention window it returns exact rows after the
     vacuum ran; a vacuum that expires the pinned snapshot makes the
     straddling read fail LOUDLY at scan — never a silent partial
     result."""
-    from datawarehouse_etl_using_hyperjoin_spark.manifest import (
-        manifest_history,
-    )
-    from datawarehouse_etl_using_hyperjoin_spark.operators.ivf_store import (
-        ivf_vacuum,
-    )
-
     root = str(tmp_path / "race_vac")
     seqs = [manifest_table_append(_batch(spark, b), root, b) for b in range(4)]
 
     # (a) the live-stream floor
     with pytest.raises(ValueError, match="snapshot-read/vacuum race"):
         vacuum_manifest_table(spark, root, keep_manifests=1, live_stream=True)
-    with pytest.raises(ValueError, match="snapshot-read/vacuum race"):
-        ivf_vacuum(spark, root, keep_manifests=1, live_stream=True)
-    stats = run_maintenance(
-        spark, manifest_tables=[root], keep_last=1, live_stream=True
-    )
-    assert stats  # floored to keep_manifests=2, no refusal through the hook
-    assert len(manifest_history(spark, root)) >= 2
 
     # (b) pinned as_of read straddling a vacuum, inside the window:
     # retention kept the snapshot, the pre-vacuum handle still reads

@@ -59,7 +59,11 @@ DEMOS = (
 
 # out of scope for this audit: a whole module when the key ends in ".py",
 # else one function
+_D5 = ("direction 5, last step: the generation-manifest table library, wired "
+       "into no product path, retired with its tests in steps")
 EXCLUDED = {
+    "sources/manifest_table.py": _D5,
+    "manifest.py": _D5,
     "streaming.pipeline.run_pipeline_streaming": "direction 4: to be measured directly",
 }
 
