@@ -12,7 +12,9 @@ fits in memory the updates side broadcast makes it shuffle-free.  The
 ``foreachBatch`` sink (ST6) computes the same result as one window over
 ``batch ∪ existing``, merging into a copy of the dim it keeps in memory
 between batches — idempotent per batch because re-running the same
-update batch yields the same table state.
+update batch yields the same table state.  Like the reference's UPDATE
+that affects 0 rows (StreamGeneratorThread.java:172-176), a batch that
+changes no row of that copy writes nothing.
 """
 
 from __future__ import annotations
@@ -162,6 +164,23 @@ def _merge_latest(batch: DataFrame, existing: DataFrame | None, key: str) -> Dat
     )
 
 
+def _unchanged(batch: DataFrame, dim: DataFrame, key: str) -> bool:
+    """True when merging ``batch`` into the key-unique ``dim`` gives
+    ``dim`` back: every batch row equals a ``dim`` row on every column
+    (null-safe, ``<=>``) and has a non-NULL key.  One anti-join of the
+    batch against ``dim``; the check is conservative, so a key with two
+    batch versions, one of them stored, counts as a change and the merge
+    decides.  A NULL-key row always counts as a change, since the merge
+    adds it beside the stored ones.  A batch whose columns differ from
+    ``dim``'s is left to the merge, which fails it in the union."""
+    if sorted(batch.columns) != sorted(dim.columns):
+        return False
+    same = batch[key].isNotNull()
+    for c in batch.columns:
+        same = same & batch[c].eqNullSafe(dim[c])
+    return batch.join(dim, same, "left_anti").isEmpty()
+
+
 def _release(dim: DataFrame) -> None:
     """Free a ``localCheckpoint``'s blocks now instead of at JVM GC.  A
     no-op under Spark Connect, which has no JVM handle and releases a
@@ -203,6 +222,21 @@ def upsert_parquet_sink(path: str, key: str):
     the previous one's checkpoint blocks are released at once, so one
     sink holds one generation.
 
+    **No-change skip.**  Before it merges into the resident copy, the
+    sink checks with :func:`_unchanged` (one anti-join of the batch
+    against that copy on ``<=>`` of every column) whether the batch
+    changes the dim.  When every batch row equals a stored row and no
+    batch row has a NULL key, the call returns at once: no merge, no
+    ``localCheckpoint``, no overwrite and no second listing, so the
+    table's files and mtimes stay as they are and the sink keeps the
+    same resident generation.  The check is conservative: two versions
+    of one key, one of them stored, go through the merge, which then
+    decides.  ``<=>`` compares values as SQL does, so ``-0.0`` equal to
+    ``0.0`` and NaN equal to NaN count as unchanged and the stored value
+    stays.  A call that reads the table from disk always merges: a table
+    this sink did not write may hold duplicate keys, and only the merge
+    collapses them.
+
     The "no table yet" case on a disk read is an explicit FS existence
     check (:func:`~..fsutil.table_exists` — JVM ``FileSystem.exists`` with
     a Spark Connect read-probe fallback), NOT a swallowed read exception
@@ -211,9 +245,10 @@ def upsert_parquet_sink(path: str, key: str):
     every existing dim row not in the current batch — here it fails the
     batch and the replay retries.
 
-    **Write amplification**: every batch rewrites the whole table, so
-    per-batch write bytes scale with |dim| — fine for the reference's
-    master data.
+    **Write amplification**: every batch that changes the dim rewrites
+    the whole table, so its write bytes scale with |dim| — fine for the
+    reference's master data; a batch that changes no dim row writes
+    nothing.
     A table this sink did not write (e.g. one carrying an extra
     partition column) fails the batch in the union before any write.
     """
@@ -227,6 +262,10 @@ def upsert_parquet_sink(path: str, key: str):
         dim = None
         try:
             if held is not None and dir_listing(spark, path) == held[1]:
+                if _unchanged(batch_df, held[0], key):
+                    resident.append(held)  # same generation, same listing
+                    held = None
+                    return
                 existing = held[0]
             elif table_exists(spark, path):
                 existing = spark.read.parquet(path)

@@ -616,7 +616,9 @@ def make_star_sink(out_dir: str):
     window is the same as when they ran one after the other.  The dim
     sink merges each batch into the dim it wrote one batch earlier, kept
     in memory, and reads the dim from disk only when it cannot trust
-    that copy (see :func:`..operators.upsert.upsert_parquet_sink`).
+    that copy; a batch whose product rows all equal rows of that copy
+    leaves the dim unwritten (see
+    :func:`..operators.upsert.upsert_parquet_sink`).
 
     Exposed separately so restart-recovery tests can wrap the EXACT
     production sink with crash injection (a raise after the writes but
@@ -690,9 +692,12 @@ def run_pipeline_streaming(
     only while the dim directory's listing is the one recorded after that
     write; the first batch after a start, the batch after a failed one,
     and a dim touched by any other writer read it from disk, so restart
-    and replay see exactly what is committed.  The dim upsert and the
-    fact append run together and both finish before the micro-batch
-    commits (see :func:`make_star_sink`).
+    and replay see exactly what is committed.  Against that in-memory
+    copy, a batch whose product rows all equal stored rows (the common
+    case once the catch-up has seen every product) is found by one
+    anti-join and skips the merge and the dim rewrite.  The dim upsert
+    and the fact append run together and both finish before the
+    micro-batch commits (see :func:`make_star_sink`).
 
     ``quarantine_lateness`` (opt-in) makes the engine path's late-data
     policy EXPLICIT instead of implicit in the sink's idempotency: the

@@ -8,7 +8,10 @@ These tests pin:
   are freed and the next call reads the table from disk), and one sink
   holds one generation however many calls it serves,
 * the overlapped dim upsert and fact append: a failed fact write makes
-  the sink raise only once the dim upsert has finished.
+  the sink raise only once the dim upsert has finished,
+* the no-change skip: a batch that changes no dim row leaves the table
+  and the resident generation as they are; two versions of one key and
+  a NULL-key row go through the merge.
 """
 
 from __future__ import annotations
@@ -17,7 +20,9 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 
+from datawarehouse_etl_using_hyperjoin_spark.fsutil import dir_listing
 from datawarehouse_etl_using_hyperjoin_spark.operators.upsert import (
     upsert_parquet_sink,
 )
@@ -49,11 +54,15 @@ def _rdd_mark(spark) -> int:
     return spark.sparkContext.parallelize([0]).id()
 
 
-def _persistent_rdds(spark, mark: int) -> int:
+def _persistent_ids(spark, mark: int) -> set[int]:
     """Persistent RDDs created since ``mark``: earlier tests' leftovers,
     which the context cleaner frees at unpredictable times, do not count."""
     ids = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    return sum(1 for i in ids if i > mark)
+    return {i for i in ids if i > mark}
+
+
+def _persistent_rdds(spark, mark: int) -> int:
+    return len(_persistent_ids(spark, mark))
 
 
 def test_dim_winner_does_not_depend_on_row_order(spark, tmp_path):
@@ -111,12 +120,14 @@ def test_failed_call_drops_the_resident_dim(spark, tmp_path):
 
 def test_star_sink_holds_one_dim_generation(spark, tmp_path):
     """Each call releases the previous generation's checkpoint blocks and
-    the batch's cache, so the persistent-RDD count stays flat."""
+    the batch's cache, so the persistent-RDD count stays flat, whether
+    the call rewrites the dim or finds that it changes no dim row."""
     sink = make_star_sink(str(tmp_path / "dw"))
     mark = _rdd_mark(spark)
     counts = []
     for b in range(12):
-        rows = [(b * 100 + i, (b * 7 + i) % 40, 1.0 + b) for i in range(30)]
+        g = b // 2  # every odd batch repeats the dim rows of the one before
+        rows = [(b * 100 + i, (g * 7 + i) % 40, 1.0 + g) for i in range(30)]
         sink(_enriched(spark, rows), b)
         counts.append(_persistent_rdds(spark, mark))
     assert counts == [1] * len(counts)
@@ -136,3 +147,76 @@ def test_star_sink_fact_failure_waits_for_the_dim_upsert(spark, tmp_path):
     assert not spark.sparkContext.statusTracker().getActiveJobsIds()
     dim = spark.read.parquet(str(out / "dim_product"))
     assert sorted(r.product_id for r in dim.select("product_id").collect()) == list(range(25))
+
+
+_DIM = "product_id int, product_name string, product_price string"
+
+
+def _no_disk_reads(monkeypatch):
+    """Fail any parquet read: a sink that merges into its resident copy,
+    or skips the merge, reads nothing from disk."""
+    def boom(self, *paths, **kw):
+        raise AssertionError(f"unexpected read of {paths}")
+    monkeypatch.setattr(DataFrameReader, "parquet", boom)
+
+
+def test_unchanged_batch_skips_the_merge_and_rewrite(spark, tmp_path, monkeypatch):
+    """On a resident sink, a batch whose rows all equal stored rows
+    rewrites nothing and keeps the same generation; a changing batch
+    after it still merges into the resident copy and lands."""
+    path = str(tmp_path / "dim")
+    sink = upsert_parquet_sink(path, "product_id")
+    mark = _rdd_mark(spark)
+    sink(_dim_batch(spark, range(50), 1.0), 0)
+    sink(_dim_batch(spark, range(40, 60), 2.0), 1)
+    before, held = dir_listing(spark, path), _persistent_ids(spark, mark)
+    assert len(held) == 1
+
+    with monkeypatch.context() as m:
+        _no_disk_reads(m)
+        repeat = _dim_batch(spark, range(30, 40), 1.0).unionByName(
+            _dim_batch(spark, range(45, 60), 2.0)
+        )
+        sink(repeat, 2)
+        assert dir_listing(spark, path) == before
+        assert _persistent_ids(spark, mark) == held
+        sink(_dim_batch(spark, range(55, 65), 3.0), 3)
+        assert dir_listing(spark, path) != before
+        assert _persistent_rdds(spark, mark) == 1
+    want = sorted(
+        [(i, f"product {i}", "$1.00") for i in range(40)]
+        + [(i, f"product {i}", "$2.00") for i in range(40, 55)]
+        + [(i, f"product {i}", "$3.00") for i in range(55, 65)]
+    )
+    assert _rows(spark, path) == want
+
+
+def test_two_versions_of_a_key_go_through_the_merge(spark, tmp_path):
+    """A key sent twice in one batch, one version equal to its stored
+    row: the check counts it as a change and the merge decides.  When
+    the smaller version by value is the stored one the key stays; when
+    it is the other one the key takes it."""
+    path = str(tmp_path / "dim")
+    sink = upsert_parquet_sink(path, "product_id")
+    sink(spark.createDataFrame(
+        [(7, "p7", "$2.00"), (8, "p8", "$5.00"), (9, "p9", "$1.00")], _DIM
+    ), 0)
+    stored = _rows(spark, path)
+    sink(spark.createDataFrame([(7, "p7", "$2.00"), (7, "p7", "$9.00")], _DIM), 1)
+    assert _rows(spark, path) == stored
+    sink(spark.createDataFrame([(8, "p8", "$5.00"), (8, "p8", "$3.00")], _DIM), 2)
+    assert _rows(spark, path) == [(7, "p7", "$2.00"), (8, "p8", "$3.00"), (9, "p9", "$1.00")]
+
+
+def test_null_key_row_is_always_a_change(spark, tmp_path):
+    """A batch equal to the dim, whose one NULL-key row equals a stored
+    one, adds that row again: the merge keeps every stored NULL-key row
+    beside the batch's, so no NULL-key row can leave the dim unchanged."""
+    path = str(tmp_path / "dim")
+    sink = upsert_parquet_sink(path, "product_id")
+    rows = [(i, f"p{i}", "$1.00") for i in range(5)] + [(None, "orphan", "$0.00")]
+    sink(spark.createDataFrame(rows, _DIM), 0)
+    sink(spark.createDataFrame(rows, _DIM), 1)
+    got = [tuple(r) for r in spark.read.parquet(path).collect()]
+    assert [r for r in got if r[0] is None] == [(None, "orphan", "$0.00")] * 2
+    assert sorted(r for r in got if r[0] is not None) == rows[:5]
